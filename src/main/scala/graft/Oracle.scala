@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.TextStats
+import graft.operators.{Multimodal, TextStats}
 
 /** DuckDB SQL twins for every SQL-expressible query in [[Queries.all]].
   *
@@ -1558,7 +1558,35 @@ object Oracle {
     s"""list_sum(list_transform(list_zip($a, $b),
        |      x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE))) / ($na * $nb)""".stripMargin
 
-  /** dHash twin CTEs ([[graft.operators.Multimodal.perceptualHash]]):
+  /** A perceptual pair twin: the `banded` CTE's self-join, Hamming
+    * verified at `kernel`'s gate — DISTINCT (doc_a, doc_b, hamming)
+    * for the batch operator, or one row per colliding band
+    * (`perBand`) for the ingest-time fold over bounded input (each doc
+    * holds one key per band, so a pair appears at most once per band
+    * on both sides). `joinPad` indents the join's continuation line
+    * as each twin has always printed it, keeping the emitted SQL text
+    * stable across builds.
+    */
+  private def hammingPairsSql(
+      ctes: String, banded: String, kernel: Multimodal.Kernel,
+      perBand: Boolean, joinPad: Int): String = {
+    val (select, order) =
+      if (perBand)
+        ("SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, CAST(a.band AS INTEGER) AS band,",
+          "ORDER BY doc_a, doc_b, band")
+      else ("SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,", "ORDER BY doc_a, doc_b")
+    s"""WITH $ctes
+       |$select
+       |  CAST(bit_count(xor(a.ph_lo, b.ph_lo))
+       |     + bit_count(xor(a.ph_hi, b.ph_hi)) AS INTEGER) AS hamming
+       |FROM $banded a JOIN $banded b ON a.band = b.band AND a.key = b.key
+       |${" " * joinPad}AND a.doc_id < b.doc_id
+       |WHERE bit_count(xor(a.ph_lo, b.ph_lo))
+       |    + bit_count(xor(a.ph_hi, b.ph_hi)) <= ${kernel.gate}
+       |$order""".stripMargin
+  }
+
+  /** dHash twin CTEs ([[graft.operators.Multimodal.Image]] kernel):
     * the ASCII-projected payload replayed char-by-char — bucket index
     * by integer division, adjacent-average compare by integer
     * cross-multiplication, exactly the kernel's arithmetic (no float
@@ -3482,15 +3510,8 @@ object Oracle {
          |ORDER BY doc_id""".stripMargin,
 
     "mm_audio_near_dup_spectral" ->
-      s"""WITH $audioSpectralCtes
-         |SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
-         |  CAST(bit_count(xor(a.ph_lo, b.ph_lo))
-         |     + bit_count(xor(a.ph_hi, b.ph_hi)) AS INTEGER) AS hamming
-         |FROM sbanded a JOIN sbanded b ON a.band = b.band AND a.key = b.key
-         |                             AND a.doc_id < b.doc_id
-         |WHERE bit_count(xor(a.ph_lo, b.ph_lo))
-         |    + bit_count(xor(a.ph_hi, b.ph_hi)) <= ${graft.operators.Multimodal.SpectralHammingMax}
-         |ORDER BY doc_a, doc_b""".stripMargin,
+      hammingPairsSql(
+        audioSpectralCtes, "sbanded", Multimodal.AudioSpectral, perBand = false, joinPad = 29),
 
     "mm_video_phash_spectral" ->
       s"""WITH $videoSpectralCtes
@@ -3498,63 +3519,28 @@ object Oracle {
          |ORDER BY doc_id""".stripMargin,
 
     "mm_video_near_dup_spectral" ->
-      s"""WITH $videoSpectralCtes
-         |SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
-         |  CAST(bit_count(xor(a.ph_lo, b.ph_lo))
-         |     + bit_count(xor(a.ph_hi, b.ph_hi)) AS INTEGER) AS hamming
-         |FROM vsbanded a JOIN vsbanded b ON a.band = b.band AND a.key = b.key
-         |                               AND a.doc_id < b.doc_id
-         |WHERE bit_count(xor(a.ph_lo, b.ph_lo))
-         |    + bit_count(xor(a.ph_hi, b.ph_hi)) <= ${graft.operators.Multimodal.VideoSpectralHammingMax}
-         |ORDER BY doc_a, doc_b""".stripMargin,
+      hammingPairsSql(
+        videoSpectralCtes, "vsbanded", Multimodal.VideoSpectral, perBand = false, joinPad = 31),
 
     "mm_audio_near_dup" ->
-      s"""WITH $audioBandedCtes
-         |SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
-         |  CAST(bit_count(xor(a.ph_lo, b.ph_lo))
-         |     + bit_count(xor(a.ph_hi, b.ph_hi)) AS INTEGER) AS hamming
-         |FROM abanded a JOIN abanded b ON a.band = b.band AND a.key = b.key
-         |                             AND a.doc_id < b.doc_id
-         |WHERE bit_count(xor(a.ph_lo, b.ph_lo))
-         |    + bit_count(xor(a.ph_hi, b.ph_hi)) <= ${graft.operators.Multimodal.MmHammingMax}
-         |ORDER BY doc_a, doc_b""".stripMargin,
+      hammingPairsSql(
+        audioBandedCtes, "abanded", Multimodal.Audio, perBand = false, joinPad = 29),
 
     // the spectral ingest-time folds over bounded input equal the
     // per-band banded0 self-joins at their kernels' gates
     "streaming_mm_audio_near_dup_spectral" ->
-      s"""WITH $audioSpectralCtes
-         |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, CAST(a.band AS INTEGER) AS band,
-         |  CAST(bit_count(xor(a.ph_lo, b.ph_lo))
-         |     + bit_count(xor(a.ph_hi, b.ph_hi)) AS INTEGER) AS hamming
-         |FROM sbanded0 a JOIN sbanded0 b ON a.band = b.band AND a.key = b.key
-         |                               AND a.doc_id < b.doc_id
-         |WHERE bit_count(xor(a.ph_lo, b.ph_lo))
-         |    + bit_count(xor(a.ph_hi, b.ph_hi)) <= ${graft.operators.Multimodal.SpectralHammingMax}
-         |ORDER BY doc_a, doc_b, band""".stripMargin,
+      hammingPairsSql(
+        audioSpectralCtes, "sbanded0", Multimodal.AudioSpectral, perBand = true, joinPad = 31),
 
     "streaming_mm_video_near_dup_spectral" ->
-      s"""WITH $videoSpectralCtes
-         |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, CAST(a.band AS INTEGER) AS band,
-         |  CAST(bit_count(xor(a.ph_lo, b.ph_lo))
-         |     + bit_count(xor(a.ph_hi, b.ph_hi)) AS INTEGER) AS hamming
-         |FROM vsbanded0 a JOIN vsbanded0 b ON a.band = b.band AND a.key = b.key
-         |                                 AND a.doc_id < b.doc_id
-         |WHERE bit_count(xor(a.ph_lo, b.ph_lo))
-         |    + bit_count(xor(a.ph_hi, b.ph_hi)) <= ${graft.operators.Multimodal.VideoSpectralHammingMax}
-         |ORDER BY doc_a, doc_b, band""".stripMargin,
+      hammingPairsSql(
+        videoSpectralCtes, "vsbanded0", Multimodal.VideoSpectral, perBand = true, joinPad = 33),
 
     // the audio ingest-time fold over bounded input equals the banded
     // self-join with the Hamming verify, kept per band
     "streaming_mm_audio_near_dup" ->
-      s"""WITH $audioBandedCtes
-         |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, CAST(a.band AS INTEGER) AS band,
-         |  CAST(bit_count(xor(a.ph_lo, b.ph_lo))
-         |     + bit_count(xor(a.ph_hi, b.ph_hi)) AS INTEGER) AS hamming
-         |FROM abanded0 a JOIN abanded0 b ON a.band = b.band AND a.key = b.key
-         |                             AND a.doc_id < b.doc_id
-         |WHERE bit_count(xor(a.ph_lo, b.ph_lo))
-         |    + bit_count(xor(a.ph_hi, b.ph_hi)) <= ${graft.operators.Multimodal.MmHammingMax}
-         |ORDER BY doc_a, doc_b, band""".stripMargin,
+      hammingPairsSql(
+        audioBandedCtes, "abanded0", Multimodal.Audio, perBand = true, joinPad = 29),
 
     // audio pairs through the same recursive transitive closure the
     // text, embedding, and image cluster twins replay
@@ -3693,28 +3679,14 @@ object Oracle {
     },
 
     "mm_video_near_dup" ->
-      s"""WITH $videoBandedCtes
-         |SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
-         |  CAST(bit_count(xor(a.ph_lo, b.ph_lo))
-         |     + bit_count(xor(a.ph_hi, b.ph_hi)) AS INTEGER) AS hamming
-         |FROM vbanded a JOIN vbanded b ON a.band = b.band AND a.key = b.key
-         |                             AND a.doc_id < b.doc_id
-         |WHERE bit_count(xor(a.ph_lo, b.ph_lo))
-         |    + bit_count(xor(a.ph_hi, b.ph_hi)) <= ${graft.operators.Multimodal.MmHammingMax}
-         |ORDER BY doc_a, doc_b""".stripMargin,
+      hammingPairsSql(
+        videoBandedCtes, "vbanded", Multimodal.Video, perBand = false, joinPad = 29),
 
     // the video ingest-time fold over bounded input equals the banded
     // self-join with the Hamming verify, kept per band
     "streaming_mm_video_near_dup" ->
-      s"""WITH $videoBandedCtes
-         |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, CAST(a.band AS INTEGER) AS band,
-         |  CAST(bit_count(xor(a.ph_lo, b.ph_lo))
-         |     + bit_count(xor(a.ph_hi, b.ph_hi)) AS INTEGER) AS hamming
-         |FROM vbanded0 a JOIN vbanded0 b ON a.band = b.band AND a.key = b.key
-         |                             AND a.doc_id < b.doc_id
-         |WHERE bit_count(xor(a.ph_lo, b.ph_lo))
-         |    + bit_count(xor(a.ph_hi, b.ph_hi)) <= ${graft.operators.Multimodal.MmHammingMax}
-         |ORDER BY doc_a, doc_b, band""".stripMargin,
+      hammingPairsSql(
+        videoBandedCtes, "vbanded0", Multimodal.Video, perBand = true, joinPad = 29),
 
     // video pairs through the same recursive transitive closure the
     // text, embedding, image, and audio cluster twins replay
@@ -3746,30 +3718,14 @@ object Oracle {
          |ORDER BY doc_id""".stripMargin,
 
     "mm_near_dup" ->
-      s"""WITH $mmBandedCtes
-         |SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
-         |  CAST(bit_count(xor(a.ph_lo, b.ph_lo))
-         |     + bit_count(xor(a.ph_hi, b.ph_hi)) AS INTEGER) AS hamming
-         |FROM banded a JOIN banded b ON a.band = b.band AND a.key = b.key
-         |                           AND a.doc_id < b.doc_id
-         |WHERE bit_count(xor(a.ph_lo, b.ph_lo))
-         |    + bit_count(xor(a.ph_hi, b.ph_hi)) <= ${graft.operators.Multimodal.MmHammingMax}
-         |ORDER BY doc_a, doc_b""".stripMargin,
+      hammingPairsSql(
+        mmBandedCtes, "banded", Multimodal.Image, perBand = false, joinPad = 27),
 
     // the ingest-time perceptual fold over bounded input equals the
-    // banded self-join with the Hamming verify, kept per band (each
-    // doc holds one key per band, so a pair appears at most once per
-    // band on both sides)
+    // banded self-join with the Hamming verify, kept per band
     "streaming_mm_near_dup" ->
-      s"""WITH $mmBandedCtes
-         |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, CAST(a.band AS INTEGER) AS band,
-         |  CAST(bit_count(xor(a.ph_lo, b.ph_lo))
-         |     + bit_count(xor(a.ph_hi, b.ph_hi)) AS INTEGER) AS hamming
-         |FROM banded0 a JOIN banded0 b ON a.band = b.band AND a.key = b.key
-         |                           AND a.doc_id < b.doc_id
-         |WHERE bit_count(xor(a.ph_lo, b.ph_lo))
-         |    + bit_count(xor(a.ph_hi, b.ph_hi)) <= ${graft.operators.Multimodal.MmHammingMax}
-         |ORDER BY doc_a, doc_b, band""".stripMargin,
+      hammingPairsSql(
+        mmBandedCtes, "banded0", Multimodal.Image, perBand = true, joinPad = 27),
 
     // perceptual pairs through the same recursive transitive closure
     // the text and embedding cluster twins replay

@@ -1986,7 +1986,8 @@ object Queries {
     * self-join the batch operator runs, kept per band.
     */
   def streamingEmbNearDup(s: SparkSession, dir: String): DataFrame =
-    graft.streaming.Streaming.batchEmbNearDup(embs(s, dir))
+    graft.streaming.Streaming.batchNearDup(
+      graft.streaming.Streaming.EmbRule, Ann.nearDupBandedVectors(embs(s, dir)))
       .toDF().orderBy("vec_a", "vec_b", "band")
 
   /** Session-memoized in-memory HNSW BUILD artifacts — (corpus,
@@ -2171,8 +2172,8 @@ object Queries {
 
   /** dHash perceptual fingerprint per payload (integer-exact). */
   def mmPhash(s: SparkSession, dir: String): DataFrame =
-    Multimodal.perceptualHash(Multimodal.withPayload(spreadDocs(s, dir)))
-      .toDF().orderBy("doc_id")
+    Multimodal.fingerprint(Multimodal.Image, Multimodal.withPayload(spreadDocs(s, dir)))
+      .orderBy("doc_id")
 
   /** PIXEL-TRUE 2-D dHash over real PNG payloads: the fixture plants
     * actual `javax.imageio`-encoded images whose pixels derive from
@@ -2182,8 +2183,8 @@ object Queries {
     * equality is the proof the decode path is real.
     */
   def mmPhashPx(s: SparkSession, dir: String): DataFrame =
-    Multimodal.perceptualHash(Multimodal.plantedPngPayloads(spreadDocs(s, dir)))
-      .toDF().orderBy("doc_id")
+    Multimodal.fingerprint(Multimodal.Image, Multimodal.plantedPngPayloads(spreadDocs(s, dir)))
+      .orderBy("doc_id")
 
   /** Per-tile crop-robust hashes over the planted PNGs AND their
     * tile-aligned crops — the fixed-size origin-anchored tile grid
@@ -2344,79 +2345,74 @@ object Queries {
       .select("doc_id", "out_w", "out_h", "luma_sum", "luma_md5")
       .orderBy("doc_id")
 
-  /** Perceptual-hash image near-dup pairs: banded candidates, Hamming
-    * verify — [[Multimodal.mmNearDup]] over the text payloads plus the
-    * planted smooth signals and their stride-resampled copies (the
-    * text rows are realistic negatives; the planted rows are where
-    * scale-invariant pairing is mathematically possible — see
-    * [[Multimodal.plantedResampledPayloads]]).
-    */
-  def mmNearDup(s: SparkSession, dir: String): DataFrame =
-    Multimodal.mmNearDup(
-      Multimodal.withPayload(spreadDocs(s, dir))
-        .unionByName(Multimodal.plantedResampledPayloads(spreadDocs(s, dir))))
-      .orderBy("doc_a", "doc_b")
+  // ------------------------------------------ perceptual kernel rows
+  // Every perceptual kernel ([[Multimodal.Kernel]]) serves the same
+  // registry faces over its payload set: the fingerprint row, the
+  // near-dup pairs, the duplicate clusters (the shared CC engine), and
+  // the ingest-time fold over bounded input (must equal the banded
+  // self-join kept per band; the true flatMapGroupsWithState path is
+  // StreamingSpec-pinned). The twins replay each kernel from the synth
+  // formulas with no container bytes — equality is the proof the
+  // decode (PCM, AVI frame walk) is real.
 
-  /** Perceptual duplicate clusters over the same payload set — the
-    * shared CC engine's third modality.
+  private type Payloads = (SparkSession, String) => DataFrame
+
+  private def mmFingerprintRows(kernel: Multimodal.Kernel, payloads: Payloads)(
+      s: SparkSession, dir: String): DataFrame =
+    Multimodal.fingerprint(kernel, payloads(s, dir)).orderBy("doc_id")
+
+  private def mmPairRows(kernel: Multimodal.Kernel, payloads: Payloads)(
+      s: SparkSession, dir: String): DataFrame =
+    Multimodal.nearDupPairs(kernel, payloads(s, dir)).orderBy("doc_a", "doc_b")
+
+  private def mmClusterRows(kernel: Multimodal.Kernel, payloads: Payloads)(
+      s: SparkSession, dir: String): DataFrame =
+    Multimodal.dedupClusters(kernel, payloads(s, dir)).orderBy("doc_id")
+
+  private def streamingMmPairRows(kernel: Multimodal.Kernel, payloads: Payloads)(
+      s: SparkSession, dir: String): DataFrame =
+    graft.streaming.Streaming.batchNearDup(
+      graft.streaming.Streaming.perceptualRule(kernel),
+      Multimodal.perceptualBanded(Multimodal.fingerprint(kernel, payloads(s, dir))))
+      .toDF().orderBy("doc_a", "doc_b", "band")
+
+  /** The image near-dup rows' payload set: the text payloads
+    * (realistic negatives) plus the planted smooth signals and their
+    * stride-resampled copies, where scale-invariant pairing is
+    * mathematically possible ([[Multimodal.plantedResampledPayloads]]).
     */
-  def mmDedupClusters(s: SparkSession, dir: String): DataFrame =
-    Multimodal.mmDedupClusters(
-      Multimodal.withPayload(spreadDocs(s, dir))
-        .unionByName(Multimodal.plantedResampledPayloads(spreadDocs(s, dir))))
-      .orderBy("doc_id")
+  private def imagePayloadSet(s: SparkSession, dir: String): DataFrame =
+    Multimodal.withPayload(spreadDocs(s, dir))
+      .unionByName(Multimodal.plantedResampledPayloads(spreadDocs(s, dir)))
 
   /** The combined audio payload set every mm_audio_* row runs over:
     * text-synth WAVs (realistic negatives — too short for a stable
     * 65-bucket energy signature) plus the planted waveform +
     * 2x-downsample pairs where scale-invariant pairing is
-    * mathematically possible ([[Multimodal.plantedAudioPayloads]]).
+    * mathematically possible ([[Multimodal.plantedAudioPayloads]]):
+    * each planted waveform must pair with its resample and nothing
+    * else. The PCM energy dHash must chunk-scan the container, decode
+    * signed 16-bit little-endian frames, mono-mix, and bucket
+    * energies.
     */
   private def audioPayloadSet(s: SparkSession, dir: String): DataFrame =
     Multimodal.withAudioPayload(spreadDocs(s, dir))
       .unionByName(Multimodal.plantedAudioPayloads(spreadDocs(s, dir)))
 
-  /** PCM energy dHash over real WAV containers: the operator must
-    * chunk-scan the container, decode signed 16-bit little-endian
-    * frames, mono-mix, and bucket energies; the twin replays the
-    * samples from the synth formulas (text bytes for the negatives,
-    * md5 amplitude blocks for the planted rows) with no byte-level
-    * container at all — equality is the proof the PCM decode is real.
-    */
-  def mmAudioPhash(s: SparkSession, dir: String): DataFrame =
-    Multimodal.audioFingerprint(audioPayloadSet(s, dir))
-      .toDF().orderBy("doc_id")
-
   /** The spectral rows' payload set: text-synth WAVs (negatives —
     * varied ASCII pseudo-noise autocorrelation; clips under the
     * minimum frame count drop) plus the planted recording +
     * padded-stretch pairs where lag-structure pairing is
-    * mathematically possible. The block-envelope resample plants are
-    * deliberately NOT in this set: near-DC content gives every such
-    * clip the same degenerate monotone lag signature — the energy
-    * tier is their home.
+    * mathematically possible: each planted recording pairs with its
+    * padded constant-pitch stretch — the transform class the
+    * relative-time energy dHash provably misses (spec-pinned). The
+    * block-envelope resample plants are deliberately NOT in this set:
+    * near-DC content gives every such clip the same degenerate
+    * monotone lag signature — the energy tier is their home.
     */
   private def audioSpectralSet(s: SparkSession, dir: String): DataFrame =
     Multimodal.withAudioPayload(spreadDocs(s, dir))
       .unionByName(Multimodal.plantedStretchedAudioPayloads(spreadDocs(s, dir)))
-
-  /** Autocorrelation-bank (spectral-family) audio fingerprint: the
-    * operator decodes real WAV containers and computes integer lag
-    * products; the twin replays the synth formulas (ASCII bytes for
-    * negatives, square-wave tones × envelope blocks for the plants)
-    * through the identical lag algebra with no container at all.
-    */
-  def mmAudioPhashSpectral(s: SparkSession, dir: String): DataFrame =
-    Multimodal.audioSpectralFingerprint(audioSpectralSet(s, dir))
-      .toDF().orderBy("doc_id")
-
-  /** Spectral near-dup pairs: each planted recording pairs with its
-    * padded constant-pitch stretch — the transform class the
-    * relative-time energy dHash provably misses (spec-pinned).
-    */
-  def mmAudioNearDupSpectral(s: SparkSession, dir: String): DataFrame =
-    Multimodal.mmAudioSpectralNearDup(audioSpectralSet(s, dir))
-      .orderBy("doc_a", "doc_b")
 
   /** SAMPLE-TRUE audio resample: real container scan → PCM decode →
     * exact integer box-average decimation → real WAV re-encode; only
@@ -2429,25 +2425,12 @@ object Queries {
       .select("doc_id", "out_rate", "n_frames", "energy_sum", "pcm_md5")
       .orderBy("doc_id")
 
-  /** Perceptual AUDIO near-dup pairs: banded candidates, Hamming
-    * verify — each planted waveform must pair with its resample and
-    * nothing else, with the text-synth WAVs riding as negatives.
-    */
-  def mmAudioNearDup(s: SparkSession, dir: String): DataFrame =
-    Multimodal.mmAudioNearDup(audioPayloadSet(s, dir))
-      .orderBy("doc_a", "doc_b")
-
-  /** Audio duplicate clusters over the same payload set — the shared
-    * CC engine's fourth modality.
-    */
-  def mmAudioDedupClusters(s: SparkSession, dir: String): DataFrame =
-    Multimodal.mmAudioDedupClusters(audioPayloadSet(s, dir))
-      .orderBy("doc_id")
-
   /** Every video face runs over synthesized-AVI versions of the text
     * stand-ins (realistic negatives) plus planted clip + frame-rate-
     * downsample pairs where temporal-invariant pairing is
-    * mathematically possible ([[Multimodal.plantedVideoPayloads]]).
+    * mathematically possible ([[Multimodal.plantedVideoPayloads]]):
+    * each planted clip must pair with its frame-rate downsample and
+    * nothing else.
     */
   private def videoPayloadSet(s: SparkSession, dir: String): DataFrame =
     Multimodal.withVideoPayload(spreadDocs(s, dir))
@@ -2462,27 +2445,14 @@ object Queries {
     Multimodal.videoFeatures(videoPayloadSet(s, dir))
       .toDF().orderBy("doc_id")
 
-  /** Temporal luma dHash over real AVI containers; the twin replays
-    * per-frame luma sums from the synth formulas.
-    */
-  def mmVideoPhash(s: SparkSession, dir: String): DataFrame =
-    Multimodal.videoFingerprint(videoPayloadSet(s, dir))
-      .toDF().orderBy("doc_id")
-
-  /** Perceptual VIDEO near-dup pairs: banded candidates, Hamming
-    * verify — each planted clip must pair with its frame-rate
-    * downsample and nothing else.
-    */
-  def mmVideoNearDup(s: SparkSession, dir: String): DataFrame =
-    Multimodal.mmVideoNearDup(videoPayloadSet(s, dir))
-      .orderBy("doc_a", "doc_b")
-
   /** The video SPECTRAL rows' payload set: flicker-projected texts
     * (negatives — one constant-luma frame per payload byte, the only
     * projection that reaches a stable lag window from the corpus's
     * text lengths; sub-minimum clips drop) plus the planted clip +
     * black-padded constant-flicker stretch pairs where lag-structure
-    * pairing is mathematically possible. The constant-luma block
+    * pairing is mathematically possible: each planted clip pairs with
+    * its black-padded longer cut, which the relative-time temporal
+    * dHash provably misses (spec-pinned). The constant-luma block
     * plants are deliberately NOT in this set for the audio face's
     * reason: near-DC content (sparse block-boundary deltas) gives a
     * degenerate lag signature — the temporal-dHash tier is their home.
@@ -2490,26 +2460,6 @@ object Queries {
   private def videoSpectralSet(s: SparkSession, dir: String): DataFrame =
     Multimodal.withFlickerVideoPayload(spreadDocs(s, dir))
       .unionByName(Multimodal.plantedStretchedVideoPayloads(spreadDocs(s, dir)))
-
-  /** Temporal lag-bank (spectral-family) video fingerprint: the
-    * operator decodes real AVI containers, takes per-frame luma-sum
-    * DELTAS, and computes integer lag products; the twin replays the
-    * synth formulas (ord-deltas for the flicker negatives, integrated
-    * square-wave flicker triangles for the plants) through the
-    * identical lag algebra with no container at all.
-    */
-  def mmVideoPhashSpectral(s: SparkSession, dir: String): DataFrame =
-    Multimodal.videoSpectralFingerprint(videoSpectralSet(s, dir))
-      .toDF().orderBy("doc_id")
-
-  /** Spectral video near-dup pairs: each planted clip pairs with its
-    * black-padded longer cut at constant flicker — the transform
-    * class the relative-time temporal dHash provably misses
-    * (spec-pinned).
-    */
-  def mmVideoNearDupSpectral(s: SparkSession, dir: String): DataFrame =
-    Multimodal.mmVideoSpectralNearDup(videoSpectralSet(s, dir))
-      .orderBy("doc_a", "doc_b")
 
   /** The SPATIAL video payload set: every clip of the temporal set
     * (all of which fall under the 9×8 pixel grid and so emit no
@@ -2536,13 +2486,6 @@ object Queries {
   def mmVideoNearDupPx(s: SparkSession, dir: String): DataFrame =
     Multimodal.mmVideoNearDupPx(pxVideoPayloadSet(s, dir))
       .orderBy("doc_a", "doc_b")
-
-  /** Video duplicate clusters over the same payload set — the shared
-    * CC engine's fifth modality.
-    */
-  def mmVideoDedupClusters(s: SparkSession, dir: String): DataFrame =
-    Multimodal.mmVideoDedupClusters(videoPayloadSet(s, dir))
-      .orderBy("doc_id")
 
   /** Multimodal dedup report — the media release card: one row per
     * payload modality with the counts a dataset card publishes
@@ -2576,13 +2519,9 @@ object Queries {
     // registry and are released by the harness's per-query releaseAll.
     val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
     val futs = Seq[() => DataFrame](
-      () => leg("audio", Multimodal.mmAudioDedupClusters(audioPayloadSet(s, dir))),
-      () => leg(
-        "image",
-        Multimodal.mmDedupClusters(
-          Multimodal.withPayload(spreadDocs(s, dir))
-            .unionByName(Multimodal.plantedResampledPayloads(spreadDocs(s, dir))))),
-      () => leg("video", Multimodal.mmVideoDedupClusters(videoPayloadSet(s, dir)))
+      () => leg("audio", Multimodal.dedupClusters(Multimodal.Audio, audioPayloadSet(s, dir))),
+      () => leg("image", Multimodal.dedupClusters(Multimodal.Image, imagePayloadSet(s, dir))),
+      () => leg("video", Multimodal.dedupClusters(Multimodal.Video, videoPayloadSet(s, dir)))
     ).map(f => pool.submit(new java.util.concurrent.Callable[DataFrame] {
       def call(): DataFrame = {
         val df = graft.operators.CacheScope.persist(f())
@@ -2604,14 +2543,6 @@ object Queries {
       .toDF()
       .select("doc_id", "out_us_per_frame", "n_frames", "luma_sum", "frames_md5")
       .orderBy("doc_id")
-
-  /** The video ingest-time fold over bounded input — must equal the
-    * banded self-join kept per band (shared twin); the true
-    * flatMapGroupsWithState path is StreamingSpec-pinned.
-    */
-  def streamingMmVideoNearDup(s: SparkSession, dir: String): DataFrame =
-    graft.streaming.Streaming.batchMmVideoNearDup(videoPayloadSet(s, dir))
-      .toDF().orderBy("doc_a", "doc_b", "band")
 
   // ------------------------------------------------------------ P6/P5/P11/P12
   /** Presentation projection of the densified table: the reference's
@@ -2730,47 +2661,8 @@ object Queries {
     * the band-bucket self-join (one row per colliding band per pair).
     */
   def streamingNearDup(s: SparkSession, dir: String): DataFrame =
-    graft.streaming.Streaming.batchNearDupCandidates(docs(s, dir))
-      .toDF().orderBy("doc_a", "doc_b", "band")
-
-  /** The image modality's ingest-time near-dup face over bounded
-    * input — the per-bucket Hamming-verified fold whose hash kernel
-    * is shared verbatim with `mm_phash` (pixel-true where payloads
-    * decode, byte-stream fallback here on the synthetic corpus); the
-    * twin is the banded self-join the batch operator runs.
-    */
-  def streamingMmNearDup(s: SparkSession, dir: String): DataFrame =
-    graft.streaming.Streaming.batchMmNearDup(
-      Multimodal.withPayload(spreadDocs(s, dir))
-        .unionByName(Multimodal.plantedResampledPayloads(spreadDocs(s, dir))))
-      .toDF().orderBy("doc_a", "doc_b", "band")
-
-  /** The audio modality's ingest-time near-dup face over bounded
-    * input — the per-bucket Hamming-verified fold whose fingerprint
-    * kernel is shared verbatim with `mm_audio_phash`; the twin is the
-    * banded self-join the batch operator runs, kept per band.
-    */
-  def streamingMmAudioNearDup(s: SparkSession, dir: String): DataFrame =
-    graft.streaming.Streaming.batchMmAudioNearDup(audioPayloadSet(s, dir))
-      .toDF().orderBy("doc_a", "doc_b", "band")
-
-  /** The SPECTRAL audio ingest face over bounded input — the lag-bank
-    * kernel + the spectral gate inside the shared bucket fold; the
-    * twin is the per-band sbanded0 self-join. Pairs the padded tempo
-    * stretch in-stream — the transform the energy-dHash stream
-    * provably cannot pair.
-    */
-  def streamingMmAudioNearDupSpectral(s: SparkSession, dir: String): DataFrame =
-    graft.streaming.Streaming.batchMmAudioSpectralNearDup(audioSpectralSet(s, dir))
-      .toDF().orderBy("doc_a", "doc_b", "band")
-
-  /** The SPECTRAL video ingest face over bounded input — the delta
-    * lag-bank kernel + its gate inside the shared bucket fold; the
-    * twin is the per-band vsbanded0 self-join. Pairs the black-padded
-    * re-edit in-stream.
-    */
-  def streamingMmVideoNearDupSpectral(s: SparkSession, dir: String): DataFrame =
-    graft.streaming.Streaming.batchMmVideoSpectralNearDup(videoSpectralSet(s, dir))
+    graft.streaming.Streaming.batchNearDup(
+      graft.streaming.Streaming.TextRule, Dedup.bandSignatures(docs(s, dir)))
       .toDF().orderBy("doc_a", "doc_b", "band")
 
   /** The ingest-time decontamination kernel over bounded input — must
@@ -2994,35 +2886,35 @@ object Queries {
     "mm_image_anchored_clusters" -> (mmImageAnchoredClusters _),
     "mm_resize_px" -> (mmResizePx _),
     "mm_audio_features" -> (mmAudioFeatures _),
-    "mm_audio_phash" -> (mmAudioPhash _),
-    "mm_audio_phash_spectral" -> (mmAudioPhashSpectral _),
-    "mm_audio_near_dup_spectral" -> (mmAudioNearDupSpectral _),
+    "mm_audio_phash" -> (mmFingerprintRows(Multimodal.Audio, audioPayloadSet) _),
+    "mm_audio_phash_spectral" -> (mmFingerprintRows(Multimodal.AudioSpectral, audioSpectralSet) _),
+    "mm_audio_near_dup_spectral" -> (mmPairRows(Multimodal.AudioSpectral, audioSpectralSet) _),
     "mm_audio_resample" -> (mmAudioResample _),
-    "mm_audio_near_dup" -> (mmAudioNearDup _),
-    "mm_audio_dedup_clusters" -> (mmAudioDedupClusters _),
-    "streaming_mm_audio_near_dup" -> (streamingMmAudioNearDup _),
-    "streaming_mm_audio_near_dup_spectral" -> (streamingMmAudioNearDupSpectral _),
-    "streaming_mm_video_near_dup_spectral" -> (streamingMmVideoNearDupSpectral _),
+    "mm_audio_near_dup" -> (mmPairRows(Multimodal.Audio, audioPayloadSet) _),
+    "mm_audio_dedup_clusters" -> (mmClusterRows(Multimodal.Audio, audioPayloadSet) _),
+    "streaming_mm_audio_near_dup" -> (streamingMmPairRows(Multimodal.Audio, audioPayloadSet) _),
+    "streaming_mm_audio_near_dup_spectral" -> (streamingMmPairRows(Multimodal.AudioSpectral, audioSpectralSet) _),
+    "streaming_mm_video_near_dup_spectral" -> (streamingMmPairRows(Multimodal.VideoSpectral, videoSpectralSet) _),
     "mm_video_features" -> (mmVideoFeatures _),
-    "mm_video_phash" -> (mmVideoPhash _),
-    "mm_video_near_dup" -> (mmVideoNearDup _),
-    "mm_video_phash_spectral" -> (mmVideoPhashSpectral _),
-    "mm_video_near_dup_spectral" -> (mmVideoNearDupSpectral _),
+    "mm_video_phash" -> (mmFingerprintRows(Multimodal.Video, videoPayloadSet) _),
+    "mm_video_near_dup" -> (mmPairRows(Multimodal.Video, videoPayloadSet) _),
+    "mm_video_phash_spectral" -> (mmFingerprintRows(Multimodal.VideoSpectral, videoSpectralSet) _),
+    "mm_video_near_dup_spectral" -> (mmPairRows(Multimodal.VideoSpectral, videoSpectralSet) _),
     "mm_video_phash_px" -> (mmVideoPhashPx _),
     "mm_video_near_dup_px" -> (mmVideoNearDupPx _),
     "mm_video_resample" -> (mmVideoResample _),
     "mm_dedup_report" -> (mmDedupReport _),
-    "mm_video_dedup_clusters" -> (mmVideoDedupClusters _),
-    "streaming_mm_video_near_dup" -> (streamingMmVideoNearDup _),
-    "mm_near_dup" -> (mmNearDup _),
-    "mm_dedup_clusters" -> (mmDedupClusters _),
+    "mm_video_dedup_clusters" -> (mmClusterRows(Multimodal.Video, videoPayloadSet) _),
+    "streaming_mm_video_near_dup" -> (streamingMmPairRows(Multimodal.Video, videoPayloadSet) _),
+    "mm_near_dup" -> (mmPairRows(Multimodal.Image, imagePayloadSet) _),
+    "mm_dedup_clusters" -> (mmClusterRows(Multimodal.Image, imagePayloadSet) _),
     "span_metrics" -> (spanMetrics _),
     "metrics" -> (metrics _),
     "streaming_daily" -> (streamingDaily _),
     "streaming_scored" -> (streamingScored _),
     "streaming_dedup" -> (streamingDedup _),
     "streaming_near_dup" -> (streamingNearDup _),
-    "streaming_mm_near_dup" -> (streamingMmNearDup _),
+    "streaming_mm_near_dup" -> (streamingMmPairRows(Multimodal.Image, imagePayloadSet) _),
     "report_daily" -> (reportDaily _),
     "cdx_source_scan" -> (cdxSourceScan _),
     "transitions_chart" -> (transitionsChart _),

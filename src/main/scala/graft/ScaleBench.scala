@@ -581,7 +581,8 @@ object ScaleBench {
         .unionByName(graft.operators.Multimodal.plantedResampledPayloads(
           docs, pBase, pBase + nDocs))
       val t0 = System.nanoTime()
-      val pairs = graft.operators.Multimodal.mmNearDup(input).count()
+      val pairs = graft.operators.Multimodal
+        .nearDupPairs(graft.operators.Multimodal.Image, input).count()
       val sec = (System.nanoTime() - t0) / 1e9
       graft.operators.CacheScope.releaseAll()
       println(
@@ -619,7 +620,8 @@ object ScaleBench {
         .unionByName(graft.operators.Multimodal.plantedAudioPayloads(
           docs, aBase, aBase + nDocs))
       val t0 = System.nanoTime()
-      val pairs = graft.operators.Multimodal.mmAudioNearDup(input).count()
+      val pairs = graft.operators.Multimodal
+        .nearDupPairs(graft.operators.Multimodal.Audio, input).count()
       val sec = (System.nanoTime() - t0) / 1e9
       graft.operators.CacheScope.releaseAll()
       println(
@@ -673,7 +675,8 @@ object ScaleBench {
         .unionByName(graft.operators.Multimodal.plantedVideoPayloads(
           docs, vBase, vBase + nDocs))
       val t0 = System.nanoTime()
-      val pairs = graft.operators.Multimodal.mmVideoNearDup(input).count()
+      val pairs = graft.operators.Multimodal
+        .nearDupPairs(graft.operators.Multimodal.Video, input).count()
       val sec = (System.nanoTime() - t0) / 1e9
       graft.operators.CacheScope.releaseAll()
       println(
@@ -715,7 +718,7 @@ object ScaleBench {
       val input = M.withFlickerVideoPayload(docs)
         .unionByName(M.plantedStretchedVideoPayloads(docs, sBase, sBase + nDocs))
       val t0 = System.nanoTime()
-      val got = M.mmVideoSpectralNearDup(input)
+      val got = M.nearDupPairs(M.VideoSpectral, input)
         .select("doc_a", "doc_b").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
       val sec = (System.nanoTime() - t0) / 1e9
@@ -906,8 +909,10 @@ object ScaleBench {
         (sec, maxRows, maxBytes, lastRows)
       }
       val (ndSec, ndRows, ndBytes, ndLast) = drain(
-        df => graft.streaming.Streaming.nearDupCandidateStreamTtl(
-          df, watermarkDelay = "0 seconds", ttlSeconds = ttlSeconds),
+        df => graft.streaming.Streaming.nearDupStreamTtl(
+          graft.streaming.Streaming.TextRule,
+          graft.operators.Dedup.rowBandSignatures(df, passthrough = Seq("event_ts")),
+          watermarkDelay = "0 seconds", ttlSeconds = ttlSeconds),
         "neardup_ttl")
       val (ddSec, ddRows, ddBytes, ddLast) = drain(
         df => graft.streaming.Streaming.dedupStream(df), "dedup")

@@ -1022,7 +1022,7 @@ object Ann {
   /** (vec_id, embedding, norm[, passthrough...], band, key) bucket rows
     * of the hyperplane signature — the streaming-visible face of
     * [[nearDupSignature]]+band explode (pure projections end to end,
-    * so [[graft.streaming.Streaming.embNearDupStream]] feeds each
+    * so [[graft.streaming.Streaming.nearDupStream]] feeds each
     * arriving vector straight into its band buckets).
     */
   def nearDupBandedVectors(emb: DataFrame, passthrough: Seq[String] = Nil): DataFrame =

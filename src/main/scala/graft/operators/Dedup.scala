@@ -169,7 +169,7 @@ object Dedup {
     * hex == the groupBy `min`; spec-pinned), but usable where a
     * pre-stateful-stage aggregation is impossible: Structured Streaming
     * feeds each arriving document straight into the band-bucket state
-    * ([[graft.streaming.Streaming.nearDupCandidateStream]]). Batch
+    * ([[graft.streaming.Streaming.nearDupStream]]). Batch
     * pipelines keep the aggregated form — one shuffle of shingle rows
     * with map-side combine beats per-row 16x HOF evaluation when the
     * shingle explode is shared with the verify step anyway.

@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Multimodal column plumbing: opaque `binary` payloads with typed
   * metadata, processed by a partition-batched typed stage — the shape a
@@ -25,14 +26,6 @@ import org.apache.spark.sql.functions._
   * parallelizes per-partition with no shuffle at all.
   */
 object Multimodal {
-
-  // ImageIO's default stream cache is a TEMP FILE PER read/write call:
-  // 32 concurrent decode tasks all create/delete files in the same
-  // tmp dir, so decode stages measure filesystem contention, not
-  // decode (profiled: 32-task decode stages 96% idle — 2.9 s of cpu
-  // across 70 s of slot time). All inputs here are in-memory byte
-  // arrays; the heap cache is the correct mode and byte-identical.
-  javax.imageio.ImageIO.setUseCache(false)
 
   /** One multimodal row: payload + typed metadata. */
   case class MmRow(doc_id: Long, modality: String, width: Long, height: Long, payload: Array[Byte])
@@ -339,21 +332,6 @@ object Multimodal {
       }
     }
 
-  /** Per-payload audio fingerprints: the ONE kernel every audio face
-    * rides (registry row, batch near-dup, streaming ingest). Non-WAV
-    * / non-16-bit payloads drop — the image stack has a byte-stream
-    * fallback because opaque bytes still carry image-like statistics;
-    * PCM interpreted from arbitrary bytes does not, so audio is
-    * strict about its container.
-    */
-  def audioFingerprint(withPayloadDf: DataFrame): Dataset[MmHash] = {
-    val spark = withPayloadDf.sparkSession
-    import spark.implicits._
-    withPayloadDf.as[MmRow].mapPartitions(_.flatMap { r =>
-      audioDHash(r.payload).map { case (hi, lo) => MmHash(r.doc_id, hi, lo) }
-    })
-  }
-
   /** Planted "recording + its 2x-downsample" WAV pairs for the audio
     * near-dup rows — [[plantedResampledPayloads]]' discipline on the
     * third modality. The documents table's text stand-ins are far too
@@ -572,39 +550,6 @@ object Multimodal {
     (hi, lo)
   }
 
-  /** Per-payload spectral fingerprints — the [[audioFingerprint]]
-    * shape on the lag bank (strict container discipline: non-WAV /
-    * non-16-bit drop).
-    */
-  def audioSpectralFingerprint(withPayloadDf: DataFrame): Dataset[MmHash] = {
-    val spark = withPayloadDf.sparkSession
-    import spark.implicits._
-    withPayloadDf.as[MmRow].mapPartitions(_.flatMap { r =>
-      audioSpectralHash(r.payload).map { case (hi, lo) => MmHash(r.doc_id, hi, lo) }
-    })
-  }
-
-  /** Spectral near-dup pairs: the shared 4×16-bit banding + Hamming
-    * verify over [[audioSpectralFingerprint]] — each planted
-    * recording must pair with its padded-and-stretched cousin (which
-    * the energy dHash provably misses — spec-pinned) and nothing
-    * else.
-    */
-  def mmAudioSpectralNearDup(withPayloadDf: DataFrame): DataFrame = {
-    val banded = BandCap.capBuckets(
-      perceptualBanded(CacheScope.persist(audioSpectralFingerprint(withPayloadDf).toDF())),
-      Seq("band", "key"), "doc_id")
-    banded.as("a")
-      .join(banded.as("b"), expr("a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id"))
-      .select(
-        col("a.doc_id").as("doc_a"),
-        col("b.doc_id").as("doc_b"),
-        (expr("bit_count(a.ph_lo ^ b.ph_lo)") + expr("bit_count(a.ph_hi ^ b.ph_hi)"))
-          .as("hamming"))
-      .filter(col("hamming") <= SpectralHammingMax)
-      .distinct()
-  }
-
   /** Planted "recording + padded constant-pitch stretch" WAV pairs —
     * the transform class the energy dHash provably misses. Content:
     * [[AudioStretchTones]] square waves at md5-chosen integer periods
@@ -746,7 +691,7 @@ object Multimodal {
     * float, so a formula-replaying twin is bit-exact), and re-encode
     * through [[wavHeader]] at rate/factor. Non-WAV / non-16-bit
     * payloads drop (strict container discipline, as
-    * [[audioFingerprint]]); a final partial window averages its
+    * the [[Audio]] kernel); a final partial window averages its
     * actual count, as any decimator does.
     */
   def resampleAudio(
@@ -814,50 +759,6 @@ object Multimodal {
         }
       }
     }
-  }
-
-  /** Perceptual AUDIO near-dup pairs: band-bucket equi-join (never
-    * all-pairs) over [[audioFingerprint]], Hamming verify over the
-    * full 64 bits, threshold [[MmHammingMax]] — [[mmNearDup]]'s shape
-    * with the audio kernel, riding the same [[perceptualBanded]]
-    * bands.
-    */
-  def mmAudioNearDup(withPayloadDf: DataFrame): DataFrame = {
-    val banded = BandCap.capBuckets(
-      perceptualBanded(CacheScope.persist(audioFingerprint(withPayloadDf).toDF())),
-      Seq("band", "key"), "doc_id")
-    banded.as("a")
-      .join(banded.as("b"), expr("a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id"))
-      .select(
-        col("a.doc_id").as("doc_a"),
-        col("b.doc_id").as("doc_b"),
-        (expr("bit_count(a.ph_lo ^ b.ph_lo)") + expr("bit_count(a.ph_hi ^ b.ph_hi)"))
-          .as("hamming"))
-      .filter(col("hamming") <= MmHammingMax)
-      .distinct()
-  }
-
-  /** Audio duplicate clusters: the FOURTH modality through
-    * [[graft.operators.Corpus.clustersFromEdges]]' one connected-
-    * components engine (text shingles, embedding cosines, image
-    * signals, now audio energy tracks). Membership universe = every
-    * payload that fingerprints (parsed 16-bit WAV), so a cluster id
-    * exists for singletons too.
-    */
-  def mmAudioDedupClusters(withPayloadDf: DataFrame): DataFrame = {
-    val hashed = CacheScope.persist(audioFingerprint(withPayloadDf).toDF())
-    val banded = BandCap.capBuckets(perceptualBanded(hashed), Seq("band", "key"), "doc_id")
-    val pairs = banded.as("a")
-      .join(banded.as("b"), expr("a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id"))
-      .select(
-        col("a.doc_id").as("doc_a"),
-        col("b.doc_id").as("doc_b"),
-        (expr("bit_count(a.ph_lo ^ b.ph_lo)") + expr("bit_count(a.ph_hi ^ b.ph_hi)"))
-          .as("hamming"))
-      .filter(col("hamming") <= MmHammingMax)
-      .select(col("doc_a"), col("doc_b"))
-      .distinct()
-    Corpus.clustersFromEdges(hashed.select(col("doc_id")), pairs)
   }
 
   // ------------------------------------------------ video container (AVI)
@@ -1063,17 +964,6 @@ object Multimodal {
         (hi, lo)
       }
     }
-
-  /** Per-payload video fingerprints: the ONE kernel every video face
-    * rides (registry row, batch near-dup, streaming ingest).
-    */
-  def videoFingerprint(withPayloadDf: DataFrame): Dataset[MmHash] = {
-    val spark = withPayloadDf.sparkSession
-    import spark.implicits._
-    withPayloadDf.as[MmRow].mapPartitions(_.flatMap { r =>
-      videoDHash(r.payload).map { case (hi, lo) => MmHash(r.doc_id, hi, lo) }
-    })
-  }
 
   /** Planted "clip + its 2x frame-rate downsample" AVI pairs —
     * [[plantedAudioPayloads]]' discipline on the fifth container. The
@@ -1352,37 +1242,6 @@ object Multimodal {
       }
     }
 
-  /** Per-payload video spectral fingerprints — the strict-container
-    * fingerprint shape on the delta lag bank.
-    */
-  def videoSpectralFingerprint(withPayloadDf: DataFrame): Dataset[MmHash] = {
-    val spark = withPayloadDf.sparkSession
-    import spark.implicits._
-    withPayloadDf.as[MmRow].mapPartitions(_.flatMap { r =>
-      videoSpectralHash(r.payload).map { case (hi, lo) => MmHash(r.doc_id, hi, lo) }
-    })
-  }
-
-  /** Spectral video near-dup pairs: the shared 4×16-bit banding +
-    * Hamming verify over [[videoSpectralFingerprint]] — each planted
-    * clip must pair with its padded-and-stretched cousin (which the
-    * temporal dHash provably misses — spec-pinned) and nothing else.
-    */
-  def mmVideoSpectralNearDup(withPayloadDf: DataFrame): DataFrame = {
-    val banded = BandCap.capBuckets(
-      perceptualBanded(CacheScope.persist(videoSpectralFingerprint(withPayloadDf).toDF())),
-      Seq("band", "key"), "doc_id")
-    banded.as("a")
-      .join(banded.as("b"), expr("a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id"))
-      .select(
-        col("a.doc_id").as("doc_a"),
-        col("b.doc_id").as("doc_b"),
-        (expr("bit_count(a.ph_lo ^ b.ph_lo)") + expr("bit_count(a.ph_hi ^ b.ph_hi)"))
-          .as("hamming"))
-      .filter(col("hamming") <= VideoSpectralHammingMax)
-      .distinct()
-  }
-
   // ------------------------------------- spatial (per-frame) video dHash
   /** The SPATIAL video fingerprint's planted fixture parameters: clips
     * of [[PxVideoFrames]] frames whose pixels are md5-derived constant
@@ -1594,7 +1453,7 @@ object Multimodal {
     * transcoder performs), and re-encode through [[aviContainer]] at
     * factor× the frame interval — same duration, a quarter of the
     * frames. Non-AVI payloads drop (strict container discipline, as
-    * [[videoFingerprint]]). Per-frame luma sums are exact integers,
+    * the [[Video]] kernel). Per-frame luma sums are exact integers,
     * so the twin replays them from the synth formulas with no
     * container bytes.
     */
@@ -1635,47 +1494,6 @@ object Multimodal {
         }
       }
     }
-  }
-
-  /** Perceptual VIDEO near-dup pairs: band-bucket equi-join (never
-    * all-pairs) over [[videoFingerprint]], Hamming verify, threshold
-    * [[MmHammingMax]] — [[mmAudioNearDup]]'s shape on the fifth
-    * modality, riding the same [[perceptualBanded]] bands.
-    */
-  def mmVideoNearDup(withPayloadDf: DataFrame): DataFrame = {
-    val banded = BandCap.capBuckets(
-      perceptualBanded(CacheScope.persist(videoFingerprint(withPayloadDf).toDF())),
-      Seq("band", "key"), "doc_id")
-    banded.as("a")
-      .join(banded.as("b"), expr("a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id"))
-      .select(
-        col("a.doc_id").as("doc_a"),
-        col("b.doc_id").as("doc_b"),
-        (expr("bit_count(a.ph_lo ^ b.ph_lo)") + expr("bit_count(a.ph_hi ^ b.ph_hi)"))
-          .as("hamming"))
-      .filter(col("hamming") <= MmHammingMax)
-      .distinct()
-  }
-
-  /** Video duplicate clusters: the FIFTH modality through
-    * [[graft.operators.Corpus.clustersFromEdges]]' one connected-
-    * components engine. Membership universe = every payload that
-    * fingerprints (parsed AVI of signature length).
-    */
-  def mmVideoDedupClusters(withPayloadDf: DataFrame): DataFrame = {
-    val hashed = CacheScope.persist(videoFingerprint(withPayloadDf).toDF())
-    val banded = BandCap.capBuckets(perceptualBanded(hashed), Seq("band", "key"), "doc_id")
-    val pairs = banded.as("a")
-      .join(banded.as("b"), expr("a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id"))
-      .select(
-        col("a.doc_id").as("doc_a"),
-        col("b.doc_id").as("doc_b"),
-        (expr("bit_count(a.ph_lo ^ b.ph_lo)") + expr("bit_count(a.ph_hi ^ b.ph_hi)"))
-          .as("hamming"))
-      .filter(col("hamming") <= MmHammingMax)
-      .select(col("doc_a"), col("doc_b"))
-      .distinct()
-    Corpus.clustersFromEdges(hashed.select(col("doc_id")), pairs)
   }
 
   /** Encoded-payload synth: a REAL container header (PNG for even
@@ -1769,13 +1587,6 @@ object Multimodal {
   }
 
   // ------------------------------------------------ perceptual near-dup
-  /** One perceptual fingerprint per payload, split into two 32-bit
-    * halves held in longs — the same sign-safe layout SimHash uses
-    * ([[Dedup.simhash]]), so every downstream bit trick (banding,
-    * xor-popcount Hamming) is identical in Spark and DuckDB.
-    */
-  case class MmHash(doc_id: Long, ph_hi: Long, ph_lo: Long)
-
   /** dHash grid: 65 buckets -> 64 adjacent-difference bits. */
   val PhashBuckets = 65
 
@@ -1784,29 +1595,52 @@ object Multimodal {
     */
   val MmHammingMax = 8
 
-  /** dHash over the payload byte stream: resample into
-    * [[PhashBuckets]] equal relative spans (the 1-D analogue of the
-    * classic 9×8 downscale — the decode-to-pixels step is the stubbed
-    * part, the hash over the decoded signal is the real algorithm),
-    * then bit b = avg(bucket b+1) > avg(bucket b). Averages compare by
-    * integer cross-multiplication — no division, no float, so the
-    * DuckDB twin is bit-exact. Robustness property (the reason dHash
-    * beats md5 for images): any resampling that preserves local
-    * averages — the [[resize]] stride, re-encoding noise — moves few
-    * bits, so near-dups land in a shared 16-bit band.
-    *
-    * Scale: one pass over each payload, no shuffle; the cross-multiply
-    * compare switches to BigInt exactly when the accumulated
-    * magnitudes could overflow Long ([[needsBigInt]] — identical
-    * outcomes, pennies slower, only on rows that need it).
+  /** One perceptual fingerprint kernel: the payload hash every face of
+    * its modality rides — registry fingerprint row, batch pairs,
+    * clusters, and the ingest streams — and the Hamming gate its
+    * pairs verify at. A None hash means the payload has no signature
+    * under this kernel and drops.
     */
-  def perceptualHash(withPayloadDf: DataFrame): Dataset[MmHash] = {
-    val spark = withPayloadDf.sparkSession
-    import spark.implicits._
-    withPayloadDf.as[MmRow].mapPartitions(_.map { r =>
-      val (hi, lo) = phashOf(r.payload)
-      MmHash(r.doc_id, hi, lo)
-    })
+  final case class Kernel(hash: Array[Byte] => Option[(Long, Long)], gate: Int)
+
+  /** The kernel table. Image: [[phashOf]] — pixel-true 2-D dHash when
+    * the payload decodes, byte-stream fallback otherwise, so every
+    * payload hashes. Audio / video: the PCM energy and temporal luma
+    * dHashes ([[audioDHash]], [[videoDHash]]) — strict containers,
+    * non-WAV / non-AVI payloads drop: opaque bytes still carry
+    * image-like statistics, but PCM or frames read from arbitrary
+    * bytes do not. The spectral pair: the lag-bank hashes
+    * ([[audioSpectralHash]], [[videoSpectralHash]]) at their tighter
+    * gates.
+    */
+  val Image = Kernel(p => Some(phashOf(p)), MmHammingMax)
+  val Audio = Kernel(audioDHash, MmHammingMax)
+  val Video = Kernel(videoDHash, MmHammingMax)
+  val AudioSpectral = Kernel(audioSpectralHash, SpectralHammingMax)
+  val VideoSpectral = Kernel(videoSpectralHash, VideoSpectralHammingMax)
+
+  /** Per-payload fingerprints under `kernel`: one (doc_id, ph_hi,
+    * ph_lo) row per payload the kernel hashes, the 64-bit hash split
+    * into two 32-bit halves held in longs — the same sign-safe layout
+    * SimHash uses ([[Dedup.simhash]]), so every downstream bit trick
+    * (banding, xor-popcount Hamming) is identical in Spark and
+    * DuckDB. An `event_ts` column, when the frame carries one, rides
+    * through, so a TTL stream can watermark the banded rows
+    * ([[perceptualBanded]] keeps it too).
+    *
+    * Scale: one pass over each payload, no shuffle.
+    */
+  def fingerprint(kernel: Kernel, withPayloadDf: DataFrame): DataFrame = {
+    val rides = withPayloadDf.schema.filter(_.name == "event_ts")
+    val out = StructType(
+      Seq("doc_id", "ph_hi", "ph_lo").map(StructField(_, LongType, nullable = false)) ++ rides)
+    withPayloadDf
+      .select(col("doc_id").cast("long") +: col("payload") +: rides.map(f => col(f.name)): _*)
+      .mapPartitions(_.flatMap { r =>
+        kernel.hash(r.getAs[Array[Byte]](1)).map { case (hi, lo) =>
+          Row.fromSeq(r.getLong(0) +: hi +: lo +: r.toSeq.drop(2))
+        }
+      })(Encoders.row(out))
   }
 
   /** The ONE perceptual-hash kernel every face rides (batch operator,
@@ -1845,8 +1679,22 @@ object Multimodal {
     mc > 0 && ms > Long.MaxValue / mc
   }
 
-  /** 1-D byte-stream dHash (the pre-decode fallback; scaladoc on
-    * [[perceptualHash]] describes the bucket/compare scheme).
+  /** 1-D dHash over the payload byte stream (the pre-decode
+    * fallback of the [[Image]] kernel): resample into
+    * [[PhashBuckets]] equal relative spans (the 1-D analogue of the
+    * classic 9×8 downscale — the decode-to-pixels step is the stubbed
+    * part, the hash over the decoded signal is the real algorithm),
+    * then bit b = avg(bucket b+1) > avg(bucket b). Averages compare by
+    * integer cross-multiplication — no division, no float, so the
+    * DuckDB twin is bit-exact. Robustness property (the reason dHash
+    * beats md5 for images): any resampling that preserves local
+    * averages — the [[resize]] stride, re-encoding noise — moves few
+    * bits, so near-dups land in a shared 16-bit band.
+    *
+    * Scale: one pass over each payload, no shuffle; the cross-multiply
+    * compare switches to BigInt exactly when the accumulated
+    * magnitudes could overflow Long ([[needsBigInt]] — identical
+    * outcomes, pennies slower, only on rows that need it).
     */
   private[graft] def byteDHash(p: Array[Byte]): (Long, Long) = {
     val n = PhashBuckets
@@ -1905,13 +1753,40 @@ object Multimodal {
   /** The shared decode gate: magic-byte classification keeps ImageIO
     * off the non-image hot path; a decode failure on a real-looking
     * header is None (dropped data), never a job failure.
+    *
+    * The decode reads through a heap-cached image stream: ImageIO's
+    * default stream cache is a TEMP FILE PER call, and concurrent
+    * decode tasks contending on one tmp dir made decode stages
+    * measure the filesystem instead of the decode (profiled: 32-task
+    * decode stages 96% idle). Passing the stream per call keeps that
+    * choice local instead of flipping the JVM-global
+    * `ImageIO.setUseCache`.
     */
   private def decodeRaster(p: Array[Byte]): Option[java.awt.image.BufferedImage] = {
     val fmt = parseHeader(p)._1
     if (fmt != "png" && fmt != "jpeg") None
-    else
-      try Option(javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(p)))
-      catch { case scala.util.control.NonFatal(_) => None }
+    else {
+      val in = new javax.imageio.stream.MemoryCacheImageInputStream(
+        new java.io.ByteArrayInputStream(p))
+      try {
+        // read closes the stream once a reader has taken it; with no
+        // reader for the bytes it returns null and leaves it open
+        val img = javax.imageio.ImageIO.read(in)
+        if (img == null) in.close()
+        Option(img)
+      } catch { case scala.util.control.NonFatal(_) => None }
+    }
+  }
+
+  /** PNG-encode a raster through a heap-cached image stream — the
+    * write-side twin of [[decodeRaster]]'s per-call cache choice.
+    */
+  private def pngBytes(img: java.awt.image.RenderedImage): Array[Byte] = {
+    val baos = new java.io.ByteArrayOutputStream()
+    val out = new javax.imageio.stream.MemoryCacheImageOutputStream(baos)
+    try javax.imageio.ImageIO.write(img, "png", out)
+    finally out.close()
+    baos.toByteArray
   }
 
   /** The [[pixelDHash]] grid kernel over an arbitrary REGION of a
@@ -2082,9 +1957,7 @@ object Multimodal {
           }
           y += 1
         }
-        val baos = new java.io.ByteArrayOutputStream()
-        javax.imageio.ImageIO.write(img, "png", baos)
-        MmRow(d, "image", PxImgW.toLong, PxImgH.toLong, baos.toByteArray)
+        MmRow(d, "image", PxImgW.toLong, PxImgH.toLong, pngBytes(img))
       })
       .toDF()
   }
@@ -2181,9 +2054,7 @@ object Multimodal {
           }
           y += 1
         }
-        val baos = new java.io.ByteArrayOutputStream()
-        javax.imageio.ImageIO.write(img, "png", baos)
-        MmRow(d + PxCropIdBase, "image", PxCropW.toLong, PxCropH.toLong, baos.toByteArray)
+        MmRow(d + PxCropIdBase, "image", PxCropW.toLong, PxCropH.toLong, pngBytes(img))
       })
       .toDF()
   }
@@ -2281,9 +2152,7 @@ object Multimodal {
           }
           y += 1
         }
-        val baos = new java.io.ByteArrayOutputStream()
-        javax.imageio.ImageIO.write(img, "png", baos)
-        MmRow(d + PxCrop2IdBase, "image", PxCropW.toLong, PxCropH.toLong, baos.toByteArray)
+        MmRow(d + PxCrop2IdBase, "image", PxCropW.toLong, PxCropH.toLong, pngBytes(img))
       })
       .toDF()
   }
@@ -2481,9 +2350,7 @@ object Multimodal {
           }
           y += 1
         }
-        val baos = new java.io.ByteArrayOutputStream()
-        javax.imageio.ImageIO.write(img, "png", baos)
-        MmRow(d + PxCrop3IdBase, "image", PxCropW.toLong, PxCropH.toLong, baos.toByteArray)
+        MmRow(d + PxCrop3IdBase, "image", PxCropW.toLong, PxCropH.toLong, pngBytes(img))
       })
       .toDF()
   }
@@ -2570,74 +2437,83 @@ object Multimodal {
     withPayloadDf.as[MmRow].mapPartitions { rows =>
       val md = java.security.MessageDigest.getInstance("MD5")
       rows.flatMap { r =>
-        val fmt = parseHeader(r.payload)._1
-        if (fmt != "png" && fmt != "jpeg") None
-        else
-          try {
-            val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(r.payload))
-            if (img == null || img.getWidth < outW || img.getHeight < outH) None
-            else {
-              val w = img.getWidth
-              val h = img.getHeight
-              val sums = Array.ofDim[Long](outH, outW)
-              val cnts = Array.ofDim[Long](outH, outW)
-              var y = 0
-              while (y < h) {
-                val by = ((y.toLong * outH) / h).toInt
-                var x = 0
-                while (x < w) {
-                  val bx = ((x.toLong * outW) / w).toInt
-                  val rgb = img.getRGB(x, y)
-                  val lum = (299 * ((rgb >> 16) & 0xff) +
-                    587 * ((rgb >> 8) & 0xff) + 114 * (rgb & 0xff)) / 1000
-                  sums(by)(bx) += lum
-                  cnts(by)(bx) += 1
-                  x += 1
-                }
-                y += 1
+        decodeRaster(r.payload)
+          .filter(img => img.getWidth >= outW && img.getHeight >= outH)
+          .map { img =>
+            val w = img.getWidth
+            val h = img.getHeight
+            val sums = Array.ofDim[Long](outH, outW)
+            val cnts = Array.ofDim[Long](outH, outW)
+            var y = 0
+            while (y < h) {
+              val by = ((y.toLong * outH) / h).toInt
+              var x = 0
+              while (x < w) {
+                val bx = ((x.toLong * outW) / w).toInt
+                val rgb = img.getRGB(x, y)
+                val lum = (299 * ((rgb >> 16) & 0xff) +
+                  587 * ((rgb >> 8) & 0xff) + 114 * (rgb & 0xff)) / 1000
+                sums(by)(bx) += lum
+                cnts(by)(bx) += 1
+                x += 1
               }
-              val out = new java.awt.image.BufferedImage(
-                outW, outH, java.awt.image.BufferedImage.TYPE_INT_RGB)
-              var lumaSum = 0L
-              val parts = new StringBuilder
-              var yy = 0
-              while (yy < outH) {
-                var xx = 0
-                while (xx < outW) {
-                  val v = (sums(yy)(xx) / cnts(yy)(xx)).toInt
-                  out.setRGB(xx, yy, (v << 16) | (v << 8) | v)
-                  lumaSum += v
-                  if (parts.nonEmpty) parts.append('_')
-                  parts.append(v)
-                  xx += 1
-                }
-                yy += 1
-              }
-              val baos = new java.io.ByteArrayOutputStream()
-              javax.imageio.ImageIO.write(out, "png", baos)
-              val bytes = baos.toByteArray
-              val lumaMd5 = md.digest(parts.toString.getBytes("US-ASCII"))
-                .map("%02x".format(_)).mkString
-              Some(MmResizedPx(
-                r.doc_id, outW, outH, bytes.length.toLong, lumaSum, lumaMd5, bytes))
+              y += 1
             }
-          } catch { case scala.util.control.NonFatal(_) => None }
+            val out = new java.awt.image.BufferedImage(
+              outW, outH, java.awt.image.BufferedImage.TYPE_INT_RGB)
+            var lumaSum = 0L
+            val parts = new StringBuilder
+            var yy = 0
+            while (yy < outH) {
+              var xx = 0
+              while (xx < outW) {
+                val v = (sums(yy)(xx) / cnts(yy)(xx)).toInt
+                out.setRGB(xx, yy, (v << 16) | (v << 8) | v)
+                lumaSum += v
+                if (parts.nonEmpty) parts.append('_')
+                parts.append(v)
+                xx += 1
+              }
+              yy += 1
+            }
+            val bytes = pngBytes(out)
+            val lumaMd5 = md.digest(parts.toString.getBytes("US-ASCII"))
+              .map("%02x".format(_)).mkString
+            MmResizedPx(
+              r.doc_id, outW, outH, bytes.length.toLong, lumaSum, lumaMd5, bytes)
+          }
       }
     }
   }
 
-  /** Perceptual image near-dup pairs: band-bucket equi-join (never
-    * all-pairs), Hamming verify over the full 64 bits, threshold
-    * [[MmHammingMax]]. The image-modality face of [[Dedup
-    * .simhashPairs]]: same candidate shape, same verify, a signal
-    * hash instead of a token hash. Payloads that decode as real
-    * images hash pixel-true ([[pixelDHash]]) — two re-encodes of one
-    * photo pair even though their byte streams share nothing.
+  /** Perceptual near-dup pairs under `kernel`: band-bucket equi-join
+    * (never all-pairs) over [[fingerprint]], Hamming verify over the
+    * full 64 bits at the kernel's gate — [[Dedup.simhashPairs]]'
+    * candidate shape with a signal hash instead of a token hash.
+    * Image payloads that decode hash pixel-true ([[pixelDHash]]), so
+    * two re-encodes of one photo pair even though their byte streams
+    * share nothing; the spectral kernels pair the padded stretch /
+    * re-edit their energy and temporal siblings provably miss.
     */
-  def mmNearDup(withPayloadDf: DataFrame): DataFrame = {
-    val banded = BandCap.capBuckets(
-      perceptualBanded(CacheScope.persist(perceptualHash(withPayloadDf).toDF())),
-      Seq("band", "key"), "doc_id")
+  def nearDupPairs(kernel: Kernel, withPayloadDf: DataFrame): DataFrame =
+    hammingPairs(CacheScope.persist(fingerprint(kernel, withPayloadDf)), kernel.gate)
+
+  /** Perceptual duplicate clusters under `kernel`: [[graft.operators
+    * .Corpus.clustersFromEdges]]' one connected-components engine over
+    * [[nearDupPairs]] — any similarity modality that produces a pair
+    * stream resolves clusters through the engine its text already
+    * uses. Membership universe = every payload that fingerprints, so
+    * a cluster id exists for singletons too.
+    */
+  def dedupClusters(kernel: Kernel, withPayloadDf: DataFrame): DataFrame = {
+    val hashed = CacheScope.persist(fingerprint(kernel, withPayloadDf))
+    Corpus.clustersFromEdges(
+      hashed.select(col("doc_id")),
+      hammingPairs(hashed, kernel.gate).select(col("doc_a"), col("doc_b")))
+  }
+
+  private def hammingPairs(hashed: DataFrame, gate: Int): DataFrame = {
+    val banded = BandCap.capBuckets(perceptualBanded(hashed), Seq("band", "key"), "doc_id")
     banded.as("a")
       .join(banded.as("b"), expr("a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id"))
       .select(
@@ -2645,23 +2521,9 @@ object Multimodal {
         col("b.doc_id").as("doc_b"),
         (expr("bit_count(a.ph_lo ^ b.ph_lo)") + expr("bit_count(a.ph_hi ^ b.ph_hi)"))
           .as("hamming"))
-      .filter(col("hamming") <= MmHammingMax)
+      .filter(col("hamming") <= gate)
       .distinct()
   }
-
-  /** Perceptual duplicate clusters: [[graft.operators.Corpus
-    * .clustersFromEdges]]' connected-components engine over
-    * [[mmNearDup]] pairs — the THIRD modality through the same
-    * propagation loop (text shingles, embedding cosines, now image
-    * signals), which is the point: any similarity modality that
-    * produces a pair stream resolves clusters through one tested
-    * engine, and a multimodal corpus dedups images with exactly the
-    * machinery its text already uses.
-    */
-  def mmDedupClusters(withPayloadDf: DataFrame): DataFrame =
-    Corpus.clustersFromEdges(
-      withPayloadDf.select(col("doc_id")),
-      mmNearDup(withPayloadDf).select(col("doc_a"), col("doc_b")))
 
   /** Resize stub: stride-resample the payload (every ResizeStride-th
     * byte) — a real image resize decodes, scales, re-encodes; the

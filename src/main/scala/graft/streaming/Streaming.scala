@@ -2,9 +2,11 @@ package graft.streaming
 
 import graft.model.{Capture, DimState, ScoredRow, SigParams, TrendQuery}
 import graft.operators.GapFill
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import scala.reflect.runtime.universe.TypeTag
 
 /** ST1: incremental daily aggregation as a stateful stream.
   *
@@ -750,6 +752,15 @@ object Streaming {
   }
 
   // --------------------------------------- streaming near-dup candidates
+  // Every near-dup kind — text shingles, the perceptual kernels
+  // ([[graft.operators.Multimodal.Kernel]]), embeddings — runs the same
+  // band-bucket fold: rows key into `band|key` buckets, and a newcomer
+  // pairs with every member already there. A [[BucketRule]] says what
+  // one kind's rows and members are and how a pair verifies; three
+  // faces run the fold over already-banded rows: [[nearDupStream]]
+  // (exact state), [[nearDupStreamTtl]] (event-time eviction, capped
+  // members) and [[batchNearDup]] (the bounded, oracle-checkable twin).
+
   /** One (doc, band, signature) bucket row entering the LSH stream. */
   case class BandKeyed(doc_id: Long, band: Int, sig: String)
 
@@ -760,17 +771,124 @@ object Streaming {
     */
   case class CandidateOut(doc_a: Long, doc_b: Long, band: Int)
 
-  /** Per-bucket fold shared by the stream and its batch harness: each
-    * doc joining the bucket pairs with every member already there.
-    * State is the member list — the honest cost of streaming LSH (the
-    * batch self-join holds the same bucket in memory); a pathological
-    * bucket is a giant duplicate cluster, whose pair list is the
-    * answer, not overhead.
+  /** One perceptual band-bucket row: a 16-bit slice key plus the full
+    * hash halves (the within-bucket Hamming verify needs them).
     */
-  private[graft] def bucketFold(
-      rows: Iterator[BandKeyed],
-      prior: Vector[Long],
-      cap: Int = Int.MaxValue): (Vector[Long], Vector[CandidateOut]) = {
+  case class MmBandKeyed(doc_id: Long, band: Int, key: Long, ph_hi: Long, ph_lo: Long)
+
+  /** A verified perceptual collision: doc_a < doc_b share band `band`
+    * and sit within their kernel's Hamming gate.
+    */
+  case class MmCandidateOut(doc_a: Long, doc_b: Long, band: Int, hamming: Int)
+
+  /** A hyperplane band-bucket row carrying the vector + norm the
+    * verify step needs — the embedding modality's [[BandKeyed]].
+    */
+  case class EmbBandKeyed(
+      vec_id: Long, band: Int, key: Long, embedding: Array[Float], norm: Double)
+
+  /** One verified semantic candidate pair, kept per band. */
+  case class EmbCandidateOut(vec_a: Long, vec_b: Long, band: Int, cos: Double)
+
+  /** TTL-bucket state: arrival-ordered members plus the newest member
+    * event time ever observed. The timeout re-arms from `newestTs`, NOT
+    * from the current batch's max — a valid late-but-in-watermark
+    * arrival older than the bucket's newest member must extend nothing
+    * but also shrink nothing (re-arming from the batch max would move
+    * the armed timestamp BACKWARD and evict early).
+    */
+  case class TtlState[M](members: Vector[M], newestTs: Long)
+
+  /** How one near-dup kind folds: the `band|key` bucket a banded row
+    * `R` keys into, the state member `M` it leaves behind, that
+    * member's id, and the check a newcomer runs against each member
+    * (None = no candidate). The encoders are the kind's row, state and
+    * output formats; the state encoders ARE the checkpoint format
+    * (StreamingSpec pins their schemas).
+    */
+  final case class BucketRule[R, M, O](
+      bucket: R => String,
+      member: R => M,
+      id: M => Long,
+      pair: (M, R) => Option[O])(
+      val rows: Encoder[R],
+      val exactState: Encoder[Vector[M]],
+      val ttlState: Encoder[TtlState[M]],
+      val out: Encoder[O])
+
+  private def rule[R <: Product : TypeTag, M : TypeTag, O <: Product : TypeTag](
+      bucket: R => String, member: R => M, id: M => Long)(
+      pair: (M, R) => Option[O]): BucketRule[R, M, O] =
+    BucketRule(bucket, member, id, pair)(
+      Encoders.product[R], ExpressionEncoder[Vector[M]](),
+      Encoders.product[TtlState[M]], Encoders.product[O])
+
+  // The rules are lazy: the trend faces load this object too, and
+  // should not pay for deriving the near-dup encoders.
+
+  /** Text shingles: members are doc ids, and every collision is a
+    * candidate — the Jaccard verify is the downstream join's job.
+    */
+  lazy val TextRule: BucketRule[BandKeyed, Long, CandidateOut] =
+    rule[BandKeyed, Long, CandidateOut](r => s"${r.band}|${r.sig}", _.doc_id, m => m) {
+      (m, r) => Some(CandidateOut(math.min(m, r.doc_id), math.max(m, r.doc_id), r.band))
+    }
+
+  /** A perceptual kernel: members carry their hash halves, so a
+    * collision verifies at the kernel's Hamming gate inside the bucket
+    * instead of in a downstream join.
+    */
+  def perceptualRule(kernel: graft.operators.Multimodal.Kernel)
+      : BucketRule[MmBandKeyed, (Long, Long, Long), MmCandidateOut] = {
+    val gate = kernel.gate
+    rule[MmBandKeyed, (Long, Long, Long), MmCandidateOut](
+      r => s"${r.band}|${r.key}", r => (r.doc_id, r.ph_hi, r.ph_lo), _._1) {
+      case ((m, hi, lo), r) =>
+        val ham = java.lang.Long.bitCount(hi ^ r.ph_hi) + java.lang.Long.bitCount(lo ^ r.ph_lo)
+        if (ham <= gate)
+          Some(MmCandidateOut(math.min(m, r.doc_id), math.max(m, r.doc_id), r.band, ham))
+        else None
+    }
+  }
+
+  /** Embeddings: each arriving vector exact-cosine-verifies against
+    * the bucket's members (threshold [[graft.operators.Ann.NearDupCos]]).
+    * The dot product is the strict index-ascending widen-to-double fold
+    * `float_dot` runs, and the rounding is Spark's HALF_UP at 6 — so
+    * the emitted cos is bit-identical to the batch operator's and to
+    * the DuckDB twin's.
+    */
+  lazy val EmbRule: BucketRule[EmbBandKeyed, (Long, Array[Float], Double), EmbCandidateOut] =
+    rule[EmbBandKeyed, (Long, Array[Float], Double), EmbCandidateOut](
+      r => s"${r.band}|${r.key}", r => (r.vec_id, r.embedding, r.norm), _._1) {
+      case ((m, me, mn), r) =>
+        var d = 0.0
+        var i = 0
+        val n = math.min(me.length, r.embedding.length)
+        while (i < n) {
+          d += me(i).toDouble * r.embedding(i).toDouble
+          i += 1
+        }
+        val cos = d / (mn * r.norm)
+        if (cos >= graft.operators.Ann.NearDupCos)
+          Some(EmbCandidateOut(
+            math.min(m, r.vec_id), math.max(m, r.vec_id), r.band,
+            BigDecimal(cos).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble))
+        else None
+    }
+
+  /** The per-bucket fold every face runs: each row joining the bucket
+    * runs `rule.pair` against every member already there, then joins
+    * the members. State is the member list — the honest cost of
+    * streaming LSH (the batch self-join holds the same bucket in
+    * memory); a pathological bucket is a giant duplicate cluster,
+    * whose pair list is the answer, not overhead.
+    */
+  private[graft] def bucketFold[R, M, O](
+      rule: BucketRule[R, M, O],
+      rows: Iterator[R],
+      prior: Vector[M],
+      cap: Int = Int.MaxValue): (Vector[M], Vector[O]) = {
     // membership probes go through a Set (O(1)); the Vector stays the
     // arrival-ordered state representation. Without the Set, a giant
     // bucket pays O(n) per arrival ON TOP of the inherent O(n²) pair
@@ -783,79 +901,76 @@ object Streaming {
     // pairs per epoch instead of n² (arrival order decides the
     // survivors here where the batch cap hash-samples; a streaming
     // fold cannot replay the coin — it would need the bucket's final
-    // size). The exact variants pass no cap: their oracle twins
-    // replay every pair.
+    // size). The exact faces pass no cap: their oracle twins replay
+    // every pair.
     var members = prior
-    val seen = scala.collection.mutable.HashSet.from(prior)
-    val out = Vector.newBuilder[CandidateOut]
-    rows.toSeq.sortBy(_.doc_id).foreach { r =>
-      if (members.size < cap && seen.add(r.doc_id)) {
-        members.foreach(m =>
-          out += CandidateOut(math.min(m, r.doc_id), math.max(m, r.doc_id), r.band))
-        members = members :+ r.doc_id
-      }
+    val seen = scala.collection.mutable.HashSet.from(prior.iterator.map(rule.id))
+    val out = Vector.newBuilder[O]
+    rows.map(r => (rule.member(r), r)).toSeq.sortBy(mr => rule.id(mr._1)).foreach {
+      case (m, r) =>
+        if (members.size < cap && seen.add(rule.id(m))) {
+          members.foreach(prev => rule.pair(prev, r).foreach(out += _))
+          members = members :+ m
+        }
     }
     (members, out.result())
   }
 
-  /** Streaming MinHash-LSH candidate generation: documents arrive, their
-    * per-row band signatures ([[graft.operators.Dedup
-    * .rowBandSignatures]] — scalar HOFs, so no aggregation precedes the
-    * stateful stage) key them into band buckets, and each bucket's
-    * GroupState emits collision pairs as later members arrive. The
-    * streaming face of the dedup modality: candidates surface while the
-    * crawl is still running, instead of after a full-corpus scan.
+  /** `banded` typed as the rule's rows: its columns by name, with the
+    * band cast to the rows' int (the hyperplane banding emits bigint).
     */
-  /** State bound: exact candidates require remembering every bucket
-    * member for the stream's lifetime (total state == one long per
-    * (band, doc) = 4x corpus ids — small per doc, unbounded over an
-    * endless crawl). [[nearDupCandidateStreamTtl]] is the bounded-state
-    * production variant — event-time TTL eviction, trading cross-epoch
-    * dup detection for bounded state; the exact variant here is the
-    * oracle-checkable semantics.
+  private def typedRows[R](rule: BucketRule[R, _, _], banded: DataFrame): Dataset[R] =
+    banded.select(rowColumns(rule.rows): _*).as(rule.rows)
+
+  private def rowColumns(enc: Encoder[_]): Seq[Column] =
+    enc.schema.fieldNames.toSeq.map(n => if (n == "band") col(n).cast("int").as(n) else col(n))
+
+  /** Streaming near-dup candidates over already-banded rows: each
+    * bucket's GroupState emits `rule`-verified pairs as later members
+    * arrive, so candidates surface while the crawl is still running
+    * instead of after a full-corpus scan. Feed it scalar projections
+    * only — [[graft.operators.Dedup.rowBandSignatures]] (text),
+    * [[graft.operators.Multimodal.perceptualBanded]] over
+    * [[graft.operators.Multimodal.fingerprint]] (a perceptual kernel),
+    * [[graft.operators.Ann.nearDupBandedVectors]] (embeddings) — so no
+    * aggregation precedes the stateful stage.
+    *
+    * State bound: exact candidates require remembering every bucket
+    * member for the stream's lifetime (one member per (band, doc) —
+    * small per doc, unbounded over an endless crawl).
+    * [[nearDupStreamTtl]] is the bounded-state production face; this
+    * exact one is the oracle-checkable semantics.
     */
-  def nearDupCandidateStream(docs: org.apache.spark.sql.DataFrame): Dataset[CandidateOut] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    graft.operators.Dedup.rowBandSignatures(docs).as[BandKeyed]
-      .groupByKey(r => s"${r.band}|${r.sig}")
+  def nearDupStream[R, M, O](rule: BucketRule[R, M, O], banded: DataFrame): Dataset[O] =
+    typedRows(rule, banded)
+      .groupByKey(rule.bucket)(Encoders.STRING)
       .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (key: String, rows: Iterator[BandKeyed], state: GroupState[Vector[Long]]) =>
-          val (members, out) = bucketFold(rows, state.getOption.getOrElse(Vector.empty))
+        (_: String, rows: Iterator[R], state: GroupState[Vector[M]]) =>
+          val (members, out) = bucketFold(rule, rows, state.getOption.getOrElse(Vector.empty))
           state.update(members)
           out.iterator
-      }
-  }
+      }(rule.exactState, rule.out)
 
-  /** A band-bucket signature row carrying its document's event time —
-    * the input shape of the TTL-evicting stream.
-    */
-  case class BandKeyedTs(doc_id: Long, band: Int, sig: String, event_ts: java.sql.Timestamp)
-
-  /** TTL-bucket state: arrival-ordered members plus the newest member
-    * event time ever observed. The timeout re-arms from `newestTs`, NOT
-    * from the current batch's max — a valid late-but-in-watermark
-    * arrival older than the bucket's newest member must extend nothing
-    * but also shrink nothing (re-arming from the batch max would move
-    * the armed timestamp BACKWARD and evict early).
-    */
-  case class TtlBucket(members: Vector[Long], newestTs: Long)
-
-  /** [[nearDupCandidateStream]] with a REAL state bound: each band
-    * bucket lives `ttlSeconds` of EVENT time past its newest member,
-    * then its state is evicted, so total state is proportional to one
-    * TTL window of the stream, not its lifetime. The trade is explicit:
-    * a duplicate arriving after its bucket closed pairs with nothing —
-    * cross-epoch dup detection is what bounded state costs.
+  /** [[nearDupStream]] with a REAL state bound: each band bucket lives
+    * `ttlSeconds` of EVENT time past its newest member, then its state
+    * is evicted, so total state is proportional to one TTL window of
+    * the stream, not its lifetime; members stop at
+    * [[graft.operators.BandCap.DefaultCap]] per bucket epoch. The trade
+    * is explicit: a duplicate arriving after its bucket closed or
+    * filled pairs with nothing — cross-epoch dup detection is what
+    * bounded state costs.
     *
     * The clock is deterministic by construction: eviction is driven by
     * the event-time WATERMARK (data decides when time advances), not the
     * wall clock — a ProcessingTimeTimeout variant cannot even be tested
     * under `processAllAvailable`, which never lets processing time
-    * settle. `docs` needs an `event_ts` timestamp column;
-    * `watermarkDelay` is the usual out-of-order bound (rows later than
-    * watermark − delay are dropped by the engine before the state ever
-    * sees them).
+    * settle. `banded` needs an `event_ts` timestamp column (the banding
+    * projections pass it through); `watermarkDelay` is the usual
+    * out-of-order bound (rows later than watermark − delay are dropped
+    * by the engine before the state ever sees them). Rows whose
+    * `event_ts` is null belong to no epoch and are dropped before the
+    * stateful stage (the engine's late-row filter would let them
+    * through).
     *
     * Timeout bookkeeping: every batch that touches a bucket re-arms its
     * timeout to (newest member event time ever seen) + TTL, so an
@@ -865,56 +980,69 @@ object Streaming {
     * watermark passes the armed timestamp the group fires with
     * `hasTimedOut` and the state is removed.
     *
-    * State-schema note: the state type is [[TtlBucket]] (members +
+    * State-schema note: the state type is [[TtlState]] (members +
     * newest event time, format version [[TtlStateVersion]]); a
-    * checkpoint written by a pre-TtlBucket build (bare member vector)
-    * cannot be restored by this version — restart such a stream from a
-    * fresh checkpoint. Call [[guardTtlCheckpoint]] with the checkpoint
+    * checkpoint written by a pre-v2 build (bare member vector) cannot
+    * be restored by this version — restart such a stream from a fresh
+    * checkpoint. Call [[guardTtlCheckpoint]] with the checkpoint
     * location BEFORE `start()` to turn the raw state-deserialization
     * failure a stale checkpoint would produce into a clear versioned
     * error at startup.
     */
-  def nearDupCandidateStreamTtl(
-      docs: org.apache.spark.sql.DataFrame,
+  def nearDupStreamTtl[R, M, O](
+      rule: BucketRule[R, M, O],
+      banded: DataFrame,
       watermarkDelay: String,
-      ttlSeconds: Long): Dataset[CandidateOut] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    graft.operators.Dedup.rowBandSignatures(docs, passthrough = Seq("event_ts"))
+      ttlSeconds: Long): Dataset[O] =
+    banded
+      .where(col("event_ts").isNotNull)
       .withWatermark("event_ts", watermarkDelay)
-      .select("doc_id", "band", "sig", "event_ts").as[BandKeyedTs]
-      .groupByKey(r => s"${r.band}|${r.sig}")
+      .select(struct(rowColumns(rule.rows): _*).as("_1"), col("event_ts").as("_2"))
+      .as(Encoders.tuple(rule.rows, Encoders.TIMESTAMP))
+      .groupByKey((r: (R, java.sql.Timestamp)) => rule.bucket(r._1))(Encoders.STRING)
       .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        (key: String, rows: Iterator[BandKeyedTs], state: GroupState[TtlBucket]) =>
+        (_: String, rows: Iterator[(R, java.sql.Timestamp)], state: GroupState[TtlState[M]]) =>
           if (state.hasTimedOut) {
             state.remove() // the bucket's epoch is over; a later arrival starts a fresh one
             Iterator.empty
           } else {
             val batch = rows.toVector
-            val prior = state.getOption.getOrElse(TtlBucket(Vector.empty, Long.MinValue))
+            val prior = state.getOption.getOrElse(TtlState(Vector.empty[M], Long.MinValue))
             val (members, out) = bucketFold(
-              batch.iterator.map(r => BandKeyed(r.doc_id, r.band, r.sig)),
-              prior.members,
-              graft.operators.BandCap.DefaultCap)
-            val newest = math.max(prior.newestTs, batch.map(_.event_ts.getTime).max)
-            state.update(TtlBucket(members, newest))
+              rule, batch.iterator.map(_._1), prior.members, graft.operators.BandCap.DefaultCap)
+            val newest = math.max(prior.newestTs, batch.iterator.map(_._2.getTime).max)
+            state.update(TtlState(members, newest))
             state.setTimeoutTimestamp(newest + ttlSeconds * 1000L)
             out.iterator
           }
-      }
-  }
+      }(rule.ttlState, rule.out)
+
+  /** [[nearDupStream]]'s fold over bounded input — the oracle-checkable
+    * batch twin (equals the band-bucket self-join with the rule's
+    * verify, kept per band). Bounded text input can feed it the
+    * AGGREGATED [[graft.operators.Dedup.bandSignatures]]: the
+    * shuffle-combined minhash beats 16x per-row HOF evaluation, and
+    * StreamingSpec pins the two signature forms bit-equal, so the fold
+    * under test is identical to the stream's.
+    */
+  def batchNearDup[R, M, O](rule: BucketRule[R, M, O], banded: DataFrame): Dataset[O] =
+    typedRows(rule, banded)
+      .groupByKey(rule.bucket)(Encoders.STRING)
+      .flatMapGroups((_: String, rows: Iterator[R]) =>
+        bucketFold(rule, rows, Vector.empty)._2.iterator)(rule.out)
 
   /** Format version of the TTL stream's state encoding. History:
     * v1 = bare `Vector[Long]` member list (no marker file written);
-    * v2 = [[TtlBucket]] (members + newestTs).
+    * v2 = [[TtlState]] (members + newestTs; the format the guard's
+    * messages call TtlBucket).
     */
   val TtlStateVersion = 2
 
   private val TtlVersionMarker = "graft_ttl_state_version"
 
-  /** Startup guard for [[nearDupCandidateStreamTtl]] checkpoints: call
+  /** Startup guard for [[nearDupStreamTtl]] checkpoints: call
     * with the `checkpointLocation` BEFORE `start()`. A state-schema
-    * change (v1's bare member vector → v2's [[TtlBucket]]) makes Spark
+    * change (v1's bare member vector → v2's [[TtlState]]) makes Spark
     * fail checkpoint restore deep inside state deserialization with an
     * error that names neither the cause nor the fix; this check fails
     * FAST with both instead.
@@ -990,258 +1118,6 @@ object Streaming {
     }
   }
 
-  // ------------------------------------ streaming perceptual near-dup
-  /** One perceptual band-bucket row: a 16-bit slice key plus the full
-    * hash halves (the within-bucket Hamming verify needs them).
-    */
-  case class MmBandKeyed(doc_id: Long, band: Int, key: Long, ph_hi: Long, ph_lo: Long)
-
-  /** A verified perceptual collision: doc_a < doc_b share band `band`
-    * and sit within [[graft.operators.Multimodal.MmHammingMax]] bits.
-    */
-  case class MmCandidateOut(doc_a: Long, doc_b: Long, band: Int, hamming: Int)
-
-  /** Per-bucket fold shared by the perceptual stream and its batch
-    * harness — [[bucketFold]]'s shape with the Hamming verify fused in
-    * (state carries each member's hash halves, so a collision verifies
-    * inside the bucket instead of a downstream join).
-    */
-  private[graft] def mmBucketFold(
-      rows: Iterator[MmBandKeyed],
-      prior: Vector[(Long, Long, Long)],
-      cap: Int = Int.MaxValue,
-      gate: Int = graft.operators.Multimodal.MmHammingMax)
-      : (Vector[(Long, Long, Long)], Vector[MmCandidateOut]) = {
-    // `cap` = the TTL streams' member-vector bound; see [[bucketFold]].
-    // `gate` = the kernel family's Hamming verify (the spectral faces
-    // ride tighter gates than the dHash default).
-    var members = prior
-    val seen = scala.collection.mutable.HashSet.from(prior.map(_._1))
-    val out = Vector.newBuilder[MmCandidateOut]
-    rows.toSeq.sortBy(_.doc_id).foreach { r =>
-      if (members.size < cap && seen.add(r.doc_id)) {
-        members.foreach { case (m, hi, lo) =>
-          val ham = java.lang.Long.bitCount(hi ^ r.ph_hi) +
-            java.lang.Long.bitCount(lo ^ r.ph_lo)
-          if (ham <= gate)
-            out += MmCandidateOut(
-              math.min(m, r.doc_id), math.max(m, r.doc_id), r.band, ham)
-        }
-        members = members :+ ((r.doc_id, r.ph_hi, r.ph_lo))
-      }
-    }
-    (members, out.result())
-  }
-
-  private def mmBandedRows(
-      withPayload: org.apache.spark.sql.DataFrame): Dataset[MmBandKeyed] = {
-    val spark = withPayload.sparkSession
-    import spark.implicits._
-    graft.operators.Multimodal
-      .perceptualBanded(graft.operators.Multimodal.perceptualHash(withPayload).toDF())
-      .select(
-        col("doc_id"), col("band").cast("int").as("band"),
-        col("key"), col("ph_hi"), col("ph_lo"))
-      .as[MmBandKeyed]
-  }
-
-  /** [[mmBandedRows]] with the AUDIO fingerprint kernel
-    * ([[graft.operators.Multimodal.audioFingerprint]] — PCM energy
-    * dHash; non-WAV payloads drop rather than mis-decode) feeding the
-    * same band projection.
-    */
-  private def mmAudioBandedRows(
-      withPayload: org.apache.spark.sql.DataFrame): Dataset[MmBandKeyed] = {
-    val spark = withPayload.sparkSession
-    import spark.implicits._
-    graft.operators.Multimodal
-      .perceptualBanded(graft.operators.Multimodal.audioFingerprint(withPayload).toDF())
-      .select(
-        col("doc_id"), col("band").cast("int").as("band"),
-        col("key"), col("ph_hi"), col("ph_lo"))
-      .as[MmBandKeyed]
-  }
-
-  /** The image modality's ingest-time face: arriving payloads hash
-    * through the ONE perceptual kernel
-    * ([[graft.operators.Multimodal.phashOf]] — pixel-true 2-D dHash
-    * when the payload decodes, byte-stream fallback otherwise; shared
-    * verbatim with batch `mmPhash`), band into 16-bit buckets, and
-    * each bucket's GroupState emits Hamming-verified pairs as later
-    * members arrive — a crawler sees an image re-encode paired while
-    * the crawl is still running. Same state bound as
-    * [[nearDupCandidateStream]] (one (id, hash) per (band, doc) for
-    * the stream's lifetime); a TTL variant would follow
-    * [[nearDupCandidateStreamTtl]]'s eviction verbatim if cross-epoch
-    * pairing is expendable.
-    */
-  def mmNearDupStream(
-      withPayload: org.apache.spark.sql.DataFrame): Dataset[MmCandidateOut] = {
-    val spark = withPayload.sparkSession
-    import spark.implicits._
-    mmBandedRows(withPayload)
-      .groupByKey(r => s"${r.band}|${r.key}")
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (key: String, rows: Iterator[MmBandKeyed],
-            state: GroupState[Vector[(Long, Long, Long)]]) =>
-          val (members, out) = mmBucketFold(rows, state.getOption.getOrElse(Vector.empty))
-          state.update(members)
-          out.iterator
-      }
-  }
-
-  /** A perceptual band-bucket row carrying its event time — the input
-    * shape of the TTL-evicting image stream.
-    */
-  case class MmBandKeyedTs(
-      doc_id: Long, band: Int, key: Long, ph_hi: Long, ph_lo: Long,
-      event_ts: java.sql.Timestamp)
-
-  /** TTL-bucket state for the image stream: (id, hash halves) members
-    * plus the newest member event time — [[TtlBucket]]'s re-arming
-    * semantics on the perceptual member tuple.
-    */
-  case class MmTtlBucket(members: Vector[(Long, Long, Long)], newestTs: Long)
-
-  /** [[mmNearDupStream]] with the REAL state bound an endless crawl
-    * needs: each perceptual band bucket lives `ttlSeconds` of EVENT
-    * time past its newest member, then evicts —
-    * [[nearDupCandidateStreamTtl]]'s watermark-driven eviction and
-    * timeout re-arming verbatim, on image state (the trade is
-    * identical: a re-encode arriving after its bucket closed pairs
-    * with nothing). `withPayload` needs an `event_ts` column; the
-    * hash kernel is still the one [[graft.operators.Multimodal
-    * .phashOf]].
-    */
-  def mmNearDupStreamTtl(
-      withPayload: org.apache.spark.sql.DataFrame,
-      watermarkDelay: String,
-      ttlSeconds: Long): Dataset[MmCandidateOut] = {
-    val spark = withPayload.sparkSession
-    import spark.implicits._
-    // event_ts threads THROUGH the hash projection (a stream cannot
-    // join back to itself to re-attach it); the kernel is still the
-    // one shared phashOf
-    val hashed = withPayload
-      .select(col("doc_id"), col("payload"), col("event_ts"))
-      .as[(Long, Array[Byte], java.sql.Timestamp)]
-      .mapPartitions(_.map { case (id, p, ts) =>
-        val (hi, lo) = graft.operators.Multimodal.phashOf(p)
-        (id, hi, lo, ts)
-      })
-      .toDF("doc_id", "ph_hi", "ph_lo", "event_ts")
-    graft.operators.Multimodal.perceptualBanded(hashed)
-      .withWatermark("event_ts", watermarkDelay)
-      .select(
-        col("doc_id"), col("band").cast("int").as("band"),
-        col("key"), col("ph_hi"), col("ph_lo"), col("event_ts"))
-      .as[MmBandKeyedTs]
-      .groupByKey(r => s"${r.band}|${r.key}")
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        (key: String, rows: Iterator[MmBandKeyedTs], state: GroupState[MmTtlBucket]) =>
-          if (state.hasTimedOut) {
-            state.remove() // the bucket's epoch is over; a later arrival starts a fresh one
-            Iterator.empty
-          } else {
-            val batch = rows.toVector
-            val prior = state.getOption.getOrElse(MmTtlBucket(Vector.empty, Long.MinValue))
-            val (members, out) = mmBucketFold(
-              batch.iterator.map(r => MmBandKeyed(r.doc_id, r.band, r.key, r.ph_hi, r.ph_lo)),
-              prior.members,
-              graft.operators.BandCap.DefaultCap)
-            val newest = math.max(prior.newestTs, batch.map(_.event_ts.getTime).max)
-            state.update(MmTtlBucket(members, newest))
-            state.setTimeoutTimestamp(newest + ttlSeconds * 1000L)
-            out.iterator
-          }
-      }
-  }
-
-  /** [[mmNearDupStream]]'s fold over bounded input — the
-    * oracle-checkable batch twin (equals the band-bucket self-join
-    * with the Hamming verify).
-    */
-  def batchMmNearDup(
-      withPayload: org.apache.spark.sql.DataFrame): Dataset[MmCandidateOut] = {
-    val spark = withPayload.sparkSession
-    import spark.implicits._
-    mmBandedRows(withPayload)
-      .groupByKey(r => s"${r.band}|${r.key}")
-      .flatMapGroups((key: String, rows: Iterator[MmBandKeyed]) =>
-        mmBucketFold(rows, Vector.empty)._2.iterator)
-  }
-
-  /** The AUDIO modality's ingest-time face: arriving WAV payloads
-    * fingerprint through the one PCM energy-dHash kernel, band into
-    * 16-bit buckets, and each bucket's GroupState emits Hamming-
-    * verified pairs as later members arrive — a crawler sees a
-    * resampled re-encode of a recording paired while the crawl is
-    * still running. [[mmNearDupStream]]'s state bound and fold,
-    * verbatim, on the fourth modality.
-    */
-  def mmAudioNearDupStream(
-      withPayload: org.apache.spark.sql.DataFrame): Dataset[MmCandidateOut] = {
-    val spark = withPayload.sparkSession
-    import spark.implicits._
-    mmAudioBandedRows(withPayload)
-      .groupByKey(r => s"${r.band}|${r.key}")
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (key: String, rows: Iterator[MmBandKeyed],
-            state: GroupState[Vector[(Long, Long, Long)]]) =>
-          val (members, out) = mmBucketFold(rows, state.getOption.getOrElse(Vector.empty))
-          state.update(members)
-          out.iterator
-      }
-  }
-
-  /** [[mmAudioNearDupStream]] with the REAL state bound an endless
-    * crawl needs — [[mmNearDupStreamTtl]]'s watermark-driven eviction
-    * and timeout re-arming verbatim, on the audio fingerprint kernel:
-    * each band bucket lives `ttlSeconds` of EVENT time past its newest
-    * member, then evicts (a resample arriving after its bucket closed
-    * pairs with nothing — the takedown-friendly trade). `withPayload`
-    * needs an `event_ts` column.
-    */
-  def mmAudioNearDupStreamTtl(
-      withPayload: org.apache.spark.sql.DataFrame,
-      watermarkDelay: String,
-      ttlSeconds: Long): Dataset[MmCandidateOut] = {
-    val spark = withPayload.sparkSession
-    import spark.implicits._
-    val hashed = withPayload
-      .select(col("doc_id"), col("payload"), col("event_ts"))
-      .as[(Long, Array[Byte], java.sql.Timestamp)]
-      .mapPartitions(_.flatMap { case (id, p, ts) =>
-        graft.operators.Multimodal.audioDHash(p).map { case (hi, lo) => (id, hi, lo, ts) }
-      })
-      .toDF("doc_id", "ph_hi", "ph_lo", "event_ts")
-    graft.operators.Multimodal.perceptualBanded(hashed)
-      .withWatermark("event_ts", watermarkDelay)
-      .select(
-        col("doc_id"), col("band").cast("int").as("band"),
-        col("key"), col("ph_hi"), col("ph_lo"), col("event_ts"))
-      .as[MmBandKeyedTs]
-      .groupByKey(r => s"${r.band}|${r.key}")
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        (key: String, rows: Iterator[MmBandKeyedTs], state: GroupState[MmTtlBucket]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val batch = rows.toVector
-            val prior = state.getOption.getOrElse(MmTtlBucket(Vector.empty, Long.MinValue))
-            val (members, out) = mmBucketFold(
-              batch.iterator.map(r => MmBandKeyed(r.doc_id, r.band, r.key, r.ph_hi, r.ph_lo)),
-              prior.members,
-              graft.operators.BandCap.DefaultCap)
-            val newest = math.max(prior.newestTs, batch.map(_.event_ts.getTime).max)
-            state.update(MmTtlBucket(members, newest))
-            state.setTimeoutTimestamp(newest + ttlSeconds * 1000L)
-            out.iterator
-          }
-      }
-  }
-
   /** Ingest-time WARC extraction: arriving archive FILES (one binary
     * payload per file, the shape a crawler's rolling uploads have)
     * record-scan, HTTP-parse, and text-extract inside the stream —
@@ -1257,405 +1133,6 @@ object Streaming {
         col("doc_id"), col("url"), col("warc_date"), col("status"),
         col("n_block_bytes"), ex.as("text"),
         length(col("html")).as("n_chars_raw"), length(ex).as("n_chars_text"))
-  }
-
-  /** The audio candidate stream's fold over bounded input — the
-    * oracle-checkable batch twin (equals the audio band-bucket
-    * self-join with the Hamming verify, kept per band).
-    */
-  def batchMmAudioNearDup(
-      withPayload: org.apache.spark.sql.DataFrame): Dataset[MmCandidateOut] = {
-    val spark = withPayload.sparkSession
-    import spark.implicits._
-    mmAudioBandedRows(withPayload)
-      .groupByKey(r => s"${r.band}|${r.key}")
-      .flatMapGroups((key: String, rows: Iterator[MmBandKeyed]) =>
-        mmBucketFold(rows, Vector.empty)._2.iterator)
-  }
-
-  private def mmVideoBandedRows(
-      withPayload: org.apache.spark.sql.DataFrame): Dataset[MmBandKeyed] = {
-    val spark = withPayload.sparkSession
-    import spark.implicits._
-    graft.operators.Multimodal
-      .perceptualBanded(graft.operators.Multimodal.videoFingerprint(withPayload).toDF())
-      .select(
-        col("doc_id"), col("band").cast("int").as("band"),
-        col("key"), col("ph_hi"), col("ph_lo"))
-      .as[MmBandKeyed]
-  }
-
-  /** The VIDEO modality's ingest-time face: arriving AVI payloads
-    * fingerprint through the one temporal luma-dHash kernel, band into
-    * 16-bit buckets, and each bucket's GroupState emits Hamming-
-    * verified pairs as later members arrive — a crawler sees a
-    * frame-rate re-encode of a clip paired while the crawl is still
-    * running. [[mmNearDupStream]]'s state bound and fold, verbatim, on
-    * the fifth modality.
-    */
-  def mmVideoNearDupStream(
-      withPayload: org.apache.spark.sql.DataFrame): Dataset[MmCandidateOut] = {
-    val spark = withPayload.sparkSession
-    import spark.implicits._
-    mmVideoBandedRows(withPayload)
-      .groupByKey(r => s"${r.band}|${r.key}")
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (key: String, rows: Iterator[MmBandKeyed],
-            state: GroupState[Vector[(Long, Long, Long)]]) =>
-          val (members, out) = mmBucketFold(rows, state.getOption.getOrElse(Vector.empty))
-          state.update(members)
-          out.iterator
-      }
-  }
-
-  /** [[mmVideoNearDupStream]] with the REAL state bound an endless
-    * crawl needs — [[mmNearDupStreamTtl]]'s watermark-driven eviction
-    * and timeout re-arming verbatim, on the video fingerprint kernel:
-    * each band bucket lives `ttlSeconds` of EVENT time past its newest
-    * member, then evicts (a re-encode arriving after its bucket closed
-    * pairs with nothing — the takedown-friendly trade). `withPayload`
-    * needs an `event_ts` column.
-    */
-  def mmVideoNearDupStreamTtl(
-      withPayload: org.apache.spark.sql.DataFrame,
-      watermarkDelay: String,
-      ttlSeconds: Long): Dataset[MmCandidateOut] = {
-    val spark = withPayload.sparkSession
-    import spark.implicits._
-    val hashed = withPayload
-      .select(col("doc_id"), col("payload"), col("event_ts"))
-      .as[(Long, Array[Byte], java.sql.Timestamp)]
-      .mapPartitions(_.flatMap { case (id, p, ts) =>
-        graft.operators.Multimodal.videoDHash(p).map { case (hi, lo) => (id, hi, lo, ts) }
-      })
-      .toDF("doc_id", "ph_hi", "ph_lo", "event_ts")
-    graft.operators.Multimodal.perceptualBanded(hashed)
-      .withWatermark("event_ts", watermarkDelay)
-      .select(
-        col("doc_id"), col("band").cast("int").as("band"),
-        col("key"), col("ph_hi"), col("ph_lo"), col("event_ts"))
-      .as[MmBandKeyedTs]
-      .groupByKey(r => s"${r.band}|${r.key}")
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        (key: String, rows: Iterator[MmBandKeyedTs], state: GroupState[MmTtlBucket]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val batch = rows.toVector
-            val prior = state.getOption.getOrElse(MmTtlBucket(Vector.empty, Long.MinValue))
-            val (members, out) = mmBucketFold(
-              batch.iterator.map(r => MmBandKeyed(r.doc_id, r.band, r.key, r.ph_hi, r.ph_lo)),
-              prior.members,
-              graft.operators.BandCap.DefaultCap)
-            val newest = math.max(prior.newestTs, batch.map(_.event_ts.getTime).max)
-            state.update(MmTtlBucket(members, newest))
-            state.setTimeoutTimestamp(newest + ttlSeconds * 1000L)
-            out.iterator
-          }
-      }
-  }
-
-  /** The video candidate stream's fold over bounded input — the
-    * oracle-checkable batch twin (equals the video band-bucket
-    * self-join with the Hamming verify, kept per band).
-    */
-  def batchMmVideoNearDup(
-      withPayload: org.apache.spark.sql.DataFrame): Dataset[MmCandidateOut] = {
-    val spark = withPayload.sparkSession
-    import spark.implicits._
-    mmVideoBandedRows(withPayload)
-      .groupByKey(r => s"${r.band}|${r.key}")
-      .flatMapGroups((key: String, rows: Iterator[MmBandKeyed]) =>
-        mmBucketFold(rows, Vector.empty)._2.iterator)
-  }
-
-  // ---------------------------- streaming SPECTRAL near-dup (audio+video)
-  /** [[mmAudioBandedRows]] on the autocorrelation lag-bank kernel
-    * ([[graft.operators.Multimodal.audioSpectralFingerprint]]) — the
-    * pad/trim/stretch-robust fingerprint's ingest face shares the
-    * batch kernel verbatim, exactly as every energy-dHash face does.
-    */
-  private def mmAudioSpectralBandedRows(
-      withPayload: org.apache.spark.sql.DataFrame): Dataset[MmBandKeyed] = {
-    val spark = withPayload.sparkSession
-    import spark.implicits._
-    graft.operators.Multimodal
-      .perceptualBanded(
-        graft.operators.Multimodal.audioSpectralFingerprint(withPayload).toDF())
-      .select(
-        col("doc_id"), col("band").cast("int").as("band"),
-        col("key"), col("ph_hi"), col("ph_lo"))
-      .as[MmBandKeyed]
-  }
-
-  private def mmVideoSpectralBandedRows(
-      withPayload: org.apache.spark.sql.DataFrame): Dataset[MmBandKeyed] = {
-    val spark = withPayload.sparkSession
-    import spark.implicits._
-    graft.operators.Multimodal
-      .perceptualBanded(
-        graft.operators.Multimodal.videoSpectralFingerprint(withPayload).toDF())
-      .select(
-        col("doc_id"), col("band").cast("int").as("band"),
-        col("key"), col("ph_hi"), col("ph_lo"))
-      .as[MmBandKeyed]
-  }
-
-  /** The SPECTRAL audio ingest face: arriving WAV payloads fingerprint
-    * through the lag-bank kernel, band, and Hamming-verify inside
-    * their bucket at the spectral gate
-    * ([[graft.operators.Multimodal.SpectralHammingMax]], tighter than
-    * the dHash default — lag-bank bits are global-structure bits) — a
-    * crawler sees the re-upload with a trimmed intro or a tempo
-    * stretch paired while the crawl is still running, the transform
-    * class the energy-dHash stream provably cannot pair. State bound
-    * and fold shared with [[mmNearDupStream]]; a TTL variant would
-    * follow [[mmAudioNearDupStreamTtl]]'s eviction verbatim (the
-    * watermark machinery is kernel-agnostic — only the hash call and
-    * the gate differ).
-    */
-  def mmAudioSpectralNearDupStream(
-      withPayload: org.apache.spark.sql.DataFrame): Dataset[MmCandidateOut] = {
-    val spark = withPayload.sparkSession
-    import spark.implicits._
-    mmAudioSpectralBandedRows(withPayload)
-      .groupByKey(r => s"${r.band}|${r.key}")
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (key: String, rows: Iterator[MmBandKeyed],
-            state: GroupState[Vector[(Long, Long, Long)]]) =>
-          val (members, out) = mmBucketFold(
-            rows, state.getOption.getOrElse(Vector.empty),
-            gate = graft.operators.Multimodal.SpectralHammingMax)
-          state.update(members)
-          out.iterator
-      }
-  }
-
-  /** [[mmAudioSpectralNearDupStream]]'s fold over bounded input — the
-    * oracle-checkable batch twin.
-    */
-  def batchMmAudioSpectralNearDup(
-      withPayload: org.apache.spark.sql.DataFrame): Dataset[MmCandidateOut] = {
-    val spark = withPayload.sparkSession
-    import spark.implicits._
-    mmAudioSpectralBandedRows(withPayload)
-      .groupByKey(r => s"${r.band}|${r.key}")
-      .flatMapGroups((key: String, rows: Iterator[MmBandKeyed]) =>
-        mmBucketFold(
-          rows, Vector.empty,
-          gate = graft.operators.Multimodal.SpectralHammingMax)._2.iterator)
-  }
-
-  /** The SPECTRAL video ingest face: arriving AVI payloads fingerprint
-    * through the delta lag-bank kernel and verify at
-    * [[graft.operators.Multimodal.VideoSpectralHammingMax]] — the
-    * black-padded re-edit pairs in-stream, the transform class the
-    * temporal-dHash stream provably cannot pair. Same sharing
-    * contract as the audio face.
-    */
-  def mmVideoSpectralNearDupStream(
-      withPayload: org.apache.spark.sql.DataFrame): Dataset[MmCandidateOut] = {
-    val spark = withPayload.sparkSession
-    import spark.implicits._
-    mmVideoSpectralBandedRows(withPayload)
-      .groupByKey(r => s"${r.band}|${r.key}")
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (key: String, rows: Iterator[MmBandKeyed],
-            state: GroupState[Vector[(Long, Long, Long)]]) =>
-          val (members, out) = mmBucketFold(
-            rows, state.getOption.getOrElse(Vector.empty),
-            gate = graft.operators.Multimodal.VideoSpectralHammingMax)
-          state.update(members)
-          out.iterator
-      }
-  }
-
-  /** [[mmVideoSpectralNearDupStream]]'s fold over bounded input — the
-    * oracle-checkable batch twin.
-    */
-  def batchMmVideoSpectralNearDup(
-      withPayload: org.apache.spark.sql.DataFrame): Dataset[MmCandidateOut] = {
-    val spark = withPayload.sparkSession
-    import spark.implicits._
-    mmVideoSpectralBandedRows(withPayload)
-      .groupByKey(r => s"${r.band}|${r.key}")
-      .flatMapGroups((key: String, rows: Iterator[MmBandKeyed]) =>
-        mmBucketFold(
-          rows, Vector.empty,
-          gate = graft.operators.Multimodal.VideoSpectralHammingMax)._2.iterator)
-  }
-
-  /** The candidate stream's fold over bounded input — the oracle-
-    * checkable batch twin (equals the band-bucket self-join). Feeds the
-    * fold from the AGGREGATED signatures: on bounded input the shuffle-
-    * combined minhash beats 16x per-row HOF evaluation, and StreamingSpec
-    * pins the two signature forms bit-equal, so the fold under test is
-    * identical to the stream's.
-    */
-  def batchNearDupCandidates(docs: org.apache.spark.sql.DataFrame): Dataset[CandidateOut] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    graft.operators.Dedup.bandSignatures(docs).as[BandKeyed]
-      .groupByKey(r => s"${r.band}|${r.sig}")
-      .flatMapGroups((key: String, rows: Iterator[BandKeyed]) =>
-        bucketFold(rows, Vector.empty)._2.iterator)
-  }
-
-  // ------------------------------------------ embedding near-dup stream
-  /** A hyperplane band-bucket row carrying the vector + norm the
-    * verify step needs — the embedding modality's [[BandKeyed]].
-    */
-  case class EmbBandKeyed(
-      vec_id: Long, band: Int, key: Long, embedding: Array[Float], norm: Double)
-
-  /** One verified semantic candidate pair, kept per band. */
-  case class EmbCandidateOut(vec_a: Long, vec_b: Long, band: Int, cos: Double)
-
-  /** Per-bucket fold of the SEMANTIC near-dup stream: each arriving
-    * vector exact-cosine-verifies against the bucket's members
-    * (threshold [[graft.operators.Ann.NearDupCos]]) and joins the
-    * member set. The dot product is the strict index-ascending
-    * widen-to-double fold `float_dot` runs, and the rounding is
-    * Spark's HALF_UP at 6 — so the emitted cos is bit-identical to
-    * the batch operator's and to the DuckDB twin's. `cap` bounds the
-    * member vector for the TTL variant ([[bucketFold]]'s discipline —
-    * state AND emission stay O(cap) per bucket epoch).
-    */
-  private[graft] def embBucketFold(
-      rows: Iterator[EmbBandKeyed],
-      prior: Vector[(Long, Array[Float], Double)],
-      cap: Int = Int.MaxValue)
-      : (Vector[(Long, Array[Float], Double)], Vector[EmbCandidateOut]) = {
-    var members = prior
-    val seen = scala.collection.mutable.HashSet.from(prior.map(_._1))
-    val out = Vector.newBuilder[EmbCandidateOut]
-    rows.toSeq.sortBy(_.vec_id).foreach { r =>
-      if (members.size < cap && seen.add(r.vec_id)) {
-        members.foreach { case (m, me, mn) =>
-          var d = 0.0
-          var i = 0
-          val n = math.min(me.length, r.embedding.length)
-          while (i < n) {
-            d += me(i).toDouble * r.embedding(i).toDouble
-            i += 1
-          }
-          val cos = d / (mn * r.norm)
-          if (cos >= graft.operators.Ann.NearDupCos)
-            out += EmbCandidateOut(
-              math.min(m, r.vec_id),
-              math.max(m, r.vec_id),
-              r.band,
-              BigDecimal(cos).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)
-        }
-        members = members :+ ((r.vec_id, r.embedding, r.norm))
-      }
-    }
-    (members, out.result())
-  }
-
-  /** SEMANTIC (embedding) near-dup candidates at ingest time — the
-    * modality matrix's last streaming face (text shingles, image/
-    * audio/video perceptual hashes, and now vectors all surface
-    * near-dups while the crawl runs): arriving vectors band through
-    * the one hyperplane signature ([[graft.operators.Ann
-    * .nearDupBandedVectors]] — pure projections, so no pre-stateful
-    * aggregation), and each bucket's GroupState exact-cosine-verifies
-    * newcomers against its members. State holds the member VECTORS
-    * (the verify needs them — the semantic analogue of the perceptual
-    * streams' hash halves); [[embNearDupStreamTtl]] is the bounded
-    * production variant.
-    */
-  def embNearDupStream(emb: org.apache.spark.sql.DataFrame): Dataset[EmbCandidateOut] = {
-    val spark = emb.sparkSession
-    import spark.implicits._
-    graft.operators.Ann.nearDupBandedVectors(emb)
-      .select(
-        col("vec_id"), col("band").cast("int").as("band"), col("key"),
-        col("embedding"), col("norm"))
-      .as[EmbBandKeyed]
-      .groupByKey(r => s"${r.band}|${r.key}")
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (key: String, rows: Iterator[EmbBandKeyed],
-            state: GroupState[Vector[(Long, Array[Float], Double)]]) =>
-          val (members, out) = embBucketFold(rows, state.getOption.getOrElse(Vector.empty))
-          state.update(members)
-          out.iterator
-      }
-  }
-
-  /** A banded vector row carrying its event time — the TTL stream's
-    * input shape.
-    */
-  case class EmbBandKeyedTs(
-      vec_id: Long, band: Int, key: Long, embedding: Array[Float], norm: Double,
-      event_ts: java.sql.Timestamp)
-
-  /** TTL-bucket state for the embedding stream: (id, vector, norm)
-    * members plus the newest member event time — [[TtlBucket]]'s
-    * re-arming semantics on the semantic member tuple.
-    */
-  case class EmbTtlBucket(
-      members: Vector[(Long, Array[Float], Double)], newestTs: Long)
-
-  /** [[embNearDupStream]] with the REAL state bound an endless ingest
-    * needs — [[nearDupCandidateStreamTtl]]'s watermark-driven eviction
-    * and timeout re-arming on vector state, members bounded at
-    * [[graft.operators.BandCap.DefaultCap]] (vector members are the
-    * heaviest state in the engine — 64 floats each — so the cap
-    * matters MORE here than anywhere): a near-copy arriving after its
-    * bucket closed or filled pairs with nothing, the explicit trade.
-    * `emb` needs an `event_ts` column.
-    */
-  def embNearDupStreamTtl(
-      emb: org.apache.spark.sql.DataFrame,
-      watermarkDelay: String,
-      ttlSeconds: Long): Dataset[EmbCandidateOut] = {
-    val spark = emb.sparkSession
-    import spark.implicits._
-    graft.operators.Ann.nearDupBandedVectors(emb, passthrough = Seq("event_ts"))
-      .withWatermark("event_ts", watermarkDelay)
-      .select(
-        col("vec_id"), col("band").cast("int").as("band"), col("key"),
-        col("embedding"), col("norm"), col("event_ts"))
-      .as[EmbBandKeyedTs]
-      .groupByKey(r => s"${r.band}|${r.key}")
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        (key: String, rows: Iterator[EmbBandKeyedTs], state: GroupState[EmbTtlBucket]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val batch = rows.toVector
-            val prior = state.getOption.getOrElse(EmbTtlBucket(Vector.empty, Long.MinValue))
-            val (members, out) = embBucketFold(
-              batch.iterator.map(r =>
-                EmbBandKeyed(r.vec_id, r.band, r.key, r.embedding, r.norm)),
-              prior.members,
-              graft.operators.BandCap.DefaultCap)
-            val newest = math.max(prior.newestTs, batch.map(_.event_ts.getTime).max)
-            state.update(EmbTtlBucket(members, newest))
-            state.setTimeoutTimestamp(newest + ttlSeconds * 1000L)
-            out.iterator
-          }
-      }
-  }
-
-  /** The embedding candidate stream's fold over bounded input — the
-    * oracle-checkable batch twin (equals the hyperplane band-bucket
-    * self-join with the exact-cosine verify, kept per band).
-    */
-  def batchEmbNearDup(emb: org.apache.spark.sql.DataFrame): Dataset[EmbCandidateOut] = {
-    val spark = emb.sparkSession
-    import spark.implicits._
-    graft.operators.Ann.nearDupBandedVectors(emb)
-      .select(
-        col("vec_id"), col("band").cast("int").as("band"), col("key"),
-        col("embedding"), col("norm"))
-      .as[EmbBandKeyed]
-      .groupByKey(r => s"${r.band}|${r.key}")
-      .flatMapGroups((key: String, rows: Iterator[EmbBandKeyed]) =>
-        embBucketFold(rows, Vector.empty)._2.iterator)
   }
 
   // ---------------------------------------------- streaming decontamination

@@ -95,25 +95,26 @@ class BandCapSpec extends AnyFunSuite {
   }
 
   test("streaming TTL fold: member vector stops at the cap, emission stays bounded") {
-    import graft.streaming.Streaming.{bucketFold, BandKeyed}
+    import graft.streaming.Streaming.{bucketFold, BandKeyed, TextRule}
     val cap = 8
     val arrivals = (0 until 500).map(i => BandKeyed(i.toLong, 0, "sig"))
-    val (members, out) = bucketFold(arrivals.iterator, Vector.empty, cap)
+    val (members, out) = bucketFold(TextRule, arrivals.iterator, Vector.empty, cap)
     assert(members.size === cap)
     assert(members === (0L until cap.toLong).toVector)
     // first cap arrivals pair among themselves; the rest are dropped
     assert(out.size === cap * (cap - 1) / 2)
     // a later batch against the full bucket adds nothing
     val (m2, out2) = bucketFold(
-      Iterator(BandKeyed(999L, 0, "sig")), members, cap)
+      TextRule, Iterator(BandKeyed(999L, 0, "sig")), members, cap)
     assert(m2 === members && out2.isEmpty)
   }
 
   test("streaming TTL fold (mm): same bound on the perceptual member tuple") {
-    import graft.streaming.Streaming.{mmBucketFold, MmBandKeyed}
+    import graft.streaming.Streaming.{bucketFold, perceptualRule, MmBandKeyed}
     val cap = 4
     val arrivals = (0 until 100).map(i => MmBandKeyed(i.toLong, 0, 7L, 0L, 0L))
-    val (members, out) = mmBucketFold(arrivals.iterator, Vector.empty, cap)
+    val (members, out) = bucketFold(
+      perceptualRule(graft.operators.Multimodal.Image), arrivals.iterator, Vector.empty, cap)
     assert(members.size === cap)
     assert(out.size === cap * (cap - 1) / 2) // all Hamming 0, all emitted
   }

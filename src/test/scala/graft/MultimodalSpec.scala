@@ -78,7 +78,7 @@ class MultimodalSpec extends AnyFunSuite {
       .withColumn("n_chars", length(col("text")))
     val input = Multimodal.withPayload(docs)
       .unionByName(Multimodal.plantedResampledPayloads(docs))
-    val pairs = Multimodal.mmNearDup(input).collect()
+    val pairs = Multimodal.nearDupPairs(Multimodal.Image, input).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
 
     // every planted signal pairs with exactly its own resampled copy
@@ -117,7 +117,7 @@ class MultimodalSpec extends AnyFunSuite {
       s"expected 'a_b', got '${new String(payload, "UTF-8")}'")
   }
 
-  test("perceptualHash is integer-exact: identical payloads share a hash, halves stay non-negative") {
+  test("image fingerprint is integer-exact; halves stay non-negative") {
     val spark = TestSpark.spark
     import spark.implicits._
     val payload = Array.tabulate[Byte](500)(i => (32 + (i * 31 / 500)).toByte)
@@ -125,10 +125,11 @@ class MultimodalSpec extends AnyFunSuite {
       Multimodal.MmRow(1L, "image", 0, 0, payload),
       Multimodal.MmRow(2L, "image", 0, 0, payload.clone()),
       Multimodal.MmRow(3L, "image", 0, 0, Array.empty[Byte])).toDS().toDF()
-    val h = Multimodal.perceptualHash(rows).collect().sortBy(_.doc_id)
-    assert(h(0).ph_hi == h(1).ph_hi && h(0).ph_lo == h(1).ph_lo)
-    assert(h.forall(x => x.ph_hi >= 0 && x.ph_lo >= 0), "32-bit halves must stay sign-safe")
-    assert(h(2).ph_hi == 0 && h(2).ph_lo == 0, "empty payload hashes to zero")
+    val h = Multimodal.fingerprint(Multimodal.Image, rows).as[(Long, Long, Long)]
+      .collect().sortBy(_._1)
+    assert(h(0)._2 == h(1)._2 && h(0)._3 == h(1)._3)
+    assert(h.forall(x => x._2 >= 0 && x._3 >= 0), "32-bit halves must stay sign-safe")
+    assert(h(2)._2 == 0 && h(2)._3 == 0, "empty payload hashes to zero")
   }
   // ------------------------------------------------- pixel-true hashing
 
@@ -184,7 +185,7 @@ class MultimodalSpec extends AnyFunSuite {
       s"fixture too weak: byte streams of different codecs paired at ${hamming(bp, bj)}")
   }
 
-  test("mmNearDup pairs cross-codec re-encodes of one image through the pixel path") {
+  test("image near-dup pairs cross-codec re-encodes via the pixel path") {
     val spark = TestSpark.spark
     import spark.implicits._
     val img = checkerImage(72, 64, 8)
@@ -193,12 +194,22 @@ class MultimodalSpec extends AnyFunSuite {
       Multimodal.MmRow(1L, "image", 72L, 64L, pngBytes(img)),
       Multimodal.MmRow(2L, "image", 72L, 64L, jpegBytes(img, 0.85f)),
       Multimodal.MmRow(3L, "image", 72L, 64L, pngBytes(other))).toDF()
-    val pairs = Multimodal.mmNearDup(rows)
+    val pairs = Multimodal.nearDupPairs(Multimodal.Image, rows)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     graft.operators.CacheScope.releaseAll()
     assert(pairs.contains((1L, 2L)), s"png/jpeg re-encode pair missing: $pairs")
     assert(!pairs.exists(p => p._1 == 3L || p._2 == 3L),
       s"a different image paired: $pairs")
+  }
+
+  test("a pixel decode leaves ImageIO's JVM-global cache setting alone") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    val png = Multimodal.plantedPngPayloads(Seq((0L, "planted")).toDF("doc_id", "text"))
+      .select("payload").head().getAs[Array[Byte]](0)
+    assert(Multimodal.pixelDHash(png).isDefined, "the planted PNG must decode to pixels")
+    assert(javax.imageio.ImageIO.getUseCache,
+      "the decode must choose its stream cache per call, not flip ImageIO.setUseCache")
   }
 
   test("non-image payloads fall back to the byte-stream dHash exactly") {
@@ -302,7 +313,7 @@ class MultimodalSpec extends AnyFunSuite {
       .withColumn("n_chars", length(col("text")))
     val input = Multimodal.withAudioPayload(docs)
       .unionByName(Multimodal.plantedAudioPayloads(docs))
-    val pairs = Multimodal.mmAudioNearDup(input).collect()
+    val pairs = Multimodal.nearDupPairs(Multimodal.Audio, input).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
 
     val expected = (0L until 100L by Multimodal.PlantEvery)
@@ -357,7 +368,7 @@ class MultimodalSpec extends AnyFunSuite {
     // through the full banded operator: every planted pair surfaces,
     // nothing spurious among plants or text-synth negatives
     val input = Multimodal.withAudioPayload(docs).unionByName(plants)
-    val got = Multimodal.mmAudioSpectralNearDup(input).collect()
+    val got = Multimodal.nearDupPairs(Multimodal.AudioSpectral, input).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val expected = plantIds
       .map(d => (d + Multimodal.AudioStretchOrigIdBase, d + Multimodal.AudioStretchIdBase))
@@ -405,7 +416,7 @@ class MultimodalSpec extends AnyFunSuite {
     // among themselves when two texts share delta texture — that is
     // corpus data, not a fixture failure)
     val input = Multimodal.withFlickerVideoPayload(docs).unionByName(plants)
-    val got = Multimodal.mmVideoSpectralNearDup(input).collect()
+    val got = Multimodal.nearDupPairs(Multimodal.VideoSpectral, input).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val expected = plantIds
       .map(d => (d + Multimodal.VideoStretchOrigIdBase, d + Multimodal.VideoStretchIdBase))
@@ -632,7 +643,7 @@ class MultimodalSpec extends AnyFunSuite {
       .withColumn("n_chars", length(col("text")))
     val input = Multimodal.withVideoPayload(docs)
       .unionByName(Multimodal.plantedVideoPayloads(docs))
-    val pairs = Multimodal.mmVideoNearDup(input).collect()
+    val pairs = Multimodal.nearDupPairs(Multimodal.Video, input).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
 
     val expected = (0L until 100L by Multimodal.PlantEvery)
@@ -674,8 +685,8 @@ class MultimodalSpec extends AnyFunSuite {
     // 2. the crop defeats the TEMPORAL hash: cropping removes
     //    md5-random rows from every frame, so the time-bucket deltas
     //    scramble and the temporal near-dup does NOT pair the copies
-    val temporalPairs = Multimodal.mmVideoNearDup(
-      Multimodal.plantedPxVideoPayloads(docs)).collect()
+    val temporalPairs = Multimodal.nearDupPairs(
+      Multimodal.Video, Multimodal.plantedPxVideoPayloads(docs)).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(temporalPairs.intersect(expected).isEmpty,
       s"temporal hash unexpectedly catches the crop: $temporalPairs")

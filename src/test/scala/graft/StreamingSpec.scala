@@ -1,7 +1,7 @@
 package graft
 
 import graft.model.Capture
-import graft.operators.{Daily, Dedup, Multimodal}
+import graft.operators.{Ann, Daily, Dedup, Multimodal}
 import graft.streaming.Streaming
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -23,6 +23,26 @@ class StreamingSpec extends AnyFunSuite {
       (ts, statuses(rnd.nextInt(statuses.length)), f"SD${rnd.nextInt(7)}%02dYYYYYYY")
     }.sortBy(_._1).zipWithIndex.map { case ((t, s, d), i) => Capture(url, t, s, d, i.toLong) }
   }
+
+  /** A perceptual kernel's banded rows — the input every perceptual face takes. */
+  private def mmBanded(
+      kernel: Multimodal.Kernel, payloads: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame =
+    Multimodal.perceptualBanded(Multimodal.fingerprint(kernel, payloads))
+
+  /** The perceptual exact stream under `kernel`. */
+  private def mmStream(kernel: Multimodal.Kernel)(payloads: org.apache.spark.sql.DataFrame) =
+    Streaming.nearDupStream(Streaming.perceptualRule(kernel), mmBanded(kernel, payloads))
+
+  /** The perceptual bounded twin under `kernel`. */
+  private def mmBatch(kernel: Multimodal.Kernel)(payloads: org.apache.spark.sql.DataFrame) =
+    Streaming.batchNearDup(Streaming.perceptualRule(kernel), mmBanded(kernel, payloads))
+
+  /** The perceptual TTL stream under `kernel`. */
+  private def mmStreamTtl(kernel: Multimodal.Kernel)(payloads: org.apache.spark.sql.DataFrame) =
+    Streaming.nearDupStreamTtl(
+      Streaming.perceptualRule(kernel), mmBanded(kernel, payloads),
+      watermarkDelay = "0 seconds", ttlSeconds = 60)
 
   test("streaming daily table equals batch daily table on closed days") {
     val spark = TestSpark.spark
@@ -405,7 +425,8 @@ class StreamingSpec extends AnyFunSuite {
     implicit val sqlCtx = spark.sqlContext
 
     val stream = MemoryStream[(Long, String)]
-    val query = Streaming.nearDupCandidateStream(stream.toDS().toDF("doc_id", "text"))
+    val query = Streaming.nearDupStream(
+      Streaming.TextRule, Dedup.rowBandSignatures(stream.toDS().toDF("doc_id", "text")))
       .writeStream.format("memory").queryName("lsh_stream")
       .outputMode("append").start()
     // doc 3 arrives two batches after its near-dups — the bucket state
@@ -420,7 +441,8 @@ class StreamingSpec extends AnyFunSuite {
 
     val streamed = spark.table("lsh_stream").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-    val batch = Streaming.batchNearDupCandidates(lshDocs.toDF("doc_id", "text"))
+    val batch = Streaming.batchNearDup(
+      Streaming.TextRule, Dedup.bandSignatures(lshDocs.toDF("doc_id", "text")))
       .collect().map(c => (c.doc_a, c.doc_b, c.band)).toSet
     assert(streamed == batch, "arrival order must not change the candidate set")
     val pairs = streamed.map { case (a, b, _) => (a, b) }
@@ -499,7 +521,7 @@ class StreamingSpec extends AnyFunSuite {
 
     def run(order: Seq[Int], name: String): Set[(Long, Long, Int, Int)] = {
       val stream = MemoryStream[(Long, String, Long, Long, Array[Byte])]
-      val q = Streaming.mmNearDupStream(stream.toDS().toDF(cols: _*))
+      val q = mmStream(Multimodal.Image)(stream.toDS().toDF(cols: _*))
         .writeStream.format("memory").queryName(name)
         .outputMode("append").start()
       // one row per micro-batch, in the given order — the re-encode
@@ -514,7 +536,7 @@ class StreamingSpec extends AnyFunSuite {
     }
     val fwd = run(Seq(0, 1, 2), "mm_nd_stream_fwd")
     val rev = run(Seq(2, 1, 0), "mm_nd_stream_rev")
-    val batch = Streaming.batchMmNearDup(rows.toDF(cols: _*))
+    val batch = mmBatch(Multimodal.Image)(rows.toDF(cols: _*))
       .collect().map(c => (c.doc_a, c.doc_b, c.band, c.hamming)).toSet
     assert(fwd == batch, "streamed perceptual candidates diverged from the batch fold")
     assert(rev == batch, "arrival order changed the perceptual candidate set")
@@ -550,7 +572,7 @@ class StreamingSpec extends AnyFunSuite {
 
     def run(order: Seq[Int], name: String): Set[(Long, Long, Int, Int)] = {
       val stream = MemoryStream[(Long, String, Long, Long, Array[Byte])]
-      val q = Streaming.mmAudioNearDupStream(stream.toDS().toDF(cols: _*))
+      val q = mmStream(Multimodal.Audio)(stream.toDS().toDF(cols: _*))
         .writeStream.format("memory").queryName(name)
         .outputMode("append").start()
       order.foreach { i =>
@@ -563,7 +585,7 @@ class StreamingSpec extends AnyFunSuite {
     }
     val fwd = run(Seq(0, 1, 2), "mm_audio_nd_stream_fwd")
     val rev = run(Seq(2, 1, 0), "mm_audio_nd_stream_rev")
-    val batch = Streaming.batchMmAudioNearDup(rows.toDF(cols: _*))
+    val batch = mmBatch(Multimodal.Audio)(rows.toDF(cols: _*))
       .collect().map(c => (c.doc_a, c.doc_b, c.band, c.hamming)).toSet
     assert(fwd == batch, "streamed audio candidates diverged from the batch fold")
     assert(rev == batch, "arrival order changed the audio candidate set")
@@ -594,7 +616,7 @@ class StreamingSpec extends AnyFunSuite {
 
     def run(order: Seq[Int], name: String): Set[(Long, Long, Int, Int)] = {
       val stream = MemoryStream[(Long, String, Long, Long, Array[Byte])]
-      val q = Streaming.mmVideoNearDupStream(stream.toDS().toDF(cols: _*))
+      val q = mmStream(Multimodal.Video)(stream.toDS().toDF(cols: _*))
         .writeStream.format("memory").queryName(name)
         .outputMode("append").start()
       order.foreach { i =>
@@ -607,7 +629,7 @@ class StreamingSpec extends AnyFunSuite {
     }
     val fwd = run(Seq(0, 1, 2), "mm_video_nd_stream_fwd")
     val rev = run(Seq(2, 1, 0), "mm_video_nd_stream_rev")
-    val batch = Streaming.batchMmVideoNearDup(rows.toDF(cols: _*))
+    val batch = mmBatch(Multimodal.Video)(rows.toDF(cols: _*))
       .collect().map(c => (c.doc_a, c.doc_b, c.band, c.hamming)).toSet
     assert(fwd == batch, "streamed video candidates diverged from the batch fold")
     assert(rev == batch, "arrival order changed the video candidate set")
@@ -653,9 +675,9 @@ class StreamingSpec extends AnyFunSuite {
     // audio: orig 0, stretch 0, orig 10 (pairs only with its own cousin)
     val aRows = rowsOf(Multimodal.plantedStretchedAudioPayloads(docs))
     val aIdx = aRows.indices
-    val aFwd = run(Streaming.mmAudioSpectralNearDupStream, aRows, aIdx, "mm_audio_sp_fwd")
-    val aRev = run(Streaming.mmAudioSpectralNearDupStream, aRows, aIdx.reverse, "mm_audio_sp_rev")
-    val aBatch = Streaming.batchMmAudioSpectralNearDup(aRows.toDF(cols: _*))
+    val aFwd = run(mmStream(Multimodal.AudioSpectral), aRows, aIdx, "mm_audio_sp_fwd")
+    val aRev = run(mmStream(Multimodal.AudioSpectral), aRows, aIdx.reverse, "mm_audio_sp_rev")
+    val aBatch = mmBatch(Multimodal.AudioSpectral)(aRows.toDF(cols: _*))
       .collect().map(c => (c.doc_a, c.doc_b, c.band, c.hamming)).toSet
     assert(aFwd == aBatch, "streamed audio spectral candidates diverged from the batch fold")
     assert(aRev == aBatch, "arrival order changed the audio spectral candidate set")
@@ -667,9 +689,9 @@ class StreamingSpec extends AnyFunSuite {
     // video: same shape on the delta lag bank
     val vRows = rowsOf(Multimodal.plantedStretchedVideoPayloads(docs))
     val vIdx = vRows.indices
-    val vFwd = run(Streaming.mmVideoSpectralNearDupStream, vRows, vIdx, "mm_video_sp_fwd")
-    val vRev = run(Streaming.mmVideoSpectralNearDupStream, vRows, vIdx.reverse, "mm_video_sp_rev")
-    val vBatch = Streaming.batchMmVideoSpectralNearDup(vRows.toDF(cols: _*))
+    val vFwd = run(mmStream(Multimodal.VideoSpectral), vRows, vIdx, "mm_video_sp_fwd")
+    val vRev = run(mmStream(Multimodal.VideoSpectral), vRows, vIdx.reverse, "mm_video_sp_rev")
+    val vBatch = mmBatch(Multimodal.VideoSpectral)(vRows.toDF(cols: _*))
       .collect().map(c => (c.doc_a, c.doc_b, c.band, c.hamming)).toSet
     assert(vFwd == vBatch, "streamed video spectral candidates diverged from the batch fold")
     assert(vRev == vBatch, "arrival order changed the video spectral candidate set")
@@ -690,8 +712,10 @@ class StreamingSpec extends AnyFunSuite {
     val noise2 = (0 until 12).map(w => s"m$w").mkString(" ")
 
     val stream = MemoryStream[(Long, String, java.sql.Timestamp)]
-    val query = Streaming.nearDupCandidateStreamTtl(
-      stream.toDS().toDF("doc_id", "text", "event_ts"),
+    val query = Streaming.nearDupStreamTtl(
+      Streaming.TextRule,
+      Dedup.rowBandSignatures(
+        stream.toDS().toDF("doc_id", "text", "event_ts"), passthrough = Seq("event_ts")),
       watermarkDelay = "0 seconds", ttlSeconds = 60)
       .writeStream.format("memory").queryName("lsh_ttl")
       .outputMode("append").start()
@@ -739,7 +763,8 @@ class StreamingSpec extends AnyFunSuite {
 
     def run(order: Seq[Int], name: String): Set[(Long, Long, Int, Double)] = {
       val stream = MemoryStream[(Long, Array[Float])]
-      val q = Streaming.embNearDupStream(stream.toDS().toDF(cols: _*))
+      val q = Streaming.nearDupStream(
+        Streaming.EmbRule, Ann.nearDupBandedVectors(stream.toDS().toDF(cols: _*)))
         .writeStream.format("memory").queryName(name)
         .outputMode("append").start()
       order.foreach { i =>
@@ -752,7 +777,7 @@ class StreamingSpec extends AnyFunSuite {
     }
     val fwd = run(Seq(0, 1, 2), "emb_nd_stream_fwd")
     val rev = run(Seq(2, 1, 0), "emb_nd_stream_rev")
-    val batch = Streaming.batchEmbNearDup(rows.toDF(cols: _*))
+    val batch = Streaming.batchNearDup(Streaming.EmbRule, Ann.nearDupBandedVectors(rows.toDF(cols: _*)))
       .collect().map(c => (c.vec_a, c.vec_b, c.band, c.cos)).toSet
     assert(fwd == batch, "streamed semantic candidates diverged from the batch fold")
     assert(rev == batch, "arrival order changed the semantic candidate set")
@@ -783,8 +808,10 @@ class StreamingSpec extends AnyFunSuite {
     val far2 = Array.fill(64)(rnd.nextGaussian().toFloat)
 
     val stream = MemoryStream[(Long, Array[Float], java.sql.Timestamp)]
-    val q = Streaming.embNearDupStreamTtl(
-      stream.toDS().toDF("vec_id", "embedding", "event_ts"),
+    val q = Streaming.nearDupStreamTtl(
+      Streaming.EmbRule,
+      Ann.nearDupBandedVectors(
+        stream.toDS().toDF("vec_id", "embedding", "event_ts"), passthrough = Seq("event_ts")),
       watermarkDelay = "0 seconds", ttlSeconds = 60)
       .writeStream.format("memory").queryName("emb_nd_ttl")
       .outputMode("append").start()
@@ -810,9 +837,9 @@ class StreamingSpec extends AnyFunSuite {
     assert(pairs() == Set((1L, 2L)), "epoch-1 output changed")
 
     // the member-vector cap: a full bucket drops later arrivals
-    import graft.streaming.Streaming.{embBucketFold, EmbBandKeyed}
+    import graft.streaming.Streaming.{bucketFold, EmbBandKeyed, EmbRule}
     val arrivals = (0 until 50).map(i => EmbBandKeyed(i.toLong, 0, 9L, base, 1.0))
-    val (members, out) = embBucketFold(arrivals.iterator, Vector.empty, cap = 4)
+    val (members, out) = bucketFold(EmbRule, arrivals.iterator, Vector.empty, cap = 4)
     assert(members.size == 4 && out.size == 6, s"${members.size}/${out.size}")
   }
 
@@ -822,7 +849,7 @@ class StreamingSpec extends AnyFunSuite {
     implicit val sqlCtx = spark.sqlContext
 
     def ts(min: Int) = java.sql.Timestamp.valueOf(f"2024-01-01 10:$min%02d:00")
-    // smooth planted signals (the byte-path fixture mmNearDup's
+    // smooth planted signals (the byte-path fixture the mm_near_dup
     // registry row uses): identical payloads collide in every band at
     // hamming 0; distinct block keys keep noise rows unrelated
     def signal(seed: Long): Array[Byte] = {
@@ -837,9 +864,7 @@ class StreamingSpec extends AnyFunSuite {
     val dup = signal(7L)
     val stream = MemoryStream[(Long, String, Long, Long, Array[Byte], java.sql.Timestamp)]
     val cols = Seq("doc_id", "modality", "width", "height", "payload", "event_ts")
-    val query = Streaming.mmNearDupStreamTtl(
-      stream.toDS().toDF(cols: _*),
-      watermarkDelay = "0 seconds", ttlSeconds = 60)
+    val query = mmStreamTtl(Multimodal.Image)(stream.toDS().toDF(cols: _*))
       .writeStream.format("memory").queryName("mm_ttl")
       .outputMode("append").start()
     def pairs() = spark.table("mm_ttl").collect()
@@ -920,9 +945,7 @@ class StreamingSpec extends AnyFunSuite {
     val resample = wav(Array.range(0, rec.length, 2).map(rec(_)), 4000)
     val stream = MemoryStream[(Long, String, Long, Long, Array[Byte], java.sql.Timestamp)]
     val cols = Seq("doc_id", "modality", "width", "height", "payload", "event_ts")
-    val query = Streaming.mmAudioNearDupStreamTtl(
-      stream.toDS().toDF(cols: _*),
-      watermarkDelay = "0 seconds", ttlSeconds = 60)
+    val query = mmStreamTtl(Multimodal.Audio)(stream.toDS().toDF(cols: _*))
       .writeStream.format("memory").queryName("mm_audio_ttl")
       .outputMode("append").start()
     def pairs() = spark.table("mm_audio_ttl").collect()
@@ -966,9 +989,7 @@ class StreamingSpec extends AnyFunSuite {
     val downsample = avi(Array.range(0, vals.length, 2).map(vals(_)), 80000)
     val stream = MemoryStream[(Long, String, Long, Long, Array[Byte], java.sql.Timestamp)]
     val cols = Seq("doc_id", "modality", "width", "height", "payload", "event_ts")
-    val query = Streaming.mmVideoNearDupStreamTtl(
-      stream.toDS().toDF(cols: _*),
-      watermarkDelay = "0 seconds", ttlSeconds = 60)
+    val query = mmStreamTtl(Multimodal.Video)(stream.toDS().toDF(cols: _*))
       .writeStream.format("memory").queryName("mm_video_ttl")
       .outputMode("append").start()
     def pairs() = spark.table("mm_video_ttl").collect()
@@ -1048,8 +1069,10 @@ class StreamingSpec extends AnyFunSuite {
     val noise2 = (0 until 12).map(w => s"q$w").mkString(" ")
 
     val stream = MemoryStream[(Long, String, java.sql.Timestamp)]
-    val query = Streaming.nearDupCandidateStreamTtl(
-      stream.toDS().toDF("doc_id", "text", "event_ts"),
+    val query = Streaming.nearDupStreamTtl(
+      Streaming.TextRule,
+      Dedup.rowBandSignatures(
+        stream.toDS().toDF("doc_id", "text", "event_ts"), passthrough = Seq("event_ts")),
       watermarkDelay = "5 minutes", ttlSeconds = 60)
       .writeStream.format("memory").queryName("lsh_ttl_late")
       .outputMode("append").start()
@@ -1472,8 +1495,9 @@ class StreamingSpec extends AnyFunSuite {
     def time[T](body: => T): (T, Double) = {
       val t0 = System.nanoTime(); val r = body; (r, (System.nanoTime() - t0) / 1e6)
     }
-    Streaming.bucketFold(arrivals.iterator, prior) // JIT warm-up
-    val ((members, out), setMs) = time(Streaming.bucketFold(arrivals.iterator, prior))
+    Streaming.bucketFold(Streaming.TextRule, arrivals.iterator, prior) // JIT warm-up
+    val ((members, out), setMs) =
+      time(Streaming.bucketFold(Streaming.TextRule, arrivals.iterator, prior))
     assert(out.isEmpty, "re-arrivals of existing members emit no pairs")
     assert(members == prior, "state unchanged by duplicate arrivals")
     def quadraticProbe(): Long = {
@@ -1489,8 +1513,76 @@ class StreamingSpec extends AnyFunSuite {
       s"Set-backed probe ($setMs ms) must stay far below the quadratic baseline ($quadMs ms)")
     // fresh members still pair with everyone already present
     val (m2, o2) = Streaming.bucketFold(
-      Iterator(Streaming.BandKeyed(30000L, 0, "sig")), prior)
+      Streaming.TextRule, Iterator(Streaming.BandKeyed(30000L, 0, "sig")), prior)
     assert(o2.size == prior.size && m2.size == prior.size + 1)
+  }
+
+  test("TTL stream: a null event_ts row is dropped; valid rows still pair") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+
+    def at(s: String) = java.sql.Timestamp.valueOf(s"2024-01-01 $s")
+    val dupText = lshDocs.head._2
+    val stream = MemoryStream[(Long, String, java.sql.Timestamp)]
+    val query = Streaming.nearDupStreamTtl(
+      Streaming.TextRule,
+      Dedup.rowBandSignatures(
+        stream.toDS().toDF("doc_id", "text", "event_ts"), passthrough = Seq("event_ts")),
+      watermarkDelay = "0 seconds", ttlSeconds = 60)
+      .writeStream.format("memory").queryName("lsh_ttl_null_ts")
+      .outputMode("append").start()
+    def pairs() = spark.table("lsh_ttl_null_ts").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    try {
+      // a row without an event time belongs to no epoch: it must not
+      // reach the fold (whose re-arm reads every member's time)
+      stream.addData(Seq(
+        (1L, dupText, at("10:00:00")), (2L, dupText, null), (3L, dupText, at("10:00:00"))))
+      query.processAllAvailable()
+      assert(pairs() == Set((1L, 3L)), s"valid rows must pair, the null row must not: ${pairs()}")
+      // the query keeps running: a later valid arrival still pairs
+      stream.addData(Seq((4L, dupText, at("10:00:30"))))
+      query.processAllAvailable()
+      assert(query.isActive && query.exception.isEmpty)
+      assert(pairs() == Set((1L, 3L), (1L, 4L), (3L, 4L)), s"${pairs()}")
+    } finally query.stop()
+  }
+
+  test("near-dup state encoders and bucket keys keep their checkpoint format") {
+    import org.apache.spark.sql.types._
+    // the checkpointed state of every face: exact = the member vector,
+    // TTL = members + newest event time; a schema change here breaks
+    // restore from existing checkpoints (see guardTtlCheckpoint)
+    val mm = StructType(Seq("_1", "_2", "_3").map(StructField(_, LongType, nullable = false)))
+    val emb = StructType(Seq(
+      StructField("_1", LongType, nullable = false),
+      StructField("_2", ArrayType(FloatType, containsNull = false), nullable = true),
+      StructField("_3", DoubleType, nullable = false)))
+    def exact(members: DataType) = StructType(Seq(StructField("value", members, nullable = true)))
+    def ttl(members: DataType) = StructType(Seq(
+      StructField("members", members, nullable = true),
+      StructField("newestTs", LongType, nullable = false)))
+
+    val text = ArrayType(LongType, containsNull = false)
+    assert(Streaming.TextRule.exactState.schema == exact(text))
+    assert(Streaming.TextRule.ttlState.schema == ttl(text))
+    Seq(Multimodal.Image, Multimodal.Audio, Multimodal.Video,
+      Multimodal.AudioSpectral, Multimodal.VideoSpectral).foreach { k =>
+      val rule = Streaming.perceptualRule(k)
+      assert(rule.exactState.schema == exact(ArrayType(mm, containsNull = true)))
+      assert(rule.ttlState.schema == ttl(ArrayType(mm, containsNull = true)))
+    }
+    assert(Streaming.EmbRule.exactState.schema == exact(ArrayType(emb, containsNull = true)))
+    assert(Streaming.EmbRule.ttlState.schema == ttl(ArrayType(emb, containsNull = true)))
+
+    // the grouping key is the state store's key: the "band|key" string
+    assert(Streaming.TextRule.bucket(Streaming.BandKeyed(1L, 2, "abc")) == "2|abc")
+    assert(Streaming.perceptualRule(Multimodal.Image)
+      .bucket(Streaming.MmBandKeyed(1L, 3, 77L, 0L, 0L)) == "3|77")
+    assert(Streaming.EmbRule
+      .bucket(Streaming.EmbBandKeyed(1L, 1, 5L, Array(1f), 1.0)) == "1|5")
+    assert(Streaming.TtlStateVersion == 2)
   }
 
   test("guardTtlCheckpoint: fresh dirs get a marker; stale/unversioned state fails clearly") {
