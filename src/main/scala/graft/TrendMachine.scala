@@ -1,7 +1,7 @@
 package graft
 
 import graft.model.{ScoredRow, TrendQuery}
-import graft.operators.{Corpus, Daily, Dedup, GapFill, Metrics, Report, TextStats, Trend}
+import graft.operators.{Corpus, Daily, Dedup, GapFill, Metrics, Report, Score, TextStats, Trend}
 import org.apache.spark.sql.{DataFrame, Dataset}
 
 /** The engine's public API (SURVEY §7.1 module 7) — what the
@@ -35,7 +35,7 @@ object TrendMachine {
   def fromDaily(daily: DataFrame, query: TrendQuery): TrendResult = {
     val scored = Trend.runFromDaily(daily, query)
     val densified = GapFill.densify(
-      GapFill.fill(daily, query.fill, query.policy), query.asOf)
+      GapFill.fill(Score.scorableDays(daily), query.fill, query.policy), query.asOf)
     TrendResult(
       daily = daily,
       scored = scored,

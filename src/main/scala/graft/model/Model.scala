@@ -85,13 +85,11 @@ object SigParams {
   * can sit directly in Spark streaming `GroupState`.
   */
 case class DimState(prev: String, base: Double, scale: Double, h: Double, x: Long) {
-  def step(state: String, p: SigParams): DimState = {
-    val (b, sc, pv, x0) =
-      if (state != prev) (h, if (p.spread < 0) h else 1 - h, state, 0L)
-      else (base, scale, prev, x)
-    val x1 = x0 + 1
-    DimState(pv, b, sc, b + sc * SigParams.sigmoid(x1.toDouble, p), x1)
-  }
+  def step(state: String, p: SigParams): DimState =
+    if (state != prev) {
+      val sc = if (p.spread < 0) h else 1 - h
+      DimState(state, h, sc, h + sc * SigParams.sigmoid(1.0, p), 1L)
+    } else DimState(prev, base, scale, base + scale * SigParams.sigmoid((x + 1).toDouble, p), x + 1)
 }
 
 object DimState {

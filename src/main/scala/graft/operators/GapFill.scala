@@ -82,17 +82,35 @@ object GapFill {
     observed.unionByName(filledRows)
   }
 
+  /** G1, G5: whether the in-memory fill covers an interior gap of `gap`
+    * days between observed specimens `spec` and `nspec` — the same
+    * bound and `identical` rule as [[fill]].
+    */
+  def fillsGap(gap: Long, spec: String, nspec: String, fill: Int, policy: FillPolicy): Boolean =
+    fill != 0 && gap > 0 && (fill == -1 || gap <= fill) &&
+      (policy != FillPolicy.Identical || spec == nspec)
+
+  /** G2-G4: the specimen of day `pos` (0-based) of a filled gap. */
+  def fillValue(gap: Long, pos: Long, spec: String, nspec: String, policy: FillPolicy): String =
+    policy match {
+      case FillPolicy.Backward => nspec
+      // first ceil(gap/2) days take the left value: pos < gap/2 with
+      // float division (reference main.py:62-66)
+      case FillPolicy.Closest => if (pos < gap / 2.0) spec else nspec
+      case _                  => spec // Forward, Identical (spec == nspec)
+    }
+
   /** G1-G5 as a pure in-memory function over ONE url's sorted observed
-    * (day, specimen) list — the same semantics as [[fill]], used where
-    * the series is already assembled per key (the fused single-shuffle
-    * scoring path and the incremental streaming scorer). Returns the
+    * (day, specimen) list — the same semantics as [[fill]], stated by
+    * [[fillsGap]] and [[fillValue]], the rule the per-url trend kernel
+    * ([[graft.streaming.Streaming]]) fills with day by day. Returns the
     * generated interior (day, specimen) fill rows only.
     */
   def fillDays(
       observed: IndexedSeq[(String, String)],
       fill: Int,
       policy: FillPolicy): Seq[(String, String)] = {
-    if (fill == 0 || observed.length < 2) return Nil
+    if (fill == 0) return Nil
     val out = Seq.newBuilder[(String, String)]
     var i = 0
     while (i < observed.length - 1) {
@@ -100,18 +118,10 @@ object GapFill {
       val (nd, nspec) = observed(i + 1)
       val ld = java.time.LocalDate.parse(d)
       val gap = java.time.temporal.ChronoUnit.DAYS.between(ld, java.time.LocalDate.parse(nd)) - 1
-      if (gap > 0 && (fill == -1 || gap <= fill) &&
-        (policy != FillPolicy.Identical || spec == nspec)) {
+      if (fillsGap(gap, spec, nspec, fill, policy)) {
         var pos = 0L
         while (pos < gap) {
-          val value = policy match {
-            case FillPolicy.Backward => nspec
-            // first ceil(gap/2) days take the left value: pos < gap/2
-            // with float division (reference main.py:62-66)
-            case FillPolicy.Closest => if (pos < gap / 2.0) spec else nspec
-            case _                  => spec // Forward, Identical (spec == nspec)
-          }
-          out += ((ld.plusDays(pos + 1).toString, value))
+          out += ((ld.plusDays(pos + 1).toString, fillValue(gap, pos, spec, nspec, policy)))
           pos += 1
         }
       }

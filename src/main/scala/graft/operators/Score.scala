@@ -3,9 +3,10 @@ package graft.operators
 import java.time.LocalDate
 
 import graft.model.{FilledRow, ScoredRow, SigParams}
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.functions.{col, udf}
 
-/** S1: the stateful sigmoid recurrence — the heart of the engine.
+/** S1: the stateful sigmoid recurrence — the staged pipeline's scorer.
   *
   * Reference: main.py:193-227. A sequential scan over each URL's
   * densified day series. On every specimen (resp. content) state change
@@ -14,13 +15,20 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
   * is a cross-run data dependency no window function can express — so
   * this one stage is a typed `groupByKey(url).flatMapGroups` fold.
   *
+  * This is the declarative path's last stage ([[Trend.runStaged]],
+  * [[Trend.runFromDaily]]): it scores a daily table that [[GapFill]]
+  * already filled, densifying to `asOf` inline (identical semantics to
+  * [[GapFill.densify]], which remains the standalone DataFrame operator)
+  * so the staged pipeline needs only one shuffle downstream of the
+  * fill — no calendar join. The fused path ([[Trend.run]]) and the
+  * scored streams score with the per-url kernel in
+  * [[graft.streaming.Streaming]] instead, one closed day at a time; the
+  * two scorers are kept apart on purpose, so each checks the other.
+  *
   * Scale design: per-URL series are tiny (≤ ~11k days for a 30-year
   * archive), so the in-memory sort+fold per key is O(small); millions of
   * URLs spread across executors on the url hash. State per group is
-  * O(1). This stage also performs densification and chaos forward-fill
-  * inline (identical semantics to [[GapFill.densify]], which remains the
-  * standalone DataFrame operator) so the scored pipeline needs only ONE
-  * shuffle (by url) downstream of the daily table — no calendar join.
+  * O(1).
   */
 object Score {
 
@@ -34,6 +42,15 @@ object Score {
   private[graft] def parseDay(s: String): Option[LocalDate] =
     try Some(LocalDate.parse(s))
     catch { case _: java.time.format.DateTimeParseException => None }
+
+  private val isDay = udf((d: String) => d != null && parseDay(d).nonEmpty)
+
+  /** The daily rows whose day [[parseDay]] accepts — what the staged
+    * fill and densify may see: their `to_date` casts would throw on a
+    * junk day under ANSI mode, while the scorers skip such days. The
+    * daily table itself still reports them.
+    */
+  def scorableDays(daily: DataFrame): DataFrame = daily.filter(isDay(col("day")))
 
   /** Score a densified per-day table (output of [[GapFill.densify]]). */
   def scoreDensified(
@@ -94,28 +111,6 @@ object Score {
       byDay.getOrElse(t, FilledRow(url, t, "~", 0, 0, 0, 0, "~", "~", "Unknown", None, None))
     }.toArray
     scoreSeries(url, series, params)
-  }
-
-  /** Fused-path core: one url's day-sorted OBSERVED daily rows through
-    * in-memory gap fill (G1-G6) + densify + recurrence — everything
-    * downstream of the daily fold without leaving the partition. Used by
-    * [[Trend.run]]'s single-shuffle path and the streaming scorer.
-    */
-  private[graft] def scoreObservedDaily(
-      url: String,
-      observed: Array[FilledRow],
-      fill: Int,
-      policy: graft.model.FillPolicy,
-      params: Map[String, SigParams],
-      asOf: String): Iterator[ScoredRow] = {
-    val scorable = observed.filter(r => parseDay(r.day).nonEmpty)
-    if (scorable.isEmpty) return Iterator.empty
-    val fills = GapFill
-      .fillDays(scorable.map(r => (r.day, r.specimen)).toIndexedSeq, fill, policy)
-      .map { case (d, sp) => FilledRow(url, d, "~", 0, 0, 0, 0, sp, "~", "Unknown", None, None) }
-    val rows = (scorable ++ fills)
-    scala.util.Sorting.quickSort(rows)(Ordering.by((r: FilledRow) => r.day))
-    densifyAndScore(url, rows, params, LocalDate.parse(asOf))
   }
 
   /** The exact reference recurrence over one URL's day-ordered series

@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import scala.reflect.runtime.universe.TypeTag
 
-/** ST1: incremental daily aggregation as a stateful stream.
+/** ST1: the per-url trend kernel and its stateful streams.
   *
   * The reference recomputes everything per run behind a 1h cache
   * (main.py:129,186); the streaming engine instead keys the capture
@@ -16,14 +16,22 @@ import scala.reflect.runtime.universe.TypeTag
   * in `GroupState` — digest->status map, 1000-slot chaos ring buffer,
   * current-day accumulator — emitting a finalized [[DailyOut]] row
   * whenever a day closes, exactly like the reference's day flush
-  * (main.py:153-159). Scoring stays a batch pass over the emitted daily
-  * table (it re-bases on every parameter change anyway, mirroring the
-  * reference's warm path).
+  * (main.py:153-159). The scored faces go on through gap fill, densify
+  * and the sigmoid recurrence (main.py:193-227) day by day.
+  *
+  * THE core shared by every batch and streaming variant is one mutable
+  * per-url kernel: [[DayFold]] (the daily fold) feeding [[DayScorer]]
+  * (fill + densify + recurrence). [[graft.operators.Trend.run]],
+  * [[runBatch]], [[runBatchScored]] and the four stream faces all run
+  * it; the streams load it from and store it to the immutable state
+  * case classes ([[UrlState]], [[LateState]], [[ScoredState]],
+  * [[ScoredLateState]]) at group boundaries, so the checkpoint format
+  * is those classes' encoding and nothing else.
   *
   * Ordering contract (ST3): rows are sorted by (ts, seq) within each
   * micro-batch; cross-batch order must be non-decreasing (CDX pagination
-  * guarantees it at the source). A watermark + buffer would relax this;
-  * the divergence window is documented in SURVEY §2.9.
+  * guarantees it at the source). The watermarked faces relax this with a
+  * hold-back buffer; the divergence window is documented in SURVEY §2.9.
   *
   * Scale: state per url is O(1) (bounded ring + digest map capped by
   * distinct digests per url); urls hash-partition across executors, the
@@ -59,7 +67,7 @@ object Streaming {
       content: String,
       cp: Int)
 
-  /** Full per-url loop state (reference main.py:131-142). */
+  /** Full per-url loop state (reference main.py:131-142), as checkpointed. */
   case class UrlState(
       digestStatus: Map[String, String],
       sw: Seq[String],
@@ -72,14 +80,11 @@ object Streaming {
 
   val SWS = 1000
 
-  private def emptyState: UrlState =
-    UrlState(Map.empty, Vector.fill(SWS)("~"), "~", "~", 0L, 0L, 0L, None)
-
-  private val STPR = Map("2xx" -> 4, "4xx" -> 3, "5xx" -> 2, "3xx" -> 1)
-
-  /** One capture through the fused pass; returns the flushed day, if a
-    * day just closed.
+  /** P3 status classes by leading digit; interned so the fold's string
+    * compares mostly hit the reference check.
     */
+  private val StatusClass = Array("2xx", "3xx", "4xx", "5xx")
+
   /** Python-slice / SQL-substring tolerant slicing: out-of-range bounds
     * clamp to the string instead of throwing, so a junk short `ts` yields
     * a junk day string — the same tolerance as `Daily.enrich`'s SQL
@@ -90,69 +95,269 @@ object Streaming {
   private def slice(s: String, from: Int, until: Int): String =
     s.substring(math.min(from, s.length), math.min(until, s.length))
 
-  private def step(st: UrlState, c: Capture): (UrlState, Option[DailyOut]) = {
-    val t = s"${slice(c.ts, 0, 4)}-${slice(c.ts, 4, 6)}-${slice(c.ts, 6, 8)}"
-    val cls =
-      if ("200" <= c.status && c.status <= "599") c.status.substring(0, 1) + "xx" else c.status
-    val (s, digestStatus) =
-      if (cls == "-") (st.digestStatus.getOrElse(c.digest, "~"), st.digestStatus)
-      else (cls, st.digestStatus.updated(c.digest, cls))
-    val d8 = c.digest.substring(0, math.min(8, c.digest.length))
+  private[graft] def dayOf(ts: String): String =
+    s"${slice(ts, 0, 4)}-${slice(ts, 4, 6)}-${slice(ts, 6, 8)}"
 
-    // day flush (reference main.py:153-159)
-    val (flushed, pc, acc0) = st.acc match {
-      case Some(a) if a.day != t =>
-        val out = DailyOut(c.url, a.day, a.datetime, a.c2xx, a.c3xx, a.c4xx, a.c5xx,
-          a.specimen, a.digest, a.content,
-          st.us.toDouble / st.rs, st.uw.toDouble / math.min(SWS, st.rs))
-        (Some(out), a.digest, DayAcc(t, "~", 0, 0, 0, 0, "~", "~", "Unknown", -1))
-      case Some(a) => (None, st.pc, a)
-      case None    => (None, st.pc, DayAcc(t, "~", 0, 0, 0, 0, "~", "~", "Unknown", -1))
-    }
-
-    val acc1 = s match {
-      case "2xx" => acc0.copy(c2xx = acc0.c2xx + 1)
-      case "3xx" => acc0.copy(c3xx = acc0.c3xx + 1)
-      case "4xx" => acc0.copy(c4xx = acc0.c4xx + 1)
-      case "5xx" => acc0.copy(c5xx = acc0.c5xx + 1)
-      case _     => acc0
-    }
-    val pr = STPR.getOrElse(s, 0)
-    val acc2 =
-      if (pr > acc1.cp)
-        acc1.copy(
-          specimen = s, datetime = c.ts, digest = d8,
-          content = if (d8 == pc) "Unchanged" else "Changed", cp = pr)
-      else acc1
-
-    // chaos counters + ring buffer (reference main.py:170-181)
-    val wp = (st.rs % SWS).toInt
-    val rs = st.rs + 1
-    val (ps, us, uw0) =
-      if (s != st.ps) (s, st.us + 1, st.uw + 1) else (st.ps, st.us, st.uw)
-    val wrapped = ((wp - SWS + 1) % SWS + SWS) % SWS
-    val uw = if (st.sw(wp) != st.sw(wrapped)) uw0 - 1 else uw0
-    val sw = st.sw.updated(wp, s)
-
-    (UrlState(digestStatus, sw, pc, ps, rs, us, uw, Some(acc2)), flushed)
-  }
-
-  /** Fold time-ordered captures through the daily loop, invoking
-    * `onFlush` for each closed day — THE core shared by every batch and
-    * streaming variant, so the fold semantics live in exactly one place.
+  /** `dayOf(ts) == day` without building the string: the day is `ts`'s
+    * first `n = min(len, 8)` chars cut at 4 and 6 by "-", `n + 2` long.
     */
-  private def foldSorted(start: UrlState, caps: Seq[Capture])(onFlush: DailyOut => Unit): UrlState = {
-    var st = start
-    caps.foreach { c =>
-      val (next, flushed) = step(st, c)
-      st = next
-      flushed.foreach(onFlush)
-    }
-    st
+  private[graft] def sameDay(ts: String, day: String): Boolean = {
+    val n = math.min(ts.length, 8)
+    val a = math.min(n, 4)
+    val b = math.min(n, 6)
+    day.length == n + 2 &&
+      day.regionMatches(0, ts, 0, a) && day.charAt(a) == '-' &&
+      day.regionMatches(a + 1, ts, a, b - a) && day.charAt(b + 1) == '-' &&
+      day.regionMatches(b + 2, ts, b, n - b)
   }
 
-  private def timeOrdered(rows: IterableOnce[Capture]): Seq[Capture] =
-    rows.iterator.toSeq.sortBy(c => (c.ts, c.seq))
+  private val ByTsSeq: java.util.Comparator[Capture] = (x: Capture, y: Capture) => {
+    val c = x.ts.compareTo(y.ts)
+    if (c != 0) c else java.lang.Long.compare(x.seq, y.seq)
+  }
+
+  /** The rows in (ts, seq) order — a stable sort, as the fold needs. */
+  private def timeOrdered(rows: Iterator[Capture]): Array[Capture] = {
+    val a = rows.toArray
+    java.util.Arrays.sort(a, ByTsSeq)
+    a
+  }
+
+  /** The daily fold (reference main.py:131-182) over one url's
+    * time-ordered captures, in mutable form: digest -> class in a hash
+    * map, the chaos ring in an array, the open day in primitive fields,
+    * one day string per day. `onFlush` gets each day as it closes.
+    */
+  private final class DayFold(url: String, st: Option[UrlState], onFlush: DailyOut => Unit) {
+    private val digestStatus = new java.util.HashMap[String, String]()
+    private val sw = Array.fill(SWS)("~")
+    private var pc = "~"
+    private var ps = "~"
+    private var rs = 0L
+    private var us = 0L
+    private var uw = 0L
+    // the open day (reference `dr` + `cp`); `day == null` when none is open
+    private var day: String = null
+    private var datetime = "~"
+    private var c2xx = 0L
+    private var c3xx = 0L
+    private var c4xx = 0L
+    private var c5xx = 0L
+    private var specimen = "~"
+    private var digest = "~"
+    private var content = "Unknown"
+    private var cp = -1
+
+    st.foreach { s =>
+      s.digestStatus.foreach { case (k, v) => digestStatus.put(k, v) }
+      s.sw.copyToArray(sw)
+      pc = s.pc; ps = s.ps; rs = s.rs; us = s.us; uw = s.uw
+      s.acc.foreach { a =>
+        day = a.day; datetime = a.datetime
+        c2xx = a.c2xx; c3xx = a.c3xx; c4xx = a.c4xx; c5xx = a.c5xx
+        specimen = a.specimen; digest = a.digest; content = a.content; cp = a.cp
+      }
+    }
+
+    def state: UrlState = {
+      import scala.jdk.CollectionConverters._
+      UrlState(digestStatus.asScala.toMap, sw.toVector, pc, ps, rs, us, uw,
+        Option(day).map(d =>
+          DayAcc(d, datetime, c2xx, c3xx, c4xx, c5xx, specimen, digest, content, cp)))
+    }
+
+    def addAll(caps: Array[Capture]): this.type = {
+      caps.foreach(add)
+      this
+    }
+
+    /** One capture through the fused pass. */
+    def add(c: Capture): Unit = {
+      val cls =
+        if ("200" <= c.status && c.status <= "599") StatusClass(c.status.charAt(0) - '2')
+        else c.status
+      val s =
+        if (cls == "-") digestStatus.getOrDefault(c.digest, "~")
+        else { digestStatus.put(c.digest, cls); cls }
+
+      // day flush (reference main.py:153-159)
+      if (day == null || !sameDay(c.ts, day)) {
+        if (day != null) { close(); pc = digest }
+        day = dayOf(c.ts); datetime = "~"
+        c2xx = 0; c3xx = 0; c4xx = 0; c5xx = 0
+        specimen = "~"; digest = "~"; content = "Unknown"; cp = -1
+      }
+
+      val pr = s match {
+        case "2xx" => c2xx += 1; 4
+        case "3xx" => c3xx += 1; 1
+        case "4xx" => c4xx += 1; 3
+        case "5xx" => c5xx += 1; 2
+        case _     => 0
+      }
+      if (pr > cp) {
+        val d8 = c.digest.substring(0, math.min(8, c.digest.length))
+        specimen = s; datetime = c.ts; digest = d8
+        content = if (d8 == pc) "Unchanged" else "Changed"
+        cp = pr
+      }
+
+      // chaos counters + ring buffer (reference main.py:170-181)
+      val wp = (rs % SWS).toInt
+      rs += 1
+      if (s != ps) { ps = s; us += 1; uw += 1 }
+      if (sw(wp) != sw((wp + 1) % SWS)) uw -= 1
+      sw(wp) = s
+    }
+
+    /** Emit the open day as closed — a day flush, or the batch faces'
+      * end of input. The day stays open in [[state]].
+      */
+    def close(): Unit =
+      if (day != null)
+        onFlush(DailyOut(url, day, datetime, c2xx, c3xx, c4xx, c5xx,
+          specimen, digest, content, us.toDouble / rs, uw.toDouble / math.min(SWS, rs)))
+  }
+
+  /** Recurrence state carried between closed days: the two sigmoid
+    * dimensions plus the last scored day's (day, specimen, chaos) — all
+    * the incremental scorer needs to fill and score the next span.
+    */
+  case class ScoreCore(
+      res: DimState,
+      fix: DimState,
+      lastDay: String,
+      lastSpec: String,
+      chaos: Double,
+      chaosn: Double)
+
+  /** Gap fill (G1-G6), densify (J1) and the sigmoid recurrence over one
+    * url's closed days, one day at a time (reference main.py:193-227):
+    * each closed day first scores the interior gap days since the
+    * previous one — filled per [[GapFill.fillsGap]] / [[GapFill.fillValue]],
+    * unfilled days densify to "~", chaos inherits the previous observed
+    * day (main.py:199-207) — then the day itself. The recurrence is
+    * forward-only, so a closed prefix never changes and the emitted rows
+    * are exactly the batch scored table's rows for those days.
+    *
+    * Days AFTER `query.asOf` neither emit nor advance the recurrence:
+    * the batch calendar ends at asOf (reference main.py:199). The fill
+    * endpoints still track the real observed days (the last day may
+    * exceed asOf) so gap arithmetic stays correct.
+    *
+    * Junk days (unparseable as ISO dates — possible because the daily
+    * fold deliberately tolerates junk timestamps) are SKIPPED without
+    * touching the recurrence state: they exist in the daily stream but
+    * have no calendar position to score. Storing one in
+    * `ScoreCore.lastDay` would poison the checkpoint. Same drop rule as
+    * the staged scorer ([[graft.operators.Score]]).
+    */
+  private final class DayScorer(url: String, query: TrendQuery, st: Option[ScoreCore]) {
+    private val asOf = java.time.LocalDate.parse(query.asOf).toEpochDay
+    private def p(key: String, dflt: String): SigParams =
+      query.params.getOrElse(key, query.params(dflt))
+
+    private var res = DimState.resilienceInit
+    private var fix = DimState.fixityInit
+    // the last scored closed day; `lastDay == null` before the first
+    private var lastDay: String = null
+    private var last = 0L
+    private var lastSpec = "~"
+    private var chaos = 0.0
+    private var chaosn = 0.0
+    st.foreach { s =>
+      res = s.res; fix = s.fix; lastDay = s.lastDay
+      last = java.time.LocalDate.parse(s.lastDay).toEpochDay
+      lastSpec = s.lastSpec; chaos = s.chaos; chaosn = s.chaosn
+    }
+
+    val out = scala.collection.mutable.ArrayBuffer.empty[ScoredRow]
+
+    def state: Option[ScoreCore] =
+      Option(lastDay).map(ScoreCore(res, fix, _, lastSpec, chaos, chaosn))
+
+    /** A day with no captures: a fill day (`spec` from the policy) or a
+      * densified one (`spec` "~").
+      */
+    private def blank(e: Long, spec: String): Unit = {
+      res = res.step(spec, p(spec, "~"))
+      fix = fix.step("Unknown", p("Unknown", "Unknown"))
+      out += ScoredRow(url, java.time.LocalDate.ofEpochDay(e).toString, "~", 0, 0, 0, 0, 0,
+        spec, spec != "~", res.h, "~", "Unknown", fix.h, chaos, chaosn)
+    }
+
+    def day(d: DailyOut): Unit = graft.operators.Score.parseDay(d.day).foreach { ld =>
+      val e = ld.toEpochDay
+      if (lastDay != null) {
+        val gap = e - last - 1
+        if (gap > 0) {
+          val filled = GapFill.fillsGap(gap, lastSpec, d.specimen, query.fill, query.policy)
+          val end = math.min(e - 1, asOf)
+          var g = last + 1
+          while (g <= end) {
+            blank(g,
+              if (filled) GapFill.fillValue(gap, g - last - 1, lastSpec, d.specimen, query.policy)
+              else "~")
+            g += 1
+          }
+        }
+      }
+      if (e <= asOf) {
+        res = res.step(d.specimen, p(d.specimen, "~"))
+        fix = fix.step(d.content, p(d.content, "Unknown"))
+        val call = d.c2xx + d.c3xx + d.c4xx + d.c5xx
+        out += ScoredRow(url, d.day, d.datetime, d.c2xx, d.c3xx, d.c4xx, d.c5xx, call,
+          d.specimen, d.specimen != "~" && call == 0, res.h, d.digest, d.content,
+          fix.h, d.chaos, d.chaosn)
+      }
+      lastDay = d.day; last = e; lastSpec = d.specimen; chaos = d.chaos; chaosn = d.chaosn
+    }
+
+    /** Densify past the last closed day to asOf (J1's calendar tail). */
+    def densifyToAsOf(): Unit =
+      if (lastDay != null) {
+        var g = last + 1
+        while (g <= asOf) { blank(g, "~"); g += 1 }
+      }
+  }
+
+  /** One url's bounded capture set through the whole kernel: daily fold,
+    * final flush, then scoring — densified to `query.asOf` when `tail`,
+    * else ending at the last observed day.
+    */
+  private[graft] def scoreCaptures(
+      url: String,
+      rows: Iterator[Capture],
+      query: TrendQuery,
+      tail: Boolean): Iterator[ScoredRow] = {
+    val scorer = new DayScorer(url, query, None)
+    new DayFold(url, None, scorer.day).addAll(timeOrdered(rows)).close()
+    if (tail) scorer.densifyToAsOf()
+    scorer.out.iterator
+  }
+
+  /** Run the streaming fold over one url's bounded capture set and
+    * close the final day — the batch harness for the streaming code
+    * path, giving it an oracle-checkable correctness row identical to
+    * the batch daily table.
+    */
+  def runBatch(url: String, rows: Iterator[Capture]): Iterator[DailyOut] = {
+    val out = Vector.newBuilder[DailyOut]
+    new DayFold(url, None, out += _).addAll(timeOrdered(rows)).close()
+    out.result().iterator
+  }
+
+  /** The scored stream's kernel over one url's bounded capture set with a
+    * final flush — the batch harness giving the incremental scorer an
+    * oracle-checkable row set: the scored table restricted to days no
+    * later than each url's last observed day and `query.asOf` (the
+    * stream's closed prefix after the last day flushes).
+    */
+  def runBatchScored(
+      url: String,
+      rows: Iterator[Capture],
+      query: TrendQuery): Iterator[ScoredRow] =
+    scoreCaptures(url, rows, query, tail = false)
 
   /** flatMapGroupsWithState body: fold the batch's (sorted) captures
     * through the loop state, emit closed days.
@@ -162,8 +367,7 @@ object Streaming {
       rows: Iterator[Capture],
       state: GroupState[UrlState]): Iterator[DailyOut] = {
     val out = Vector.newBuilder[DailyOut]
-    val st = foldSorted(state.getOption.getOrElse(emptyState), timeOrdered(rows))(out += _)
-    state.update(st)
+    state.update(new DayFold(url, state.getOption, out += _).addAll(timeOrdered(rows)).state)
     out.result().iterator
   }
 
@@ -186,7 +390,7 @@ object Streaming {
     */
   case class LateState(pending: Seq[Capture], core: UrlState)
 
-  /** Parse ts in the SAME zone `to_timestamp` used to derive the
+  /** Parse ts in the SAME zone `try_to_timestamp` used to derive the
     * watermark column (the session timezone) — a hard-coded UTC here
     * would release rows up to a zone-offset early on non-UTC sessions,
     * letting in-bound stragglers corrupt the order-sensitive fold.
@@ -206,30 +410,32 @@ object Streaming {
       pending: Seq[Capture],
       batch: Iterator[Capture],
       zone: java.time.ZoneId,
-      wm: Long): (Seq[Capture], Seq[Capture]) =
-    timeOrdered(pending.iterator ++ batch).partition(c => tsMillis(c.ts, zone) < wm)
+      wm: Long): (Array[Capture], Seq[Capture]) = {
+    val (ready, hold) = timeOrdered(pending.iterator ++ batch).partition(c => tsMillis(c.ts, zone) < wm)
+    (ready, hold.toVector)
+  }
 
   def processGroupLate(zone: java.time.ZoneId)(
       url: String,
       rows: Iterator[Capture],
       state: GroupState[LateState]): Iterator[DailyOut] = {
-    val st = state.getOption.getOrElse(LateState(Vector.empty, emptyState))
-    val (ready, hold) = release(st.pending, rows, zone, state.getCurrentWatermarkMs())
+    val st = state.getOption
+    val (ready, hold) = release(st.fold(Seq.empty[Capture])(_.pending), rows, zone,
+      state.getCurrentWatermarkMs())
     val out = Vector.newBuilder[DailyOut]
-    val core = foldSorted(st.core, ready)(out += _)
+    val core = new DayFold(url, st.map(_.core), out += _).addAll(ready).state
     state.update(LateState(hold, core))
     out.result().iterator
   }
 
-  /** Watermarked stream: tolerate up to `lateness` of event-time
-    * disorder. The watermark both bounds the hold-back buffer and drops
-    * too-late rows before they can corrupt the order-sensitive fold.
-    */
   /** The watermark scaffold shared by both late-data variants: resolve
     * the session zone (the hold-back predicate MUST use the same zone
-    * `to_timestamp` derives event time in — see [[tsMillis]]) and attach
-    * the watermark. Keeping this in one place keeps the zone contract
-    * in one place.
+    * `try_to_timestamp` derives event time in — see [[tsMillis]]) and
+    * attach the watermark. Rows whose `ts` does not parse as
+    * `yyyyMMddHHmmss` have no event time, so they are dropped before the
+    * stateful stage (a strict `to_timestamp` would end the query under
+    * ANSI mode instead). Keeping this in one place keeps the zone and
+    * event-time contract in one place.
     */
   private def withEventTimeWatermark(
       captures: Dataset[Capture],
@@ -239,12 +445,19 @@ object Streaming {
     val zone = java.time.ZoneId.of(
       spark.conf.get("spark.sql.session.timeZone", java.util.TimeZone.getDefault.getID))
     val ds = captures
-      .withColumn("event_time", to_timestamp(col("ts"), "yyyyMMddHHmmss"))
+      .withColumn("event_time", try_to_timestamp(col("ts"), lit("yyyyMMddHHmmss")))
+      .filter(col("event_time").isNotNull)
       .withWatermark("event_time", lateness)
       .as[CaptureWithTime]
     (zone, ds)
   }
 
+  /** Watermarked stream: tolerate up to `lateness` of event-time
+    * disorder. The watermark both bounds the hold-back buffer and drops
+    * too-late rows before they can corrupt the order-sensitive fold.
+    * Rows with an unparseable `ts` are dropped (see
+    * [[withEventTimeWatermark]]), so their junk days never appear here.
+    */
   def dailyStreamWatermarked(captures: Dataset[Capture], lateness: String): Dataset[DailyOut] = {
     val spark = captures.sparkSession
     import spark.implicits._
@@ -267,104 +480,8 @@ object Streaming {
   }
 
   // ------------------------------------------------------------ ST1 full
-  /** Recurrence state carried between closed days: the two sigmoid
-    * dimensions plus the last scored day's (day, specimen, chaos) — all
-    * the incremental scorer needs to fill and score the next span.
-    */
-  case class ScoreCore(
-      res: DimState,
-      fix: DimState,
-      lastDay: String,
-      lastSpec: String,
-      chaos: Double,
-      chaosn: Double)
-
   /** Full incremental-pipeline state: daily fold + recurrence. */
   case class ScoredState(core: UrlState, score: Option[ScoreCore])
-
-  /** Score one newly closed day: first the interior gap days since the
-    * previous closed day (gap-filled per policy via [[GapFill.fillDays]],
-    * unfilled days densify to "~"; chaos inherits the previous observed
-    * day, reference main.py:199-207), then the day itself. Emitted rows
-    * are exactly the batch scored table's rows for those days — the
-    * recurrence is forward-only, so a closed prefix never changes.
-    *
-    * Days AFTER `query.asOf` neither emit nor advance the recurrence:
-    * the batch calendar ends at asOf (reference main.py:199), so scoring
-    * past it would diverge from the batch table and its oracle. The
-    * fill endpoints still track the real observed days (lastDay may
-    * exceed asOf) so gap arithmetic stays correct.
-    */
-  private def scoreClosedDay(
-      url: String,
-      prev: Option[ScoreCore],
-      d: DailyOut,
-      query: TrendQuery): (ScoreCore, Vector[ScoredRow]) = {
-    def p(key: String, dflt: String): SigParams =
-      query.params.getOrElse(key, query.params(dflt))
-    val out = Vector.newBuilder[ScoredRow]
-    var res = prev.map(_.res).getOrElse(DimState.resilienceInit)
-    var fix = prev.map(_.fix).getOrElse(DimState.fixityInit)
-    prev.foreach { pc =>
-      val pd = java.time.LocalDate.parse(pc.lastDay)
-      val gap = java.time.temporal.ChronoUnit.DAYS
-        .between(pd, java.time.LocalDate.parse(d.day)) - 1
-      if (gap > 0) {
-        val fills = GapFill
-          .fillDays(Vector((pc.lastDay, pc.lastSpec), (d.day, d.specimen)), query.fill, query.policy)
-          .toMap
-        var pos = 0L
-        var within = true
-        while (pos < gap && within) {
-          val day = pd.plusDays(pos + 1).toString
-          if (day > query.asOf) within = false
-          else {
-            val spec = fills.getOrElse(day, "~")
-            res = res.step(spec, p(spec, "~"))
-            fix = fix.step("Unknown", p("Unknown", "Unknown"))
-            out += ScoredRow(url, day, "~", 0, 0, 0, 0, 0, spec, spec != "~",
-              res.h, "~", "Unknown", fix.h, pc.chaos, pc.chaosn)
-            pos += 1
-          }
-        }
-      }
-    }
-    if (d.day <= query.asOf) {
-      res = res.step(d.specimen, p(d.specimen, "~"))
-      fix = fix.step(d.content, p(d.content, "Unknown"))
-      val call = d.c2xx + d.c3xx + d.c4xx + d.c5xx
-      out += ScoredRow(url, d.day, d.datetime, d.c2xx, d.c3xx, d.c4xx, d.c5xx, call,
-        d.specimen, d.specimen != "~" && call == 0, res.h, d.digest, d.content,
-        fix.h, d.chaos, d.chaosn)
-    }
-    (ScoreCore(res, fix, d.day, d.specimen, d.chaos, d.chaosn), out.result())
-  }
-
-  /** Routes closed days through [[scoreClosedDay]], accumulating emitted
-    * rows and the recurrence state — the one scoring sink every scored
-    * variant (streamed, watermarked, bounded) plugs into [[foldSorted]].
-    *
-    * Junk days (unparseable as ISO dates — possible because the daily
-    * fold deliberately tolerates junk timestamps) are SKIPPED here
-    * without touching the recurrence state: they exist in the daily
-    * stream but have no calendar position to score. Storing one in
-    * `ScoreCore.lastDay` would poison the checkpoint — every later
-    * batch would throw on `LocalDate.parse` and the stream could never
-    * recover. Same drop rule as the batch scorer
-    * ([[graft.operators.Score]]).
-    */
-  private final class ScoringSink(url: String, query: TrendQuery, init: Option[ScoreCore]) {
-    private var scoreState = init
-    private val rows = Vector.newBuilder[ScoredRow]
-    def onFlush(d: DailyOut): Unit = {
-      if (graft.operators.Score.parseDay(d.day).isEmpty) return
-      val (sc, emitted) = scoreClosedDay(url, scoreState, d, query)
-      scoreState = Some(sc)
-      emitted.foreach(rows += _)
-    }
-    def score: Option[ScoreCore] = scoreState
-    def result: Vector[ScoredRow] = rows.result()
-  }
 
   /** ST1 in full: captures stream in, SCORED daily rows stream out — the
     * whole reference pipeline (daily fold + gap fill + densify + sigmoid
@@ -380,11 +497,11 @@ object Streaming {
       .groupByKey(_.url)
       .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
         (url: String, rows: Iterator[Capture], state: GroupState[ScoredState]) =>
-          val st = state.getOption.getOrElse(ScoredState(emptyState, None))
-          val sink = new ScoringSink(url, query, st.score)
-          val core = foldSorted(st.core, timeOrdered(rows))(sink.onFlush)
-          state.update(ScoredState(core, sink.score))
-          sink.result.iterator
+          val st = state.getOption
+          val scorer = new DayScorer(url, query, st.flatMap(_.score))
+          val core = new DayFold(url, st.map(_.core), scorer.day).addAll(timeOrdered(rows)).state
+          state.update(ScoredState(core, scorer.state))
+          scorer.out.iterator
       }
   }
 
@@ -396,9 +513,9 @@ object Streaming {
   /** ST1 + ST3 combined: the full incremental pipeline under an
     * event-time watermark. Rows within the lateness bound are buffered
     * per url and folded in correct (ts, seq) position once the watermark
-    * passes them; rows beyond the bound are dropped upstream — the same
-    * hold-back contract as [[dailyStreamWatermarked]], extended through
-    * scoring.
+    * passes them; rows beyond the bound, and rows with an unparseable
+    * `ts`, are dropped upstream — the same hold-back contract as
+    * [[dailyStreamWatermarked]], extended through scoring.
     */
   def scoredStreamWatermarked(
       captures: Dataset[Capture],
@@ -410,13 +527,13 @@ object Streaming {
     ds.groupByKey(_.url)
       .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
         (url: String, rows: Iterator[CaptureWithTime], state: GroupState[ScoredLateState]) =>
-          val st = state.getOption.getOrElse(ScoredLateState(Vector.empty, emptyState, None))
-          val (ready, hold) =
-            release(st.pending, rows.map(_.toCapture), zone, state.getCurrentWatermarkMs())
-          val sink = new ScoringSink(url, query, st.score)
-          val core = foldSorted(st.core, ready)(sink.onFlush)
-          state.update(ScoredLateState(hold, core, sink.score))
-          sink.result.iterator
+          val st = state.getOption
+          val (ready, hold) = release(st.fold(Seq.empty[Capture])(_.pending),
+            rows.map(_.toCapture), zone, state.getCurrentWatermarkMs())
+          val scorer = new DayScorer(url, query, st.flatMap(_.score))
+          val core = new DayFold(url, st.map(_.core), scorer.day).addAll(ready).state
+          state.update(ScoredLateState(hold, core, scorer.state))
+          scorer.out.iterator
       }
   }
 
@@ -446,44 +563,6 @@ object Streaming {
       .select(
         date_format(col("window.start"), "yyyy-MM-dd").as("day"),
         col("event_type"), col("n"), col("sum_value"))
-
-  /** The scored stream's fold over one url's bounded capture set with a
-    * final flush — the batch harness giving the incremental scorer an
-    * oracle-checkable row set: the scored table restricted to observed
-    * days no later than `query.asOf` (the stream's closed prefix after
-    * the last day flushes).
-    */
-  def runBatchScored(
-      url: String,
-      rows: Iterator[Capture],
-      query: TrendQuery): Iterator[ScoredRow] = {
-    val sink = new ScoringSink(url, query, None)
-    val st = foldSorted(emptyState, timeOrdered(rows))(sink.onFlush)
-    finalizeDay(url, st).foreach(sink.onFlush)
-    sink.result.iterator
-  }
-
-  /** Run the exact streaming fold over one url's bounded capture set and
-    * close the final day — the batch harness for the streaming code
-    * path, giving it an oracle-checkable correctness row identical to
-    * the batch daily table.
-    */
-  def runBatch(url: String, rows: Iterator[Capture]): Iterator[DailyOut] = {
-    val out = Vector.newBuilder[DailyOut]
-    val st = foldSorted(emptyState, timeOrdered(rows))(out += _)
-    finalizeDay(url, st).foreach(out += _)
-    out.result().iterator
-  }
-
-  /** Batch-mode flush: finalize every url's open day from the state the
-    * stream would hold — used by the equivalence test to close the books.
-    */
-  def finalizeDay(url: String, st: UrlState): Option[DailyOut] =
-    st.acc.map { a =>
-      DailyOut(url, a.day, a.datetime, a.c2xx, a.c3xx, a.c4xx, a.c5xx,
-        a.specimen, a.digest, a.content,
-        st.us.toDouble / st.rs, st.uw.toDouble / math.min(SWS, st.rs))
-    }
 
   // ----------------------------------------------------- streaming dedup
   /** (doc_id, content-hash) pair entering the dedup stream. */

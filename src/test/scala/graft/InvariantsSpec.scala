@@ -61,6 +61,34 @@ class InvariantsSpec extends AnyFunSuite {
     }
   }
 
+  test("fused equals staged on junk timestamps; transitions survive a junk day") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    // junk days ("2024--", "2019-02-30", "2024-01-0", "trol-l-") sit
+    // before, inside and after the valid ones; neither path may throw
+    val junk = Seq(
+      Capture("j", "2024", "200", "JUNKA______", 0L),
+      Capture("j", "20190228120000", "200", "DIGA_______", 1L),
+      Capture("j", "20190230120000", "404", "DIGB_______", 2L),
+      Capture("j", "20190305120000", "301", "DIGB_______", 3L),
+      Capture("j", "20190306120000", "-", "DIGA_______", 4L),
+      Capture("j", "2024010", "503", "DIGC_______", 5L),
+      Capture("j", "20240105120000", "200", "DIGC_______", 6L),
+      Capture("j", "troll", "30x", "D", 7L),
+      Capture("k", "2024", "200", "JUNKK______", 0L),
+      Capture("k", "20240110120000", "404", "DIGK_______", 1L),
+      Capture("k", "20240114120000", "200", "DIGK_______", 2L))
+    val df = (junk ++ caps("b", 12, 40, 70)).toDF()
+    for (p <- FillPolicy.all; fill <- Seq(-1, 0, 3)) {
+      val q = TrendQuery(fill, p, AsOf)
+      val fused = Trend.run(df, q).collect().sortBy(r => (r.url, r.day))
+      val staged = Trend.runStaged(df, q).collect().sortBy(r => (r.url, r.day))
+      assert(fused.toSeq == staged.toSeq, s"fused != staged for policy=$p fill=$fill")
+    }
+    val t = TrendMachine.run(df, TrendQuery(0, FillPolicy.Forward, AsOf)).transitions.collect()
+    assert(t.length == 3 * 16, "16 grid cells per url")
+  }
+
   test("fillDays (in-memory) generates exactly the DataFrame fill rows") {
     val spark = TestSpark.spark
     import spark.implicits._

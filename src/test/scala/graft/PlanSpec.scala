@@ -285,10 +285,12 @@ class PlanSpec extends AnyFunSuite {
     val shuffles = "ShuffleExchange|Exchange hashpartitioning|Exchange rangepartitioning".r
       .findAllIn(p).size
     assert(shuffles == 1, s"fused pipeline must shuffle exactly once, saw $shuffles:\n${p.take(3000)}")
-    // the one exchange hash-partitions on the groupByKey key (the url
-    // string, projected as value#N by the typed API)
-    assert(p.contains("MapGroups") && p.contains("Exchange hashpartitioning(value"),
+    // the one exchange hash-partitions on the url column itself: no
+    // map-side AppendColumns deserializes each capture to compute a key
+    assert(p.contains("MapGroups") && p.contains("Exchange hashpartitioning(url"),
       s"expected MapGroups over a single url-keyed exchange:\n${p.take(1500)}")
+    assert(!p.contains("AppendColumns"),
+      s"the fused pipeline must group on the url column, not a typed key:\n${p.take(1500)}")
   }
 
   test("daily-derived queries reuse the persisted daily table") {

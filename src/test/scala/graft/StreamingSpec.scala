@@ -112,6 +112,100 @@ class StreamingSpec extends AnyFunSuite {
     }
   }
 
+  test("the fold's day test agrees with the day string on junk timestamps") {
+    // sameDay(ts, d) spares the fold a day string per capture; it must
+    // answer exactly dayOf(ts) == d, short and odd timestamps included
+    val rnd = new Random(3)
+    val alphabet = "2014-x"
+    def ts() = Seq.fill(rnd.nextInt(12))(alphabet(rnd.nextInt(alphabet.length))).mkString
+    for (_ <- 0 until 20000) {
+      val t = ts()
+      val d = if (rnd.nextBoolean()) Streaming.dayOf(t) else Streaming.dayOf(ts())
+      assert(Streaming.sameDay(t, d) == (Streaming.dayOf(t) == d), s"ts=$t day=$d")
+    }
+    assert(Streaming.sameDay("20240105120000", "2024-01-05"))
+    assert(!Streaming.sameDay("20240105120000", "2024-01-06"))
+    assert(Streaming.sameDay("2024", "2024--") && !Streaming.sameDay("20240", "2024--"))
+  }
+
+  test("trend stream state encoders keep their checkpoint format") {
+    import org.apache.spark.sql.Encoders
+    import org.apache.spark.sql.types._
+    // the checkpointed state of the four trend faces; a schema change
+    // here breaks restore from existing checkpoints
+    def f(name: String, t: DataType, nullable: Boolean = true) = StructField(name, t, nullable)
+    val str = StringType
+    val dayAcc = StructType(Seq(f("day", str), f("datetime", str),
+      f("c2xx", LongType, false), f("c3xx", LongType, false),
+      f("c4xx", LongType, false), f("c5xx", LongType, false),
+      f("specimen", str), f("digest", str), f("content", str), f("cp", IntegerType, false)))
+    val urlState = StructType(Seq(
+      f("digestStatus", MapType(str, str, valueContainsNull = true)),
+      f("sw", ArrayType(str, containsNull = true)),
+      f("pc", str), f("ps", str),
+      f("rs", LongType, false), f("us", LongType, false), f("uw", LongType, false),
+      f("acc", dayAcc)))
+    val capture = StructType(Seq(f("url", str), f("ts", str), f("status", str),
+      f("digest", str), f("seq", LongType, false)))
+    val pending = f("pending", ArrayType(capture, containsNull = true))
+    val dim = StructType(Seq(f("prev", str), f("base", DoubleType, false),
+      f("scale", DoubleType, false), f("h", DoubleType, false), f("x", LongType, false)))
+    val scoreCore = StructType(Seq(f("res", dim), f("fix", dim), f("lastDay", str),
+      f("lastSpec", str), f("chaos", DoubleType, false), f("chaosn", DoubleType, false)))
+
+    assert(Encoders.product[Streaming.UrlState].schema == urlState)
+    assert(Encoders.product[Streaming.LateState].schema ==
+      StructType(Seq(pending, f("core", urlState))))
+    assert(Encoders.product[Streaming.ScoredState].schema ==
+      StructType(Seq(f("core", urlState), f("score", scoreCore))))
+    assert(Encoders.product[Streaming.ScoredLateState].schema ==
+      StructType(Seq(pending, f("core", urlState), f("score", scoreCore))))
+  }
+
+  test("watermarked streams drop a junk ts row and keep running") {
+    // under ANSI mode a strict to_timestamp ends the query on "2024";
+    // rows with no event time are dropped before the stateful stage
+    val spark = TestSpark.spark
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    import graft.model.{FillPolicy, TrendQuery}
+
+    val valid = fixture("wj", 41, 120, 20)
+    val junk = Seq(Capture("wj", "2024", "200", "JUNK_______", 1000L),
+      Capture("wj", "20240230120000", "404", "JUNK_______", 1001L))
+    val chunks = Seq(valid.take(50) ++ junk.take(1), valid.slice(50, 90) ++ junk.drop(1), valid.drop(90))
+    val q = TrendQuery(-1, FillPolicy.Forward, "2024-03-15")
+
+    val daily = MemoryStream[Capture]
+    val scored = MemoryStream[Capture]
+    val dq = Streaming.dailyStreamWatermarked(daily.toDS(), "2 days")
+      .writeStream.format("memory").queryName("daily_wm_junk").outputMode("append").start()
+    val sq = Streaming.scoredStreamWatermarked(scored.toDS(), q, "2 days")
+      .writeStream.format("memory").queryName("scored_wm_junk").outputMode("append").start()
+    try {
+      (chunks :+ Seq.empty[Capture]).foreach { c =>
+        daily.addData(c); dq.processAllAvailable()
+        scored.addData(c); sq.processAllAvailable()
+      }
+      assert(dq.isActive && sq.isActive && dq.exception.isEmpty && sq.exception.isEmpty)
+    } finally { dq.stop(); sq.stop() }
+
+    val days = spark.table("daily_wm_junk")
+      .collect().map(r => (r.getString(0), r.getString(1)) -> r.toSeq).toMap
+    val batchDays = Daily.fromCaptures(valid.toDF())
+      .select("url", "day", "datetime", "c2xx", "c3xx", "c4xx", "c5xx",
+        "specimen", "digest", "content", "chaos", "chaosn")
+      .collect().map(r => (r.getString(0), r.getString(1)) -> r.toSeq).toMap
+    assert(days.nonEmpty)
+    days.foreach { case (k, got) => assert(batchDays.get(k).contains(got), s"daily divergence at $k") }
+
+    val rows = spark.table("scored_wm_junk").as[graft.model.ScoredRow]
+      .collect().map(r => (r.url, r.day) -> r).toMap
+    val batch = operators.Trend.run(valid.toDF(), q).collect().map(r => (r.url, r.day) -> r).toMap
+    assert(rows.nonEmpty)
+    rows.foreach { case (k, got) => assert(batch.get(k).contains(got), s"scored divergence at $k") }
+  }
+
   test("a junk-day capture cannot poison the scored stream's state") {
     // a url whose FIRST closed day is junk ("2024--") must not wedge the
     // stream: scoring skips unparseable days without storing them, so
@@ -143,9 +237,13 @@ class StreamingSpec extends AnyFunSuite {
     // the junk day is skipped, later days score normally
     assert(streamed.keySet == Set("2024-01-10", "2024-01-11", "2024-01-12"),
       s"got ${streamed.keySet}")
-    // batch pipeline drops the junk day identically
+    // batch pipeline drops the junk day identically; the staged
+    // Daily -> GapFill -> Score path checks it independently
     val batch = operators.Trend.run(caps.toDF(), q)
       .collect().filter(r => r.day <= "2024-01-12").map(r => r.day -> r).toMap
+    val staged = operators.Trend.runStaged(caps.toDF(), q)
+      .collect().filter(r => r.day <= "2024-01-12").map(r => r.day -> r).toMap
+    assert(batch == staged, "Trend.run != Trend.runStaged")
     batch.foreach { case (k, want) => assert(streamed(k) == want, s"poison divergence at $k") }
   }
 
@@ -178,6 +276,11 @@ class StreamingSpec extends AnyFunSuite {
         .collect()
         .filter(r => r.day <= lastEmitted(r.url))
         .map(r => (r.url, r.day) -> r).toMap
+      val staged = operators.Trend.runStaged(all.toDF(), q)
+        .collect()
+        .filter(r => r.day <= lastEmitted(r.url))
+        .map(r => (r.url, r.day) -> r).toMap
+      assert(batch == staged, s"Trend.run != Trend.runStaged for $policy")
       assert(streamed.keySet == batch.keySet,
         s"day sets differ for $policy: extra=${streamed.keySet -- batch.keySet} missing=${batch.keySet -- streamed.keySet}")
       batch.foreach { case (k, want) =>
@@ -210,6 +313,8 @@ class StreamingSpec extends AnyFunSuite {
     assert(streamed.keys.forall(_._2 <= asOf), "no emitted day may exceed asOf")
     val batch = operators.Trend.run(all.toDF(), q)
       .collect().map(r => (r.url, r.day) -> r).toMap
+    assert(batch == operators.Trend.runStaged(all.toDF(), q)
+      .collect().map(r => (r.url, r.day) -> r).toMap, "Trend.run != Trend.runStaged")
     // every batch day <= the last emitted day must match; with captures
     // continuing past asOf, the gap loop emits the full [.., asOf] span
     assert(streamed.keySet == batch.keySet,
@@ -241,6 +346,8 @@ class StreamingSpec extends AnyFunSuite {
     assert(streamed.nonEmpty, "watermarked scored stream emitted nothing")
     val batch = operators.Trend.run(all.toDF(), q)
       .collect().map(r => (r.url, r.day) -> r).toMap
+    assert(batch == operators.Trend.runStaged(all.toDF(), q)
+      .collect().map(r => (r.url, r.day) -> r).toMap, "Trend.run != Trend.runStaged")
     // emitted days are a contiguous closed prefix of the batch table
     streamed.foreach { case (k, got) =>
       assert(batch(k) == got, s"late-data scored divergence at $k")

@@ -117,6 +117,8 @@ class TrendMachineSpec extends AnyFunSuite {
       assert(landed.nonEmpty, "no rows landed")
       val batch = operators.Trend.run(all.toDF(), q)
         .collect().map(r => (r.url, r.day) -> r).toMap
+      assert(batch == operators.Trend.runStaged(all.toDF(), q)
+        .collect().map(r => (r.url, r.day) -> r).toMap, "Trend.run != Trend.runStaged")
       landed.foreach { case (k, got) => assert(batch(k) == got, s"sink divergence at $k") }
     } finally {
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
