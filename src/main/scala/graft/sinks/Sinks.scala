@@ -749,7 +749,10 @@ object Sinks {
     * cache), stamp `_graft_fresh_at`, and read that. The stamp is
     * written AFTER the data commits, so a crash mid-write leaves a
     * stale-but-complete previous entry or an unstamped (= never fresh)
-    * partial, never a fresh-looking torn one.
+    * partial, never a fresh-looking torn one. The stamp itself is
+    * written to a temp file and renamed into place, and a stamp that
+    * does not parse (torn by a crash or by hand) reads as stale, so the
+    * entry recomputes instead of failing every later call.
     *
     * `now` is injected for the same reason the engine's "today" is
     * (SURVEY §7.4-4): freshness must be testable without wall-clock
@@ -769,9 +772,9 @@ object Sinks {
       val in = fs.open(stamp)
       val at =
         try new String(
-          org.apache.commons.io.IOUtils.toByteArray(in), StandardCharsets.UTF_8).trim.toLong
+          org.apache.commons.io.IOUtils.toByteArray(in), StandardCharsets.UTF_8).trim.toLongOption
         finally in.close()
-      now() - at < ttlSeconds
+      at.exists(now() - _ < ttlSeconds)
     }
     if (!fresh) {
       val tmp = new Path(path, s"$key.tmp_${java.util.UUID.randomUUID()}")
@@ -789,9 +792,15 @@ object Sinks {
           try fs.delete(tmp, true) catch { case _: Throwable => () }
           throw e
       }
-      val out = fs.create(stamp, true)
-      out.write(now().toString.getBytes(StandardCharsets.UTF_8))
-      out.close()
+      // `_`-prefixed, so a leftover temp stamp is hidden from the parquet read
+      val tmpStamp = new Path(dir, s"_graft_fresh_at.tmp_${java.util.UUID.randomUUID()}")
+      val out = fs.create(tmpStamp, true)
+      try out.write(now().toString.getBytes(StandardCharsets.UTF_8))
+      finally out.close()
+      if (!fs.rename(tmpStamp, stamp)) {
+        fs.delete(tmpStamp, false)
+        throw new java.io.IOException(s"cache stamp rename $tmpStamp -> $stamp failed")
+      }
     }
     spark.read.parquet(dir.toString)
   }
@@ -803,13 +812,15 @@ object Sinks {
   def scoredStreamSink(
       scored: Dataset[ScoredRow],
       path: String,
-      checkpoint: String): StreamingQuery =
+      checkpoint: String): StreamingQuery = {
+    graft.streaming.Streaming.localCheckpoints(scored.sparkSession)
     scored.writeStream
       .format("parquet")
       .option("path", path)
       .option("checkpointLocation", checkpoint)
       .outputMode("append")
       .start()
+  }
 
   // ------------------------------------------------------- ANN index layout
   /** Persist an IVF-PQ index for serving: the codes table lands
@@ -1969,6 +1980,7 @@ object Sinks {
     // geometry.
     val seg = allocSeg(spark, path)
     val encode = indexEncoder(spark, path)
+    graft.streaming.Streaming.localCheckpoints(spark)
     // the rotation artifact freezes with the rest of the metadata at
     // stream start; Ann.rotate is a stateless typed map, so it
     // composes with the streaming frame like the encode kernel does

@@ -39,6 +39,26 @@ import scala.reflect.runtime.universe.TypeTag
   */
 object Streaming {
 
+  /** Route the checkpoints of the streams started on `spark` through
+    * [[LocalCheckpointFiles]]: sets
+    * `spark.sql.streaming.checkpointFileManagerClass` on this session,
+    * and only when the key is unset, then returns `spark`. Every stream
+    * face here and every `writeStream` graft starts calls it, so a local
+    * checkpoint costs no child process per file; HDFS and object-store
+    * checkpoints keep Spark's default manager. Nothing outside the
+    * session changes (not the SparkContext's Hadoop configuration, not
+    * `fs.file.impl`, not Hadoop's FileSystem cache). To opt out, set the
+    * key yourself before building the stream, e.g. to Spark's
+    * `org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCheckpointFileManager`;
+    * a value already set is never replaced. A query picks the manager
+    * up when it starts.
+    */
+  private[graft] def localCheckpoints(spark: SparkSession): SparkSession = {
+    if (spark.conf.getOption(LocalCheckpointFiles.ManagerClassKey).isEmpty)
+      spark.conf.set(LocalCheckpointFiles.ManagerClassKey, classOf[LocalCheckpointFiles].getName)
+    spark
+  }
+
   /** Finalized per-day row (pre-scoring). */
   case class DailyOut(
       url: String,
@@ -373,7 +393,7 @@ object Streaming {
 
   /** Wire a capture stream into the incremental daily table. */
   def dailyStream(captures: Dataset[Capture]): Dataset[DailyOut] = {
-    val spark = captures.sparkSession
+    val spark = localCheckpoints(captures.sparkSession)
     import spark.implicits._
     captures
       .groupByKey(_.url)
@@ -459,7 +479,7 @@ object Streaming {
     * [[withEventTimeWatermark]]), so their junk days never appear here.
     */
   def dailyStreamWatermarked(captures: Dataset[Capture], lateness: String): Dataset[DailyOut] = {
-    val spark = captures.sparkSession
+    val spark = localCheckpoints(captures.sparkSession)
     import spark.implicits._
     val (zone, ds) = withEventTimeWatermark(captures, lateness)
     val process = processGroupLate(zone) _
@@ -491,7 +511,7 @@ object Streaming {
     * between the two freely. Same ordering contract as [[dailyStream]].
     */
   def scoredStream(captures: Dataset[Capture], query: TrendQuery): Dataset[ScoredRow] = {
-    val spark = captures.sparkSession
+    val spark = localCheckpoints(captures.sparkSession)
     import spark.implicits._
     captures
       .groupByKey(_.url)
@@ -521,7 +541,7 @@ object Streaming {
       captures: Dataset[Capture],
       query: TrendQuery,
       lateness: String): Dataset[ScoredRow] = {
-    val spark = captures.sparkSession
+    val spark = localCheckpoints(captures.sparkSession)
     import spark.implicits._
     val (zone, ds) = withEventTimeWatermark(captures, lateness)
     ds.groupByKey(_.url)
@@ -553,7 +573,8 @@ object Streaming {
     */
   def eventDailyWindowStream(
       events: org.apache.spark.sql.DataFrame,
-      lateness: String): org.apache.spark.sql.DataFrame =
+      lateness: String): org.apache.spark.sql.DataFrame = {
+    localCheckpoints(events.sparkSession)
     events
       .withWatermark("ts", lateness)
       .groupBy(window(col("ts"), "1 day"), col("event_type"))
@@ -563,6 +584,7 @@ object Streaming {
       .select(
         date_format(col("window.start"), "yyyy-MM-dd").as("day"),
         col("event_type"), col("n"), col("sum_value"))
+  }
 
   // ----------------------------------------------------- streaming dedup
   /** (doc_id, content-hash) pair entering the dedup stream. */
@@ -599,7 +621,7 @@ object Streaming {
     * two definitions coincide.
     */
   def dedupStream(docs: org.apache.spark.sql.DataFrame): Dataset[DedupOut] = {
-    val spark = docs.sparkSession
+    val spark = localCheckpoints(docs.sparkSession)
     import spark.implicits._
     docs.select(col("doc_id"), md5(col("text")).as("h")).as[DocKeyed]
       .groupByKey(_.h)
@@ -645,7 +667,7 @@ object Streaming {
     */
   def dedupStoredStream(
       docs: org.apache.spark.sql.DataFrame, table: String): org.apache.spark.sql.DataFrame = {
-    val spark = docs.sparkSession
+    val spark = localCheckpoints(docs.sparkSession)
     val (baseTable, _) = graft.sinks.Sinks.dedupBaseState(spark, table)
     if (!spark.catalog.tableExists(baseTable))
       throw new IllegalStateException(
@@ -690,7 +712,8 @@ object Streaming {
       table: String,
       checkpoint: String,
       onKept: (org.apache.spark.sql.DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.StreamingQuery =
+      : org.apache.spark.sql.streaming.StreamingQuery = {
+    localCheckpoints(docs.sparkSession)
     docs.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
@@ -713,6 +736,7 @@ object Streaming {
       }
       .outputMode("update")
       .start()
+  }
 
   /** The END-TO-END continuous-ingest loop for the VECTOR serving
     * stack — [[dedupIngestLoop]]'s shape on the ANN tier: each vector
@@ -762,7 +786,8 @@ object Streaming {
       checkpoint: String,
       driftFraction: Double = graft.sinks.Sinks.HnswRebuildDriftFraction,
       onRebuild: Long => Unit = _ => ())
-      : org.apache.spark.sql.streaming.StreamingQuery =
+      : org.apache.spark.sql.streaming.StreamingQuery = {
+    localCheckpoints(vecs.sparkSession)
     vecs.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
@@ -810,6 +835,7 @@ object Streaming {
       }
       .outputMode("update")
       .start()
+  }
 
   /** The dedup stream's fold over one bounded hash group — the batch
     * harness giving the streaming code path an oracle-checkable twin
@@ -1020,7 +1046,8 @@ object Streaming {
     * [[nearDupStreamTtl]] is the bounded-state production face; this
     * exact one is the oracle-checkable semantics.
     */
-  def nearDupStream[R, M, O](rule: BucketRule[R, M, O], banded: DataFrame): Dataset[O] =
+  def nearDupStream[R, M, O](rule: BucketRule[R, M, O], banded: DataFrame): Dataset[O] = {
+    localCheckpoints(banded.sparkSession)
     typedRows(rule, banded)
       .groupByKey(rule.bucket)(Encoders.STRING)
       .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
@@ -1029,6 +1056,7 @@ object Streaming {
           state.update(members)
           out.iterator
       }(rule.exactState, rule.out)
+  }
 
   /** [[nearDupStream]] with a REAL state bound: each band bucket lives
     * `ttlSeconds` of EVENT time past its newest member, then its state
@@ -1072,7 +1100,8 @@ object Streaming {
       rule: BucketRule[R, M, O],
       banded: DataFrame,
       watermarkDelay: String,
-      ttlSeconds: Long): Dataset[O] =
+      ttlSeconds: Long): Dataset[O] = {
+    localCheckpoints(banded.sparkSession)
     banded
       .where(col("event_ts").isNotNull)
       .withWatermark("event_ts", watermarkDelay)
@@ -1095,6 +1124,7 @@ object Streaming {
             out.iterator
           }
       }(rule.ttlState, rule.out)
+  }
 
   /** [[nearDupStream]]'s fold over bounded input — the oracle-checkable
     * batch twin (equals the band-bucket self-join with the rule's
@@ -1206,6 +1236,7 @@ object Streaming {
     * the lang-ID/keep-mask stateless-ingest discipline.
     */
   def warcExtractStream(files: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    localCheckpoints(files.sparkSession)
     val ex = graft.operators.TextStats.extractedTextCol("html")
     graft.sources.Warc.parseWarcRecords(files).toDF()
       .select(
@@ -1265,7 +1296,7 @@ object Streaming {
   def decontaminateStream(
       docs: org.apache.spark.sql.DataFrame,
       benchDocs: org.apache.spark.sql.DataFrame): Dataset[DecontOut] = {
-    val spark = docs.sparkSession
+    val spark = localCheckpoints(docs.sparkSession)
     import spark.implicits._
     val bench = spark.sparkContext.broadcast(
       graft.operators.Dedup.shingles(benchDocs)
@@ -1308,7 +1339,7 @@ object Streaming {
   def embDecontaminateStream(
       vecs: org.apache.spark.sql.DataFrame,
       benchVecs: org.apache.spark.sql.DataFrame): Dataset[EmbDecontOut] = {
-    val spark = vecs.sparkSession
+    val spark = localCheckpoints(vecs.sparkSession)
     import spark.implicits._
     val (benchRows, bnorm) = graft.operators.Ann.collectBench(benchVecs)
     val bc = spark.sparkContext.broadcast((benchRows, bnorm))
@@ -1365,7 +1396,7 @@ object Streaming {
   def tokenStatsSubwordStreamWith(
       docs: org.apache.spark.sql.DataFrame,
       vocab: org.apache.spark.sql.DataFrame): Dataset[SubwordOut] = {
-    val spark = docs.sparkSession
+    val spark = localCheckpoints(docs.sparkSession)
     import spark.implicits._
     val byLen = graft.operators.TextStats.vocabByLenFrom(vocab)
     val bc = spark.sparkContext.broadcast(byLen)
@@ -1486,7 +1517,7 @@ object Streaming {
     * doc_keep_mask's oracle twin.
     */
   def keepStream(docs: org.apache.spark.sql.DataFrame): Dataset[KeepOut] = {
-    val spark = docs.sparkSession
+    val spark = localCheckpoints(docs.sparkSession)
     import spark.implicits._
     qKeyed(docs)
       .groupByKey(_.h)
@@ -1565,7 +1596,7 @@ object Streaming {
     * oracle twin (StreamingSpec pins kernel == declarative).
     */
   def langIdStream(docs: org.apache.spark.sql.DataFrame): Dataset[LangOut] = {
-    val spark = docs.sparkSession
+    val spark = localCheckpoints(docs.sparkSession)
     import spark.implicits._
     docs.select(col("doc_id"), col("lang"), col("text"))
       .as[(Long, String, String)]
@@ -1585,8 +1616,10 @@ object Streaming {
       docs: org.apache.spark.sql.DataFrame,
       bi: Map[(String, String), Long],
       uni: Map[String, Long],
-      v: Long): org.apache.spark.sql.DataFrame =
+      v: Long): org.apache.spark.sql.DataFrame = {
+    localCheckpoints(docs.sparkSession)
     graft.operators.TextStats.lmScoreStored(docs, bi, uni, v)
+  }
 
   /** Per-source running evidence for the streaming domain gate. */
   case class SourceGateState(nDocs: Long, qMicroSum: Long, nLow: Long)
@@ -1657,7 +1690,7 @@ object Streaming {
     * registered bounded run shares source_quality_gate's twin.
     */
   def sourceGateStream(docs: org.apache.spark.sql.DataFrame): Dataset[SourceGateOut] = {
-    val spark = docs.sparkSession
+    val spark = localCheckpoints(docs.sparkSession)
     import spark.implicits._
     gateEvidence(docs)
       .groupByKey(_._1)

@@ -92,6 +92,21 @@ class TrendMachineSpec extends AnyFunSuite {
         now = () => clock)(produce _)
       assert(third.head().getString(1) == "v2" && computes == 2,
         "expired cache must recompute")
+      // a torn (empty) stamp reads as stale: the entry recomputes
+      // instead of failing every later call with a parse error
+      val stamp = new org.apache.hadoop.fs.Path(s"$dir/daily/_graft_fresh_at")
+      stamp.getFileSystem(spark.sparkContext.hadoopConfiguration).create(stamp, true).close()
+      val fourth = graft.sinks.Sinks.cached(spark, dir, "daily", ttlSeconds = 3600,
+        now = () => clock)(produce _)
+      assert(fourth.head().getString(1) == "v3" && computes == 3,
+        "a torn stamp must recompute")
+      // the refresh wrote a whole stamp through a temp file it renamed away
+      val fifth = graft.sinks.Sinks.cached(spark, dir, "daily", ttlSeconds = 3600,
+        now = () => clock)(produce _)
+      assert(fifth.head().getString(1) == "v3" && computes == 3,
+        "the re-stamped entry must be fresh")
+      assert(!new java.io.File(s"$dir/daily").list().exists(_.contains(".tmp_")),
+        "a temp stamp was left behind")
     } finally {
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
     }
