@@ -1040,15 +1040,13 @@ object Sinks {
     * that somehow outlives TWO rebuilds fails loudly, never wrongly.
     */
   def writeHnswIndex(emb: DataFrame, path: String): Unit = {
-    import graft.operators.{Ann, CacheScope}
+    import graft.operators.Ann
     writeHnswIndexFromParts(emb.sparkSession, path) { () =>
-      CacheScope.withScope {
-        val (graph, ord) = Ann.hnswGraphParts(emb)
-        (graph,
-          ord.filter(col("r") < Ann.HnswEntries).select("vec_id"),
-          Ann.hnswCorpusBands(emb),
-          Ann.hnswCorpusVectors(emb))
-      }
+      val (graph, ord) = Ann.hnswGraphParts(emb)
+      (graph,
+        ord.filter(col("r") < Ann.HnswEntries).select("vec_id"),
+        Ann.hnswCorpusBands(emb),
+        Ann.hnswCorpusVectors(emb))
     }
   }
 
@@ -1061,7 +1059,11 @@ object Sinks {
     * build-here bit-for-bit). `parts` is invoked AFTER the orphan
     * sweep so a build crash still leaves the serving generation
     * untouched; everything else (generation dir, atomic pointer flip,
-    * retention) is the contract documented above.
+    * retention) is the contract documented above. `parts` and the four
+    * writes run inside one [[graft.operators.CacheScope]], so what the
+    * build persists (the ring ordering, the minhash signature the graph
+    * and the bands share) serves every write and is released after the
+    * last one.
     */
   private[graft] def writeHnswIndexFromParts(
       spark: org.apache.spark.sql.SparkSession,
@@ -1082,8 +1084,10 @@ object Sinks {
       }
     }
     val gdir = s"$path/g$next"
-    val (graph, entries, bands, vectors) = parts()
-    writeHnswGenArtifacts(gdir, graph, entries, bands, vectors)
+    graft.operators.CacheScope.withScope {
+      val (graph, entries, bands, vectors) = parts()
+      writeHnswGenArtifacts(gdir, graph, entries, bands, vectors)
+    }
     // the atomic flip: stage the new pointer, drop the old, rename in
     val tmp = new Path(s"$path/CURRENT_tmp")
     val ptr = new Path(s"$path/CURRENT")

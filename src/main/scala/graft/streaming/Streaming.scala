@@ -2,8 +2,8 @@ package graft.streaming
 
 import graft.model.{Capture, DimState, ScoredRow, SigParams, TrendQuery}
 import graft.operators.GapFill
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, SparkSession}
-import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, KeyValueGroupedDataset, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.{encoderFor, ExpressionEncoder}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import scala.reflect.runtime.universe.TypeTag
@@ -58,6 +58,38 @@ object Streaming {
       spark.conf.set(LocalCheckpointFiles.ManagerClassKey, classOf[LocalCheckpointFiles].getName)
     spark
   }
+
+  /** `enc` resolved and bound, for use as a stream's state encoder.
+    * Every `flatMapGroupsWithState` / `mapGroupsWithState` here passes
+    * its state encoder through this once, when the face (or the
+    * near-dup rule) is built.
+    *
+    * Spark re-resolves the state encoder against each micro-batch's new
+    * plan (`resolveAndBind` in the stateful operator's state manager).
+    * On an unbound encoder that resolution numbers the lambda variables
+    * of every collection in the state (`UrlState.sw`,
+    * `UrlState.digestStatus`, `LateState.pending`, `TtlState.members`)
+    * from a JVM-global counter, so the generated state deserializer's
+    * Java source differs on every batch, the codegen cache (keyed on
+    * that source) misses, and one task per batch Janino-compiles it
+    * while the others wait. A bound encoder has nothing left to
+    * resolve: its deserializer, and so the generated source, is the
+    * same on every batch and the cache serves it. Only the deserializer
+    * is bound; the serializer, and with it the state schema and the
+    * checkpoint bytes, is the same as the unbound encoder's.
+    */
+  private[graft] def stateEncoder[S](enc: Encoder[S]): Encoder[S] =
+    encoderFor(enc).resolveAndBind()
+
+  // The trend faces' state encoders, each bound once (see stateEncoder).
+  private[graft] lazy val UrlStateEncoder: Encoder[UrlState] =
+    stateEncoder(Encoders.product[UrlState])
+  private[graft] lazy val LateStateEncoder: Encoder[LateState] =
+    stateEncoder(Encoders.product[LateState])
+  private[graft] lazy val ScoredStateEncoder: Encoder[ScoredState] =
+    stateEncoder(Encoders.product[ScoredState])
+  private[graft] lazy val ScoredLateStateEncoder: Encoder[ScoredLateState] =
+    stateEncoder(Encoders.product[ScoredLateState])
 
   /** Finalized per-day row (pre-scoring). */
   case class DailyOut(
@@ -397,7 +429,8 @@ object Streaming {
     import spark.implicits._
     captures
       .groupByKey(_.url)
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(processGroup)
+      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(processGroup)(
+        UrlStateEncoder, Encoders.product[DailyOut])
   }
 
   /** ST3: late/out-of-order tolerant variant. Incoming rows are held in
@@ -416,9 +449,10 @@ object Streaming {
     * letting in-bound stragglers corrupt the order-sensitive fold.
     */
   private[streaming] def tsMillis(ts: String, zone: java.time.ZoneId): Long =
-    java.time.LocalDateTime
-      .parse(ts, java.time.format.DateTimeFormatter.ofPattern("yyyyMMddHHmmss"))
-      .atZone(zone).toInstant.toEpochMilli
+    java.time.LocalDateTime.parse(ts, TsFormat).atZone(zone).toInstant.toEpochMilli
+
+  /** The capture `ts` format; immutable and thread-safe, so built once. */
+  private val TsFormat = java.time.format.DateTimeFormatter.ofPattern("yyyyMMddHHmmss")
 
   /** Split (pending ∪ batch) into the watermark-released prefix and the
     * new hold-back buffer. STRICT <: Spark's late-data filter keeps rows
@@ -486,7 +520,8 @@ object Streaming {
     ds.groupByKey(_.url)
       .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(
         (url: String, rows: Iterator[CaptureWithTime], state: GroupState[LateState]) =>
-          process(url, rows.map(_.toCapture), state))
+          process(url, rows.map(_.toCapture), state))(
+        LateStateEncoder, Encoders.product[DailyOut])
   }
 
   case class CaptureWithTime(
@@ -515,14 +550,23 @@ object Streaming {
     import spark.implicits._
     captures
       .groupByKey(_.url)
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (url: String, rows: Iterator[Capture], state: GroupState[ScoredState]) =>
-          val st = state.getOption
-          val scorer = new DayScorer(url, query, st.flatMap(_.score))
-          val core = new DayFold(url, st.map(_.core), scorer.day).addAll(timeOrdered(rows)).state
-          state.update(ScoredState(core, scorer.state))
-          scorer.out.iterator
-      }
+      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(
+        scoredStep(query))(ScoredStateEncoder, Encoders.product[ScoredRow])
+  }
+
+  /** [[scoredStream]]'s group function: fold the batch's (sorted)
+    * captures through the daily fold and the scorer, emit scored closed
+    * days.
+    */
+  private[graft] def scoredStep(query: TrendQuery)(
+      url: String,
+      rows: Iterator[Capture],
+      state: GroupState[ScoredState]): Iterator[ScoredRow] = {
+    val st = state.getOption
+    val scorer = new DayScorer(url, query, st.flatMap(_.score))
+    val core = new DayFold(url, st.map(_.core), scorer.day).addAll(timeOrdered(rows)).state
+    state.update(ScoredState(core, scorer.state))
+    scorer.out.iterator
   }
 
   /** Watermarked scored-stream state: hold-back buffer + daily fold +
@@ -554,7 +598,7 @@ object Streaming {
           val core = new DayFold(url, st.map(_.core), scorer.day).addAll(ready).state
           state.update(ScoredLateState(hold, core, scorer.state))
           scorer.out.iterator
-      }
+      }(ScoredLateStateEncoder, Encoders.product[ScoredRow])
   }
 
   /** ST2 as a true stream: event-time tumbling 1-day windows with a
@@ -630,8 +674,13 @@ object Streaming {
           val (canonical, out) = dedupFold(rows, state.getOption)
           state.update(canonical)
           out.iterator
-      }
+      }(CanonicalEncoder, Encoders.product[DedupOut])
   }
+
+  /** The state of [[dedupStream]] and [[keepStream]], one canonical id
+    * per hash, bound once (see [[stateEncoder]]).
+    */
+  private lazy val CanonicalEncoder: Encoder[Long] = stateEncoder(Encoders.scalaLong)
 
   /** Ingest-time dedup against the PERSISTED corpus: each arriving
     * document's fingerprint probes the bucketed base table AND its
@@ -925,8 +974,8 @@ object Streaming {
       bucket: R => String, member: R => M, id: M => Long)(
       pair: (M, R) => Option[O]): BucketRule[R, M, O] =
     BucketRule(bucket, member, id, pair)(
-      Encoders.product[R], ExpressionEncoder[Vector[M]](),
-      Encoders.product[TtlState[M]], Encoders.product[O])
+      Encoders.product[R], stateEncoder(ExpressionEncoder[Vector[M]]()),
+      stateEncoder(Encoders.product[TtlState[M]]), Encoders.product[O])
 
   // The rules are lazy: the trend faces load this object too, and
   // should not pay for deriving the near-dup encoders.
@@ -1102,29 +1151,46 @@ object Streaming {
       watermarkDelay: String,
       ttlSeconds: Long): Dataset[O] = {
     localCheckpoints(banded.sparkSession)
+    ttlKeyed(rule, banded, watermarkDelay)
+      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.EventTimeTimeout())(
+        ttlStep(rule, ttlSeconds))(rule.ttlState, rule.out)
+  }
+
+  /** [[nearDupStreamTtl]]'s input: the rows with an event time, under
+    * the watermark, keyed by bucket.
+    */
+  private[graft] def ttlKeyed[R](
+      rule: BucketRule[R, _, _],
+      banded: DataFrame,
+      watermarkDelay: String): KeyValueGroupedDataset[String, (R, java.sql.Timestamp)] =
     banded
       .where(col("event_ts").isNotNull)
       .withWatermark("event_ts", watermarkDelay)
       .select(struct(rowColumns(rule.rows): _*).as("_1"), col("event_ts").as("_2"))
       .as(Encoders.tuple(rule.rows, Encoders.TIMESTAMP))
       .groupByKey((r: (R, java.sql.Timestamp)) => rule.bucket(r._1))(Encoders.STRING)
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        (_: String, rows: Iterator[(R, java.sql.Timestamp)], state: GroupState[TtlState[M]]) =>
-          if (state.hasTimedOut) {
-            state.remove() // the bucket's epoch is over; a later arrival starts a fresh one
-            Iterator.empty
-          } else {
-            val batch = rows.toVector
-            val prior = state.getOption.getOrElse(TtlState(Vector.empty[M], Long.MinValue))
-            val (members, out) = bucketFold(
-              rule, batch.iterator.map(_._1), prior.members, graft.operators.BandCap.DefaultCap)
-            val newest = math.max(prior.newestTs, batch.iterator.map(_._2.getTime).max)
-            state.update(TtlState(members, newest))
-            state.setTimeoutTimestamp(newest + ttlSeconds * 1000L)
-            out.iterator
-          }
-      }(rule.ttlState, rule.out)
-  }
+
+  /** [[nearDupStreamTtl]]'s group function: evict a timed-out bucket,
+    * else fold the batch in and re-arm the timeout from the newest
+    * member event time.
+    */
+  private[graft] def ttlStep[R, M, O](rule: BucketRule[R, M, O], ttlSeconds: Long)(
+      bucket: String,
+      rows: Iterator[(R, java.sql.Timestamp)],
+      state: GroupState[TtlState[M]]): Iterator[O] =
+    if (state.hasTimedOut) {
+      state.remove() // the bucket's epoch is over; a later arrival starts a fresh one
+      Iterator.empty
+    } else {
+      val batch = rows.toVector
+      val prior = state.getOption.getOrElse(TtlState(Vector.empty[M], Long.MinValue))
+      val (members, out) = bucketFold(
+        rule, batch.iterator.map(_._1), prior.members, graft.operators.BandCap.DefaultCap)
+      val newest = math.max(prior.newestTs, batch.iterator.map(_._2.getTime).max)
+      state.update(TtlState(members, newest))
+      state.setTimeoutTimestamp(newest + ttlSeconds * 1000L)
+      out.iterator
+    }
 
   /** [[nearDupStream]]'s fold over bounded input — the oracle-checkable
     * batch twin (equals the band-bucket self-join with the rule's
@@ -1526,7 +1592,7 @@ object Streaming {
           val (canonical, out) = keepFold(rows, state.getOption)
           state.update(canonical)
           out.iterator
-      }
+      }(CanonicalEncoder, Encoders.product[KeepOut])
   }
 
   /** [[keepStream]]'s fold over bounded input — the oracle-checkable
@@ -1701,7 +1767,7 @@ object Streaming {
             state.getOption.getOrElse(SourceGateState(0L, 0L, 0L)))
           state.update(st)
           out
-      }
+      }(stateEncoder(Encoders.product[SourceGateState]), Encoders.product[SourceGateOut])
   }
 
   /** The gate fold over bounded input — the oracle-checkable batch

@@ -8,7 +8,9 @@ import java.nio.file.{Files, Path => JPath}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileAlreadyExistsException, LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileManager, FileContextBasedCheckpointFileManager, FileSystemBasedCheckpointFileManager}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
 import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
 import scala.util.Random
@@ -152,56 +154,147 @@ class CheckpointSpec extends AnyFunSuite {
     }.sortBy(c => (c.ts, c.seq)).zipWithIndex.map { case (c, i) => c.copy(seq = i.toLong) }
   }
 
+  /** A scored stream of `chunks` run in two halves over one checkpoint
+    * into `Sinks.scoredStreamSink`, each half's query built by its own
+    * face (which may set the session up first): the rows the sink holds
+    * and the checkpoint's file names.
+    */
+  private def resumeScored(
+      dir: JPath,
+      chunks: Seq[Seq[Capture]],
+      first: (SparkSession, Dataset[Capture]) => Dataset[ScoredRow],
+      second: (SparkSession, Dataset[Capture]) => Dataset[ScoredRow])
+      : (Map[(String, String), ScoredRow], Set[String]) = {
+    val s = TestSpark.spark.newSession()
+    implicit val ctx: org.apache.spark.sql.SQLContext = s.sqlContext
+    import s.implicits._
+    val stream = MemoryStream[Capture]
+    def half(face: (SparkSession, Dataset[Capture]) => Dataset[ScoredRow], part: Seq[Seq[Capture]]): Unit = {
+      val query = graft.sinks.Sinks.scoredStreamSink(face(s, stream.toDS()), s"$dir/data", s"$dir/ckpt")
+      try part.foreach { c => stream.addData(c); query.processAllAvailable() }
+      finally query.stop()
+    }
+    half(first, chunks.take(2))
+    half(second, chunks.drop(2))
+    val rows = s.read.parquet(s"$dir/data").as[ScoredRow].collect().map(r => (r.url, r.day) -> r).toMap
+    (rows, names(dir.resolve("ckpt")))
+  }
+
+  /** `rows` is exactly `Trend.run`'s closed prefix of `all`: every url
+    * emitted, each up to its last emitted day.
+    */
+  private def assertClosedPrefix(rows: Map[(String, String), ScoredRow], all: Seq[Capture], q: TrendQuery): Unit = {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    val lastEmitted = rows.keys.groupBy(_._1).map { case (u, ks) => u -> ks.map(_._2).max }
+    assert(lastEmitted.keySet == all.map(_.url).toSet, s"urls emitted: ${lastEmitted.keySet}")
+    val batch = operators.Trend.run(all.toDF(), q).collect()
+      .filter(r => lastEmitted.get(r.url).exists(r.day <= _))
+      .map(r => (r.url, r.day) -> r).toMap
+    assert(rows == batch, s"resumed rows differ from Trend.run's closed prefix")
+  }
+
   test("a scored-stream checkpoint resumes across Spark's default manager and graft's, both ways") {
     val q = TrendQuery(-1, FillPolicy.Closest, "2024-02-01")
     val all = fixture(240, 3)
     val chunks = all.grouped(60).toSeq
     val sparkDefault = Some(classOf[FileContextBasedCheckpointFileManager].getName)
 
-    /** Two halves of the stream under `first` then `second` (None:
-      * left unset, so the face installs graft's manager): the rows the
-      * sink holds and the checkpoint's file names.
+    /** The scored face under `key` (None: left unset, so the face
+      * installs graft's manager).
       */
-    def run(dir: JPath, first: Option[String], second: Option[String]): (Map[(String, String), ScoredRow], Set[String]) = {
-      val s = TestSpark.spark.newSession()
-      implicit val ctx: org.apache.spark.sql.SQLContext = s.sqlContext
-      import s.implicits._
-      val stream = MemoryStream[Capture]
-      def half(key: Option[String], part: Seq[Seq[Capture]]): Unit = {
-        key.fold(s.conf.unset(Key))(s.conf.set(Key, _))
-        val query = graft.sinks.Sinks.scoredStreamSink(
-          Streaming.scoredStream(stream.toDS(), q), s"$dir/data", s"$dir/ckpt")
-        assert(s.conf.get(Key) == key.getOrElse(classOf[LocalCheckpointFiles].getName))
-        try part.foreach { c => stream.addData(c); query.processAllAvailable() }
-        finally query.stop()
-      }
-      half(first, chunks.take(2))
-      half(second, chunks.drop(2))
-      val rows = s.read.parquet(s"$dir/data").as[ScoredRow].collect().map(r => (r.url, r.day) -> r).toMap
-      (rows, names(dir.resolve("ckpt")))
+    def under(key: Option[String])(s: SparkSession, ds: Dataset[Capture]): Dataset[ScoredRow] = {
+      key.fold(s.conf.unset(Key))(s.conf.set(Key, _))
+      val scored = Streaming.scoredStream(ds, q)
+      assert(s.conf.get(Key) == key.getOrElse(classOf[LocalCheckpointFiles].getName))
+      scored
     }
 
     withDir { a =>
       withDir { b =>
-        val (toGraft, filesA) = run(a, sparkDefault, None)
-        val (toSpark, filesB) = run(b, None, sparkDefault)
+        val (toGraft, filesA) = resumeScored(a, chunks, under(sparkDefault), under(None))
+        val (toSpark, filesB) = resumeScored(b, chunks, under(None), under(sparkDefault))
         assert(filesA == filesB,
           s"checkpoint files differ: ${filesA -- filesB} vs ${filesB -- filesA}")
         assert(filesA.contains("offsets/3"))
         // a state delta, its Hadoop sidecar and Spark's state checksum file
         for (suffix <- Seq("/1.delta", "/.1.delta.crc", "/1.delta.crc"))
           assert(filesA.exists(f => f.startsWith("state/") && f.endsWith(suffix)), s"no state file *$suffix")
+        assertClosedPrefix(toGraft, all, q)
+        assertClosedPrefix(toSpark, all, q)
+      }
+    }
+  }
 
-        val spark = TestSpark.spark
-        import spark.implicits._
-        for (rows <- Seq(toGraft, toSpark)) {
-          val lastEmitted = rows.keys.groupBy(_._1).map { case (u, ks) => u -> ks.map(_._2).max }
-          assert(lastEmitted.keySet == all.map(_.url).toSet, s"urls emitted: ${lastEmitted.keySet}")
-          val batch = operators.Trend.run(all.toDF(), q).collect()
-            .filter(r => lastEmitted.get(r.url).exists(r.day <= _))
-            .map(r => (r.url, r.day) -> r).toMap
-          assert(rows == batch, s"resumed rows differ from Trend.run's closed prefix")
-        }
+  test("a scored-stream checkpoint resumes across the unbound and the bound state encoder, both ways") {
+    // binding the state encoder must not move the checkpoint format: a
+    // checkpoint written through Spark's implicit encoder resumes under
+    // the face's bound one, and the other way round
+    val q = TrendQuery(-1, FillPolicy.Closest, "2024-02-01")
+    val all = fixture(240, 3)
+    val chunks = all.grouped(60).toSeq
+    def bound(s: SparkSession, ds: Dataset[Capture]) = Streaming.scoredStream(ds, q)
+    def unbound(s: SparkSession, ds: Dataset[Capture]) = {
+      import s.implicits._
+      ds.groupByKey(_.url)
+        .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(Streaming.scoredStep(q))
+    }
+    withDir { a =>
+      withDir { b =>
+        assertClosedPrefix(resumeScored(a, chunks, unbound, bound)._1, all, q)
+        assertClosedPrefix(resumeScored(b, chunks, bound, unbound)._1, all, q)
+      }
+    }
+  }
+
+  test("a near-dup TTL checkpoint resumes across the unbound and the bound state encoder, both ways") {
+    val ttl = 86400L // nothing evicts, so the pairs are the batch fold's
+    val rnd = new Random(43)
+    val texts = (0 until 4).map(t => (0 until 12).map(w => s"d$t-w$w").mkString(" "))
+    val docs = (0 until 40).map { i =>
+      (i.toLong, texts(rnd.nextInt(texts.size)),
+        java.sql.Timestamp.valueOf(f"2024-01-01 10:${i / 2}%02d:00"))
+    }
+    val spark = TestSpark.spark
+    import spark.implicits._
+    val want = Streaming.batchNearDup(Streaming.TextRule,
+      operators.Dedup.rowBandSignatures(docs.toDF("doc_id", "text", "event_ts")))
+      .collect().toSeq.sortBy(c => (c.doc_a, c.doc_b, c.band))
+
+    type Face = DataFrame => Dataset[Streaming.CandidateOut]
+    val bound: Face = banded => Streaming.nearDupStreamTtl(Streaming.TextRule, banded, "1 hour", ttl)
+    val unbound: Face = banded => Streaming.ttlKeyed(Streaming.TextRule, banded, "1 hour")
+      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.EventTimeTimeout())(
+        Streaming.ttlStep(Streaming.TextRule, ttl))(
+        Encoders.product[Streaming.TtlState[Long]], Streaming.TextRule.out)
+
+    def run(dir: JPath, first: Face, second: Face): Seq[Streaming.CandidateOut] = {
+      val s = TestSpark.spark.newSession()
+      implicit val ctx: org.apache.spark.sql.SQLContext = s.sqlContext
+      import s.implicits._
+      val stream = MemoryStream[(Long, String, java.sql.Timestamp)]
+      val banded = operators.Dedup.rowBandSignatures(
+        stream.toDS().toDF("doc_id", "text", "event_ts"), passthrough = Seq("event_ts"))
+      def half(face: Face, part: Seq[Seq[(Long, String, java.sql.Timestamp)]]): Unit = {
+        val query = face(banded).writeStream.format("parquet")
+          .option("checkpointLocation", s"$dir/ckpt").outputMode("append").start(s"$dir/data")
+        try part.foreach { c => stream.addData(c); query.processAllAvailable() }
+        finally query.stop()
+      }
+      val chunks = docs.grouped(10).toSeq
+      half(first, chunks.take(2))
+      half(second, chunks.drop(2))
+      s.read.parquet(s"$dir/data").as[Streaming.CandidateOut].collect().toSeq
+        .sortBy(c => (c.doc_a, c.doc_b, c.band))
+    }
+
+    // some pair joins a doc of the second half to one of the first, so
+    // the second half reads the state the first one wrote
+    assert(want.exists(c => c.doc_a < 20 && c.doc_b >= 20))
+    withDir { a =>
+      withDir { b =>
+        assert(run(a, unbound, bound) == want, "unbound then bound")
+        assert(run(b, bound, unbound) == want, "bound then unbound")
       }
     }
   }

@@ -126,6 +126,32 @@ class HnswIndexSpec extends AnyFunSuite {
       "readHnswIndexTopK leaked persists into the session-global registry")
   }
 
+  test("one index write reads its corpus for the shared build once, not per artifact") {
+    // the build's persists (minhash signature, ring ordering) must serve
+    // all four artifact writes; released before them, each write redoes
+    // its share of the build from the corpus
+    val rows = fixture().count()
+    val src = tmpDir() + "/emb"
+    fixture().write.parquet(src)
+    val emb = spark.read.parquet(src)
+    val read = new java.util.concurrent.atomic.AtomicLong
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onStageCompleted(e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
+        read.addAndGet(e.stageInfo.taskMetrics.inputMetrics.recordsRead)
+    }
+    org.apache.spark.ListenerDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try Sinks.writeHnswIndex(emb, tmpDir())
+    finally {
+      org.apache.spark.ListenerDrain(spark.sparkContext)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    // four corpus scans (seven when the persists are released before the
+    // writes); reads of cached batches add a few records
+    assert(read.get >= 4 * rows && read.get < 5 * rows,
+      s"${read.get} records read for a $rows-row corpus: ${read.get.toDouble / rows} scans")
+  }
+
   test("rebuild-only contract: a rewrite atomically supersedes the whole index") {
     val p = tmpDir()
     val embA = fixture(seed = 31)

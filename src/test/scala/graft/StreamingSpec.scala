@@ -160,6 +160,94 @@ class StreamingSpec extends AnyFunSuite {
       StructType(Seq(f("core", urlState), f("score", scoreCore))))
     assert(Encoders.product[Streaming.ScoredLateState].schema ==
       StructType(Seq(pending, f("core", urlState), f("score", scoreCore))))
+
+    // the encoders the faces pass: bound (nothing left to resolve per
+    // micro-batch) and writing exactly the schemas above
+    val passed = Seq(
+      Streaming.UrlStateEncoder -> Encoders.product[Streaming.UrlState],
+      Streaming.LateStateEncoder -> Encoders.product[Streaming.LateState],
+      Streaming.ScoredStateEncoder -> Encoders.product[Streaming.ScoredState],
+      Streaming.ScoredLateStateEncoder -> Encoders.product[Streaming.ScoredLateState])
+    passed.foreach { case (face, implicitEnc) =>
+      assert(isBound(face) && !isBound(implicitEnc))
+      assert(face.schema == implicitEnc.schema)
+    }
+  }
+
+  /** Whether `enc`'s deserializer is already resolved and bound. */
+  private def isBound(enc: org.apache.spark.sql.Encoder[_]): Boolean =
+    org.apache.spark.sql.catalyst.encoders.encoderFor(enc).deserializer.resolved
+
+  test("stateful faces compile no new code after warm-up") {
+    // Spark re-resolves a state encoder for each micro-batch; an unbound
+    // one gets fresh lambda ids, so its deserializer's source changes
+    // and one task per batch Janino-compiles it. Bound once, the
+    // generated source repeats and the codegen cache serves it.
+    import org.apache.spark.metrics.source.CodegenMetrics
+    import graft.model.{FillPolicy, TrendQuery}
+    val spark = TestSpark.spark
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val q = TrendQuery(-1, FillPolicy.Forward, "2024-03-15")
+
+    /** Six batches into `face`: three warm up (the late-row watermark
+      * trails the eviction watermark by one batch, so a watermarked face
+      * settles on its third), three more touch the same keys; returns
+      * the compiles each of the last three cost.
+      */
+    def compilesAfterWarmUp[T](name: String, batches: Seq[Seq[T]])(
+        face: MemoryStream[T] => org.apache.spark.sql.Dataset[_])(
+        implicit enc: org.apache.spark.sql.Encoder[T]): Seq[Long] = {
+      val stream = MemoryStream[T]
+      val query = face(stream).writeStream.format("memory").queryName(name)
+        .outputMode("append").start()
+      try {
+        def feed(b: Seq[T]): Unit = { stream.addData(b); query.processAllAvailable() }
+        batches.take(3).foreach(feed)
+        batches.drop(3).map { b =>
+          val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+          feed(b)
+          CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+        }
+      } finally query.stop()
+    }
+
+    // Four urls, twelve captures each per batch. Spark inlines the
+    // watermark into the late-row predicate's generated code, so a batch
+    // that moves the watermark compiles that predicate anew whatever the
+    // state encoder: the watermarked faces get batches that all lie
+    // behind the first batch's newest capture, within the lateness.
+    def batch(day: Int, b: Int): Seq[Capture] =
+      (0 until 4).flatMap(u => fixture(s"cg$u", 50 + 10 * b + u, 12, 1)).map { c =>
+        val d = java.time.LocalDate.of(2024, 1, 1).plusDays(day).toString.replace("-", "")
+        c.copy(ts = d + c.ts.drop(8), seq = c.seq + 100L * b)
+      }.sortBy(c => (c.ts, c.seq))
+    val inOrder = (0 until 6).map(d => batch(d, d))
+    val newest = (0 until 4).map(u => Capture(s"cg$u", "20240110235959", "200", "SD00YYYYYYY", 99L))
+    val behind = (0 until 6).map(b => batch(9, b) ++ (if (b == 0) newest else Nil))
+    val trend = Seq[(String, Seq[Seq[Capture]], MemoryStream[Capture] => org.apache.spark.sql.Dataset[_])](
+      ("dailyStream", inOrder, s => Streaming.dailyStream(s.toDS())),
+      ("dailyStreamWatermarked", behind, s => Streaming.dailyStreamWatermarked(s.toDS(), "1 day")),
+      ("scoredStream", inOrder, s => Streaming.scoredStream(s.toDS(), q)),
+      ("scoredStreamWatermarked", behind, s => Streaming.scoredStreamWatermarked(s.toDS(), q, "1 day")))
+    val compiles = trend.map { case (name, batches, face) =>
+      name -> compilesAfterWarmUp(s"cg_$name", batches)(face)
+    }
+
+    // every batch re-hits the same buckets: the same texts under new ids,
+    // at one event time, so the TTL face's watermark stays put too
+    val at = java.sql.Timestamp.valueOf("2024-01-01 10:00:00")
+    val docs = (0 until 6).map(b => Seq((10L * b + 1, lshDocs.head._2, at), (10L * b + 2, lshDocs.last._2, at)))
+    def banded(s: MemoryStream[(Long, String, java.sql.Timestamp)]) =
+      Dedup.rowBandSignatures(s.toDS().toDF("doc_id", "text", "event_ts"), passthrough = Seq("event_ts"))
+    val nearDup = Seq(
+      "nearDupStream" -> compilesAfterWarmUp("cg_nearDupStream", docs)(s =>
+        Streaming.nearDupStream(Streaming.TextRule, banded(s))),
+      "nearDupStreamTtl" -> compilesAfterWarmUp("cg_nearDupStreamTtl", docs)(s =>
+        Streaming.nearDupStreamTtl(Streaming.TextRule, banded(s), "1 minute", 3600)))
+
+    assert((compiles ++ nearDup).forall(_._2.forall(_ == 0)),
+      s"compiles per batch after warm-up: ${compiles ++ nearDup}")
   }
 
   test("watermarked streams drop a junk ts row and keep running") {
@@ -1682,6 +1770,9 @@ class StreamingSpec extends AnyFunSuite {
     }
     assert(Streaming.EmbRule.exactState.schema == exact(ArrayType(emb, containsNull = true)))
     assert(Streaming.EmbRule.ttlState.schema == ttl(ArrayType(emb, containsNull = true)))
+    // the faces pass the rules' state encoders, bound once per rule
+    val rules = Seq(Streaming.TextRule, Streaming.perceptualRule(Multimodal.Image), Streaming.EmbRule)
+    assert(rules.forall(r => isBound(r.exactState) && isBound(r.ttlState)))
 
     // the grouping key is the state store's key: the "band|key" string
     assert(Streaming.TextRule.bucket(Streaming.BandKeyed(1L, 2, "abc")) == "2|abc")
