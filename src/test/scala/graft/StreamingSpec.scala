@@ -204,6 +204,10 @@ class StreamingSpec extends AnyFunSuite {
       try {
         def feed(b: Seq[T]): Unit = { stream.addData(b); query.processAllAvailable() }
         batches.take(3).foreach(feed)
+        // the compile counter is JVM-wide: another running query's
+        // codegen would be charged to this face
+        val others = spark.streams.active.filterNot(_.id == query.id)
+        assert(others.isEmpty, s"other streaming queries running: ${others.map(_.name).mkString(", ")}")
         batches.drop(3).map { b =>
           val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
           feed(b)
@@ -214,9 +218,10 @@ class StreamingSpec extends AnyFunSuite {
 
     // Four urls, twelve captures each per batch. Spark inlines the
     // watermark into the late-row predicate's generated code, so a batch
-    // that moves the watermark compiles that predicate anew whatever the
-    // state encoder: the watermarked faces get batches that all lie
-    // behind the first batch's newest capture, within the lateness.
+    // that moves the watermark is known to compile that predicate anew
+    // whatever the state encoder; this test leaves that case out. The
+    // watermarked faces get `watermarkHeld` batches, which all lie behind
+    // the first batch's newest capture, within the lateness.
     def batch(day: Int, b: Int): Seq[Capture] =
       (0 until 4).flatMap(u => fixture(s"cg$u", 50 + 10 * b + u, 12, 1)).map { c =>
         val d = java.time.LocalDate.of(2024, 1, 1).plusDays(day).toString.replace("-", "")
@@ -224,12 +229,12 @@ class StreamingSpec extends AnyFunSuite {
       }.sortBy(c => (c.ts, c.seq))
     val inOrder = (0 until 6).map(d => batch(d, d))
     val newest = (0 until 4).map(u => Capture(s"cg$u", "20240110235959", "200", "SD00YYYYYYY", 99L))
-    val behind = (0 until 6).map(b => batch(9, b) ++ (if (b == 0) newest else Nil))
+    val watermarkHeld = (0 until 6).map(b => batch(9, b) ++ (if (b == 0) newest else Nil))
     val trend = Seq[(String, Seq[Seq[Capture]], MemoryStream[Capture] => org.apache.spark.sql.Dataset[_])](
       ("dailyStream", inOrder, s => Streaming.dailyStream(s.toDS())),
-      ("dailyStreamWatermarked", behind, s => Streaming.dailyStreamWatermarked(s.toDS(), "1 day")),
+      ("dailyStreamWatermarked", watermarkHeld, s => Streaming.dailyStreamWatermarked(s.toDS(), "1 day")),
       ("scoredStream", inOrder, s => Streaming.scoredStream(s.toDS(), q)),
-      ("scoredStreamWatermarked", behind, s => Streaming.scoredStreamWatermarked(s.toDS(), q, "1 day")))
+      ("scoredStreamWatermarked", watermarkHeld, s => Streaming.scoredStreamWatermarked(s.toDS(), q, "1 day")))
     val compiles = trend.map { case (name, batches, face) =>
       name -> compilesAfterWarmUp(s"cg_$name", batches)(face)
     }

@@ -34,12 +34,12 @@ import sys
 OFFSET_WRITE = re.compile(r"^(?P<log>.*)/offsets/\.(?P<batch>\d+)\.[^/]*\.tmp$")
 
 
-def events(rec):
-    """(type, startTime, thread, values) of every ProcessStart and
-    FileWrite event, in time order."""
+def events(rec, types=("jdk.ProcessStart",), depth=1):
+    """(type, startTime, thread, values) of every event of `types` and
+    every FileWrite event, in time order, with `depth` stack frames."""
     out = subprocess.run(
-        ["jfr", "print", "--json", "--stack-depth", "1",
-         "--events", "jdk.ProcessStart,jdk.FileWrite", rec],
+        ["jfr", "print", "--json", "--stack-depth", str(depth),
+         "--events", ",".join(tuple(types) + ("jdk.FileWrite",)), rec],
         capture_output=True, text=True, check=True)
     evs = []
     for e in json.loads(out.stdout)["recording"]["events"]:
@@ -55,6 +55,28 @@ def instant(stamp):
     digits: (date and time to the second, nanoseconds)."""
     whole, _, frac = stamp.rstrip("Z").partition(".")
     return whole, int(frac.ljust(9, "0"))
+
+
+def by_batch(evs):
+    """The micro-batches of `events`' output and the events in them.
+
+    A micro-batch is an offset-log write: a write to a temp file
+    `.<batchId>.<uuid>.tmp` in a directory named `offsets`. Returns the
+    (checkpoint, batch id) keys in the order of their first write, and
+    every event other than a FileWrite as (key of the last offset-log write
+    before it, or None, event)."""
+    batches = collections.OrderedDict()
+    tagged = []
+    current = None
+    for e in evs:
+        if e[0] == "jdk.FileWrite":
+            m = OFFSET_WRITE.search(e[3].get("path") or "")
+            if m:
+                current = (m.group("log"), int(m.group("batch")))
+                batches[current] = None
+        else:
+            tagged.append((current, e))
+    return list(batches), tagged
 
 
 def program(command):
@@ -82,19 +104,14 @@ def main():
     table("by command:", collections.Counter(program(e[3].get("command")) for e in starts))
     table("by thread:", collections.Counter(e[2] for e in starts))
 
-    per_batch = collections.OrderedDict()  # (checkpoint, batch id) -> starts after its offset write
+    batches, tagged = by_batch(evs)
+    per_batch = collections.OrderedDict((b, 0) for b in batches)  # starts after each offset write
     before_first = 0
-    current = None
-    for kind, _, _, v in evs:
-        if kind == "jdk.FileWrite":
-            m = OFFSET_WRITE.search(v.get("path") or "")
-            if m:
-                current = (m.group("log"), int(m.group("batch")))
-                per_batch.setdefault(current, 0)
-        elif current is None:
+    for b, _ in tagged:
+        if b is None:
             before_first += 1
         else:
-            per_batch[current] += 1
+            per_batch[b] += 1
     if not per_batch:
         print("no offset-log writes recorded: record with jdk.FileWrite#threshold=0ms")
         return 0

@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Where a JVM's threads waited, from a JFR recording, per micro-batch.
 
-    python3 tools/jfr_waits.py REC.jfr [--warmup N] [--thread REGEX] [--checkpoint REGEX] [--top K]
+    python3 tools/jfr_waits.py REC.jfr [--warmup N] [--thread REGEX] [--checkpoint REGEX] [--frames N]
 
 Reads the recording's blocking events (`jdk.JavaMonitorWait`,
 `jdk.JavaMonitorEnter`, `jdk.ThreadPark`) and `jdk.FileWrite` events through
@@ -11,17 +11,17 @@ blocked:
 - by thread group: the thread's name with every run of digits replaced by `#`,
   so Spark's `Executor task launch worker for task #.# in stage #.# (TID #)`
   threads add up to one row;
-- by thread group and top frames: the first frames of the stack below the JDK's
-  own (`java.*`, `jdk.*`, `sun.*`), e.g. `KeyLock.acquireLock < KeyLock.withLock
-  < NonFateSharingLoadingCache.get < CodeGenerator$.compile` for a task waiting
-  on another task's compile of the same code; a stack of JDK frames only (an
-  idle pool thread) shows its first frames above the blocking primitives,
-  marked `JDK:`;
-- per micro-batch. A micro-batch is counted by its offset-log write, as in
-  `tools/jfr_forks.py`: a write to a temp file `.<batchId>.<uuid>.tmp` in a
-  directory named `offsets`. Each event belongs to the last offset-log write
-  before it started. The tables cover the batches after the first N of each
-  checkpoint (`--warmup`, default 20) and give milliseconds per batch;
+- by thread group and top frames: the first frames (`--frames`, default 2)
+  of the stack below the JDK's own (`java.*`, `jdk.*`, `sun.*`), e.g.
+  `KeyLock.acquireLock < KeyLock.withLock < NonFateSharingLoadingCache.get <
+  CodeGenerator$.compile` for a task waiting on another task's compile of the
+  same code; a stack of JDK frames only (an idle pool thread) shows its first
+  frames above the blocking primitives, marked `JDK:`;
+- per micro-batch. Micro-batches are counted by `tools/jfr_forks.py`'s
+  `by_batch`: a write to a temp file `.<batchId>.<uuid>.tmp` in a directory
+  named `offsets` starts one, and each event belongs to the last offset-log
+  write before it started. The tables cover the batches after the first N of
+  each checkpoint (`--warmup`, default 20) and give milliseconds per batch;
   `--checkpoint` keeps the checkpoints whose path matches a regular expression
   (a perfbench run's output check runs a second stream).
 
@@ -39,41 +39,19 @@ Without offset-log writes every event counts as one batch.
 
 import argparse
 import collections
-import json
 import re
 import statistics
-import subprocess
 import sys
 
-OFFSET_WRITE = re.compile(r"^(?P<log>.*)/offsets/\.(?P<batch>\d+)\.[^/]*\.tmp$")
+from jfr_forks import by_batch, events
+
 WAITS = ("jdk.JavaMonitorWait", "jdk.JavaMonitorEnter", "jdk.ThreadPark")
 DURATION = re.compile(r"^PT(?:(?P<h>[\d.]+)H)?(?:(?P<m>[\d.]+)M)?(?:(?P<s>[\d.]+)S)?$")
 JDK = ("java.", "jdk.", "sun.")
 # where a thread blocks, whatever it waits for
 PRIMITIVES = ("jdk.internal.misc.Unsafe", "java.util.concurrent.locks.", "java.lang.Object")
-
-
-def events(rec, depth):
-    """(type, startTime, thread, values) of every blocking and FileWrite
-    event, in time order."""
-    out = subprocess.run(
-        ["jfr", "print", "--json", "--stack-depth", str(depth),
-         "--events", ",".join(WAITS + ("jdk.FileWrite",)), rec],
-        capture_output=True, text=True, check=True)
-    evs = []
-    for e in json.loads(out.stdout)["recording"]["events"]:
-        v = e["values"]
-        thread = (v.get("eventThread") or {}).get("javaName") or "?"
-        evs.append((e["type"], v["startTime"], thread, v))
-    evs.sort(key=lambda e: instant(e[1]))
-    return evs
-
-
-def instant(stamp):
-    """A sortable key of an ISO-8601 UTC stamp, whose fraction has 0 to 9
-    digits: (date and time to the second, nanoseconds)."""
-    whole, _, frac = stamp.rstrip("Z").partition(".")
-    return whole, int(frac.ljust(9, "0"))
+TOP = 15  # rows per table
+STACK_DEPTH = 32  # frames jfr prints per event, the JDK's own included
 
 
 def millis(duration):
@@ -108,10 +86,10 @@ def frames(values, n):
     return "JDK: " + (" < ".join(jdk[:n]) or "?")
 
 
-def table(title, ms, counts, batches, top):
+def table(title, ms, counts, batches):
     print(title)
     print("  %10s %8s %9s  %s" % ("ms", "events", "ms/batch", "key"))
-    for k, t in sorted(ms.items(), key=lambda kv: -kv[1])[:top]:
+    for k, t in sorted(ms.items(), key=lambda kv: -kv[1])[:TOP]:
         print("  %10.1f %8d %9.2f  %s" % (t, counts[k], t / max(batches, 1), k))
 
 
@@ -126,25 +104,14 @@ def main():
                    help="keep only checkpoints whose path matches this regular expression")
     p.add_argument("--frames", type=int, default=2,
                    help="non-JDK frames per key in the frame table")
-    p.add_argument("--top", type=int, default=15, help="rows per table")
-    p.add_argument("--stack-depth", type=int, default=32,
-                   help="frames jfr prints per event (the JDK's own included)")
     a = p.parse_args()
 
     keep, keep_log = re.compile(a.thread), re.compile(a.checkpoint)
-    batch_of = []  # (batch key or None, type, thread, values) per blocking event
-    current = None
+    batches, tagged = by_batch(events(a.recording, WAITS, STACK_DEPTH))
     order = collections.OrderedDict()  # checkpoint -> its batch keys in order
-    for kind, _, thread, v in events(a.recording, a.stack_depth):
-        if kind == "jdk.FileWrite":
-            m = OFFSET_WRITE.search(v.get("path") or "")
-            if m:
-                current = (m.group("log"), int(m.group("batch")))
-                keys = order.setdefault(m.group("log"), [])
-                if current not in keys:
-                    keys.append(current)
-        elif keep.search(thread):
-            batch_of.append((current, kind, thread, v))
+    for b in batches:
+        order.setdefault(b[0], []).append(b)
+    batch_of = [(b, kind, thread, v) for b, (kind, _, thread, v) in tagged if keep.search(thread)]
 
     for log, keys in order.items():
         print("%s: %d micro-batches%s" % (log, len(keys), "" if keep_log.search(log) else " (left out)"))
@@ -185,8 +152,8 @@ def main():
               % (statistics.mean(sums), statistics.median(sums), max(sums)))
     print("blocked ms by event: " + ", ".join(
         "%s %.1f" % (k, by_kind[k]) for k in WAITS))
-    table("by thread group:", by_group, n_group, n, a.top)
-    table("by thread group | top frames:", by_frames, n_frames, n, a.top)
+    table("by thread group:", by_group, n_group, n)
+    table("by thread group | top frames:", by_frames, n_frames, n)
     return 0
 
 
