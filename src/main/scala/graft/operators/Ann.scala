@@ -1415,54 +1415,49 @@ object Ann {
     import org.apache.spark.ml.functions.array_to_vector
     val spark = emb.sparkSession
     import spark.implicits._
-    // All PqM × PqTrainRestarts fits are independent small jobs whose
-    // wall-clock is driver-round-trip latency, not compute — run them
-    // CONCURRENTLY (guide §2.6: actions are only sequential because
-    // the driver calls them sequentially) so later fits back-fill the
-    // executor slots earlier fits leave idle. Each fit is internally
-    // deterministic (fixed per-(m, r) seed, isolated input frame), and
-    // the per-subspace winner is still `minBy(trainingCost)` over the
-    // restart models IN RESTART ORDER (futures indexed by (m, r), not
+    // One subspace at a time, so one subspace frame is cached at once:
+    // persist it, run its PqTrainRestarts fits CONCURRENTLY (guide §2.6:
+    // they are independent small jobs whose wall-clock is driver
+    // round-trip latency, so later fits back-fill the executor slots
+    // earlier fits leave idle), keep the winner, release it. Each fit is
+    // internally deterministic (fixed per-(m, r) seed, isolated input
+    // frame), and the winner is still `minBy(trainingCost)` over the
+    // restart models IN RESTART ORDER (futures indexed by r, not
     // completion order), so the selected centers are bit-identical to
     // the sequential loop's.
-    val subs: IndexedSeq[DataFrame] = (0 until PqM).map { m =>
-      emb.select(
-        array_to_vector(
-          expr(s"CAST(slice(embedding, ${m * PqSub + 1}, $PqSub) AS ARRAY<DOUBLE>)"))
-          .as("features"))
-        .persist()
-    }
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(PqM * 2)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(PqTrainRestarts)
     val subCenters: Array[Array[Array[Float]]] =
-      try {
-        // k tight clusters + k centers is the k-means init trap (one
-        // kmeans|| draw can land 2 centers in one cluster, 0 in another,
-        // and Lloyd cannot escape — measured 2x the achievable SSE on
-        // planted clusters): best-of-R restarts by training cost
-        val futs = for (m <- 0 until PqM; r <- 0 until PqTrainRestarts) yield
-          pool.submit(new java.util.concurrent.Callable[
-            org.apache.spark.ml.clustering.KMeansModel] {
-            def call(): org.apache.spark.ml.clustering.KMeansModel =
-              new KMeans()
-                .setK(k).setSeed(42L + 997L * (m * PqTrainRestarts + r)).setMaxIter(20)
-                .fit(subs(m))
-          })
-        val models =
-          try futs.map(f =>
+      try (0 until PqM).toArray.map { m =>
+        val sub = emb.select(
+          array_to_vector(
+            expr(s"CAST(slice(embedding, ${m * PqSub + 1}, $PqSub) AS ARRAY<DOUBLE>)"))
+            .as("features"))
+          .persist()
+        try {
+          // k tight clusters + k centers is the k-means init trap (one
+          // kmeans|| draw can land 2 centers in one cluster, 0 in another,
+          // and Lloyd cannot escape — measured 2x the achievable SSE on
+          // planted clusters): best-of-R restarts by training cost
+          val futs = (0 until PqTrainRestarts).map { r =>
+            pool.submit(new java.util.concurrent.Callable[
+              org.apache.spark.ml.clustering.KMeansModel] {
+              def call(): org.apache.spark.ml.clustering.KMeansModel =
+                new KMeans()
+                  .setK(k).setSeed(42L + 997L * (m * PqTrainRestarts + r)).setMaxIter(20)
+                  .fit(sub)
+            })
+          }
+          futs.map(f =>
             try f.get()
             catch {
               case ee: java.util.concurrent.ExecutionException =>
                 futs.foreach(_.cancel(true))
                 throw Option(ee.getCause).getOrElse(ee)
             })
-          finally pool.shutdown()
-        (0 until PqM).toArray.map { m =>
-          (0 until PqTrainRestarts)
-            .map(r => models(m * PqTrainRestarts + r))
             .minBy(_.summary.trainingCost)
             .clusterCenters.map(_.toArray.map(_.toFloat))
-        }
-      } finally { pool.shutdown(); subs.foreach { s => s.unpersist(); () } }
+        } finally { sub.unpersist(); () }
+      } finally pool.shutdown()
     // a degenerate subspace (fewer distinct points than k) can come
     // back with fewer centers; the packed codebook is as deep as the
     // shallowest subspace so every code indexes a real centroid

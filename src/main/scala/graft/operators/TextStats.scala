@@ -316,10 +316,13 @@ object TextStats {
     val parentParts = scala.util.Try(
       spark.conf.get("spark.sql.shuffle.partitions").toInt).getOrElse(200)
     val loopParts = math.max(1L, math.min(parentParts.toLong, nWords / 65536L + 1L)).toInt
+    // Round frames persist MEMORY_AND_DISK, so memory pressure spills
+    // them rather than dropping them into a recompute.
+    val level = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     var cur: org.apache.spark.rdd.RDD[(IndexedSeq[String], Long)] = wordFreq.rdd
       .coalesce(loopParts)
       .map { case (w, c) => (codepointSyms(w), c) }
-      .persist()
+      .persist(level)
     cur.count()
     wordFreq.unpersist(blocking = false)
     // (count desc, left, right) — left/right compared as UTF-8 bytes
@@ -337,6 +340,9 @@ object TextStats {
       }
     val merges = Array.newBuilder[BpeMerge]
     var prev: Option[org.apache.spark.rdd.RDD[(IndexedSeq[String], Long)]] = None
+    // the local checkpoints later rounds' lineage ends at: a recompute of
+    // an evicted round reads them, so they stay until the loop ends
+    val checkpoints = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.rdd.RDD[_]]
     var r = 1
     var done = false
     while (r <= numMerges && !done) {
@@ -348,25 +354,26 @@ object TextStats {
         .reduceByKey(_ + _)
         .takeOrdered(1)(bestOrd)
       // the takeOrdered materialized `cur`'s (lazy) persist — the
-      // frame that fed it can release its cache now
-      prev.foreach(_.unpersist(blocking = false))
+      // frame that fed it can release its cache now, unless it is a
+      // checkpoint
+      prev.filterNot(checkpoints.contains).foreach(_.unpersist(blocking = false))
       prev = Some(cur)
       if (top.isEmpty) done = true
       else {
         val ((l, rr), cnt) = top(0)
         merges += BpeMerge(r, l, rr, l + rr, cnt)
         val mapped = cur.map { case (syms, c) => (applyMerge(syms, l, rr), c) }
-        cur = mapped.persist()
+        cur = mapped.persist(level)
         // periodic lineage truncation, lazily — materialized by the
         // next round's takeOrdered like every other round frame
-        // (localCheckpoint after persist: it UPGRADES the existing
+        // (localCheckpoint after persist: it keeps the disk-backed
         // storage level; the reverse order throws)
-        if (r % 10 == 0) cur.localCheckpoint()
+        if (r % 10 == 0) checkpoints += cur.localCheckpoint()
         r += 1
       }
     }
-    prev.foreach(_.unpersist(blocking = false))
-    cur.unpersist(blocking = false)
+    (prev.toSeq :+ cur).filterNot(checkpoints.contains).foreach(_.unpersist(blocking = false))
+    checkpoints.foreach(_.unpersist(blocking = false))
     merges.result()
   }
 

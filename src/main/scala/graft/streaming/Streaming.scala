@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.model.{Capture, DimState, ScoredRow, SigParams, TrendQuery}
 import graft.operators.GapFill
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, KeyValueGroupedDataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, KeyValueGroupedDataset, Row, SparkSession}
 import org.apache.spark.sql.catalyst.encoders.{encoderFor, ExpressionEncoder}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -23,19 +23,23 @@ import scala.reflect.runtime.universe.TypeTag
   * per-url kernel: [[DayFold]] (the daily fold) feeding [[DayScorer]]
   * (fill + densify + recurrence). [[graft.operators.Trend.run]],
   * [[runBatch]], [[runBatchScored]] and the four stream faces all run
-  * it; the streams load it from and store it to the immutable state
-  * case classes ([[UrlState]], [[LateState]], [[ScoredState]],
-  * [[ScoredLateState]]) at group boundaries, so the checkpoint format
-  * is those classes' encoding and nothing else.
+  * it. The streams keep it in one binary state column per url (state
+  * format [[TrendStateVersion]]): at each group boundary [[TrendCodec]]
+  * loads the bytes straight into the kernel's mutable fields and stores
+  * them back, so the checkpoint format is that codec's byte layout and
+  * nothing else. [[migrateV1]] reads the nested case-class state of
+  * format v1.
   *
   * Ordering contract (ST3): rows are sorted by (ts, seq) within each
   * micro-batch; cross-batch order must be non-decreasing (CDX pagination
   * guarantees it at the source). The watermarked faces relax this with a
   * hold-back buffer; the divergence window is documented in SURVEY §2.9.
   *
-  * Scale: state per url is O(1) (bounded ring + digest map capped by
-  * distinct digests per url); urls hash-partition across executors, the
-  * same layout as the batch pipeline's groupBy(url).
+  * Scale: state per url is the bounded part (the 1000-slot ring at one
+  * byte a slot, the open day, the recurrence) plus the digest map, which
+  * grows with the distinct digests the url has ever shown, plus, on the
+  * watermarked faces, the held-back captures; urls hash-partition across
+  * executors, the same layout as the batch pipeline's groupBy(url).
   */
 object Streaming {
 
@@ -67,9 +71,8 @@ object Streaming {
     * Spark re-resolves the state encoder against each micro-batch's new
     * plan (`resolveAndBind` in the stateful operator's state manager).
     * On an unbound encoder that resolution numbers the lambda variables
-    * of every collection in the state (`UrlState.sw`,
-    * `UrlState.digestStatus`, `LateState.pending`, `TtlState.members`)
-    * from a JVM-global counter, so the generated state deserializer's
+    * of every collection in the state (e.g. `TtlState.members`) from a
+    * JVM-global counter, so the generated state deserializer's
     * Java source differs on every batch, the codegen cache (keyed on
     * that source) misses, and one task per batch Janino-compiles it
     * while the others wait. A bound encoder has nothing left to
@@ -81,15 +84,10 @@ object Streaming {
   private[graft] def stateEncoder[S](enc: Encoder[S]): Encoder[S] =
     encoderFor(enc).resolveAndBind()
 
-  // The trend faces' state encoders, each bound once (see stateEncoder).
-  private[graft] lazy val UrlStateEncoder: Encoder[UrlState] =
-    stateEncoder(Encoders.product[UrlState])
-  private[graft] lazy val LateStateEncoder: Encoder[LateState] =
-    stateEncoder(Encoders.product[LateState])
-  private[graft] lazy val ScoredStateEncoder: Encoder[ScoredState] =
-    stateEncoder(Encoders.product[ScoredState])
-  private[graft] lazy val ScoredLateStateEncoder: Encoder[ScoredLateState] =
-    stateEncoder(Encoders.product[ScoredLateState])
+  /** The four trend faces' state encoder: one binary column, bound once
+    * (see stateEncoder); [[TrendCodec]] writes and reads the bytes.
+    */
+  private[graft] lazy val TrendStateEncoder: Encoder[Array[Byte]] = stateEncoder(Encoders.BINARY)
 
   /** Finalized per-day row (pre-scoring). */
   case class DailyOut(
@@ -105,30 +103,6 @@ object Streaming {
       content: String,
       chaos: Double,
       chaosn: Double)
-
-  /** Open-day accumulator (reference `dr` + `cp`). */
-  case class DayAcc(
-      day: String,
-      datetime: String,
-      c2xx: Long,
-      c3xx: Long,
-      c4xx: Long,
-      c5xx: Long,
-      specimen: String,
-      digest: String,
-      content: String,
-      cp: Int)
-
-  /** Full per-url loop state (reference main.py:131-142), as checkpointed. */
-  case class UrlState(
-      digestStatus: Map[String, String],
-      sw: Seq[String],
-      pc: String,
-      ps: String,
-      rs: Long,
-      us: Long,
-      uw: Long,
-      acc: Option[DayAcc])
 
   val SWS = 1000
 
@@ -180,7 +154,7 @@ object Streaming {
     * map, the chaos ring in an array, the open day in primitive fields,
     * one day string per day. `onFlush` gets each day as it closes.
     */
-  private final class DayFold(url: String, st: Option[UrlState], onFlush: DailyOut => Unit) {
+  private final class DayFold(url: String, onFlush: DailyOut => Unit) {
     private val digestStatus = new java.util.HashMap[String, String]()
     private val sw = Array.fill(SWS)("~")
     private var pc = "~"
@@ -200,22 +174,81 @@ object Streaming {
     private var content = "Unknown"
     private var cp = -1
 
-    st.foreach { s =>
-      s.digestStatus.foreach { case (k, v) => digestStatus.put(k, v) }
-      s.sw.copyToArray(sw)
-      pc = s.pc; ps = s.ps; rs = s.rs; us = s.us; uw = s.uw
-      s.acc.foreach { a =>
-        day = a.day; datetime = a.datetime
-        c2xx = a.c2xx; c3xx = a.c3xx; c4xx = a.c4xx; c5xx = a.c5xx
-        specimen = a.specimen; digest = a.digest; content = a.content; cp = a.cp
+    /** Write the fold's state, the layout [[load]] reads: a string table
+      * of the classes in the ring and the digest map, the ring as one
+      * table index per slot (a byte while the table has at most 256
+      * entries, else a varint), the counters, the digest map in digest
+      * order with its classes as table indices, then the open day, if
+      * any. Equal states write equal bytes, whatever order the map grew
+      * in.
+      */
+    def store(out: StateOut): Unit = {
+      val table = new java.util.HashMap[String, Integer]()
+      val names = scala.collection.mutable.ArrayBuffer.empty[String]
+      def index(c: String): Int = {
+        val i = table.putIfAbsent(c, names.length)
+        if (i == null) { names += c; names.length - 1 } else i
+      }
+      val ring = new Array[Int](SWS)
+      var i = 0
+      while (i < SWS) {
+        // the ring runs in long stretches of one class
+        ring(i) = if (i > 0 && (sw(i) eq sw(i - 1))) ring(i - 1) else index(sw(i))
+        i += 1
+      }
+      val keys = digestStatus.keySet.toArray(new Array[String](0))
+      java.util.Arrays.sort(keys, java.util.Comparator.naturalOrder[String]())
+      val classes = keys.map(k => index(digestStatus.get(k)))
+
+      out.varint(names.length)
+      names.foreach(out.string)
+      val narrow = names.length <= 256
+      ring.foreach(c => if (narrow) out.byte(c) else out.varint(c))
+      out.string(pc); out.string(ps); out.long(rs); out.long(us); out.long(uw)
+      out.varint(keys.length)
+      i = 0
+      while (i < keys.length) { out.string(keys(i)); out.varint(classes(i)); i += 1 }
+      out.flag(day != null)
+      if (day != null) {
+        out.string(day); out.string(datetime)
+        out.long(c2xx); out.long(c3xx); out.long(c4xx); out.long(c5xx)
+        out.string(specimen); out.string(digest); out.string(content); out.varint(cp + 1)
       }
     }
 
-    def state: UrlState = {
-      import scala.jdk.CollectionConverters._
-      UrlState(digestStatus.asScala.toMap, sw.toVector, pc, ps, rs, us, uw,
-        Option(day).map(d =>
-          DayAcc(d, datetime, c2xx, c3xx, c4xx, c5xx, specimen, digest, content, cp)))
+    /** Read what [[store]] wrote into a fresh fold. */
+    def load(in: StateIn): Unit = {
+      val names = Array.fill(in.varint())(internClass(in.string()))
+      def name(i: Int): String =
+        if (i < names.length) names(i) else throw in.corrupt(s"class index $i past a table of ${names.length}")
+      val narrow = names.length <= 256
+      var i = 0
+      while (i < SWS) { sw(i) = name(if (narrow) in.byte() else in.varint()); i += 1 }
+      pc = in.string(); ps = internClass(in.string()); rs = in.long(); us = in.long(); uw = in.long()
+      i = in.varint()
+      while (i > 0) { digestStatus.put(in.string(), name(in.varint())); i -= 1 }
+      if (in.flag()) {
+        day = in.string(); datetime = in.string()
+        c2xx = in.long(); c3xx = in.long(); c4xx = in.long(); c5xx = in.long()
+        specimen = internClass(in.string()); digest = in.string(); content = in.string(); cp = in.varint() - 1
+      }
+    }
+
+    /** Load a format-v1 `UrlState` row (see [[migrateV1]]). */
+    def loadV1(core: Row): Unit = {
+      core.getAs[scala.collection.Map[String, String]]("digestStatus").foreach { case (k, v) =>
+        digestStatus.put(k, v)
+      }
+      core.getAs[scala.collection.Seq[String]]("sw").copyToArray(sw)
+      pc = core.getAs[String]("pc"); ps = core.getAs[String]("ps")
+      rs = core.getAs[Long]("rs"); us = core.getAs[Long]("us"); uw = core.getAs[Long]("uw")
+      Option(core.getAs[Row]("acc")).foreach { a =>
+        day = a.getAs[String]("day"); datetime = a.getAs[String]("datetime")
+        c2xx = a.getAs[Long]("c2xx"); c3xx = a.getAs[Long]("c3xx")
+        c4xx = a.getAs[Long]("c4xx"); c5xx = a.getAs[Long]("c5xx")
+        specimen = a.getAs[String]("specimen"); digest = a.getAs[String]("digest")
+        content = a.getAs[String]("content"); cp = a.getAs[Int]("cp")
+      }
     }
 
     def addAll(caps: Array[Capture]): this.type = {
@@ -271,18 +304,6 @@ object Streaming {
           specimen, digest, content, us.toDouble / rs, uw.toDouble / math.min(SWS, rs)))
   }
 
-  /** Recurrence state carried between closed days: the two sigmoid
-    * dimensions plus the last scored day's (day, specimen, chaos) — all
-    * the incremental scorer needs to fill and score the next span.
-    */
-  case class ScoreCore(
-      res: DimState,
-      fix: DimState,
-      lastDay: String,
-      lastSpec: String,
-      chaos: Double,
-      chaosn: Double)
-
   /** Gap fill (G1-G6), densify (J1) and the sigmoid recurrence over one
     * url's closed days, one day at a time (reference main.py:193-227):
     * each closed day first scores the interior gap days since the
@@ -300,11 +321,15 @@ object Streaming {
     * Junk days (unparseable as ISO dates — possible because the daily
     * fold deliberately tolerates junk timestamps) are SKIPPED without
     * touching the recurrence state: they exist in the daily stream but
-    * have no calendar position to score. Storing one in
-    * `ScoreCore.lastDay` would poison the checkpoint. Same drop rule as
-    * the staged scorer ([[graft.operators.Score]]).
+    * have no calendar position to score. Storing one in `lastDay` would
+    * poison the checkpoint. Same drop rule as the staged scorer
+    * ([[graft.operators.Score]]).
+    *
+    * The state carried between closed days is the two sigmoid dimensions
+    * plus the last scored day's (day, specimen, chaos): all the scorer
+    * needs to fill and score the next span.
     */
-  private final class DayScorer(url: String, query: TrendQuery, st: Option[ScoreCore]) {
+  private final class DayScorer(url: String, query: TrendQuery) {
     private val asOf = java.time.LocalDate.parse(query.asOf).toEpochDay
     private def p(key: String, dflt: String): SigParams =
       query.params.getOrElse(key, query.params(dflt))
@@ -317,16 +342,43 @@ object Streaming {
     private var lastSpec = "~"
     private var chaos = 0.0
     private var chaosn = 0.0
-    st.foreach { s =>
-      res = s.res; fix = s.fix; lastDay = s.lastDay
-      last = java.time.LocalDate.parse(s.lastDay).toEpochDay
-      lastSpec = s.lastSpec; chaos = s.chaos; chaosn = s.chaosn
-    }
 
     val out = scala.collection.mutable.ArrayBuffer.empty[ScoredRow]
 
-    def state: Option[ScoreCore] =
-      Option(lastDay).map(ScoreCore(res, fix, _, lastSpec, chaos, chaosn))
+    /** Write the recurrence state, if a day has been scored, the layout
+      * [[load]] reads: the two dimensions, then the last day as its
+      * string and its epoch day, its specimen and chaos pair.
+      */
+    def store(out: StateOut): Unit = {
+      out.flag(lastDay != null)
+      if (lastDay != null) {
+        def dim(d: DimState): Unit = {
+          out.string(d.prev); out.double(d.base); out.double(d.scale); out.double(d.h); out.long(d.x)
+        }
+        dim(res); dim(fix)
+        out.string(lastDay); out.long(last); out.string(lastSpec); out.double(chaos); out.double(chaosn)
+      }
+    }
+
+    /** Read what [[store]] wrote into a fresh scorer. */
+    def load(in: StateIn): Unit =
+      if (in.flag()) {
+        def dim() = DimState(internClass(in.string()), in.double(), in.double(), in.double(), in.long())
+        res = dim(); fix = dim()
+        lastDay = in.string(); last = in.long(); lastSpec = internClass(in.string())
+        chaos = in.double(); chaosn = in.double()
+      }
+
+    /** Load a format-v1 `ScoreCore` row (see [[migrateV1]]). */
+    def loadV1(score: Row): Unit = {
+      def dim(r: Row) = DimState(r.getAs[String]("prev"), r.getAs[Double]("base"),
+        r.getAs[Double]("scale"), r.getAs[Double]("h"), r.getAs[Long]("x"))
+      res = dim(score.getAs[Row]("res")); fix = dim(score.getAs[Row]("fix"))
+      lastDay = score.getAs[String]("lastDay")
+      last = java.time.LocalDate.parse(lastDay).toEpochDay
+      lastSpec = score.getAs[String]("lastSpec")
+      chaos = score.getAs[Double]("chaos"); chaosn = score.getAs[Double]("chaosn")
+    }
 
     /** A day with no captures: a fill day (`spec` from the policy) or a
       * densified one (`spec` "~").
@@ -382,8 +434,8 @@ object Streaming {
       rows: Iterator[Capture],
       query: TrendQuery,
       tail: Boolean): Iterator[ScoredRow] = {
-    val scorer = new DayScorer(url, query, None)
-    new DayFold(url, None, scorer.day).addAll(timeOrdered(rows)).close()
+    val scorer = new DayScorer(url, query)
+    new DayFold(url, scorer.day).addAll(timeOrdered(rows)).close()
     if (tail) scorer.densifyToAsOf()
     scorer.out.iterator
   }
@@ -395,7 +447,7 @@ object Streaming {
     */
   def runBatch(url: String, rows: Iterator[Capture]): Iterator[DailyOut] = {
     val out = Vector.newBuilder[DailyOut]
-    new DayFold(url, None, out += _).addAll(timeOrdered(rows)).close()
+    new DayFold(url, out += _).addAll(timeOrdered(rows)).close()
     out.result().iterator
   }
 
@@ -411,37 +463,247 @@ object Streaming {
       query: TrendQuery): Iterator[ScoredRow] =
     scoreCaptures(url, rows, query, tail = false)
 
+  // ------------------------------------------------- trend state format
+  /** The trend faces' state format. v1 was the encoding of nested case
+    * classes (`UrlState`, `LateState`, `ScoredState`, `ScoredLateState`),
+    * which Spark turned into a generated (de)serializer over maps,
+    * arrays and options in every task; v2 is one binary column written
+    * by [[TrendCodec]]. A v2 face refuses a v1 checkpoint at start, in
+    * Spark's state schema check; [[migrateV1]] carries v1 state over.
+    */
+  val TrendStateVersion = 2
+
+  /** A growable byte buffer the trend codec writes into: big-endian
+    * longs and doubles (raw bits), unsigned varints, strings as a varint
+    * of (UTF-8 length + 1) with 0 for null.
+    */
+  private[streaming] final class StateOut {
+    private var buf = new Array[Byte](4096)
+    private var n = 0
+    private def room(k: Int): Unit =
+      if (n + k > buf.length) buf = java.util.Arrays.copyOf(buf, math.max(2 * buf.length, n + k))
+    def byte(b: Int): Unit = { room(1); buf(n) = b.toByte; n += 1 }
+    def flag(b: Boolean): Unit = byte(if (b) 1 else 0)
+    def varint(v: Int): Unit = {
+      var x = v
+      while ((x & ~0x7f) != 0) { byte((x & 0x7f) | 0x80); x >>>= 7 }
+      byte(x)
+    }
+    def long(v: Long): Unit = {
+      room(8)
+      var i = 0
+      while (i < 8) { buf(n + i) = (v >>> (56 - 8 * i)).toByte; i += 1 }
+      n += 8
+    }
+    def double(d: Double): Unit = long(java.lang.Double.doubleToRawLongBits(d))
+    def string(s: String): Unit =
+      if (s == null) varint(0)
+      else {
+        val b = s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+        varint(b.length + 1)
+        room(b.length)
+        System.arraycopy(b, 0, buf, n, b.length)
+        n += b.length
+      }
+    def result: Array[Byte] = java.util.Arrays.copyOf(buf, n)
+  }
+
+  /** Reads what [[StateOut]] wrote, past the version byte; a read past
+    * the end or a malformed field is refused with the format version
+    * named, never decoded into a wrong state.
+    */
+  private[streaming] final class StateIn(buf: Array[Byte]) {
+    private var i = 1
+    def corrupt(what: String): IllegalStateException =
+      new IllegalStateException(
+        s"trend stream state (format v$TrendStateVersion, ${buf.length} bytes) is corrupt: $what")
+    private def need(k: Int): Unit =
+      if (k < 0 || k > buf.length - i) throw corrupt(s"truncated at byte $i")
+    def byte(): Int = { need(1); val b = buf(i) & 0xff; i += 1; b }
+    def flag(): Boolean = byte() match {
+      case 0 => false
+      case 1 => true
+      case b => throw corrupt(s"flag byte $b at byte ${i - 1}")
+    }
+    def varint(): Int = {
+      var v = 0L
+      var shift = 0
+      var b = 0x80
+      while ((b & 0x80) != 0) {
+        if (shift > 28) throw corrupt(s"varint too long at byte $i")
+        b = byte()
+        v |= (b & 0x7fL) << shift
+        shift += 7
+      }
+      if (v > Int.MaxValue) throw corrupt(s"varint out of range before byte $i")
+      v.toInt
+    }
+    def long(): Long = {
+      need(8)
+      var v = 0L
+      var k = 0
+      while (k < 8) { v = (v << 8) | (buf(i + k) & 0xffL); k += 1 }
+      i += 8
+      v
+    }
+    def double(): Double = java.lang.Double.longBitsToDouble(long())
+    def string(): String = {
+      val n = varint() - 1
+      if (n < 0) null
+      else {
+        need(n)
+        val s = new String(buf, i, n, java.nio.charset.StandardCharsets.UTF_8)
+        i += n
+        s
+      }
+    }
+    def end(): Unit = if (i != buf.length) throw corrupt(s"${buf.length - i} trailing bytes")
+  }
+
+  /** The ring's and the open day's status classes as the fold's own
+    * constants, so its string compares keep hitting the reference check.
+    */
+  private def internClass(c: String): String = {
+    val k = StatusClass.indexOf(c)
+    if (k >= 0) StatusClass(k) else if (c == "~") "~" else c
+  }
+
+  /** The v2 state of one url: the version byte, the fold
+    * ([[DayFold.store]]), the recurrence ([[DayScorer.store]], a 0 flag
+    * on the daily faces), then the held-back captures without their url
+    * (the group key), a count of 0 on the unwatermarked faces.
+    */
+  private[graft] object TrendCodec {
+    def store(fold: DayFold, scorer: DayScorer, pending: Seq[Capture]): Array[Byte] = {
+      val out = new StateOut
+      out.byte(TrendStateVersion)
+      fold.store(out)
+      if (scorer == null) out.flag(false) else scorer.store(out)
+      out.varint(pending.length)
+      pending.foreach { c => out.string(c.ts); out.string(c.status); out.string(c.digest); out.long(c.seq) }
+      out.result
+    }
+
+    /** Load `bytes` into a fresh `fold` and `scorer` (null on the daily
+      * faces) and return the held-back captures.
+      */
+    def load(url: String, bytes: Array[Byte], fold: DayFold, scorer: DayScorer): Array[Capture] = {
+      if (bytes.isEmpty)
+        throw new IllegalStateException(s"trend stream state (format v$TrendStateVersion) is empty")
+      if (bytes(0) != TrendStateVersion)
+        throw new IllegalStateException(
+          s"trend stream state has format v${bytes(0) & 0xff}, but this build reads " +
+            s"v$TrendStateVersion; a v1 checkpoint carries over through Streaming.migrateV1")
+      val in = new StateIn(bytes)
+      fold.load(in)
+      if (scorer != null) scorer.load(in)
+      else if (in.flag()) throw in.corrupt("a daily face holds a scored face's recurrence")
+      val pending = Array.fill(in.varint())(Capture(url, in.string(), in.string(), in.string(), in.long()))
+      in.end()
+      pending
+    }
+  }
+
+  private val NoCaptures = Array.empty[Capture]
+
+  /** Load the group's state, if any, into `fold` and `scorer`; the
+    * held-back captures it carried.
+    */
+  private def restore(url: String, state: GroupState[Array[Byte]], fold: DayFold, scorer: DayScorer): Array[Capture] =
+    if (state.exists) TrendCodec.load(url, state.get, fold, scorer) else NoCaptures
+
+  /** Run `step` as a trend face's stateful stage, started from
+    * `initialState` when given (see [[migrateV1]]).
+    */
+  private def trendFace[V, U](
+      grouped: KeyValueGroupedDataset[String, V],
+      initialState: Option[KeyValueGroupedDataset[String, Array[Byte]]],
+      out: Encoder[U])(
+      step: (String, Iterator[V], GroupState[Array[Byte]]) => Iterator[U]): Dataset[U] =
+    initialState match {
+      case None =>
+        grouped.flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(step)(
+          TrendStateEncoder, out)
+      case Some(init) =>
+        grouped.flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout(), init)(step)(
+          TrendStateEncoder, out)
+    }
+
+  /** The state of a format-v1 trend-face checkpoint, one row per url:
+    * `url` and `state`, the face's v1 state struct, read with Spark's
+    * state data source.
+    */
+  private[graft] def v1States(spark: SparkSession, checkpoint: String): DataFrame = {
+    // the state reader reports to the session's state store coordinator,
+    // which the session's streaming query manager sets up
+    spark.streams
+    spark.read.format("statestore").load(checkpoint)
+      .select(col("key.value").as("url"), col("value.groupState").as("state"))
+  }
+
+  /** Carry a format-v1 trend-face checkpoint over to v2: its state, per
+    * url, re-encoded for a v2 face's `initialState`.
+    *
+    * Start the same face on a NEW checkpoint location from it, and feed
+    * it the captures after the ones the old query processed, e.g.
+    * `Streaming.scoredStream(captures, query, Some(Streaming.migrateV1(spark, oldCheckpoint)))`.
+    * Spark uses an initial state only when the query starts with no
+    * checkpointed state of its own. Read any v1 face's checkpoint: its
+    * fold, recurrence and hold-back buffer move over as they are, so the
+    * v2 face emits what the v1 face would have.
+    */
+  def migrateV1(spark: SparkSession, checkpoint: String): KeyValueGroupedDataset[String, Array[Byte]] = {
+    import spark.implicits._
+    val v1 = v1States(spark, checkpoint)
+    val fields = v1.schema("state").dataType match {
+      case t: org.apache.spark.sql.types.StructType => t.fieldNames.toSet
+      case _ => Set.empty[String]
+    }
+    if (!fields("sw") && !fields("core"))
+      throw new IllegalArgumentException(
+        s"$checkpoint does not hold trend-face state of format v1 (state schema ${v1.schema("state").dataType.simpleString})")
+    v1.map { r =>
+      val url = r.getString(0)
+      val st = r.getStruct(1)
+      val fold = new DayFold(url, _ => ())
+      fold.loadV1(if (fields("core")) st.getAs[Row]("core") else st)
+      val scorer = Option(if (fields("score")) st.getAs[Row]("score") else null).map { s =>
+        // only the recurrence fields are stored; the query plays no part
+        val d = new DayScorer(url, TrendQuery())
+        d.loadV1(s)
+        d
+      }
+      val pending = if (fields("pending")) st.getAs[scala.collection.Seq[Row]]("pending").map(c =>
+        Capture(url, c.getAs[String]("ts"), c.getAs[String]("status"), c.getAs[String]("digest"), c.getAs[Long]("seq")))
+      else Nil
+      (url, TrendCodec.store(fold, scorer.orNull, pending.toSeq))
+    }.groupByKey(_._1).mapValues(_._2)
+  }
+
   /** flatMapGroupsWithState body: fold the batch's (sorted) captures
     * through the loop state, emit closed days.
     */
   def processGroup(
       url: String,
       rows: Iterator[Capture],
-      state: GroupState[UrlState]): Iterator[DailyOut] = {
+      state: GroupState[Array[Byte]]): Iterator[DailyOut] = {
     val out = Vector.newBuilder[DailyOut]
-    state.update(new DayFold(url, state.getOption, out += _).addAll(timeOrdered(rows)).state)
+    val fold = new DayFold(url, out += _)
+    val held = restore(url, state, fold, null)
+    state.update(TrendCodec.store(fold.addAll(timeOrdered(held.iterator ++ rows)), null, Nil))
     out.result().iterator
   }
 
-  /** Wire a capture stream into the incremental daily table. */
-  def dailyStream(captures: Dataset[Capture]): Dataset[DailyOut] = {
+  /** Wire a capture stream into the incremental daily table; started
+    * from `initialState` when given (see [[migrateV1]]).
+    */
+  def dailyStream(
+      captures: Dataset[Capture],
+      initialState: Option[KeyValueGroupedDataset[String, Array[Byte]]] = None): Dataset[DailyOut] = {
     val spark = localCheckpoints(captures.sparkSession)
     import spark.implicits._
-    captures
-      .groupByKey(_.url)
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(processGroup)(
-        UrlStateEncoder, Encoders.product[DailyOut])
+    trendFace(captures.groupByKey(_.url), initialState, Encoders.product[DailyOut])(processGroup)
   }
-
-  /** ST3: late/out-of-order tolerant variant. Incoming rows are held in
-    * a per-url buffer and only folded through the (order-sensitive) loop
-    * once the event-time watermark has passed them — any row arriving
-    * within the lateness bound lands in its correct stream position;
-    * rows later than the bound are dropped by the watermark upstream.
-    * This defines the semantics the reference leaves undefined (its
-    * algorithm silently corrupts on unsorted input, SURVEY §2.9 ST3).
-    */
-  case class LateState(pending: Seq[Capture], core: UrlState)
 
   /** Parse ts in the SAME zone `try_to_timestamp` used to derive the
     * watermark column (the session timezone) — a hard-coded UTC here
@@ -461,24 +723,28 @@ object Streaming {
     * now would break (ts, seq) order.
     */
   private def release(
-      pending: Seq[Capture],
+      pending: Array[Capture],
       batch: Iterator[Capture],
       zone: java.time.ZoneId,
-      wm: Long): (Array[Capture], Seq[Capture]) = {
-    val (ready, hold) = timeOrdered(pending.iterator ++ batch).partition(c => tsMillis(c.ts, zone) < wm)
-    (ready, hold.toVector)
-  }
+      wm: Long): (Array[Capture], Array[Capture]) =
+    timeOrdered(pending.iterator ++ batch).partition(c => tsMillis(c.ts, zone) < wm)
 
+  /** ST3: late/out-of-order tolerant variant. Incoming rows are held in
+    * a per-url buffer and only folded through the (order-sensitive) loop
+    * once the event-time watermark has passed them — any row arriving
+    * within the lateness bound lands in its correct stream position;
+    * rows later than the bound are dropped by the watermark upstream.
+    * This defines the semantics the reference leaves undefined (its
+    * algorithm silently corrupts on unsorted input, SURVEY §2.9 ST3).
+    */
   def processGroupLate(zone: java.time.ZoneId)(
       url: String,
       rows: Iterator[Capture],
-      state: GroupState[LateState]): Iterator[DailyOut] = {
-    val st = state.getOption
-    val (ready, hold) = release(st.fold(Seq.empty[Capture])(_.pending), rows, zone,
-      state.getCurrentWatermarkMs())
+      state: GroupState[Array[Byte]]): Iterator[DailyOut] = {
     val out = Vector.newBuilder[DailyOut]
-    val core = new DayFold(url, st.map(_.core), out += _).addAll(ready).state
-    state.update(LateState(hold, core))
+    val fold = new DayFold(url, out += _)
+    val (ready, hold) = release(restore(url, state, fold, null), rows, zone, state.getCurrentWatermarkMs())
+    state.update(TrendCodec.store(fold.addAll(ready), null, hold))
     out.result().iterator
   }
 
@@ -512,16 +778,18 @@ object Streaming {
     * Rows with an unparseable `ts` are dropped (see
     * [[withEventTimeWatermark]]), so their junk days never appear here.
     */
-  def dailyStreamWatermarked(captures: Dataset[Capture], lateness: String): Dataset[DailyOut] = {
+  def dailyStreamWatermarked(
+      captures: Dataset[Capture],
+      lateness: String,
+      initialState: Option[KeyValueGroupedDataset[String, Array[Byte]]] = None): Dataset[DailyOut] = {
     val spark = localCheckpoints(captures.sparkSession)
     import spark.implicits._
     val (zone, ds) = withEventTimeWatermark(captures, lateness)
     val process = processGroupLate(zone) _
-    ds.groupByKey(_.url)
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(
-        (url: String, rows: Iterator[CaptureWithTime], state: GroupState[LateState]) =>
-          process(url, rows.map(_.toCapture), state))(
-        LateStateEncoder, Encoders.product[DailyOut])
+    trendFace(ds.groupByKey(_.url), initialState, Encoders.product[DailyOut]) {
+      (url: String, rows: Iterator[CaptureWithTime], state: GroupState[Array[Byte]]) =>
+        process(url, rows.map(_.toCapture), state)
+    }
   }
 
   case class CaptureWithTime(
@@ -535,23 +803,21 @@ object Streaming {
   }
 
   // ------------------------------------------------------------ ST1 full
-  /** Full incremental-pipeline state: daily fold + recurrence. */
-  case class ScoredState(core: UrlState, score: Option[ScoreCore])
-
   /** ST1 in full: captures stream in, SCORED daily rows stream out — the
     * whole reference pipeline (daily fold + gap fill + densify + sigmoid
     * recurrence) as one stateful stage. A day's scores emit the moment
     * the day closes; the batch pipeline over the same captures produces
     * an identical prefix (see StreamingSpec), so consumers can switch
-    * between the two freely. Same ordering contract as [[dailyStream]].
+    * between the two freely. Same ordering contract as [[dailyStream]];
+    * started from `initialState` when given (see [[migrateV1]]).
     */
-  def scoredStream(captures: Dataset[Capture], query: TrendQuery): Dataset[ScoredRow] = {
+  def scoredStream(
+      captures: Dataset[Capture],
+      query: TrendQuery,
+      initialState: Option[KeyValueGroupedDataset[String, Array[Byte]]] = None): Dataset[ScoredRow] = {
     val spark = localCheckpoints(captures.sparkSession)
     import spark.implicits._
-    captures
-      .groupByKey(_.url)
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(
-        scoredStep(query))(ScoredStateEncoder, Encoders.product[ScoredRow])
+    trendFace(captures.groupByKey(_.url), initialState, Encoders.product[ScoredRow])(scoredStep(query))
   }
 
   /** [[scoredStream]]'s group function: fold the batch's (sorted)
@@ -561,18 +827,13 @@ object Streaming {
   private[graft] def scoredStep(query: TrendQuery)(
       url: String,
       rows: Iterator[Capture],
-      state: GroupState[ScoredState]): Iterator[ScoredRow] = {
-    val st = state.getOption
-    val scorer = new DayScorer(url, query, st.flatMap(_.score))
-    val core = new DayFold(url, st.map(_.core), scorer.day).addAll(timeOrdered(rows)).state
-    state.update(ScoredState(core, scorer.state))
+      state: GroupState[Array[Byte]]): Iterator[ScoredRow] = {
+    val scorer = new DayScorer(url, query)
+    val fold = new DayFold(url, scorer.day)
+    val held = restore(url, state, fold, scorer)
+    state.update(TrendCodec.store(fold.addAll(timeOrdered(held.iterator ++ rows)), scorer, Nil))
     scorer.out.iterator
   }
-
-  /** Watermarked scored-stream state: hold-back buffer + daily fold +
-    * recurrence.
-    */
-  case class ScoredLateState(pending: Seq[Capture], core: UrlState, score: Option[ScoreCore])
 
   /** ST1 + ST3 combined: the full incremental pipeline under an
     * event-time watermark. Rows within the lateness bound are buffered
@@ -584,21 +845,31 @@ object Streaming {
   def scoredStreamWatermarked(
       captures: Dataset[Capture],
       query: TrendQuery,
-      lateness: String): Dataset[ScoredRow] = {
+      lateness: String,
+      initialState: Option[KeyValueGroupedDataset[String, Array[Byte]]] = None): Dataset[ScoredRow] = {
     val spark = localCheckpoints(captures.sparkSession)
     import spark.implicits._
     val (zone, ds) = withEventTimeWatermark(captures, lateness)
-    ds.groupByKey(_.url)
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (url: String, rows: Iterator[CaptureWithTime], state: GroupState[ScoredLateState]) =>
-          val st = state.getOption
-          val (ready, hold) = release(st.fold(Seq.empty[Capture])(_.pending),
-            rows.map(_.toCapture), zone, state.getCurrentWatermarkMs())
-          val scorer = new DayScorer(url, query, st.flatMap(_.score))
-          val core = new DayFold(url, st.map(_.core), scorer.day).addAll(ready).state
-          state.update(ScoredLateState(hold, core, scorer.state))
-          scorer.out.iterator
-      }(ScoredLateStateEncoder, Encoders.product[ScoredRow])
+    val step = scoredLateStep(query, zone) _
+    trendFace(ds.groupByKey(_.url), initialState, Encoders.product[ScoredRow]) {
+      (url: String, rows: Iterator[CaptureWithTime], state: GroupState[Array[Byte]]) =>
+        step(url, rows.map(_.toCapture), state)
+    }
+  }
+
+  /** [[scoredStreamWatermarked]]'s group function: release what the
+    * watermark has passed from the hold-back buffer and the batch, fold
+    * it through the daily fold and the scorer, emit scored closed days.
+    */
+  private[graft] def scoredLateStep(query: TrendQuery, zone: java.time.ZoneId)(
+      url: String,
+      rows: Iterator[Capture],
+      state: GroupState[Array[Byte]]): Iterator[ScoredRow] = {
+    val scorer = new DayScorer(url, query)
+    val fold = new DayFold(url, scorer.day)
+    val (ready, hold) = release(restore(url, state, fold, scorer), rows, zone, state.getCurrentWatermarkMs())
+    state.update(TrendCodec.store(fold.addAll(ready), scorer, hold))
+    scorer.out.iterator
   }
 
   /** ST2 as a true stream: event-time tumbling 1-day windows with a

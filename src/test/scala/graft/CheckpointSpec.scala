@@ -228,8 +228,9 @@ class CheckpointSpec extends AnyFunSuite {
 
   test("a scored-stream checkpoint resumes across the unbound and the bound state encoder, both ways") {
     // binding the state encoder must not move the checkpoint format: a
-    // checkpoint written through Spark's implicit encoder resumes under
-    // the face's bound one, and the other way round
+    // state-format v2 checkpoint (one binary column) written through
+    // Spark's implicit byte-array encoder resumes under the face's bound
+    // one, and the other way round, each resume run in two halves
     val q = TrendQuery(-1, FillPolicy.Closest, "2024-02-01")
     val all = fixture(240, 3)
     val chunks = all.grouped(60).toSeq

@@ -131,8 +131,17 @@ class StreamingSpec extends AnyFunSuite {
   test("trend stream state encoders keep their checkpoint format") {
     import org.apache.spark.sql.Encoders
     import org.apache.spark.sql.types._
-    // the checkpointed state of the four trend faces; a schema change
-    // here breaks restore from existing checkpoints
+    // format v2, the four trend faces' checkpointed state: one binary
+    // column, through a bound encoder (nothing left to resolve per
+    // micro-batch); a schema change here breaks restore from existing
+    // checkpoints
+    val v2 = Streaming.TrendStateEncoder
+    assert(v2.schema == StructType(Seq(StructField("value", BinaryType, nullable = true))))
+    assert(isBound(v2) && !isBound(Encoders.BINARY))
+    assert(Streaming.TrendStateVersion == 2)
+
+    // format v1, as the committed v1 checkpoints store it: the struct
+    // Streaming.migrateV1 reads
     def f(name: String, t: DataType, nullable: Boolean = true) = StructField(name, t, nullable)
     val str = StringType
     val dayAcc = StructType(Seq(f("day", str), f("datetime", str),
@@ -152,26 +161,14 @@ class StreamingSpec extends AnyFunSuite {
       f("scale", DoubleType, false), f("h", DoubleType, false), f("x", LongType, false)))
     val scoreCore = StructType(Seq(f("res", dim), f("fix", dim), f("lastDay", str),
       f("lastSpec", str), f("chaos", DoubleType, false), f("chaosn", DoubleType, false)))
-
-    assert(Encoders.product[Streaming.UrlState].schema == urlState)
-    assert(Encoders.product[Streaming.LateState].schema ==
-      StructType(Seq(pending, f("core", urlState))))
-    assert(Encoders.product[Streaming.ScoredState].schema ==
-      StructType(Seq(f("core", urlState), f("score", scoreCore))))
-    assert(Encoders.product[Streaming.ScoredLateState].schema ==
-      StructType(Seq(pending, f("core", urlState), f("score", scoreCore))))
-
-    // the encoders the faces pass: bound (nothing left to resolve per
-    // micro-batch) and writing exactly the schemas above
-    val passed = Seq(
-      Streaming.UrlStateEncoder -> Encoders.product[Streaming.UrlState],
-      Streaming.LateStateEncoder -> Encoders.product[Streaming.LateState],
-      Streaming.ScoredStateEncoder -> Encoders.product[Streaming.ScoredState],
-      Streaming.ScoredLateStateEncoder -> Encoders.product[Streaming.ScoredLateState])
-    passed.foreach { case (face, implicitEnc) =>
-      assert(isBound(face) && !isBound(implicitEnc))
-      assert(face.schema == implicitEnc.schema)
-    }
+    val dir = java.nio.file.Files.createTempDirectory("graft_v1_schema_")
+    try {
+      def stored(name: String) = Streaming.v1States(TestSpark.spark.newSession(),
+        TrendStateFixture.copyTo(name, dir).toString).schema("state").dataType
+      assert(stored("scored") == StructType(Seq(f("core", urlState), f("score", scoreCore))))
+      assert(stored("scored_watermarked") ==
+        StructType(Seq(pending, f("core", urlState), f("score", scoreCore))))
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
   }
 
   /** Whether `enc`'s deserializer is already resolved and bound. */
