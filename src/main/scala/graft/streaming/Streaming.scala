@@ -573,7 +573,7 @@ object Streaming {
     * on the daily faces), then the held-back captures without their url
     * (the group key), a count of 0 on the unwatermarked faces.
     */
-  private[graft] object TrendCodec {
+  private object TrendCodec {
     def store(fold: DayFold, scorer: DayScorer, pending: Seq[Capture]): Array[Byte] = {
       val out = new StateOut
       out.byte(TrendStateVersion)
@@ -645,7 +645,8 @@ object Streaming {
     * url, re-encoded for a v2 face's `initialState`.
     *
     * Start the same face on a NEW checkpoint location from it, and feed
-    * it the captures after the ones the old query processed, e.g.
+    * it the captures after the ones the old query's last committed
+    * batch processed (the state read is that batch's), e.g.
     * `Streaming.scoredStream(captures, query, Some(Streaming.migrateV1(spark, oldCheckpoint)))`.
     * Spark uses an initial state only when the query starts with no
     * checkpointed state of its own. Read any v1 face's checkpoint: its
