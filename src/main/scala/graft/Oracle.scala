@@ -2775,63 +2775,115 @@ object Oracle {
   private lazy val htmlDocPipelineSql: String =
     htmlDocPipelineSqlOver("html_docs AS (SELECT doc_id, text FROM ex)")
 
-  /** v4 funnel twin — shared by the `doc_pipeline_full_v4` row and
-    * the per-reason release card that nests it.
+  /** One leg of a funnel twin: the CTEs it reads (deduplicated across
+    * legs, so a shared prerequisite is emitted once), the join that
+    * brings it in against the cluster labels `l`, its output columns,
+    * and its gates as reason code → SQL predicate.
     */
-  private lazy val docPipelineFullV4Sql: String = {
+  private final case class SqlLeg(
+      ctes: Seq[String],
+      join: String,
+      cols: Seq[String],
+      gates: Seq[(String, String)])
+
+  /** The funnel twins' own reason precedence — restated here, not read
+    * from [[graft.operators.Corpus.Precedence]], so the twin stays an
+    * independent check of the engine's order.
+    */
+  private lazy val funnelPrecedence = Seq(
+    "dup", "contaminated", "semantic_contaminated", "bad_source", "wrong_language",
+    "too_short", "low_quality", "high_perplexity", "repetitive", "dup_spans")
+
+  /** The funnel twins' leg table, in output-column order: the same
+    * CTEs the standalone operator twins use, so a composite can never
+    * disagree with the row that pins its operator.
+    */
+  private lazy val funnelLegs: Map[String, SqlLeg] = {
     val target = graft.operators.Corpus.TargetLangs.toSeq.sorted
       .map(l => s"'$l'").mkString(", ")
-      val reason =
-        s"""CASE WHEN l.doc_id <> l.cluster THEN 'dup'
-           |       WHEN dec.contaminated THEN 'contaminated'
-           |       WHEN sem.contaminated THEN 'semantic_contaminated'
-           |       WHEN NOT gg.keep_source THEN 'bad_source'
-           |       WHEN pl.predicted NOT IN ($target) THEN 'wrong_language'
-           |       WHEN q.n_tokens < ${TextStats.MinTokens} THEN 'too_short'
-           |       WHEN q.quality < ${TextStats.QualityMin} THEN 'low_quality'
-           |       WHEN lm.ppl >= ${graft.operators.Corpus.LmPplMax}E0 THEN 'high_perplexity'
-           |       WHEN rep.top_bigram_frac >= ${graft.operators.Corpus.RepetitionMax} THEN 'repetitive'
-           |       WHEN sd.n_dup_spans > 0 THEN 'dup_spans'
-           |       ELSE 'keep' END""".stripMargin
-      s"""WITH RECURSIVE $nearDupCtes,
-         |$clusterLabelCtes,
-         |$decontCtes,
-         |$vecNormCte,
-         |$embDecontCtes,
-         |${substringSpanCtes(
+    Map(
+      "decontaminate" -> SqlLeg(
+        Seq(decontCtes),
+        "JOIN dec USING (doc_id)",
+        Seq("dec.contamination", "dec.contaminated"),
+        Seq("contaminated" -> "dec.contaminated")),
+      "semantic" -> SqlLeg(
+        Seq(vecNormCte, embDecontCtes),
+        "JOIN semdec sem ON sem.vec_id = l.doc_id",
+        Seq("sem.max_cos", "sem.contaminated AS sem_contaminated"),
+        Seq("semantic_contaminated" -> "sem.contaminated")),
+      "signals" -> SqlLeg(
+        Seq(pipelineFaceCtes),
+        "JOIN q USING (doc_id) JOIN pii USING (doc_id) JOIN rep USING (doc_id)",
+        Seq("q.n_tokens", "q.quality", "pii.n_emails", "pii.n_longnums", "rep.top_bigram_frac"),
+        Seq(
+          "too_short" -> s"q.n_tokens < ${TextStats.MinTokens}",
+          "low_quality" -> s"q.quality < ${TextStats.QualityMin}",
+          "repetitive" -> s"rep.top_bigram_frac >= ${graft.operators.Corpus.RepetitionMax}")),
+      "spans" -> SqlLeg(
+        Seq(
+          substringSpanCtes(
             graft.operators.Dedup.SubstrMinSpanWordsWide,
-            graft.operators.Dedup.SubstrGramNWide)},
-         |sd AS (
-         |  SELECT nw.doc_id,
-         |    CAST(coalesce(a.n_spans, 0) AS BIGINT) AS n_dup_spans,
-         |    CAST(coalesce(a.dup_words, 0) AS BIGINT) AS dup_words
-         |  FROM nw LEFT JOIN (
-         |    SELECT doc_id, count(*) AS n_spans, sum(ee - ss) AS dup_words
-         |    FROM ms GROUP BY doc_id) a USING (doc_id)
-         |),
-         |$pipelineFaceCtes,
-         |$lmStoredCtes,
-         |$gateCtes,
-         |$langPredictCte
-         |SELECT l.doc_id, l.cluster, sz.cluster_size,
-         |  l.doc_id = l.cluster AS is_canonical,
-         |  dec.contamination, dec.contaminated,
-         |  sem.max_cos, sem.contaminated AS sem_contaminated,
-         |  q.n_tokens, q.quality, pii.n_emails, pii.n_longnums,
-         |  rep.top_bigram_frac, sd.n_dup_spans, sd.dup_words,
-         |  lm.ppl, gg.keep_source, pl.predicted AS predicted_lang,
-         |  $reason AS reason,
-         |  ($reason) = 'keep' AS keep
-         |FROM lab l JOIN sz USING (cluster) JOIN dec USING (doc_id)
-         |JOIN semdec sem ON sem.vec_id = l.doc_id
-         |JOIN q USING (doc_id) JOIN pii USING (doc_id) JOIN rep USING (doc_id)
-         |JOIN sd USING (doc_id)
-         |JOIN lmdoc lm ON lm.doc_id = l.doc_id
-         |JOIN plang pl ON pl.doc_id = l.doc_id
-         |JOIN documents dsrc ON dsrc.doc_id = l.doc_id
-         |JOIN gg ON gg.source = dsrc.source
-         |ORDER BY doc_id""".stripMargin
+            graft.operators.Dedup.SubstrGramNWide),
+          """sd AS (
+            |  SELECT nw.doc_id,
+            |    CAST(coalesce(a.n_spans, 0) AS BIGINT) AS n_dup_spans,
+            |    CAST(coalesce(a.dup_words, 0) AS BIGINT) AS dup_words
+            |  FROM nw LEFT JOIN (
+            |    SELECT doc_id, count(*) AS n_spans, sum(ee - ss) AS dup_words
+            |    FROM ms GROUP BY doc_id) a USING (doc_id)
+            |)""".stripMargin),
+        "JOIN sd USING (doc_id)",
+        Seq("sd.n_dup_spans", "sd.dup_words"),
+        Seq("dup_spans" -> "sd.n_dup_spans > 0")),
+      // the Spark side scores through the broadcast kernel; hash
+      // equality here re-proves kernel ≡ join inside the composite
+      "lm" -> SqlLeg(
+        Seq(lmStoredCtes),
+        "JOIN lmdoc lm ON lm.doc_id = l.doc_id",
+        Seq("lm.ppl"),
+        Seq("high_perplexity" -> s"lm.ppl >= ${graft.operators.Corpus.LmPplMax}E0")),
+      // the domain gate reads the signals bundle's q CTE
+      "source" -> SqlLeg(
+        Seq(pipelineFaceCtes, gateCtes),
+        "JOIN documents dsrc ON dsrc.doc_id = l.doc_id\nJOIN gg ON gg.source = dsrc.source",
+        Seq("gg.keep_source"),
+        Seq("bad_source" -> "NOT gg.keep_source")),
+      "lang" -> SqlLeg(
+        Seq(langPredictCte),
+        "JOIN plang pl ON pl.doc_id = l.doc_id",
+        Seq("pl.predicted AS predicted_lang"),
+        Seq("wrong_language" -> s"pl.predicted NOT IN ($target)")))
   }
+
+  /** The fold behind every funnel twin: the cluster-label head (the
+    * `dup` gate) joined with `legs`, and one CASE over every gate in
+    * [[funnelPrecedence]] order. `coded = false` leaves the reason
+    * column out and keeps only the verdict (the `doc_pipeline` shape).
+    */
+  private def funnelSql(legs: Seq[SqlLeg], coded: Boolean = true): String = {
+    val gates = (("dup" -> "l.doc_id <> l.cluster") +: legs.flatMap(_.gates))
+      .sortBy { case (code, _) => funnelPrecedence.indexOf(code) }
+    val reason = gates.map { case (code, p) => s"WHEN $p THEN '$code'" }
+      .mkString("CASE ", "\n       ", "\n       ELSE 'keep' END")
+    val cols = Seq("l.doc_id", "l.cluster", "sz.cluster_size", "l.doc_id = l.cluster AS is_canonical") ++
+      legs.flatMap(_.cols) ++
+      (if (coded) Seq(s"$reason AS reason") else Nil) :+
+      s"($reason) = 'keep' AS keep"
+    s"""WITH RECURSIVE ${(Seq(nearDupCtes, clusterLabelCtes) ++ legs.flatMap(_.ctes)).distinct.mkString(",\n")}
+       |SELECT ${cols.mkString(",\n  ")}
+       |FROM lab l JOIN sz USING (cluster)
+       |${legs.map(_.join).mkString("\n")}
+       |ORDER BY doc_id""".stripMargin
+  }
+
+  private def funnelSqlOf(legs: String*): String = funnelSql(legs.map(funnelLegs))
+
+  /** v4 funnel twin — shared by the `doc_pipeline_full_v4` row and
+    * the release card and export rows that nest it.
+    */
+  private lazy val docPipelineFullV4Sql: String =
+    funnelSqlOf("decontaminate", "semantic", "signals", "spans", "lm", "source", "lang")
 
   /** `warc_pipeline`'s twin: the html pipeline over the WARC reader's
     * URI-keyed ids — the scan emits md5-60bit(Target-URI) for every
@@ -4266,148 +4318,16 @@ object Oracle {
     // the one-job curation composite: same label and contamination CTEs
     // as the standalone twins, joined — the Spark side shares one
     // shingle explode across both operators
-    "doc_pipeline" ->
-      s"""WITH RECURSIVE $nearDupCtes,
-         |$clusterLabelCtes,
-         |$decontCtes
-         |SELECT l.doc_id, l.cluster, sz.cluster_size,
-         |       l.doc_id = l.cluster AS is_canonical,
-         |       dec.n_shingles, dec.n_matched, dec.contamination, dec.contaminated,
-         |       (l.doc_id = l.cluster AND NOT dec.contaminated) AS keep
-         |FROM lab l JOIN sz USING (cluster) JOIN dec USING (doc_id)
-         |ORDER BY doc_id""".stripMargin,
-
-    // the complete curation verdict: label/contamination CTEs shared
-    // with the standalone twins, quality from qualitySelect, PII and
-    // repetition inlined — reason precedence mirrored branch for branch
-    "doc_pipeline_full" -> {
-      val reason =
-        s"""CASE WHEN l.doc_id <> l.cluster THEN 'dup'
-           |       WHEN dec.contaminated THEN 'contaminated'
-           |       WHEN q.n_tokens < ${TextStats.MinTokens} THEN 'too_short'
-           |       WHEN q.quality < ${TextStats.QualityMin} THEN 'low_quality'
-           |       WHEN rep.top_bigram_frac >= ${graft.operators.Corpus.RepetitionMax} THEN 'repetitive'
-           |       ELSE 'keep' END""".stripMargin
-      s"""WITH RECURSIVE $nearDupCtes,
-         |$clusterLabelCtes,
-         |$decontCtes,
-         |$pipelineFaceCtes
-         |SELECT l.doc_id, l.cluster, sz.cluster_size,
-         |  l.doc_id = l.cluster AS is_canonical,
-         |  dec.contamination, dec.contaminated,
-         |  q.n_tokens, q.quality, pii.n_emails, pii.n_longnums,
-         |  rep.top_bigram_frac,
-         |  $reason AS reason,
-         |  ($reason) = 'keep' AS keep
-         |FROM lab l JOIN sz USING (cluster) JOIN dec USING (doc_id)
-         |JOIN q USING (doc_id) JOIN pii USING (doc_id) JOIN rep USING (doc_id)
-         |ORDER BY doc_id""".stripMargin
+    "doc_pipeline" -> {
+      val dec = funnelLegs("decontaminate")
+      funnelSql(Seq(dec.copy(cols = Seq("dec.n_shingles", "dec.n_matched") ++ dec.cols)), coded = false)
     },
 
-    // the v2 composite: v1's label/contamination/quality/PII/
-    // repetition faces plus the SEMANTIC decontamination CTEs (vn +
-    // sem_*) and the production-width duplicated-span CTEs — reason
-    // precedence mirrored branch for branch, two new codes
-    "doc_pipeline_full_v2" -> {
-      val reason =
-        s"""CASE WHEN l.doc_id <> l.cluster THEN 'dup'
-           |       WHEN dec.contaminated THEN 'contaminated'
-           |       WHEN sem.contaminated THEN 'semantic_contaminated'
-           |       WHEN q.n_tokens < ${TextStats.MinTokens} THEN 'too_short'
-           |       WHEN q.quality < ${TextStats.QualityMin} THEN 'low_quality'
-           |       WHEN rep.top_bigram_frac >= ${graft.operators.Corpus.RepetitionMax} THEN 'repetitive'
-           |       WHEN sd.n_dup_spans > 0 THEN 'dup_spans'
-           |       ELSE 'keep' END""".stripMargin
-      s"""WITH RECURSIVE $nearDupCtes,
-         |$clusterLabelCtes,
-         |$decontCtes,
-         |$vecNormCte,
-         |$embDecontCtes,
-         |${substringSpanCtes(
-            graft.operators.Dedup.SubstrMinSpanWordsWide,
-            graft.operators.Dedup.SubstrGramNWide)},
-         |sd AS (
-         |  SELECT nw.doc_id,
-         |    CAST(coalesce(a.n_spans, 0) AS BIGINT) AS n_dup_spans,
-         |    CAST(coalesce(a.dup_words, 0) AS BIGINT) AS dup_words
-         |  FROM nw LEFT JOIN (
-         |    SELECT doc_id, count(*) AS n_spans, sum(ee - ss) AS dup_words
-         |    FROM ms GROUP BY doc_id) a USING (doc_id)
-         |),
-         |$pipelineFaceCtes
-         |SELECT l.doc_id, l.cluster, sz.cluster_size,
-         |  l.doc_id = l.cluster AS is_canonical,
-         |  dec.contamination, dec.contaminated,
-         |  sem.max_cos, sem.contaminated AS sem_contaminated,
-         |  q.n_tokens, q.quality, pii.n_emails, pii.n_longnums,
-         |  rep.top_bigram_frac, sd.n_dup_spans, sd.dup_words,
-         |  $reason AS reason,
-         |  ($reason) = 'keep' AS keep
-         |FROM lab l JOIN sz USING (cluster) JOIN dec USING (doc_id)
-         |JOIN semdec sem ON sem.vec_id = l.doc_id
-         |JOIN q USING (doc_id) JOIN pii USING (doc_id) JOIN rep USING (doc_id)
-         |JOIN sd USING (doc_id)
-         |ORDER BY doc_id""".stripMargin
-    },
-
-    // v3 = the v2 funnel + the frozen-LM perplexity leg (shared
-    // lmStoredCtes — the Spark side scores through the broadcast
-    // kernel; hash equality here re-proves kernel ≡ join INSIDE the
-    // composite) + the domain gate (gateCtes over the shared q CTE).
-    // Reason precedence inserts bad_source after the contamination
-    // group and high_perplexity after low_quality.
-    "doc_pipeline_full_v3" -> {
-      val reason =
-        s"""CASE WHEN l.doc_id <> l.cluster THEN 'dup'
-           |       WHEN dec.contaminated THEN 'contaminated'
-           |       WHEN sem.contaminated THEN 'semantic_contaminated'
-           |       WHEN NOT gg.keep_source THEN 'bad_source'
-           |       WHEN q.n_tokens < ${TextStats.MinTokens} THEN 'too_short'
-           |       WHEN q.quality < ${TextStats.QualityMin} THEN 'low_quality'
-           |       WHEN lm.ppl >= ${graft.operators.Corpus.LmPplMax}E0 THEN 'high_perplexity'
-           |       WHEN rep.top_bigram_frac >= ${graft.operators.Corpus.RepetitionMax} THEN 'repetitive'
-           |       WHEN sd.n_dup_spans > 0 THEN 'dup_spans'
-           |       ELSE 'keep' END""".stripMargin
-      s"""WITH RECURSIVE $nearDupCtes,
-         |$clusterLabelCtes,
-         |$decontCtes,
-         |$vecNormCte,
-         |$embDecontCtes,
-         |${substringSpanCtes(
-            graft.operators.Dedup.SubstrMinSpanWordsWide,
-            graft.operators.Dedup.SubstrGramNWide)},
-         |sd AS (
-         |  SELECT nw.doc_id,
-         |    CAST(coalesce(a.n_spans, 0) AS BIGINT) AS n_dup_spans,
-         |    CAST(coalesce(a.dup_words, 0) AS BIGINT) AS dup_words
-         |  FROM nw LEFT JOIN (
-         |    SELECT doc_id, count(*) AS n_spans, sum(ee - ss) AS dup_words
-         |    FROM ms GROUP BY doc_id) a USING (doc_id)
-         |),
-         |$pipelineFaceCtes,
-         |$lmStoredCtes,
-         |$gateCtes
-         |SELECT l.doc_id, l.cluster, sz.cluster_size,
-         |  l.doc_id = l.cluster AS is_canonical,
-         |  dec.contamination, dec.contaminated,
-         |  sem.max_cos, sem.contaminated AS sem_contaminated,
-         |  q.n_tokens, q.quality, pii.n_emails, pii.n_longnums,
-         |  rep.top_bigram_frac, sd.n_dup_spans, sd.dup_words,
-         |  lm.ppl, gg.keep_source,
-         |  $reason AS reason,
-         |  ($reason) = 'keep' AS keep
-         |FROM lab l JOIN sz USING (cluster) JOIN dec USING (doc_id)
-         |JOIN semdec sem ON sem.vec_id = l.doc_id
-         |JOIN q USING (doc_id) JOIN pii USING (doc_id) JOIN rep USING (doc_id)
-         |JOIN sd USING (doc_id)
-         |JOIN lmdoc lm ON lm.doc_id = l.doc_id
-         |JOIN documents dsrc ON dsrc.doc_id = l.doc_id
-         |JOIN gg ON gg.source = dsrc.source
-         |ORDER BY doc_id""".stripMargin
-    },
-
-    // v4 = the v3 funnel + the language gate: wrong_language between
-    // bad_source and too_short, predicted via the shared plang CTE
+    // the funnel variants as leg subsets of the one table
+    "doc_pipeline_full" -> funnelSqlOf("decontaminate", "signals"),
+    "doc_pipeline_full_v2" -> funnelSqlOf("decontaminate", "semantic", "signals", "spans"),
+    "doc_pipeline_full_v3" ->
+      funnelSqlOf("decontaminate", "semantic", "signals", "spans", "lm", "source"),
     "doc_pipeline_full_v4" -> docPipelineFullV4Sql,
 
     // the funnel release card: per-reason counts + shares over the v4

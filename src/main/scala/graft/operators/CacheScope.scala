@@ -21,15 +21,34 @@ import org.apache.spark.storage.StorageLevel
   * persists and are untouched by [[releaseAll]].
   */
 object CacheScope {
+  private[operators] type Scopes = List[java.util.concurrent.ConcurrentLinkedQueue[DataFrame]]
+
   private val registered = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
 
   // Innermost-first stack of active lexical scopes on this thread.
   // Plan construction (where persist() is called) is driver-side and
-  // single-threaded per query, so a thread-local is the right owner.
-  private val scopes =
-    new ThreadLocal[List[java.util.concurrent.ConcurrentLinkedQueue[DataFrame]]] {
-      override def initialValue: List[java.util.concurrent.ConcurrentLinkedQueue[DataFrame]] = Nil
-    }
+  // single-threaded per query, so a thread-local is the right owner;
+  // an operator that persists on worker threads hands them its stack
+  // with [[openScopes]] and [[within]].
+  private val scopes = new ThreadLocal[Scopes] {
+    override def initialValue: Scopes = Nil
+  }
+
+  /** The scopes open on the calling thread, to hand to a worker thread. */
+  private[operators] def openScopes: Scopes = scopes.get
+
+  /** Run `body` on this thread inside `open`, a stack taken from
+    * [[openScopes]] on another thread: its persists register where
+    * that thread's would (the innermost scope, else the global
+    * registry). The owner must not exit those scopes before `body`
+    * returns, or a late persist lands in a queue already drained.
+    */
+  private[operators] def within[T](open: Scopes)(body: => T): T = {
+    val prev = scopes.get
+    scopes.set(open)
+    try body
+    finally scopes.set(prev)
+  }
 
   /** Persist `df` (MEMORY_AND_DISK) and register it for scoped release:
     * into the innermost active [[withScope]] block if one is open on

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -177,8 +177,8 @@ object Corpus {
   def dedupExportBest(docs: DataFrame): DataFrame = {
     // the quality leg (one docs scan) materializes concurrently with
     // the eager cluster loop — identical frames, overlapped wall-clock
-    val (labels, legs) = withConcurrentLegs(Seq(
-      () => TextStats.quality(docs).select(col("doc_id"), col("quality")))) {
+    val (labels, legs) = withConcurrentLegs("doc_dedup_export_best", Seq(
+      "quality" -> (() => TextStats.quality(docs).select(col("doc_id"), col("quality"))))) {
       dedupClusters(docs)
     }
     val q = legs(0)
@@ -525,11 +525,18 @@ object Corpus {
     * eager cluster stage fully serialized against ~6 s of lazy legs.
     * Results are identical by construction: the returned frames are
     * the same plans the composed join consumed before; materialization
-    * order changes WHEN the cache fills, never its content. Persists
-    * land in the session-global CacheScope registry (pool threads hold
-    * no lexical scope), released by the harness's per-query
-    * releaseAll; long-lived library sessions share the releaseAll
-    * obligation documented on [[snapshotDiffNear]].
+    * order changes WHEN the cache fills, never its content.
+    *
+    * Each pool thread adopts the caller's CacheScope stack for its
+    * leg, so a leg persists where the caller's own persist would: into
+    * the caller's innermost scope, else the session-global registry
+    * that the harness's per-query releaseAll drains. Every exit,
+    * failure included, waits for the pool to terminate, so no late leg
+    * registers into a scope the caller has already drained.
+    *
+    * Jobs are labelled through `spark.job.description`, leaving the
+    * caller's job group alone: a leg's jobs read `<variant> leg
+    * <name>`, the eager stage's `<variant> clusters`.
     *
     * INVARIANT (CacheScope survivor snapshot): legs must not persist
     * frames plan-equal to persists registered INSIDE the caller's
@@ -540,89 +547,51 @@ object Corpus {
     * this: the legs (decon/semantic/signals/spans/LM/gate/lang) share
     * no plan with the loop's internals (minhash, verified pairs), and
     * the one deliberately shared frame (the shingle explode) is
-    * registered GLOBALLY before either side starts.
+    * registered outside the eager scope before either side starts.
     */
-  private def withConcurrentLegs(legs: Seq[() => DataFrame])(
+  private def withConcurrentLegs(variant: String, legs: Seq[(String, () => DataFrame)])(
       eager: => DataFrame): (DataFrame, IndexedSeq[DataFrame]) = {
-    if (legs.isEmpty) return (eager, IndexedSeq.empty)
+    val open = CacheScope.openScopes
     val pool = java.util.concurrent.Executors.newFixedThreadPool(legs.size)
-    val futs = legs.toIndexedSeq.map(f =>
-      pool.submit(new java.util.concurrent.Callable[DataFrame] {
-        def call(): DataFrame = {
-          val df = CacheScope.persist(f())
-          df.count() // fill the cache while the eager stage runs
-          df
-        }
-      }))
+    var ok = false
     try {
-      // eager first: if IT throws, cancel the in-flight legs instead of
-      // letting detached jobs run (and register persists) for a failed
-      // invocation
-      val e =
-        try eager
-        catch {
-          case t: Throwable =>
-            futs.foreach(_.cancel(true))
-            pool.shutdownNow()
-            throw t
-        }
+      val futs = legs.toIndexedSeq.map { case (name, f) =>
+        pool.submit(new java.util.concurrent.Callable[DataFrame] {
+          def call(): DataFrame = described(s"$variant leg $name") {
+            CacheScope.within(open) {
+              val df = CacheScope.persist(f())
+              df.count() // fill the cache while the eager stage runs
+              df
+            }
+          }
+        })
+      }
+      val e = described(s"$variant clusters")(eager)
       // unwrap a leg failure to its original exception type — callers
       // should see the Spark error, not ExecutionException plumbing
       val legResults = futs.map(f =>
         try f.get()
         catch {
           case ee: java.util.concurrent.ExecutionException =>
-            futs.foreach(_.cancel(true))
             throw Option(ee.getCause).getOrElse(ee)
         })
+      ok = true
       (e, legResults)
-    } finally pool.shutdown()
+    } finally {
+      // a failed call interrupts its in-flight legs instead of letting
+      // detached jobs run (and register persists) for it
+      if (ok) pool.shutdown() else pool.shutdownNow()
+      pool.awaitTermination(Long.MaxValue, java.util.concurrent.TimeUnit.NANOSECONDS)
+    }
   }
 
-  /** One-job curation pipeline: near-dup clustering AND benchmark
-    * decontamination fed from a SINGLE persisted shingle explode, plus
-    * the combined keep verdict (canonical in its cluster and not
-    * contaminated). Running the operators standalone pays the
-    * corpus-wide tokenize+explode once EACH — the explode is the
-    * dominant cost of every shingle consumer at 100 TB, so a curation
-    * job that needs several must share it. Benchmark documents are
-    * excluded from the verdict, exactly as in [[decontaminate]].
-    *
-    * The individual registry queries stay isolated (each oracle row
-    * exercises one operator); this is the composition a production
-    * pipeline would actually run.
-    */
-  def docPipeline(docs: DataFrame): DataFrame = {
-    val sh = CacheScope.persist(Dedup.shingles(docs))
-    // materialize the shared explode ONCE before both concurrent
-    // consumers (the loop's minhash and the decontamination probe)
-    // race to fill it
-    sh.count()
-    // scope the clustering stage exactly as dedupClusters does: the
-    // minhash and verified-pair persists release the moment the edge
-    // checkpoint materializes instead of pinning storage memory through
-    // decontamination and the final join. The shared `sh` is registered
-    // GLOBALLY (above, outside the scope), so scope exit leaves it
-    // cached for the decontamination branch.
-    val (clusters, legs) = withConcurrentLegs(Seq(
-      () => decontaminateFromShingles(docs, sh))) {
-      CacheScope.withScope {
-        dedupClustersFromPairs(docs, Dedup.nearDupPairsFromShingles(sh))
-      }
-    }
-    val decon = legs(0)
-    // inner join: decontaminate already excludes benchmark docs
-    clusters.join(decon, "doc_id")
-      .select(
-        col("doc_id"),
-        col("cluster"),
-        col("cluster_size"),
-        col("is_canonical"),
-        col("n_shingles"),
-        col("n_matched"),
-        col("contamination"),
-        col("contaminated"),
-        (col("is_canonical") && !col("contaminated")).as("keep"))
+  /** Run `body` with this thread's Spark job description set to `desc`. */
+  private def described[T](desc: String)(body: => T): T = {
+    val sc = org.apache.spark.SparkContext.getOrCreate()
+    val prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(desc)
+    try body
+    finally sc.setJobDescription(prev)
   }
 
   /** [[docPipelineFull]] drops a document whose dominant bigram claims
@@ -633,152 +602,6 @@ object Corpus {
     */
   val RepetitionMax = 0.1
 
-  /** The COMPLETE keep verdict a pretraining curation job runs, as one
-    * composed plan: near-dup clustering + benchmark decontamination
-    * (both off the ONE persisted shingle explode, as [[docPipeline]]),
-    * plus quality/too-short, PII counts, and the repetition signal —
-    * one row per non-benchmark document with the verdict and the FIRST
-    * failing reason (precedence: dup > contaminated > too_short >
-    * low_quality > repetitive).
-    *
-    * The per-doc signals (quality, PII, repetition) are per-row
-    * projections or doc-keyed aggregates — they compose as plans, so
-    * Catalyst shares the documents scan across them; the expensive
-    * corpus-wide explode is the shingle one, paid once. The individual
-    * registry queries stay isolated (each oracle row exercises one
-    * operator); this is the job a production pipeline actually
-    * schedules.
-    */
-  def docPipelineFull(docs: DataFrame): DataFrame = {
-    val sh = CacheScope.persist(Dedup.shingles(docs))
-    sh.count() // materialize the shared explode once, before both consumers
-    // same scoping as docPipeline: the clustering stage's minhash and
-    // verified-pair persists release when the edge checkpoint
-    // materializes; the shared `sh` is registered globally above.
-    // The per-doc legs materialize concurrently with the eager loop
-    // (withConcurrentLegs) — identical frames, overlapped wall-clock.
-    val (clusters, legs) = withConcurrentLegs(Seq(
-      () => decontaminateFromShingles(docs, sh)
-        .select(col("doc_id"), col("contamination"), col("contaminated")),
-      () => TextStats.quality(docs).select(col("doc_id"), col("n_tokens"), col("quality")),
-      () => TextStats.piiScrub(docs).select(col("doc_id"), col("n_emails"), col("n_longnums")),
-      () => TextStats.repetition(docs).select(col("doc_id"), col("top_bigram_frac")))) {
-      CacheScope.withScope {
-        dedupClustersFromPairs(docs, Dedup.nearDupPairsFromShingles(sh))
-      }
-    }
-    val Seq(decon, q, pii, rep) = legs.toSeq
-    val reason = when(!col("is_canonical"), "dup")
-      .when(col("contaminated"), "contaminated")
-      .when(col("n_tokens") < TextStats.MinTokens, "too_short")
-      .when(col("quality") < TextStats.QualityMin, "low_quality")
-      .when(col("top_bigram_frac") >= RepetitionMax, "repetitive")
-      .otherwise("keep")
-    // inner join to decon: benchmark docs are excluded from the verdict
-    clusters.join(decon, "doc_id")
-      .join(q, "doc_id")
-      .join(pii, "doc_id")
-      .join(rep, "doc_id")
-      .select(
-        col("doc_id"),
-        col("cluster"),
-        col("cluster_size"),
-        col("is_canonical"),
-        col("contamination"),
-        col("contaminated"),
-        col("n_tokens"),
-        col("quality"),
-        col("n_emails"),
-        col("n_longnums"),
-        col("top_bigram_frac"),
-        reason.as("reason"),
-        (reason === "keep").as("keep"))
-  }
-
-  /** The COMPLETE keep decision, v2: [[docPipelineFull]]'s composite
-    * plus the two evidence faces the engine computes but the v1
-    * verdict never consulted — SEMANTIC decontamination (embedding
-    * cosine vs the frozen benchmark set,
-    * [[graft.operators.Ann.embDecontaminate]]; a paraphrased
-    * benchmark variant shares no shingles, so the n-gram face alone
-    * misses it) and DUPLICATED-SPAN evidence at production width
-    * ([[graft.operators.Dedup.substringDedup]], 20-word grams /
-    * 50-word floor; a doc that is mostly its own text but carries a
-    * verbatim Lee-et-al-scale copied passage is not a near-dup of
-    * anything, so clustering alone misses it).
-    *
-    * Reason precedence extends v1's: dup > contaminated >
-    * semantic_contaminated > too_short > low_quality > repetitive >
-    * dup_spans > keep. `emb` is the doc-aligned embedding table
-    * (vec_id = doc_id); both sides exclude benchmark ids by the same
-    * [[BenchmarkMod]], so the inner joins line up exactly.
-    *
-    * Scale shape: one shared shingle explode feeds clustering AND
-    * n-gram decontamination (v1's plan); quality + PII + repetition
-    * fuse into ONE docs scan ([[TextStats.verdictSignals]] — one
-    * persisted projection, one tagged word+bigram explode); the
-    * semantic face is a per-row compiled kernel over a collected
-    * benchmark (no join); the span face is the two-level hash filter
-    * whose corpus-sized shuffle carries 8-byte keys. Nothing here
-    * adds a corpus×corpus pair.
-    */
-  def docPipelineFullV2(docs: DataFrame, emb: DataFrame): DataFrame = {
-    val sh = CacheScope.persist(Dedup.shingles(docs))
-    sh.count() // materialize the shared explode once, before both consumers
-    // quality + PII + repetition fused into one scan of docs
-    // (TextStats.verdictSignals: one persisted projection, one tagged
-    // explode) — bit-equal to the three standalone operators, minus
-    // two corpus scans and a words explode. All four legs materialize
-    // concurrently with the eager cluster loop (withConcurrentLegs).
-    val (clusters, legs) = withConcurrentLegs(Seq(
-      () => decontaminateFromShingles(docs, sh)
-        .select(col("doc_id"), col("contamination"), col("contaminated")),
-      () => graft.operators.Ann.embDecontaminate(emb)
-        .select(
-          col("vec_id").as("doc_id"),
-          col("max_cos"),
-          col("contaminated").as("sem_contaminated")),
-      () => TextStats.verdictSignals(docs),
-      () => Dedup.substringDedup(
-        docs, Dedup.SubstrMinSpanWordsWide, Dedup.SubstrGramNWide)
-        .select(col("doc_id"), col("n_spans").as("n_dup_spans"), col("dup_words")))) {
-      CacheScope.withScope {
-        dedupClustersFromPairs(docs, Dedup.nearDupPairsFromShingles(sh))
-      }
-    }
-    val Seq(decon, sem, signals, spans) = legs.toSeq
-    val reason = when(!col("is_canonical"), "dup")
-      .when(col("contaminated"), "contaminated")
-      .when(col("sem_contaminated"), "semantic_contaminated")
-      .when(col("n_tokens") < TextStats.MinTokens, "too_short")
-      .when(col("quality") < TextStats.QualityMin, "low_quality")
-      .when(col("top_bigram_frac") >= RepetitionMax, "repetitive")
-      .when(col("n_dup_spans") > 0, "dup_spans")
-      .otherwise("keep")
-    clusters.join(decon, "doc_id")
-      .join(sem, "doc_id")
-      .join(signals, "doc_id")
-      .join(spans, "doc_id")
-      .select(
-        col("doc_id"),
-        col("cluster"),
-        col("cluster_size"),
-        col("is_canonical"),
-        col("contamination"),
-        col("contaminated"),
-        col("max_cos"),
-        col("sem_contaminated"),
-        col("n_tokens"),
-        col("quality"),
-        col("n_emails"),
-        col("n_longnums"),
-        col("top_bigram_frac"),
-        col("n_dup_spans"),
-        col("dup_words"),
-        reason.as("reason"),
-        (reason === "keep").as("keep"))
-  }
-
   /** Perplexity ceiling for the v3 funnel's LM leg: documents whose
     * stored-model perplexity reaches this are flagged
     * `high_perplexity` (the CCNet head/middle/tail cut, here a fixed
@@ -786,88 +609,6 @@ object Corpus {
     * leg demonstrably fires past the upstream filters).
     */
   val LmPplMax = 33.5
-
-  /** v3 = the COMPLETE curation funnel a production pipeline runs:
-    * the [[docPipelineFullV2]] legs plus the two model/domain reads —
-    * frozen-LM perplexity ([[TextStats.lmScoreKernel]] against the
-    * stored pruned artifact, a broadcast per-row probe adding ZERO
-    * shuffles) and the domain gate ([[sourceQualityGate]], one
-    * source-keyed rollup broadcast back). Reason precedence: dup >
-    * contaminated > semantic_contaminated > bad_source > too_short >
-    * low_quality > high_perplexity > repetitive > dup_spans > keep —
-    * domain verdicts outrank per-doc quality (a good page on a spam
-    * farm still drops), and the LM read refines the heuristic quality
-    * cut, not the other way around.
-    */
-  def docPipelineFullV3(
-      docs: DataFrame,
-      emb: DataFrame,
-      lmBi: Map[(String, String), Long],
-      lmUni: Map[String, Long],
-      lmV: Long): DataFrame = {
-    val sh = CacheScope.persist(Dedup.shingles(docs))
-    sh.count() // materialize the shared explode once, before both consumers
-    // all six legs materialize concurrently with the eager cluster
-    // loop (withConcurrentLegs) — identical frames, overlapped wall-clock
-    val (clusters, legs) = withConcurrentLegs(Seq(
-      () => decontaminateFromShingles(docs, sh)
-        .select(col("doc_id"), col("contamination"), col("contaminated")),
-      () => graft.operators.Ann.embDecontaminate(emb)
-        .select(
-          col("vec_id").as("doc_id"),
-          col("max_cos"),
-          col("contaminated").as("sem_contaminated")),
-      () => TextStats.verdictSignals(docs),
-      () => Dedup.substringDedup(
-        docs, Dedup.SubstrMinSpanWordsWide, Dedup.SubstrGramNWide)
-        .select(col("doc_id"), col("n_spans").as("n_dup_spans"), col("dup_words")),
-      () => TextStats.lmScoreStored(docs, lmBi, lmUni, lmV)
-        .select(col("doc_id"), col("ppl")),
-      () => sourceQualityGate(docs).select(col("source"), col("keep_source")))) {
-      CacheScope.withScope {
-        dedupClustersFromPairs(docs, Dedup.nearDupPairsFromShingles(sh))
-      }
-    }
-    val Seq(decon, sem, signals, spans, lm, gateLeg) = legs.toSeq
-    val gate = broadcast(gateLeg)
-    val reason = when(!col("is_canonical"), "dup")
-      .when(col("contaminated"), "contaminated")
-      .when(col("sem_contaminated"), "semantic_contaminated")
-      .when(!col("keep_source"), "bad_source")
-      .when(col("n_tokens") < TextStats.MinTokens, "too_short")
-      .when(col("quality") < TextStats.QualityMin, "low_quality")
-      .when(col("ppl") >= LmPplMax, "high_perplexity")
-      .when(col("top_bigram_frac") >= RepetitionMax, "repetitive")
-      .when(col("n_dup_spans") > 0, "dup_spans")
-      .otherwise("keep")
-    clusters.join(decon, "doc_id")
-      .join(sem, "doc_id")
-      .join(signals, "doc_id")
-      .join(spans, "doc_id")
-      .join(lm, "doc_id")
-      .join(docs.select("doc_id", "source"), Seq("doc_id"))
-      .join(gate, "source")
-      .select(
-        col("doc_id"),
-        col("cluster"),
-        col("cluster_size"),
-        col("is_canonical"),
-        col("contamination"),
-        col("contaminated"),
-        col("max_cos"),
-        col("sem_contaminated"),
-        col("n_tokens"),
-        col("quality"),
-        col("n_emails"),
-        col("n_longnums"),
-        col("top_bigram_frac"),
-        col("n_dup_spans"),
-        col("dup_words"),
-        col("ppl"),
-        col("keep_source"),
-        reason.as("reason"),
-        (reason === "keep").as("keep"))
-  }
 
   /** Default target-language set for [[docPipelineFullV4]]'s language
     * gate — the parameter a real curation run sets to its training
@@ -877,21 +618,196 @@ object Corpus {
     */
   val TargetLangs: Set[String] = Set("en")
 
-  /** v4 = the v3 funnel + the LANGUAGE GATE: documents whose
-    * [[TextStats.langId]] prediction falls outside `targetLangs` drop
-    * with `wrong_language`, slotted between `bad_source` and
-    * `too_short` — language is a corpus-composition decision like the
-    * domain gate (a fluent page in the wrong language still drops),
-    * and it outranks per-doc quality reads (a wrong-language doc's
-    * quality/perplexity signals are meaningless under an
-    * English-marker battery). Reason precedence: dup > contaminated >
-    * semantic_contaminated > bad_source > wrong_language > too_short >
-    * low_quality > high_perplexity > repetitive > dup_spans > keep.
+  /** The curation funnel's reason codes in precedence order: a dropped
+    * document reports the FIRST gate it fails, and every variant's
+    * order is a subsequence of this one.
     *
-    * Scale shape: the language leg is [[TextStats.langId]]'s one
-    * words-explode + broadcast marker join — at production it shares
-    * the verdictSignals explode's scan; here it stays the verified
-    * standalone face joined doc-keyed, adding no corpus×corpus work.
+    *  - `dup` first: a non-canonical member of a near-dup cluster drops
+    *    whatever else it is, so a verbatim benchmark copy that clusters
+    *    with its original reports `dup`.
+    *  - `contaminated` then `semantic_contaminated`: benchmark leakage,
+    *    n-gram overlap before embedding cosine, which catches the
+    *    paraphrases that share no shingles.
+    *  - `bad_source`: domain verdicts outrank per-doc quality (a good
+    *    page on a spam farm still drops).
+    *  - `wrong_language`: a corpus-composition decision like the domain
+    *    gate (a fluent page in the wrong language still drops), and it
+    *    outranks the per-doc quality reads, whose English-marker
+    *    battery means nothing on another language.
+    *  - `too_short`, `low_quality`: the heuristic quality cut.
+    *  - `high_perplexity`: the LM read refines the heuristic quality
+    *    cut, not the other way around.
+    *  - `repetitive` (Gopher bigram dominance), then `dup_spans`: a doc
+    *    that is mostly its own text but carries a copied passage is not
+    *    a near-dup of anything, so only the span evidence catches it.
+    */
+  val Precedence: Seq[String] = Seq(
+    "dup", "contaminated", "semantic_contaminated", "bad_source", "wrong_language",
+    "too_short", "low_quality", "high_perplexity", "repetitive", "dup_spans")
+
+  /** One leg of the curation funnel: `build` makes a frame keyed by
+    * `key` carrying `cols`, and each gate is a reason code with the
+    * predicate over `cols` that drops a document with it. `key` is
+    * `doc_id`, or `source` for a per-domain verdict, which joins back
+    * through each document's source and broadcasts.
+    */
+  private final case class Leg(
+      name: String,
+      build: () => DataFrame,
+      key: String,
+      cols: Seq[String],
+      gates: Seq[(String, Column)])
+
+  private type StoredLm = (Map[(String, String), Long], Map[String, Long], Long)
+
+  /** The funnel's leg table over one call's inputs, in output-column
+    * order; a variant is the subset of legs it picks. The cluster
+    * stage is every variant's head and gives the `dup` gate.
+    *
+    * Scale shape: one shared shingle explode (`sh`) feeds clustering
+    * AND n-gram decontamination; quality + PII + repetition fuse into
+    * ONE docs scan ([[TextStats.verdictSignals]], bit-equal to the
+    * three standalone operators); the semantic face is a per-row
+    * compiled kernel over a collected benchmark (no join); the span
+    * face is the two-level hash filter whose corpus-sized shuffle
+    * carries 8-byte keys; the LM leg is a broadcast per-row probe of
+    * the stored pruned artifact, adding no shuffle; the domain gate is
+    * one source-keyed rollup broadcast back; the language leg is
+    * [[TextStats.langId]]'s words explode and broadcast marker join.
+    * Nothing here adds a corpus×corpus pair. `emb` (the doc-aligned
+    * embedding table, vec_id = doc_id) and `lm` are read only by the
+    * legs that need them; both sides exclude benchmark ids by the same
+    * [[BenchmarkMod]], so the inner joins line up exactly.
+    */
+  private final class Legs(
+      docs: DataFrame,
+      sh: DataFrame,
+      emb: Option[DataFrame],
+      lm: Option[StoredLm],
+      targetLangs: Set[String]) {
+    val decontaminate = Leg("decontaminate",
+      () => decontaminateFromShingles(docs, sh), "doc_id",
+      Seq("contamination", "contaminated"),
+      Seq("contaminated" -> col("contaminated")))
+    val semantic = Leg("semantic",
+      () => Ann.embDecontaminate(emb.get)
+        .withColumnRenamed("vec_id", "doc_id")
+        .withColumnRenamed("contaminated", "sem_contaminated"), "doc_id",
+      Seq("max_cos", "sem_contaminated"),
+      Seq("semantic_contaminated" -> col("sem_contaminated")))
+    val signals = Leg("signals",
+      () => TextStats.verdictSignals(docs), "doc_id",
+      Seq("n_tokens", "quality", "n_emails", "n_longnums", "top_bigram_frac"),
+      Seq(
+        "too_short" -> (col("n_tokens") < TextStats.MinTokens),
+        "low_quality" -> (col("quality") < TextStats.QualityMin),
+        "repetitive" -> (col("top_bigram_frac") >= RepetitionMax)))
+    val spans = Leg("spans",
+      () => Dedup.substringDedup(docs, Dedup.SubstrMinSpanWordsWide, Dedup.SubstrGramNWide)
+        .withColumnRenamed("n_spans", "n_dup_spans"), "doc_id",
+      Seq("n_dup_spans", "dup_words"),
+      Seq("dup_spans" -> (col("n_dup_spans") > 0)))
+    val perplexity = Leg("lm",
+      () => {
+        val (bi, uni, v) = lm.get
+        TextStats.lmScoreStored(docs, bi, uni, v)
+      }, "doc_id",
+      Seq("ppl"),
+      Seq("high_perplexity" -> (col("ppl") >= LmPplMax)))
+    val source = Leg("source",
+      () => sourceQualityGate(docs), "source",
+      Seq("keep_source"),
+      Seq("bad_source" -> !col("keep_source")))
+    val language = Leg("lang",
+      () => TextStats.langId(docs).withColumnRenamed("predicted", "predicted_lang"), "doc_id",
+      Seq("predicted_lang"),
+      Seq("wrong_language" -> !col("predicted_lang").isin(targetLangs.toSeq: _*)))
+  }
+
+  /** The funnel fold behind every variant: persist and count the
+    * shared shingle explode, build the picked legs on
+    * [[withConcurrentLegs]] beside the scoped cluster loop, join them
+    * inner on `doc_id` (decontamination excludes benchmark docs, so
+    * they drop here) and then on `source`, and code each document with
+    * the first of its gates in [[Precedence]] order.
+    */
+  private def funnel(
+      variant: String,
+      docs: DataFrame,
+      emb: Option[DataFrame] = None,
+      lm: Option[StoredLm] = None,
+      targetLangs: Set[String] = TargetLangs)(pick: Legs => Seq[Leg]): DataFrame = {
+    val sh = CacheScope.persist(Dedup.shingles(docs))
+    // materialize the shared explode ONCE, before the cluster loop's
+    // minhash and the decontamination leg race to fill it
+    described(s"$variant clusters")(sh.count())
+    val legs = pick(new Legs(docs, sh, emb, lm, targetLangs))
+    // the clustering stage is scoped as dedupClusters scopes it: its
+    // minhash and verified-pair persists release the moment the edge
+    // checkpoint materializes; `sh` is registered outside that scope,
+    // so it stays cached for the decontamination leg
+    val (clusters, frames) = withConcurrentLegs(variant,
+      legs.map(l => l.name -> (() => l.build().select((l.key +: l.cols).map(col): _*)))) {
+      CacheScope.withScope {
+        dedupClustersFromPairs(docs, Dedup.nearDupPairsFromShingles(sh))
+      }
+    }
+    val keyed = legs.map(_.key).zip(frames)
+    val byDoc = keyed.collect { case ("doc_id", f) => f }.foldLeft(clusters)(_.join(_, "doc_id"))
+    val bySource = keyed.collect { case ("source", f) => f }
+    val joined =
+      if (bySource.isEmpty) byDoc
+      else bySource.foldLeft(byDoc.join(docs.select("doc_id", "source"), Seq("doc_id")))(
+        (acc, f) => acc.join(broadcast(f), "source"))
+    val gates = (("dup" -> !col("is_canonical")) +: legs.flatMap(_.gates))
+      .sortBy { case (code, _) => Precedence.indexOf(code) }
+    val reason = gates.tail
+      .foldLeft(when(gates.head._2, gates.head._1)) { case (c, (code, p)) => c.when(p, code) }
+      .otherwise("keep")
+    joined.select(
+      (Seq("doc_id", "cluster", "cluster_size", "is_canonical") ++ legs.flatMap(_.cols)).map(col) ++
+        Seq(reason.as("reason"), (reason === "keep").as("keep")): _*)
+  }
+
+  /** One-job curation pipeline: near-dup clustering and benchmark
+    * decontamination off ONE shared shingle explode, with their
+    * counts and the combined keep verdict (canonical and not
+    * contaminated). Running the two operators standalone pays the
+    * corpus-wide explode, the dominant cost of every shingle consumer,
+    * once each.
+    */
+  def docPipeline(docs: DataFrame): DataFrame =
+    funnel("doc_pipeline", docs)(t => Seq(
+      t.decontaminate.copy(cols = Seq("n_shingles", "n_matched") ++ t.decontaminate.cols)))
+      .drop("reason")
+
+  /** The complete v1 keep verdict: clusters, decontamination and the
+    * per-doc signals (quality, PII counts, repetition), one
+    * reason-coded row per non-benchmark document.
+    */
+  def docPipelineFull(docs: DataFrame): DataFrame =
+    funnel("doc_pipeline_full", docs)(t => Seq(t.decontaminate, t.signals))
+
+  /** v2 = v1 plus semantic decontamination against the embedding table
+    * `emb` and production-width duplicated-span evidence.
+    */
+  def docPipelineFullV2(docs: DataFrame, emb: DataFrame): DataFrame =
+    funnel("doc_pipeline_full_v2", docs, Some(emb))(t =>
+      Seq(t.decontaminate, t.semantic, t.signals, t.spans))
+
+  /** v3 = v2 plus the frozen-LM perplexity leg and the domain gate. */
+  def docPipelineFullV3(
+      docs: DataFrame,
+      emb: DataFrame,
+      lmBi: Map[(String, String), Long],
+      lmUni: Map[String, Long],
+      lmV: Long): DataFrame =
+    funnel("doc_pipeline_full_v3", docs, Some(emb), Some((lmBi, lmUni, lmV)))(t =>
+      Seq(t.decontaminate, t.semantic, t.signals, t.spans, t.perplexity, t.source))
+
+  /** v4 = v3 plus the language gate: documents whose
+    * [[TextStats.langId]] prediction falls outside `targetLangs` drop
+    * with `wrong_language`.
     */
   def docPipelineFullV4(
       docs: DataFrame,
@@ -899,75 +815,9 @@ object Corpus {
       lmBi: Map[(String, String), Long],
       lmUni: Map[String, Long],
       lmV: Long,
-      targetLangs: Set[String] = TargetLangs): DataFrame = {
-    val sh = CacheScope.persist(Dedup.shingles(docs))
-    sh.count() // materialize the shared explode once, before both consumers
-    // all seven legs materialize concurrently with the eager cluster
-    // loop (withConcurrentLegs) — identical frames, overlapped wall-clock
-    val (clusters, legs) = withConcurrentLegs(Seq(
-      () => decontaminateFromShingles(docs, sh)
-        .select(col("doc_id"), col("contamination"), col("contaminated")),
-      () => graft.operators.Ann.embDecontaminate(emb)
-        .select(
-          col("vec_id").as("doc_id"),
-          col("max_cos"),
-          col("contaminated").as("sem_contaminated")),
-      () => TextStats.verdictSignals(docs),
-      () => Dedup.substringDedup(
-        docs, Dedup.SubstrMinSpanWordsWide, Dedup.SubstrGramNWide)
-        .select(col("doc_id"), col("n_spans").as("n_dup_spans"), col("dup_words")),
-      () => TextStats.lmScoreStored(docs, lmBi, lmUni, lmV)
-        .select(col("doc_id"), col("ppl")),
-      () => sourceQualityGate(docs).select(col("source"), col("keep_source")),
-      () => TextStats.langId(docs)
-        .select(col("doc_id"), col("predicted").as("predicted_lang")))) {
-      CacheScope.withScope {
-        dedupClustersFromPairs(docs, Dedup.nearDupPairsFromShingles(sh))
-      }
-    }
-    val Seq(decon, sem, signals, spans, lm, gateLeg, lang) = legs.toSeq
-    val gate = broadcast(gateLeg)
-    val reason = when(!col("is_canonical"), "dup")
-      .when(col("contaminated"), "contaminated")
-      .when(col("sem_contaminated"), "semantic_contaminated")
-      .when(!col("keep_source"), "bad_source")
-      .when(!col("predicted_lang").isin(targetLangs.toSeq: _*), "wrong_language")
-      .when(col("n_tokens") < TextStats.MinTokens, "too_short")
-      .when(col("quality") < TextStats.QualityMin, "low_quality")
-      .when(col("ppl") >= LmPplMax, "high_perplexity")
-      .when(col("top_bigram_frac") >= RepetitionMax, "repetitive")
-      .when(col("n_dup_spans") > 0, "dup_spans")
-      .otherwise("keep")
-    clusters.join(decon, "doc_id")
-      .join(sem, "doc_id")
-      .join(signals, "doc_id")
-      .join(spans, "doc_id")
-      .join(lm, "doc_id")
-      .join(lang, "doc_id")
-      .join(docs.select("doc_id", "source"), Seq("doc_id"))
-      .join(gate, "source")
-      .select(
-        col("doc_id"),
-        col("cluster"),
-        col("cluster_size"),
-        col("is_canonical"),
-        col("contamination"),
-        col("contaminated"),
-        col("max_cos"),
-        col("sem_contaminated"),
-        col("n_tokens"),
-        col("quality"),
-        col("n_emails"),
-        col("n_longnums"),
-        col("top_bigram_frac"),
-        col("n_dup_spans"),
-        col("dup_words"),
-        col("ppl"),
-        col("keep_source"),
-        col("predicted_lang"),
-        reason.as("reason"),
-        (reason === "keep").as("keep"))
-  }
+      targetLangs: Set[String] = TargetLangs): DataFrame =
+    funnel("doc_pipeline_full_v4", docs, Some(emb), Some((lmBi, lmUni, lmV)), targetLangs)(t =>
+      Seq(t.decontaminate, t.semantic, t.signals, t.spans, t.perplexity, t.source, t.language))
 
   /** Export shard count for [[shardManifest]]. */
   val ExportShards = 8

@@ -475,6 +475,88 @@ class CorpusSpec extends AnyFunSuite {
       r.getBoolean(r.fieldIndex("keep")) == (r.getString(r.fieldIndex("reason")) == "keep")))
   }
 
+  test("funnel variants agree as leg subsets: a shared gate codes alike, an added one only outranks") {
+    import graft.operators.CacheScope
+    val (bi, uni, v) = FunnelFixture.lm
+    val docs = FunnelFixture.docs
+    val emb = FunnelFixture.emb
+    def reasons(df: org.apache.spark.sql.DataFrame): Map[Long, String] =
+      df.select("doc_id", "reason").collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    val full = Set("dup", "contaminated", "too_short", "low_quality", "repetitive")
+    val v2 = full ++ Set("semantic_contaminated", "dup_spans")
+    val v3 = v2 ++ Set("bad_source", "high_perplexity")
+    val v4 = v3 + "wrong_language"
+    val variants = Seq(
+      full -> reasons(Corpus.docPipelineFull(docs)),
+      v2 -> reasons(Corpus.docPipelineFullV2(docs, emb)),
+      v3 -> reasons(Corpus.docPipelineFullV3(docs, emb, bi, uni, v)),
+      v4 -> reasons(Corpus.docPipelineFullV4(docs, emb, bi, uni, v)))
+    CacheScope.releaseAll()
+    def rank(code: String) = Corpus.Precedence.indexOf(code)
+    for (((codesA, a), (codesB, b)) <- variants.zip(variants.tail)) {
+      assert(a.keySet == b.keySet, "every variant codes the same documents")
+      for ((id, rb) <- b) {
+        val ra = a(id)
+        if (rb == "keep" || codesA(rb))
+          assert(ra == rb, s"doc $id: '$rb' is a gate both variants run, yet the smaller one says '$ra'")
+        else
+          assert(ra == "keep" || rank(ra) > rank(rb),
+            s"doc $id: the added gate '$rb' must outrank the smaller variant's '$ra'")
+      }
+      for (g <- codesB -- codesA)
+        assert(b.exists { case (id, rb) => rb == g && a(id) != g },
+          s"the added gate '$g' changes no document's reason: $b")
+    }
+  }
+
+  test("funnel legs persist into the caller's cache scope, not the session-global registry") {
+    import graft.operators.CacheScope
+    CacheScope.releaseAll()
+    val before = CacheScope.registeredCount
+    val docs = docsDf(clusterFixture)
+    CacheScope.withScope { Corpus.docPipelineFull(docs).count() }
+    assert(CacheScope.registeredCount === before,
+      "docPipelineFull's legs leaked persists into the session-global registry")
+    val (bi, uni, v) = FunnelFixture.lm
+    val path = java.nio.file.Files.createTempDirectory("export_scope_").toString
+    Corpus.pipelineExport(FunnelFixture.docs, FunnelFixture.emb, bi, uni, v, path)
+    assert(CacheScope.registeredCount === before,
+      "pipelineExport leaked funnel persists into the session-global registry")
+  }
+
+  test("every job of one v4 funnel call is described by its leg or the cluster stage") {
+    val sc = TestSpark.spark.sparkContext
+    val (bi, uni, v) = FunnelFixture.lm
+    val docs = FunnelFixture.docs
+    val emb = FunnelFixture.emb
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.add((
+          e.properties.getProperty("spark.job.description"),
+          e.properties.getProperty("spark.jobGroup.id")))
+    }
+    org.apache.spark.ListenerDrain(sc)
+    sc.addSparkListener(listener)
+    sc.setJobGroup("funnel-spec", "caller's group")
+    try Corpus.docPipelineFullV4(docs, emb, bi, uni, v)
+    finally {
+      sc.clearJobGroup()
+      org.apache.spark.ListenerDrain(sc)
+      sc.removeSparkListener(listener)
+      graft.operators.CacheScope.releaseAll()
+    }
+    import scala.jdk.CollectionConverters._
+    val seen = jobs.asScala.toSeq
+    val legs = Seq("decontaminate", "semantic", "signals", "spans", "lm", "source", "lang")
+    val expected = ("doc_pipeline_full_v4 clusters" +: legs.map(l => s"doc_pipeline_full_v4 leg $l")).toSet
+    assert(seen.nonEmpty)
+    assert(seen.forall { case (desc, _) => expected(desc) },
+      s"undescribed jobs: ${seen.map(_._1).filterNot(expected).distinct}")
+    assert(seen.map(_._1).toSet == expected, "every leg and the cluster stage run jobs")
+    assert(seen.forall { case (_, group) => group == "funnel-spec" }, "the caller's job group stays")
+  }
+
   test("vocab: rank 1 is the highest-document-frequency word; ranks are dense") {
     val out = Corpus.vocab(docsDf(Seq(
       (1L, "apple banana", "en", "web"),
