@@ -37,14 +37,6 @@ object Dedup {
         (col("doc_id") =!= col("canonical")).as("is_dup"))
   }
 
-  /** (doc_id, k-gram) rows — the ONE word-n-gram construction every
-    * n-gram consumer derives from (shingles k=3, repetition bigrams
-    * k=2; [[graft.Oracle.ngramCte]] is its SQL twin). Multiset: no
-    * dedup here, callers decide. Short docs (<k words) contribute no
-    * rows. The words array is materialized ONCE per row before the
-    * lambda — splitting inside the transform would re-tokenize per
-    * element (O(tokens^2) per doc).
-    */
   /** The k-gram ARRAY expression over a `w` (split words) column — the
     * single construction [[ngramRows]], [[shingles]], and
     * [[rowBandSignatures]] all derive from, so tokenization/joining can
@@ -58,6 +50,14 @@ object Dedup {
        |ELSE CAST(array() AS ARRAY<STRING>) END""".stripMargin
   }
 
+  /** (doc_id, k-gram) rows — the ONE word-n-gram construction every
+    * n-gram consumer derives from (shingles k=3, repetition bigrams
+    * k=2; [[graft.Oracle.ngramCte]] is its SQL twin). Multiset: no
+    * dedup here, callers decide. Short docs (<k words) contribute no
+    * rows. The words array is materialized ONCE per row before the
+    * lambda — splitting inside the transform would re-tokenize per
+    * element (O(tokens^2) per doc).
+    */
   def ngramRows(docs: DataFrame, k: Int, outCol: String): DataFrame =
     docs
       .select(col("doc_id"), split(col("text"), " ").as("w"))
@@ -580,10 +580,6 @@ object Dedup {
     }
   }
 
-  /** The general form of [[incrementalDedup]]: `base` and `delta` are
-    * (doc_id, fp) frames; returns one row per delta doc with its
-    * dup-of-base / dup-in-delta / is_new verdict.
-    */
   /** Word-gram width for [[substringDedup]]: spans of [[SubstrGramN]]
     * consecutive words that appear verbatim in more than one document
     * count as cross-document duplicated text. (Production exact-
@@ -614,35 +610,6 @@ object Dedup {
   val SubstrGramNWide = 20
   val SubstrMinSpanWordsWide = 50
 
-  /** Cross-document duplicated-span report — the aggregate-level
-    * equivalent of exact substring deduplication: every positional
-    * [[SubstrGramN]]-word gram that occurs in >1 distinct document
-    * marks its span duplicated; overlapping/touching spans merge;
-    * merged islands shorter than `minSpanWords` are discarded (the
-    * Lee-et-al minimum-match length — see [[SubstrMinSpanWords]]); the
-    * report is per-doc span count, duplicated word count, and what
-    * survives. (A remove step is `slice` over the kept ranges; the
-    * expensive, scale-critical part — finding and merging the spans —
-    * is all here.)
-    *
-    * Scale shape: positional grams are a per-row explode (no shuffle);
-    * duplicated-gram detection is TWO-LEVEL so the engine's dominant
-    * shuffle never carries gram text: level 1 aggregates distinct-doc
-    * counts keyed on `xxhash64(gram)` — 8 bytes per key instead of the
-    * ~20-30-byte gram string — and semi-joins positions on that hash;
-    * level 2 re-confirms on the actual string over the SURVIVING
-    * candidate subset only, so a 64-bit hash collision between
-    * same-doc-count-1 grams can never fabricate a duplicated span
-    * (bit-identical to the single-level string-keyed form, spec-pinned).
-    * Marking is the level-1 semi join back on the hash. Span merging
-    * is the classic
-    * running-max island scan — two doc-keyed windows over DUPLICATED
-    * positions only (not all positions), bounded by doc length, fully
-    * parallel across docs; the span floor is a post-merge filter on
-    * the island row, adding nothing to any shuffle. No pairwise doc
-    * comparison anywhere: cost is linear in total grams + duplicated
-    * grams, never docs².
-    */
   /** The merged, floored duplicated spans per doc — the shared core of
     * [[substringDedup]] (the report) and [[substringScrub]] (the
     * removal): (doc_id, ss, ee) with ss inclusive, ee exclusive, spans
@@ -727,6 +694,35 @@ object Dedup {
       .select("doc_id", "ss", "ee")
   }
 
+  /** Cross-document duplicated-span report — the aggregate-level
+    * equivalent of exact substring deduplication: every positional
+    * [[SubstrGramN]]-word gram that occurs in >1 distinct document
+    * marks its span duplicated; overlapping/touching spans merge;
+    * merged islands shorter than `minSpanWords` are discarded (the
+    * Lee-et-al minimum-match length — see [[SubstrMinSpanWords]]); the
+    * report is per-doc span count, duplicated word count, and what
+    * survives. (A remove step is `slice` over the kept ranges; the
+    * expensive, scale-critical part — finding and merging the spans —
+    * is all here.)
+    *
+    * Scale shape: positional grams are a per-row explode (no shuffle);
+    * duplicated-gram detection is TWO-LEVEL so the engine's dominant
+    * shuffle never carries gram text: level 1 aggregates distinct-doc
+    * counts keyed on `xxhash64(gram)` — 8 bytes per key instead of the
+    * ~20-30-byte gram string — and semi-joins positions on that hash;
+    * level 2 re-confirms on the actual string over the SURVIVING
+    * candidate subset only, so a 64-bit hash collision between
+    * same-doc-count-1 grams can never fabricate a duplicated span
+    * (bit-identical to the single-level string-keyed form, spec-pinned).
+    * Marking is the level-1 semi join back on the hash. Span merging
+    * is the classic
+    * running-max island scan — two doc-keyed windows over DUPLICATED
+    * positions only (not all positions), bounded by doc length, fully
+    * parallel across docs; the span floor is a post-merge filter on
+    * the island row, adding nothing to any shuffle. No pairwise doc
+    * comparison anywhere: cost is linear in total grams + duplicated
+    * grams, never docs².
+    */
   def substringDedup(
       docs: DataFrame,
       minSpanWords: Int = SubstrMinSpanWords,
@@ -789,6 +785,10 @@ object Dedup {
         concat_ws(" ", col("kept")).as("scrubbed"))
   }
 
+  /** The general form of [[incrementalDedup]]: `base` and `delta` are
+    * (doc_id, fp) frames; returns one row per delta doc with its
+    * dup-of-base / dup-in-delta / is_new verdict.
+    */
   def incrementalDedupAgainst(base: DataFrame, delta: DataFrame): DataFrame = {
     val baseFps = base.select("fp").distinct().withColumn("in_base", lit(true))
     val firstDelta = delta.groupBy("fp").agg(min("doc_id").as("first_delta"))

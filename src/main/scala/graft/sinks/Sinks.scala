@@ -52,14 +52,6 @@ object Sinks {
     out.close()
   }
 
-  /** Persist a dedup base corpus as a Spark BUCKETED TABLE clustered
-    * by content fingerprint — the layout that makes
-    * [[graft.operators.Dedup.incrementalDedupStored]]'s per-batch
-    * probes shuffle-free on the base side: bucketing by fp already
-    * satisfies the join's hash distribution, so only the (small) delta
-    * exchanges. At 100 TB the base is the corpus — re-shuffling it per
-    * arriving batch is the cost this sink exists to delete.
-    */
   /** The managed location a default-database table of this name
     * occupies in the session warehouse.
     */
@@ -108,60 +100,113 @@ object Sinks {
     }
   }
 
-  def writeDedupBase(docs: DataFrame, table: String, buckets: Int = DefaultBuckets): Unit = {
-    // a REBUILD retires the previous corpus's whole lifecycle FIRST:
-    // stale delta segments (and any crash leftovers) describe the OLD
-    // base — left live, a rebuilt base would inherit ghost fingerprints
-    // and report never-seen documents as dup_of_base. Dropping BEFORE
-    // the overwrite means a crash between the two steps fail-opens
-    // (the half-rebuilt base under-dedups until re-run) instead of
-    // fail-closing with ghost dups that a later compaction would fold
-    // into the new base permanently. Retirement reclaims LOCATIONS,
-    // not just catalog entries — a previous JVM's tables are catalog-
-    // invisible here but still occupy their warehouse directories.
-    val s = docs.sparkSession
-    retirePrefixedLocations(s, s"${table}__delta")
-    (listDedupSegs(s, table) ++
-      Seq(table, dedupOld(table), dedupCompact(table), dedupManifest(table), swapLock(table)))
-      .foreach(t => dropTableAndLocation(s, t))
-    docs
-      .select(col("doc_id"), md5(col("text")).as("fp"))
-      .write
-      .mode("overwrite")
-      .format("parquet")
-      .bucketBy(buckets, "fp")
-      .sortBy("fp")
-      .saveAsTable(table)
-    ()
+  // ------------------------------------------------- segmented dedup bases
+  /** A SEGMENTED BASE: the bucketed tables a dedup tier persists for
+    * its stored probes, plus the per-batch delta segments that
+    * accumulate beside them until a compaction folds them back. It is
+    * the ANN index's base + delta + compaction layout in metastore-
+    * table terms, because every side MUST stay a bucketed table for
+    * the exchange-free probes
+    * ([[graft.operators.Dedup.incrementalDedupStored]],
+    * [[graft.operators.Dedup.nearDupAgainstStored]]). Two tiers
+    * declare one — [[dedupBase]] (fingerprints) and [[nearDupBase]]
+    * (band signatures, then shingles) — and differ only in their
+    * sides; the lifecycle below is written once.
+    *
+    * Catalog layout of base `t` with side tables `s`: each live `s`;
+    * `s__compact` (a merge) and `s__old` (a swap in flight); delta
+    * segments `t__delta_<n>` (`%08d`; a legacy unstamped `t__delta`
+    * reads as one more segment); the `t__compacting` manifest, the
+    * segment read-set a compaction snapshotted; the `t__swaplock`
+    * liveness stamp.
+    *
+    * Segments: every append is its OWN table, claimed by an
+    * error-if-exists create (the [[allocSeg]] discipline; the
+    * metastore's create is the atomic claim), so two concurrent
+    * appends never share a segment and a compaction drops exactly the
+    * segments its manifest recorded. Rows are add-only (no tombstones,
+    * no upserts), so segment NUMBERS carry no ordering semantics: they
+    * exist only so each append gets its own table.
+    *
+    * Compaction: snapshot the segments into the manifest, write EVERY
+    * side's merge to `s__compact`, stamp the lock, then side by side
+    * rename `s` → `s__old` and `s__compact` → `s`, then drop the read
+    * segments, every `s__old`, the manifest and the lock. All merges
+    * are written before the first rename, so once the lead side has
+    * swapped, repair can always roll the later sides FORWARD; before
+    * that it rolls the lead back. Between two sides' swaps reads stay
+    * consistent because [[sideStates]] judges each side on its own: a
+    * swapped side stops unioning the manifest's segments, an unswapped
+    * one keeps them.
+    *
+    * WRITER-CONCURRENCY CONTRACT: appends are safe to interleave with
+    * each other AND with a running compaction, which folds only the
+    * read-set it snapshotted. At most ONE compaction may run at a time
+    * — two would race the rename swap itself. An append cannot mistake
+    * a live compaction's swap window for a crash: the compaction stamps
+    * the `__swaplock` just before its first rename and drops it after
+    * cleanup, and append-side repair stands down while the stamp is
+    * fresh ([[SwapLockGraceSeconds]]) — the append just claims its
+    * segment, which never touches the swapped tables. A STALE lock (a
+    * crashed compaction) expires and repair proceeds; a compaction
+    * repairs unconditionally at start, because under the one-
+    * compaction contract any swap evidence it sees is a crash.
+    */
+  private[graft] final case class SegmentedBase(table: String, writer: String, sides: Seq[Side])
+
+  /** One bucketed table of a [[SegmentedBase]]: its row columns, the
+    * rows a delta segment table holds for it, the census that turns
+    * rows into the stored table (identity, or the band cap's `kept`
+    * flag) and its bucketing. A compaction's merge is
+    * `census(base rows ∪ segment rows)`.
+    */
+  private[graft] final case class Side(
+      table: String,
+      cols: Seq[String],
+      segRows: DataFrame => DataFrame,
+      census: DataFrame => DataFrame,
+      bucketCols: Seq[String],
+      sortCols: Seq[String]) {
+    def save(rows: DataFrame, to: String, buckets: Int): Unit =
+      census(rows).write.mode("overwrite").format("parquet")
+        .bucketBy(buckets, bucketCols.head, bucketCols.tail: _*)
+        .sortBy(sortCols.head, sortCols.tail: _*)
+        .saveAsTable(to)
   }
 
-  // ------------------------------------- dedup base segments + compaction
-  // The ANN index's base+delta+compaction layout on the text side
-  // (delta fingerprint segments per verified batch, periodic fold into
-  // the bucketed base, every crash point readable) — in metastore-table
-  // terms, because the base MUST stay a bucketed table for
-  // [[graft.operators.Dedup.incrementalDedupStored]]'s exchange-free
-  // probe. Simpler than the ANN machinery in one way: fingerprints are
-  // add-only (no tombstones, no upserts), so segment NUMBERS carry no
-  // ordering semantics — they exist only so each append is its OWN
-  // table, which is what lets compaction drop exactly the segments it
-  // read while a segment appended mid-compaction survives untouched.
-  //
-  // WRITER-CONCURRENCY CONTRACT: appends are safe to interleave with
-  // each other AND with a running compaction (each append claims a
-  // fresh segment table create-exclusively, and compaction folds only
-  // the read-set it snapshotted into the `__compacting` manifest). At
-  // most ONE compaction may run at a time — two concurrent compactions
-  // would race the rename swap itself. An append CANNOT mistake a live
-  // compaction's swap window for a crash: the compaction stamps a
-  // `__swaplock` liveness marker just before its first rename and
-  // drops it after cleanup, and an append's crash repair stands down
-  // while the lock is fresh ([[SwapLockGraceSeconds]]) — the append
-  // just claims its segment (which never touches the swapped tables)
-  // and leaves the swap to its owner. A STALE lock (crashed compaction)
-  // expires and repair proceeds; a compaction repairs unconditionally
-  // at start, because the one-compaction contract means any swap
-  // evidence it sees is a crash by definition.
+  /** The exact tier: one side of `(doc_id, fp)` bucketed by fp; a
+    * segment holds the same rows.
+    */
+  private[graft] def dedupBase(table: String): SegmentedBase =
+    SegmentedBase(table, "writeDedupBase", Seq(
+      Side(table, Seq("doc_id", "fp"), identity, identity, Seq("fp"), Seq("fp"))))
+
+  /** The near-dup tier. The signature side leads: the FULL
+    * `(doc_id, n, band, sig)` rows with the write-time cap census as a
+    * `kept` flag, bucketed by (band, sig) — storing every row is what
+    * lets a compaction recompute the census over the merged set. The
+    * shingle store follows, bucketed by doc_id, for exact Jaccard
+    * verify. A segment is one UNCAPPED per-doc row of `sigs` and
+    * `shingles` arrays, exploded back to rows here.
+    */
+  private[graft] def nearDupBase(
+      table: String, cap: Int = graft.operators.BandCap.DefaultCap): SegmentedBase =
+    SegmentedBase(table, "writeNearDupBase", Seq(
+      Side(
+        table,
+        Seq("doc_id", "n", "band", "sig"),
+        _.select(col("doc_id"), col("n"), explode(col("sigs")).as("s"))
+          .select(col("doc_id"), col("n"), col("s.band").as("band"), col("s.sig").as("sig")),
+        graft.operators.BandCap.flagBuckets(_, Seq("band", "sig"), "doc_id", cap),
+        Seq("band", "sig"),
+        Seq("band", "sig")),
+      Side(
+        s"${table}__sh",
+        Seq("doc_id", "shingle"),
+        _.select(col("doc_id"), explode(col("shingles")).as("shingle")),
+        identity,
+        Seq("doc_id"),
+        Seq("doc_id", "shingle"))))
 
   /** How long a `__swaplock` stamp counts as a LIVE compaction. The
     * lock covers only the metadata swap window (renames + drops —
@@ -171,10 +216,14 @@ object Sinks {
     */
   val SwapLockGraceSeconds = 900L
 
+  private def oldOf(t: String) = s"${t}__old"
+  private def compactOf(t: String) = s"${t}__compact"
+  private def manifestOf(table: String) = s"${table}__compacting"
   private def swapLock(table: String) = s"${table}__swaplock"
+  private def segTable(table: String, n: Long) = f"${table}__delta_$n%08d"
 
   /** Stamp the swap-liveness lock — one row, epoch seconds. Overwrite
-    * is safe: at most one compaction may run (contract above).
+    * is safe: at most one compaction may run.
     */
   private def writeSwapLock(spark: SparkSession, table: String): Unit = {
     import spark.implicits._
@@ -189,29 +238,208 @@ object Sinks {
       System.currentTimeMillis() / 1000 - at < SwapLockGraceSeconds
     }
 
-  private def dedupOld(table: String) = s"${table}__old"
-  private def dedupCompact(table: String) = s"${table}__compact"
-  private def dedupManifest(table: String) = s"${table}__compacting"
-  private def dedupSegTable(table: String, n: Long) = f"${table}__delta_$n%08d"
-
-  /** Every delta segment table currently in the catalog (a legacy
-    * unstamped `__delta`, if one predates the segment layout, reads as
-    * segment 0), name-sorted. Metadata-scale: one metastore LIKE
-    * listing, pattern-pushed.
+  /** Every delta segment table of a base in the catalog (a legacy
+    * unstamped `__delta` included), name-sorted. Metadata-scale: one
+    * metastore LIKE listing, pattern-pushed.
     */
-  private def listDedupSegs(spark: SparkSession, table: String): Seq[String] =
+  private def segments(spark: SparkSession, table: String): Seq[String] =
     spark.sql(s"SHOW TABLES LIKE '${table}__delta*'")
       .select("tableName").collect().map(_.getString(0)).toSeq.sorted
 
-  /** The `__compacting` manifest's segment list — the read-set a
-    * compaction snapshotted before its swap — or None when no manifest
-    * exists (healthy base, or a LEGACY pre-manifest crash where the
-    * compaction had read every segment).
+  /** The `__compacting` manifest's segment list, or None when no
+    * manifest exists (a healthy base, or a LEGACY pre-manifest crash
+    * where the compaction had read every segment).
     */
   private def manifestSegs(spark: SparkSession, table: String): Option[Seq[String]] =
-    if (!spark.catalog.tableExists(dedupManifest(table))) None
-    else Some(
-      spark.table(dedupManifest(table)).collect().map(_.getString(0)).toSeq)
+    if (!spark.catalog.tableExists(manifestOf(table))) None
+    else Some(spark.table(manifestOf(table)).collect().map(_.getString(0)).toSeq)
+
+  /** Retire a base's whole lifecycle before a REBUILD: every side's
+    * live, `__old` and `__compact` table, the manifest, the lock and
+    * every segment. Stale segments describe the OLD corpus — left
+    * live, a rebuilt base would inherit ghost rows and report never-
+    * seen documents as duplicates. Retiring BEFORE the write means a
+    * crash between the two fail-opens (the half-rebuilt base under-
+    * dedups until re-run) instead of fail-closing with ghost dups that
+    * a later compaction would fold in for good. Retirement reclaims
+    * LOCATIONS, not just catalog entries — a previous JVM's tables are
+    * catalog-invisible here but still occupy their warehouse
+    * directories.
+    */
+  private def retire(spark: SparkSession, base: SegmentedBase): Unit = {
+    retirePrefixedLocations(spark, s"${base.table}__delta")
+    (segments(spark, base.table) ++
+      base.sides.flatMap(s => Seq(s.table, oldOf(s.table), compactOf(s.table))) ++
+      Seq(manifestOf(base.table), swapLock(base.table)))
+      .foreach(t => dropTableAndLocation(spark, t))
+  }
+
+  /** Repair any crashed swap, then claim the next free segment number
+    * for `seg` by an error-if-exists create — losing the race to a
+    * live writer (catalog) or to a dead JVM's orphaned segment
+    * location takes the next number.
+    */
+  private def appendSegment(base: SegmentedBase, seg: DataFrame): Unit = {
+    val spark = seg.sparkSession
+    repair(spark, base, gateOnLock = true)
+    var n = segments(spark, base.table)
+      .flatMap(t => t.stripPrefix(s"${base.table}__delta").stripPrefix("_").toLongOption)
+      .foldLeft(0L)(math.max) + 1L
+    var claimed = false
+    while (!claimed) {
+      try {
+        seg.write.mode("errorifexists").format("parquet")
+          .saveAsTable(segTable(base.table, n))
+        claimed = true
+      } catch {
+        case _: org.apache.spark.sql.AnalysisException
+            if spark.catalog.tableExists(segTable(base.table, n)) ||
+              managedLocationExists(spark, segTable(base.table, n)) =>
+          n += 1L
+      }
+    }
+  }
+
+  /** The crash-state view, per side: which table IS the side right
+    * now, and which segments it must still union. Mirrors
+    * [[readAnnIndexCodes]]' reasoning:
+    *  - `__old` WITHOUT the side → crash mid-rename; `__old` is the
+    *    pre-compact table and every segment still applies.
+    *  - `__old` WITH the side → the side swapped but cleanup did not
+    *    finish; it already folded the segments the compaction READ —
+    *    exactly the manifest's list — so those are stale (double-
+    *    apply), while segments appended after the snapshot stay live.
+    *    A missing manifest is the legacy pre-manifest state: everything
+    *    was read.
+    *  - neither → the base was never written, or was retired: a named
+    *    error, not a read of a table nobody made.
+    * Reads never mutate the catalog; writers and the next compaction
+    * repair.
+    */
+  private def sideStates(
+      spark: SparkSession, base: SegmentedBase): Seq[(String, Seq[String])] = {
+    val segs = segments(spark, base.table)
+    lazy val folded = manifestSegs(spark, base.table).getOrElse(segs).toSet
+    base.sides.map { s =>
+      val oldExists = spark.catalog.tableExists(oldOf(s.table))
+      val live = spark.catalog.tableExists(s.table)
+      if (live && oldExists) (s.table, segs.filterNot(folded))
+      else if (live) (s.table, segs)
+      else if (oldExists) (oldOf(s.table), segs)
+      else
+        throw new IllegalStateException(
+          s"dedup base '${base.table}' does not exist (neither '${s.table}' nor " +
+            s"'${oldOf(s.table)}' is in the catalog) — write it with Sinks.${base.writer} first")
+    }
+  }
+
+  /** A side's rows with the given segments' rows unioned in. */
+  private def withSegments(
+      spark: SparkSession, side: Side, rows: DataFrame, segs: Seq[String]): DataFrame =
+    segs.foldLeft(rows)((acc, t) => acc.unionByName(side.segRows(spark.table(t))))
+
+  /** Finish or roll back a compaction swap that crashed — run by every
+    * writer before it touches the segments, so a post-crash base never
+    * accumulates segments the cleanup would destroy. Idempotent; a
+    * no-op on a healthy base. The lead side's state decides the
+    * direction: mid-lead-swap rolls BACK (nothing folded yet); any
+    * later state rolls the remaining sides FORWARD and finishes the
+    * cleanup in the compaction's own order — segments, each `__old` in
+    * side order, manifest — so a crash mid-repair resumes precisely.
+    * An orphaned merge or manifest with no `__old` anywhere is left
+    * alone: that state is indistinguishable from a compaction STILL
+    * RUNNING its merge writes, a read never consults either, and the
+    * next compaction overwrites both.
+    *
+    * `gateOnLock`: appends pass true — swap evidence under a FRESH
+    * `__swaplock` is a live compaction mid-swap, not a crash, and
+    * repairing it would rip the rename out from under the owner (whose
+    * next ALTER then throws). Compactions pass false.
+    */
+  private def repair(spark: SparkSession, base: SegmentedBase, gateOnLock: Boolean): Unit = {
+    def exists(t: String) = spark.catalog.tableExists(t)
+    def rename(from: String, to: String) = spark.sql(s"ALTER TABLE $from RENAME TO $to")
+    val lead = base.sides.head.table
+    val olds = base.sides.map(s => exists(oldOf(s.table)))
+    if (!olds.contains(true) || (gateOnLock && swapLockFresh(spark, base.table))) ()
+    else if (olds.head && !exists(lead)) {
+      rename(oldOf(lead), lead)
+      (base.sides.map(s => compactOf(s.table)) ++
+        Seq(manifestOf(base.table), swapLock(base.table)))
+        .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+    } else {
+      base.sides.tail.foreach { s =>
+        // the lead's __old still present means cleanup has not begun,
+        // so a later side without its own __old has not started its swap
+        if (olds.head && !exists(oldOf(s.table)) && exists(s.table))
+          rename(s.table, oldOf(s.table))
+        if (!exists(s.table)) {
+          require(
+            exists(compactOf(s.table)),
+            s"base ${base.table}: merge ${compactOf(s.table)} missing mid-swap")
+          rename(compactOf(s.table), s.table)
+        }
+      }
+      cleanup(spark, base, manifestSegs(spark, base.table).getOrElse(segments(spark, base.table)))
+    }
+  }
+
+  /** The post-swap cleanup, in the order repair resumes from: the
+    * folded segments, every `__old`, the manifest, the lock.
+    */
+  private def cleanup(spark: SparkSession, base: SegmentedBase, folded: Seq[String]): Unit =
+    (folded ++ base.sides.map(s => oldOf(s.table)) ++
+      Seq(manifestOf(base.table), swapLock(base.table)))
+      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+
+  /** The compaction choreography of a [[SegmentedBase]], with a test
+    * seam: `afterSnapshot` runs after the read-set manifest commits and
+    * before the merge writes — the window where a concurrent append
+    * must survive the fold. Production callers use
+    * [[compactDedupBase]] / [[compactNearDupBase]].
+    */
+  private[graft] def compactHooked(
+      spark: SparkSession,
+      base: SegmentedBase,
+      buckets: Int,
+      afterSnapshot: () => Unit): Unit = {
+    repair(spark, base, gateOnLock = false)
+    val segs = segments(spark, base.table)
+    if (segs.nonEmpty) {
+      import spark.implicits._
+      segs.toDF("seg_table").coalesce(1)
+        .write.mode("overwrite").format("parquet").saveAsTable(manifestOf(base.table))
+      afterSnapshot()
+      base.sides.foreach { s =>
+        val rows = spark.table(s.table).select(s.cols.map(col): _*)
+        s.save(withSegments(spark, s, rows, segs), compactOf(s.table), buckets)
+      }
+      writeSwapLock(spark, base.table)
+      base.sides.foreach { s =>
+        spark.sql(s"ALTER TABLE ${s.table} RENAME TO ${oldOf(s.table)}")
+        spark.sql(s"ALTER TABLE ${compactOf(s.table)} RENAME TO ${s.table}")
+      }
+      cleanup(spark, base, segs)
+    }
+  }
+
+  private def fingerprints(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), md5(col("text")).as("fp"))
+
+  /** Persist a dedup base corpus as a Spark BUCKETED TABLE clustered
+    * by content fingerprint — the layout that makes
+    * [[graft.operators.Dedup.incrementalDedupStored]]'s per-batch
+    * probes shuffle-free on the base side: bucketing by fp already
+    * satisfies the join's hash distribution, so only the (small) delta
+    * exchanges. At 100 TB the base is the corpus — re-shuffling it per
+    * arriving batch is the cost this sink exists to delete. A rebuild
+    * retires the previous corpus's whole lifecycle first.
+    */
+  def writeDedupBase(docs: DataFrame, table: String, buckets: Int = DefaultBuckets): Unit = {
+    val base = dedupBase(table)
+    retire(docs.sparkSession, base)
+    base.sides.head.save(fingerprints(docs), table, buckets)
+  }
 
   /** Append a batch's fingerprints as a DELTA SEGMENT next to the
     * base — the write a pipeline issues after
@@ -222,74 +450,24 @@ object Sinks {
     * reads them via BROADCAST, so keep the compaction cadence ahead of
     * the delta outgrowing broadcast size (it is batch-sized, the base
     * is corpus-sized — the same small/large split the ANN delta has).
-    *
-    * Each batch is its OWN table, `table__delta_<n>`, claimed by an
-    * error-if-exists create (the [[allocSeg]] discipline in metastore
-    * terms; the metastore's create is the atomic claim) — so two
-    * concurrent appends never share a segment, and a compaction that
-    * started before this append cannot destroy it: compaction drops
-    * only the segment tables its manifest recorded.
     */
-  def appendDedupDelta(docs: DataFrame, table: String): Unit = {
-    val spark = docs.sparkSession
-    repairDedupCrashState(spark, table, gateOnLock = true)
-    val fps = docs.select(col("doc_id"), md5(col("text")).as("fp"))
-    var seg = listDedupSegs(spark, table)
-      .flatMap(n => n.stripPrefix(s"${table}__delta").stripPrefix("_").toLongOption)
-      .foldLeft(0L)(math.max) + 1L
-    var claimed = false
-    while (!claimed) {
-      try {
-        fps.write.mode("errorifexists").format("parquet")
-          .saveAsTable(dedupSegTable(table, seg))
-        claimed = true
-      } catch {
-        // lost the claim race — to a live writer (catalog) or to a dead
-        // JVM's orphaned segment location — take the next number
-        case _: org.apache.spark.sql.AnalysisException
-            if spark.catalog.tableExists(dedupSegTable(table, seg)) ||
-              managedLocationExists(spark, dedupSegTable(table, seg)) =>
-          seg += 1L
-      }
-    }
-  }
+  def appendDedupDelta(docs: DataFrame, table: String): Unit =
+    appendSegment(dedupBase(table), fingerprints(docs))
 
-  /** The crash-state view of a dedup base: which table IS the base
-    * right now, and which delta segment tables are live. Mirrors
-    * [[readAnnIndexCodes]]' reasoning:
-    *  - `__old` present WITHOUT the base → crash between the two
-    *    renames; `__old` is the pre-compact base, every segment still
-    *    applies.
-    *  - `__old` present WITH the base → crash after the swap but
-    *    before cleanup; the base already folded the segments the
-    *    crashed compaction READ — exactly the `__compacting`
-    *    manifest's list — so those are stale (double-apply), while
-    *    segments appended after the snapshot are still live. A
-    *    missing manifest is the legacy pre-manifest state: everything
-    *    was read, nothing is live.
-    * Reads never mutate the catalog; writers and the next compaction
-    * repair.
+  /** The exact tier's crash-state view: the base table and its live
+    * segments ([[sideStates]]).
     */
   private[graft] def dedupBaseState(
-      spark: SparkSession, table: String): (String, Seq[String]) = {
-    val oldExists = spark.catalog.tableExists(dedupOld(table))
-    val baseExists = spark.catalog.tableExists(table)
-    val segs = listDedupSegs(spark, table)
-    val live =
-      if (oldExists && baseExists) {
-        val folded = manifestSegs(spark, table).getOrElse(segs).toSet
-        segs.filterNot(folded)
-      } else segs
-    (if (baseExists) table else dedupOld(table), live)
-  }
+      spark: SparkSession, table: String): (String, Seq[String]) =
+    sideStates(spark, dedupBase(table)).head
 
   /** The live fingerprint set (base ∪ delta segments), crash-state
     * aware — what a full-corpus consumer (an exporter, a stats job)
     * reads between compactions.
     */
   def readDedupBase(spark: SparkSession, table: String): DataFrame = {
-    val (base, liveSegs) = dedupBaseState(spark, table)
-    liveSegs.foldLeft(spark.table(base))((acc, t) => acc.unionByName(spark.table(t)))
+    val (t, segs) = dedupBaseState(spark, table)
+    withSegments(spark, dedupBase(table).sides.head, spark.table(t), segs)
   }
 
   /** The live delta segments' DISTINCT fingerprints flagged `in_seg`,
@@ -310,256 +488,60 @@ object Sinks {
     }
   }
 
-  /** Finish or roll back a [[compactDedupBase]] swap that crashed —
-    * run by every writer before it touches the delta, so a post-crash
-    * base never accumulates segments the cleanup would destroy.
-    * Idempotent; a no-op on a healthy base. Deliberately does NOT
-    * clean up an orphaned `__compact` merge or `__compacting`
-    * manifest when no `__old` is present: that state is
-    * indistinguishable from a compaction that is STILL RUNNING (its
-    * long merge write), and a healthy read never consults either —
-    * the next [[compactDedupBase]] overwrites both.
-    *
-    * `gateOnLock`: appends pass true — swap evidence under a FRESH
-    * `__swaplock` is a live compaction mid-swap, not a crash, and
-    * repairing it would rip the rename out from under the owner (whose
-    * next ALTER then throws). Compactions pass false: the one-running-
-    * compaction contract makes any swap evidence they see a crash.
-    */
-  private def repairDedupCrashState(
-      spark: SparkSession, table: String, gateOnLock: Boolean = false): Unit = {
-    if (spark.catalog.tableExists(dedupOld(table)) &&
-        !(gateOnLock && swapLockFresh(spark, table))) {
-      if (spark.catalog.tableExists(table)) {
-        // post-swap crash: the live base folded exactly the manifest's
-        // segments — drop those and ONLY those (a segment appended
-        // after the crashed compaction's snapshot must survive); a
-        // missing manifest is the legacy state where everything was
-        // read. Order matters: segments, then __old, then manifest —
-        // a crash mid-repair leaves the manifest in place to finish
-        // precisely, never a post-swap state without one.
-        manifestSegs(spark, table).getOrElse(listDedupSegs(spark, table))
-          .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
-        spark.sql(s"DROP TABLE ${dedupOld(table)}")
-        spark.sql(s"DROP TABLE IF EXISTS ${dedupManifest(table)}")
-      } else {
-        // mid-swap crash: roll the rename back; the manifest described
-        // a merge that never went live
-        spark.sql(s"ALTER TABLE ${dedupOld(table)} RENAME TO $table")
-        spark.sql(s"DROP TABLE IF EXISTS ${dedupManifest(table)}")
-        spark.sql(s"DROP TABLE IF EXISTS ${dedupCompact(table)}")
-      }
-      // the repaired swap's liveness stamp (if its owner left one) is
-      // now meaningless
-      spark.sql(s"DROP TABLE IF EXISTS ${swapLock(table)}")
-    }
-    ()
-  }
-
   /** Fold the delta segments back into the bucketed base — the
     * periodic compaction that keeps the broadcast-probed delta small
-    * and the file count bounded by bucket count. Same rename-swap
-    * discipline as [[compactAnnIndex]], in catalog metadata ops:
-    * snapshot the segment read-set into the `__compacting` manifest,
-    * merged → `__compact`, base → `__old`, `__compact` → base, drop
-    * the READ segments + `__old` + manifest. Segments appended while
-    * the merge runs are not in the snapshot and survive — the
-    * manifest is what lets both this cleanup and a crash repair drop
-    * exactly the folded set. Every crash point leaves a readable base
-    * ([[dedupBaseState]]); the next writer or compaction repairs.
+    * and the file count bounded by bucket count.
     */
   def compactDedupBase(
       spark: SparkSession, table: String, buckets: Int = DefaultBuckets): Unit =
-    compactDedupBaseHooked(spark, table, buckets, () => ())
-
-  /** [[compactDedupBase]] with a test seam: `afterSnapshot` runs after
-    * the read-set manifest commits and before the merge write — the
-    * window where a concurrent [[appendDedupDelta]] must survive the
-    * fold. Production callers use the public face.
-    */
-  private[graft] def compactDedupBaseHooked(
-      spark: SparkSession,
-      table: String,
-      buckets: Int,
-      afterSnapshot: () => Unit): Unit = {
-    repairDedupCrashState(spark, table)
-    val segs = listDedupSegs(spark, table)
-    if (segs.isEmpty) return
-    // the read-set SNAPSHOT: everything this compaction will fold —
-    // recorded before the swap so a post-swap crash repair drops
-    // exactly this list and nothing appended after it
-    import spark.implicits._
-    segs.toDF("seg_table").coalesce(1)
-      .write.mode("overwrite").format("parquet").saveAsTable(dedupManifest(table))
-    afterSnapshot()
-    segs.foldLeft(spark.table(table))((acc, t) => acc.unionByName(spark.table(t)))
-      .write
-      .mode("overwrite")
-      .format("parquet")
-      .bucketBy(buckets, "fp")
-      .sortBy("fp")
-      .saveAsTable(dedupCompact(table))
-    // liveness stamp covers exactly the metadata swap window: from
-    // here to the final drop, concurrent appends stand down from repair
-    writeSwapLock(spark, table)
-    spark.sql(s"ALTER TABLE $table RENAME TO ${dedupOld(table)}")
-    spark.sql(s"ALTER TABLE ${dedupCompact(table)} RENAME TO $table")
-    segs.foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
-    spark.sql(s"DROP TABLE IF EXISTS ${dedupOld(table)}")
-    spark.sql(s"DROP TABLE IF EXISTS ${dedupManifest(table)}")
-    spark.sql(s"DROP TABLE IF EXISTS ${swapLock(table)}")
-    ()
-  }
-
-  // ------------------------------ near-dup signature base + segments
-  // The [[writeDedupBase]] discipline on the NEAR-DUP tier: the
-  // corpus's LSH band signatures persisted as a (band, sig)-bucketed
-  // table (full row set + write-time cap census as a `kept` flag, per-
-  // doc shingle counts denormalized onto the rows) beside a
-  // doc_id-bucketed shingle store for exact Jaccard verify — so an
-  // arriving batch probes the corpus with joins only, never
-  // re-shingling/re-minhashing/re-censusing it
-  // ([[graft.operators.Dedup.nearDupAgainstStored]]). Appends land as
-  // per-batch segment tables (per-doc ARRAY rows — one table per
-  // append keeps the exact tier's single-namespace claim/fold
-  // lifecycle) and a compaction folds them back, recomputing the cap
-  // census over the merged signature set.
-  //
-  // TWO tables swap per compaction (signatures + shingles), so the
-  // rename choreography is: write BOTH __compact merges, swap
-  // signatures, swap shingles, cleanup. Every crash point stays
-  // readable because [[nearDupBaseState]] tracks each side's fold
-  // state INDEPENDENTLY: a side whose swap completed stops unioning
-  // the folded segments; a side still pre-swap keeps unioning them —
-  // reads are consistent in the window between the two swaps. Repair
-  // rolls the second swap FORWARD (its merge is fully written before
-  // the first swap starts) rather than back.
-  //
-  // Same writer-concurrency contract as the exact tier: appends
-  // interleave freely with each other and with one running compaction
-  // (the compaction's `__swaplock` stamp keeps append-side repair out
-  // of a LIVE swap window — and the nd tier's two-swap window is the
-  // wider one); at most one compaction at a time.
-
-  private def ndSh(table: String) = s"${table}__sh"
-  private def ndOld(t: String) = s"${t}__old"
-  private def ndCompact(t: String) = s"${t}__compact"
-  private def ndManifest(table: String) = s"${table}__compacting"
-  private def ndSegTable(table: String, n: Long) = f"${table}__delta_$n%08d"
-
-  private def listNdSegs(spark: SparkSession, table: String): Seq[String] =
-    spark.sql(s"SHOW TABLES LIKE '${table}__delta*'")
-      .select("tableName").collect().map(_.getString(0)).toSeq.sorted
-
-  private def ndManifestSegs(spark: SparkSession, table: String): Option[Seq[String]] =
-    if (!spark.catalog.tableExists(ndManifest(table))) None
-    else Some(
-      spark.table(ndManifest(table)).collect().map(_.getString(0)).toSeq)
-
-  /** Write both base tables for a signature corpus derived from a
-    * PERSISTED shingle frame: the full (doc_id, n, band, sig, kept)
-    * signature rows bucketed by (band, sig) — `kept` is the
-    * materialized cap-census verdict — and the (doc_id, shingle) store
-    * bucketed by doc_id.
-    */
-  private def writeNdTables(
-      sh: DataFrame, sigTable: String, shTable: String, buckets: Int, cap: Int): Unit = {
-    graft.operators.BandCap
-      .flagBuckets(
-        graft.operators.Dedup.bandSignaturesWithCounts(sh),
-        Seq("band", "sig"), "doc_id", cap)
-      .write.mode("overwrite").format("parquet")
-      .bucketBy(buckets, "band", "sig").sortBy("band", "sig")
-      .saveAsTable(sigTable)
-    sh.select(col("doc_id"), col("shingle"))
-      .write.mode("overwrite").format("parquet")
-      .bucketBy(buckets, "doc_id").sortBy("doc_id", "shingle")
-      .saveAsTable(shTable)
-  }
+    compactHooked(spark, dedupBase(table), buckets, () => ())
 
   /** Persist a near-dup signature base for `docs` — shingle explode,
     * minhash, band stack, and cap census all paid ONCE here so
     * [[graft.operators.Dedup.nearDupAgainstStored]] probes never pay
     * them again. A rebuild retires the previous corpus's whole
-    * lifecycle first ([[writeDedupBase]]'s fail-open rationale).
+    * lifecycle first.
     */
   def writeNearDupBase(
       docs: DataFrame,
       table: String,
       buckets: Int = DefaultBuckets,
       cap: Int = graft.operators.BandCap.DefaultCap): Unit = {
-    val s = docs.sparkSession
-    retirePrefixedLocations(s, s"${table}__delta")
-    (listNdSegs(s, table) ++ Seq(
-      table, ndSh(table), ndOld(table), ndCompact(table),
-      ndOld(ndSh(table)), ndCompact(ndSh(table)), ndManifest(table), swapLock(table)))
-      .foreach(t => dropTableAndLocation(s, t))
+    val base = nearDupBase(table, cap)
+    retire(docs.sparkSession, base)
+    val Seq(sigs, shs) = base.sides
     graft.operators.CacheScope.withScope {
       val sh = graft.operators.CacheScope.persist(graft.operators.Dedup.shingles(docs))
-      writeNdTables(sh, table, ndSh(table), buckets, cap)
+      sigs.save(graft.operators.Dedup.bandSignaturesWithCounts(sh), sigs.table, buckets)
+      shs.save(sh.select(col("doc_id"), col("shingle")), shs.table, buckets)
     }
   }
 
   /** Append a verified batch's signatures + shingles as a DELTA
-    * SEGMENT: one table per append, per-doc ARRAY rows — (doc_id, n,
-    * sigs[], shingles[]) — claimed by an error-if-exists create (the
-    * [[appendDedupDelta]] discipline), exploded back to rows by the
-    * readers. Segments ride UNCAPPED (batch-sized) until
-    * [[compactNearDupBase]] folds them under the merged census.
+    * SEGMENT: one per-doc row of (doc_id, n, sigs[], shingles[]).
+    * Segments ride UNCAPPED (batch-sized) until [[compactNearDupBase]]
+    * folds them under the merged census.
     */
-  def appendNearDupDelta(docs: DataFrame, table: String): Unit = {
-    val spark = docs.sparkSession
-    repairNdCrashState(spark, table, gateOnLock = true)
+  def appendNearDupDelta(docs: DataFrame, table: String): Unit =
     graft.operators.CacheScope.withScope {
       val sh = graft.operators.CacheScope.persist(graft.operators.Dedup.shingles(docs))
-      val seg = graft.operators.Dedup.bandSignaturesWithCounts(sh)
-        .groupBy("doc_id", "n")
-        .agg(expr("array_sort(collect_list(struct(band, sig)))").as("sigs"))
-        .join(
-          sh.groupBy("doc_id").agg(expr("array_sort(collect_list(shingle))").as("shingles")),
-          "doc_id")
-      var n = listNdSegs(spark, table)
-        .flatMap(t => t.stripPrefix(s"${table}__delta").stripPrefix("_").toLongOption)
-        .foldLeft(0L)(math.max) + 1L
-      var claimed = false
-      while (!claimed) {
-        try {
-          seg.write.mode("errorifexists").format("parquet")
-            .saveAsTable(ndSegTable(table, n))
-          claimed = true
-        } catch {
-          // lost the claim race — to a live writer or a dead JVM's
-          // orphaned segment location — take the next number
-          case _: org.apache.spark.sql.AnalysisException
-              if spark.catalog.tableExists(ndSegTable(table, n)) ||
-                managedLocationExists(spark, ndSegTable(table, n)) =>
-            n += 1L
-        }
-      }
+      appendSegment(
+        nearDupBase(table),
+        graft.operators.Dedup.bandSignaturesWithCounts(sh)
+          .groupBy("doc_id", "n")
+          .agg(expr("array_sort(collect_list(struct(band, sig)))").as("sigs"))
+          .join(
+            sh.groupBy("doc_id").agg(expr("array_sort(collect_list(shingle))").as("shingles")),
+            "doc_id"))
     }
-  }
 
-  /** The crash-state view of a near-dup base: which table IS each side
-    * right now, and which delta segments each side must still union —
-    * PER SIDE, because the two swaps are sequential and a crash can
-    * land between them: the swapped side has folded the manifest's
-    * segments, the unswapped side has not, and reading each side with
-    * its own live-segment set keeps the union consistent at every
-    * crash point. Reads never mutate; writers repair.
+  /** The near-dup tier's crash-state view, per side ([[sideStates]]):
+    * (signature table, shingle table, signature segments, shingle
+    * segments).
     */
   private[graft] def nearDupBaseState(
       spark: SparkSession, table: String): (String, String, Seq[String], Seq[String]) = {
-    val segs = listNdSegs(spark, table)
-    def side(t: String): (String, Seq[String]) = {
-      val oldExists = spark.catalog.tableExists(ndOld(t))
-      val baseExists = spark.catalog.tableExists(t)
-      if (oldExists && baseExists) {
-        val folded = ndManifestSegs(spark, table).getOrElse(segs).toSet
-        (t, segs.filterNot(folded))
-      } else (if (baseExists) t else ndOld(t), segs)
-    }
-    val (sigT, sigSegs) = side(table)
-    val (shT, shSegs) = side(ndSh(table))
+    val Seq((sigT, sigSegs), (shT, shSegs)) = sideStates(spark, nearDupBase(table))
     (sigT, shT, sigSegs, shSegs)
   }
 
@@ -569,14 +551,9 @@ object Sinks {
     */
   def readNearDupSigs(spark: SparkSession, table: String): DataFrame = {
     val (sigT, _, sigSegs, _) = nearDupBaseState(spark, table)
-    val base = spark.table(sigT).filter(col("kept"))
-      .select("doc_id", "n", "band", "sig")
-    sigSegs.foldLeft(base) { (acc, t) =>
-      acc.unionByName(
-        spark.table(t)
-          .select(col("doc_id"), col("n"), explode(col("sigs")).as("s"))
-          .select(col("doc_id"), col("n"), col("s.band").as("band"), col("s.sig").as("sig")))
-    }
+    withSegments(
+      spark, nearDupBase(table).sides.head,
+      spark.table(sigT).filter(col("kept")).select("doc_id", "n", "band", "sig"), sigSegs)
   }
 
   /** The live corpus shingle rows — base store plus the live segments'
@@ -584,132 +561,21 @@ object Sinks {
     */
   def readNearDupShingles(spark: SparkSession, table: String): DataFrame = {
     val (_, shT, _, shSegs) = nearDupBaseState(spark, table)
-    val base = spark.table(shT).select("doc_id", "shingle")
-    shSegs.foldLeft(base) { (acc, t) =>
-      acc.unionByName(
-        spark.table(t).select(col("doc_id"), explode(col("shingles")).as("shingle")))
-    }
-  }
-
-  /** Finish or roll back a [[compactNearDupBase]] swap that crashed —
-    * run by every writer first; idempotent; no-op on a healthy base.
-    * The signature swap leads, so its state decides the direction:
-    * mid-signature-swap rolls BACK (nothing folded yet); any state at
-    * or past a completed signature swap rolls the shingle swap
-    * FORWARD (both merges were fully written before the first rename)
-    * and finishes the cleanup. A manifest with no `__old` anywhere is
-    * a compaction still running its merge writes (or crashed there) —
-    * left alone, exactly as the exact tier leaves its orphaned merge.
-    *
-    * `gateOnLock` as on [[repairDedupCrashState]]: appends stand down
-    * from swap evidence under a fresh `__swaplock` — that is a LIVE
-    * compaction between its renames, not a crash.
-    */
-  private def repairNdCrashState(
-      spark: SparkSession, table: String, gateOnLock: Boolean = false): Unit = {
-    val sT = table
-    val hT = ndSh(table)
-    val sOld = spark.catalog.tableExists(ndOld(sT))
-    val sBase = spark.catalog.tableExists(sT)
-    val hOld = spark.catalog.tableExists(ndOld(hT))
-    val hBase = spark.catalog.tableExists(hT)
-    if ((sOld || hOld) && gateOnLock && swapLockFresh(spark, table)) {
-      // live compaction mid-swap: its owner finishes or the lock expires
-    } else if (sOld && !sBase) {
-      // mid-signature-swap: roll everything back; the merges never went live
-      spark.sql(s"ALTER TABLE ${ndOld(sT)} RENAME TO $sT")
-      spark.sql(s"DROP TABLE IF EXISTS ${ndCompact(sT)}")
-      spark.sql(s"DROP TABLE IF EXISTS ${ndCompact(hT)}")
-      spark.sql(s"DROP TABLE IF EXISTS ${ndManifest(table)}")
-      spark.sql(s"DROP TABLE IF EXISTS ${swapLock(table)}")
-    } else if (sOld || hOld) {
-      // signature swap complete (or cleanup already dropped its __old):
-      // drive the shingle swap forward, then finish cleanup in the
-      // compaction's own order — segments, sig __old, sh __old,
-      // manifest — so a crash mid-repair resumes precisely
-      if (sOld && !hOld && hBase)
-        spark.sql(s"ALTER TABLE $hT RENAME TO ${ndOld(hT)}")
-      if (!spark.catalog.tableExists(hT)) {
-        require(
-          spark.catalog.tableExists(ndCompact(hT)),
-          s"near-dup base $table: shingle merge ${ndCompact(hT)} missing mid-swap")
-        spark.sql(s"ALTER TABLE ${ndCompact(hT)} RENAME TO $hT")
-      }
-      ndManifestSegs(spark, table).getOrElse(listNdSegs(spark, table))
-        .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
-      spark.sql(s"DROP TABLE IF EXISTS ${ndOld(sT)}")
-      spark.sql(s"DROP TABLE IF EXISTS ${ndOld(hT)}")
-      spark.sql(s"DROP TABLE IF EXISTS ${ndManifest(table)}")
-      spark.sql(s"DROP TABLE IF EXISTS ${swapLock(table)}")
-    }
-    ()
+    withSegments(
+      spark, nearDupBase(table).sides(1), spark.table(shT).select("doc_id", "shingle"), shSegs)
   }
 
   /** Fold the delta segments into both base tables, recomputing the
     * cap census over the merged signature set — possible precisely
     * because the base stores the FULL row set with `kept` as a flag,
-    * never dropping sampled rows. Same manifest/rename discipline as
-    * [[compactDedupBase]], with the two-table choreography documented
-    * on [[repairNdCrashState]].
+    * never dropping sampled rows.
     */
   def compactNearDupBase(
       spark: SparkSession,
       table: String,
       buckets: Int = DefaultBuckets,
       cap: Int = graft.operators.BandCap.DefaultCap): Unit =
-    compactNearDupBaseHooked(spark, table, buckets, () => (), cap)
-
-  private[graft] def compactNearDupBaseHooked(
-      spark: SparkSession,
-      table: String,
-      buckets: Int,
-      afterSnapshot: () => Unit,
-      cap: Int = graft.operators.BandCap.DefaultCap): Unit = {
-    repairNdCrashState(spark, table)
-    val segs = listNdSegs(spark, table)
-    if (segs.isEmpty) return
-    import spark.implicits._
-    segs.toDF("seg_table").coalesce(1)
-      .write.mode("overwrite").format("parquet").saveAsTable(ndManifest(table))
-    afterSnapshot()
-    val sT = table
-    val hT = ndSh(table)
-    // both merges fully written BEFORE the first rename — the repair
-    // invariant that lets the second swap always roll forward
-    val mergedSigs = segs.foldLeft(
-      spark.table(sT).select("doc_id", "n", "band", "sig")) { (acc, t) =>
-      acc.unionByName(
-        spark.table(t)
-          .select(col("doc_id"), col("n"), explode(col("sigs")).as("s"))
-          .select(col("doc_id"), col("n"), col("s.band").as("band"), col("s.sig").as("sig")))
-    }
-    graft.operators.BandCap
-      .flagBuckets(mergedSigs, Seq("band", "sig"), "doc_id", cap)
-      .write.mode("overwrite").format("parquet")
-      .bucketBy(buckets, "band", "sig").sortBy("band", "sig")
-      .saveAsTable(ndCompact(sT))
-    val mergedSh = segs.foldLeft(spark.table(hT).select("doc_id", "shingle")) { (acc, t) =>
-      acc.unionByName(
-        spark.table(t).select(col("doc_id"), explode(col("shingles")).as("shingle")))
-    }
-    mergedSh
-      .write.mode("overwrite").format("parquet")
-      .bucketBy(buckets, "doc_id").sortBy("doc_id", "shingle")
-      .saveAsTable(ndCompact(hT))
-    // liveness stamp covers the two-swap metadata window (see the
-    // exact tier): appends stand down from repair until the final drop
-    writeSwapLock(spark, table)
-    spark.sql(s"ALTER TABLE $sT RENAME TO ${ndOld(sT)}")
-    spark.sql(s"ALTER TABLE ${ndCompact(sT)} RENAME TO $sT")
-    spark.sql(s"ALTER TABLE $hT RENAME TO ${ndOld(hT)}")
-    spark.sql(s"ALTER TABLE ${ndCompact(hT)} RENAME TO $hT")
-    segs.foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
-    spark.sql(s"DROP TABLE IF EXISTS ${ndOld(sT)}")
-    spark.sql(s"DROP TABLE IF EXISTS ${ndOld(hT)}")
-    spark.sql(s"DROP TABLE IF EXISTS ${ndManifest(table)}")
-    spark.sql(s"DROP TABLE IF EXISTS ${swapLock(table)}")
-    ()
-  }
+    compactHooked(spark, nearDupBase(table, cap), buckets, () => ())
 
   /** Read the materialization back; `forUrl` prunes to the one bucket
     * partition the url hashes into (partition pruning does the work —
@@ -904,25 +770,6 @@ object Sinks {
   }
 
   // ------------------------------------------- image tile signature base
-  /** Persist the crop-robust TILE-SIGNATURE BASE for an image corpus:
-    * the decode + per-tile grid hashes + the cap census
-    * ([[graft.operators.Multimodal.pixelTileHashes]] +
-    * [[graft.operators.BandCap.flagBuckets]]) are all paid ONCE here,
-    * and the rows land bucketed by the 64-bit tile hash — so
-    * [[graft.operators.Multimodal.tilesAgainstStored]] probes a
-    * recrawl batch with ZERO corpus-side decoding and no corpus
-    * exchange. The image-modality mirror of [[writeNearDupBase]]'s
-    * fingerprint-once/probe-many contract.
-    *
-    * Rebuild-only, like the HNSW tier and unlike the text base's
-    * delta segments, deliberately: image corpora in this engine are
-    * release artifacts (a recrawl PROBES, a new release REWRITES);
-    * when ingest-time appends are ever needed, the nd segment
-    * lifecycle is the named extension. A rewrite retires the previous
-    * table first, and a crash between retire and write leaves NO base
-    * — the probe fails loudly on the missing table (fail-open:
-    * under-dedup until the write re-runs, never a stale-corpus ghost).
-    */
   /** The shared image-signature base writer behind [[writeTileBase]]
     * and [[writeAnchorBase]]: distinct per-doc signature rows, the
     * write-time census flag, one hash-bucketed sorted table — the
@@ -946,6 +793,25 @@ object Sinks {
     }
   }
 
+  /** Persist the crop-robust TILE-SIGNATURE BASE for an image corpus:
+    * the decode + per-tile grid hashes + the cap census
+    * ([[graft.operators.Multimodal.pixelTileHashes]] +
+    * [[graft.operators.BandCap.flagBuckets]]) are all paid ONCE here,
+    * and the rows land bucketed by the 64-bit tile hash — so
+    * [[graft.operators.Multimodal.tilesAgainstStored]] probes a
+    * recrawl batch with ZERO corpus-side decoding and no corpus
+    * exchange. The image-modality mirror of [[writeNearDupBase]]'s
+    * fingerprint-once/probe-many contract.
+    *
+    * Rebuild-only, like the HNSW tier and unlike the text base's
+    * delta segments, deliberately: image corpora in this engine are
+    * release artifacts (a recrawl PROBES, a new release REWRITES);
+    * when ingest-time appends are ever needed, declaring it as a
+    * [[SegmentedBase]] is the named extension. A rewrite retires the
+    * previous table first, and a crash between retire and write leaves NO base
+    * — the probe fails loudly on the missing table (fail-open:
+    * under-dedup until the write re-runs, never a stale-corpus ghost).
+    */
   def writeTileBase(
       images: DataFrame,
       table: String,
@@ -1310,20 +1176,6 @@ object Sinks {
       df.select(col(idCol).as("vec_id"), col("embedding")), rot)
       .withColumnRenamed("vec_id", idCol)
 
-  /** All code rows of the index: the batch-built base segment plus, if
-    * a stream has appended one, the `codes_delta` segment ([[
-    * appendAnnIndex]] — a separate directory because the streaming
-    * parquet sink's `_spark_metadata` log would otherwise shadow every
-    * batch-written file in the same path; base + delta segments with
-    * periodic compaction is the layout disk indexes use anyway). The
-    * c_id partition value parses back as INT — normalized to the
-    * index's LONG list ids here, once, so no consumer joins across a
-    * type coercion. Tombstoned ids ([[deleteFromAnnIndex]]) are
-    * excluded via a BROADCAST anti-join — the tombstone set is
-    * `(vec_id, seg)` pairs and stays kilobytes until compaction drops
-    * the rows physically; the probes join's partition pruning on the
-    * scan is untouched.
-    */
   /** Loud-fail guard for reads against an index whose REBUILD swap is
     * in flight: `rebuild_staging/_STAGED` present means the swap MUST
     * roll forward (some artifacts may already be new-geometry), and a
@@ -1354,6 +1206,20 @@ object Sinks {
     }
   }
 
+  /** All code rows of the index: the batch-built base segment plus, if
+    * a stream has appended one, the `codes_delta` segment ([[
+    * appendAnnIndex]] — a separate directory because the streaming
+    * parquet sink's `_spark_metadata` log would otherwise shadow every
+    * batch-written file in the same path; base + delta segments with
+    * periodic compaction is the layout disk indexes use anyway). The
+    * c_id partition value parses back as INT — normalized to the
+    * index's LONG list ids here, once, so no consumer joins across a
+    * type coercion. Tombstoned ids ([[deleteFromAnnIndex]]) are
+    * excluded via a BROADCAST anti-join — the tombstone set is
+    * `(vec_id, seg)` pairs and stays kilobytes until compaction drops
+    * the rows physically; the probes join's partition pruning on the
+    * scan is untouched.
+    */
   def readAnnIndexCodes(spark: SparkSession, path: String): DataFrame =
     readAnnIndexCodesTiers(spark, path, includeStreamingDelta = true)
 

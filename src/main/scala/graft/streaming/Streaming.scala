@@ -990,10 +990,6 @@ object Streaming {
       docs: org.apache.spark.sql.DataFrame, table: String): org.apache.spark.sql.DataFrame = {
     val spark = localCheckpoints(docs.sparkSession)
     val (baseTable, _) = graft.sinks.Sinks.dedupBaseState(spark, table)
-    if (!spark.catalog.tableExists(baseTable))
-      throw new IllegalStateException(
-        s"dedup base '$table' does not exist (no '$baseTable' in the catalog) — " +
-          "write it with Sinks.writeDedupBase before starting the ingest stream")
     val baseFps = spark.table(baseTable)
       .select("fp").distinct().withColumn("in_base", lit(true))
     val probed = docs.select(col("doc_id"), md5(col("text")).as("fp"))

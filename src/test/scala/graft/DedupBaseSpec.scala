@@ -106,7 +106,7 @@ class DedupBaseSpec extends AnyFunSuite {
       // between the compaction's read-set snapshot and its cleanup —
       // pre-manifest, the blanket delta drop silently re-admitted
       // "omega" as a never-seen document
-      Sinks.compactDedupBaseHooked(spark, table, buckets = 4,
+      Sinks.compactHooked(spark, Sinks.dedupBase(table), buckets = 4,
         afterSnapshot =
           () => Sinks.appendDedupDelta(docs(Seq((12L, "omega"))), table))
       assert(segTables(table).size == 1,
@@ -312,6 +312,27 @@ class DedupBaseSpec extends AnyFunSuite {
         if (fs.exists(d)) fs.delete(d, true)
       }
     }
+  }
+
+  test("a base that was never written fails every stored probe with a named error") {
+    val spark = TestSpark.spark
+    val table = "dedup_base_absent"
+    dropAll(table)
+    assert(!spark.catalog.tableExists(table) && !spark.catalog.tableExists(s"${table}__old"),
+      "fixture: the base must be absent")
+    // each probe must name the base and its writer, not fail on a
+    // `__old` table nobody made
+    def named(writer: String)(probe: => Any): Unit = {
+      val e = intercept[IllegalStateException](probe)
+      assert(e.getMessage.contains(s"'$table'") && e.getMessage.contains(writer),
+        s"unnamed missing-base error: ${e.getMessage}")
+    }
+    val batch = docs(Seq((1L, "alpha"), (2L, "beta")))
+    try {
+      named("writeDedupBase")(Dedup.incrementalDedupStored(spark, table, batch))
+      named("writeDedupBase")(graft.streaming.Streaming.dedupStoredStream(batch, table))
+      named("writeNearDupBase")(Dedup.nearDupAgainstStored(spark, table, batch))
+    } finally graft.operators.CacheScope.releaseAll()
   }
 
   test("append-side repair stands down inside a LIVE swap window (fresh __swaplock)") {

@@ -157,7 +157,7 @@ class NearDupBaseSpec extends AnyFunSuite {
     try {
       Sinks.writeNearDupBase(docs(Seq((1L, ta))), table, buckets = 4)
       Sinks.appendNearDupDelta(docs(Seq((2L, tb))), table)
-      Sinks.compactNearDupBaseHooked(spark, table, buckets = 4,
+      Sinks.compactHooked(spark, Sinks.nearDupBase(table), buckets = 4,
         afterSnapshot =
           () => Sinks.appendNearDupDelta(docs(Seq((3L, tc))), table))
       assert(segTables(table).size === 1,
@@ -187,6 +187,39 @@ class NearDupBaseSpec extends AnyFunSuite {
       val p = pairsOf(table, Seq((100L, tb), (101L, tc)))
       assert(p === Set((101L, 3L, 1.0)), s"ghost signatures survived the rebuild: $p")
     } finally dropAll(table)
+  }
+
+  test("rebuild reclaims a dead JVM's orphaned warehouse locations (catalog-invisible dirs)") {
+    val table = "nd_base_orphan"
+    dropAll(table)
+    val wh = new org.apache.hadoop.fs.Path(spark.conf.get("spark.sql.warehouse.dir"))
+    val fs = wh.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val orphans = Seq(table, s"${table}__sh", s"${table}__delta_00000001")
+    try {
+      // a previous JVM's signature base, shingle store and delta
+      // segment: directories exist, no catalog entries
+      orphans.foreach { t =>
+        val d = new org.apache.hadoop.fs.Path(wh, t)
+        fs.mkdirs(d)
+        val out = fs.create(new org.apache.hadoop.fs.Path(d, "junk.parquet"), true)
+        out.write(Array[Byte](1, 2, 3)); out.close()
+      }
+      assert(orphans.forall(t => !spark.catalog.tableExists(t)),
+        "fixture: orphans must be catalog-invisible")
+      // the rebuild must succeed (LOCATION_ALREADY_EXISTS is the bug)
+      Sinks.writeNearDupBase(docs(Seq((1L, ta))), table, buckets = 4)
+      assert(pairsOf(table, Seq((100L, ta))) === Set((100L, 1L, 1.0)))
+      // and an append claims a segment past any orphaned segment dir
+      Sinks.appendNearDupDelta(docs(Seq((2L, tb))), table)
+      assert(segTables(table).size === 1)
+      assert(pairsOf(table, Seq((101L, tb))) === Set((101L, 2L, 1.0)))
+    } finally {
+      dropAll(table)
+      (orphans :+ s"${table}__delta_00000002").foreach { t =>
+        val d = new org.apache.hadoop.fs.Path(wh, t)
+        if (fs.exists(d)) fs.delete(d, true)
+      }
+    }
   }
 
   test("compaction crash states: every point reads correctly; writers repair") {
